@@ -8,7 +8,8 @@ import graft.pipeline.Runner
 /** Runnable end-to-end demo of the medallion pipeline: staged payloads →
   * bronze (lineage-stamped) → silver (dedup/cast/derive) → quality gate
   * → gold daily mart → audit log. Usage: runMain graft.PipelineDemo
-  * [workDir]
+  * [workDir] — without a workDir the demo runs in a temp directory and
+  * deletes it afterwards; a given workDir is left in place.
   */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
@@ -20,10 +21,14 @@ object PipelineDemo {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+    try args.headOption match {
+      case Some(root) => run(spark, root)
+      case None => graft.streaming.Replay.withTempRoot("graft_demo")(run(spark, _))
+    } finally spark.stop()
+  }
 
-    val root = args.headOption.getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_demo").toString)
+  private def run(spark: SparkSession, root: String): Unit = {
+    import spark.implicits._
     val layout = Runner.Layout(
       s"$root/bronze", s"$root/silver", s"$root/gold", s"$root/audit")
 
@@ -53,6 +58,5 @@ object PipelineDemo {
     spark.read.parquet(s"${layout.gold}/finance_mart").show()
     println("DEMO audit:")
     audit.Audit.read(spark, layout.audit).toDF().show(truncate = false)
-    spark.stop()
   }
 }

@@ -14,6 +14,7 @@ import graft.text.TextOps
 import graft.dedup.NearDup
 import graft.sim.Similarity
 import graft.multimodal.Multimodal
+import graft.streaming.{Replay, Streams}
 
 /** Driver contract — one registered query per operator from SURVEY.md §2
   * plus the LLM-pipeline operator families, each with a DuckDB oracle
@@ -454,18 +455,6 @@ object SparkEntry {
       |      AS DECIMAL(30,15))) AS DOUBLE), 9) AS entropy
       |  FROM cw JOIN tot USING (doc_id)
       |  GROUP BY 1, 2, 3, 4)""".stripMargin
-
-  /** Best-effort recursive delete of a streaming query's temp root —
-    * called AFTER the result is eagerly checkpointed off the files,
-    * so the suite never accumulates per-run orders-table copies.
-    */
-  private def deleteRecursively(path: String): Unit = {
-    def go(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(go))
-      f.delete(); ()
-    }
-    try go(new java.io.File(path)) catch { case _: Exception => () }
-  }
 
   private val stopwords = Seq("the", "a", "of", "and", "in", "to", "is", "it")
 
@@ -2911,7 +2900,7 @@ object SparkEntry {
        |WHERE CAST(len(list_intersect(a.gs, b.gs)) AS DOUBLE) /
        |    len(list_distinct(list_concat(a.gs, b.gs))) >= 0.9""".stripMargin)),
 
-    ("q207_exact_neardup_stream", (s, d) => {
+    ("q207_exact_neardup_stream", (s, d) =>
       // the streaming face of q165, certified batch-equivalently: a
       // real exactNearDupSink StreamingQuery consumes the documents
       // table in three staged micro-batches (doc_id % 3, files landing
@@ -2920,48 +2909,20 @@ object SparkEntry {
       // hash-match the one-shot prefixFilterPairs oracle over the
       // whole corpus — every pair found exactly once, at the batch its
       // later member arrived.
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_q207_").toString
-      val feedDir = s"$tmp/feed"
-      new java.io.File(feedDir).mkdirs()
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      def stage(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
-        val aside = s"$tmp/stage$n"
-        df.coalesce(1).write.mode("overwrite").parquet(aside)
-        val part = new java.io.File(aside).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          java.nio.file.Paths.get(s"$feedDir/b$n.parquet"))
-      }
-      stage(docs.filter(col("doc_id") % 3 === 0), 1)
-      // partition sizing, the q277 rule: each micro-batch runs the
-      // prefix-filter join + pair write against the accumulated index
-      // — 32 shuffle partitions mean 32 tasks and files per batch=dir
-      // for a pair set that is tiny per batch. 8 cuts the per-batch
-      // commit cost 4×; results partition-count-independent; restore
-      // covers everything from the set on.
-      val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val sq = graft.streaming.Streams.exactNearDupSink(
-          s.readStream.schema(s.read.parquet(s"$feedDir/b1.parquet").schema)
-            .parquet(feedDir),
-          "doc_id", "text", s"$tmp/nd", s"$tmp/ckpt", threshold = 0.9,
-          shingleN = 3)
-        try {
-          sq.processAllAvailable()
-          stage(docs.filter(col("doc_id") % 3 === 1), 2)
-          sq.processAllAvailable()
-          stage(docs.filter(col("doc_id") % 3 === 2), 3)
-          sq.processAllAvailable()
-        } finally sq.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-      val res = s.read.parquet(s"$tmp/nd/pairs")
-        .select("id1", "id2", "jaccard")
-        .localCheckpoint(true)
-      deleteRecursively(tmp)
-      res
-    }, Some("""WITH toks AS (
+      Replay.withTempRoot("graft_q207_") { tmp =>
+        val feed = s"$tmp/feed"
+        val docs = t(s, d, "documents").select("doc_id", "text")
+        def third(r: Int) = docs.filter(col("doc_id") % 3 === r).coalesce(1)
+        Replay.stage(third(0), feed, 1)
+        Replay.drive(s) {
+          Streams.exactNearDupSink(Replay.source(s, feed), "doc_id", "text",
+            s"$tmp/nd", s"$tmp/ckpt", threshold = 0.9, shingleN = 3)
+        }(() => Replay.stage(third(1), feed, 2),
+          () => Replay.stage(third(2), feed, 3))
+        s.read.parquet(s"$tmp/nd/pairs")
+          .select("id1", "id2", "jaccard")
+          .localCheckpoint(true)
+      }, Some("""WITH toks AS (
        |  SELECT doc_id, regexp_split_to_array(text, '\s+') AS tk
        |  FROM documents),
        |sh AS (
@@ -3186,7 +3147,7 @@ object SparkEntry {
          |    / count(*) AS oov_frac
          |FROM j GROUP BY doc_id""".stripMargin)),
 
-    ("q216_stream_sessions", (s, d) => {
+    ("q216_stream_sessions", (s, d) =>
       // the mapGroupsWithState face, gated batch-equivalently: a real
       // StreamingQuery folds the events table through userSessions'
       // typed per-user state across 3 staged micro-batches, each
@@ -3194,65 +3155,36 @@ object SparkEntry {
       // per user (keep-latest by batch) must equal the from-scratch
       // GROUP BY — running totals fold in DECIMAL so the telescoped
       // state is bit-exact regardless of iterator order.
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_q216_").toString
-      val feedDir = s"$tmp/feed"
-      new java.io.File(feedDir).mkdirs()
-      val ev = t(s, d, "events")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("value").cast("decimal(18,6)").as("value"))
-      def stage(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
-        val aside = s"$tmp/stage$n"
-        df.coalesce(1).write.mode("overwrite").parquet(aside)
-        val part = new java.io.File(aside).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          java.nio.file.Paths.get(s"$feedDir/b$n.parquet"))
-      }
-      stage(ev.filter(col("event_id") % 3 === 0), 1)
-      import s.implicits._
-      // state-partition sizing, the q277 rule: the keyed state store
-      // commits one delta file per shuffle partition per micro-batch —
-      // at the session's 32 partitions that is ~96 filesystem commits
-      // across 3 batches for a user-count-bounded state. 8 partitions
-      // cuts the commit storm 4× (results partition-count-independent;
-      // Structured Streaming pins the count in the checkpoint at first
-      // batch). Restore covers everything from the set on.
-      val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val typed = s.readStream
-          .schema(s.read.parquet(s"$feedDir/b1.parquet").schema)
-          .parquet(feedDir)
-          .select(col("user_id"), col("ts"), col("value"))
-          .as[graft.streaming.Streams.UserEvent]
-        val sq = graft.streaming.Streams.userSessions(typed)
-          .writeStream
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("update")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[
-              graft.streaming.Streams.UserSession], id: Long) =>
-            b.write.mode("overwrite").parquet(s"$tmp/updates/batch=$id")
-            ()
-          }
-          .start()
-        try {
-          sq.processAllAvailable()
-          stage(ev.filter(col("event_id") % 3 === 1), 2)
-          sq.processAllAvailable()
-          stage(ev.filter(col("event_id") % 3 === 2), 3)
-          sq.processAllAvailable()
-        } finally sq.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-      val res = graft.operators.Dedup.keepLatest(
-          s.read.parquet(s"$tmp/updates"), Seq("user_id"), "batch")
-        .select(col("user_id"), col("events"),
-          col("total").cast("double").as("total"),
-          col("lastSeen").as("last_seen"))
-        .localCheckpoint(true)
-      deleteRecursively(tmp)
-      res
-    }, Some("""SELECT user_id, CAST(count(*) AS BIGINT) AS events,
+      Replay.withTempRoot("graft_q216_") { tmp =>
+        import s.implicits._
+        val feed = s"$tmp/feed"
+        val ev = t(s, d, "events")
+          .select(col("event_id"), col("user_id"), col("ts"),
+            col("value").cast("decimal(18,6)").as("value"))
+        def third(r: Int) = ev.filter(col("event_id") % 3 === r).coalesce(1)
+        Replay.stage(third(0), feed, 1)
+        Replay.drive(s) {
+          Streams.userSessions(Replay.source(s, feed)
+              .select(col("user_id"), col("ts"), col("value"))
+              .as[Streams.UserEvent])
+            .writeStream
+            .option("checkpointLocation", s"$tmp/ckpt")
+            .outputMode("update")
+            .foreachBatch { (b: org.apache.spark.sql.Dataset[
+                Streams.UserSession], id: Long) =>
+              b.write.mode("overwrite").parquet(s"$tmp/updates/batch=$id")
+              ()
+            }
+            .start()
+        }(() => Replay.stage(third(1), feed, 2),
+          () => Replay.stage(third(2), feed, 3))
+        Dedup.keepLatest(
+            s.read.parquet(s"$tmp/updates"), Seq("user_id"), "batch")
+          .select(col("user_id"), col("events"),
+            col("total").cast("double").as("total"),
+            col("lastSeen").as("last_seen"))
+          .localCheckpoint(true)
+      }, Some("""SELECT user_id, CAST(count(*) AS BIGINT) AS events,
        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total,
        |  max(ts) AS last_seen
        |FROM events GROUP BY user_id""".stripMargin)),
@@ -3723,38 +3655,35 @@ object SparkEntry {
        |      / CAST(2 * p * nn AS DOUBLE) END AS auc
        |FROM a""".stripMargin)),
 
-    ("q229_jsonl_quarantine", (s, d) => {
+    ("q229_jsonl_quarantine", (s, d) =>
       // the ingest family's CORRECTNESS row (the q203 move): stage the
       // documents table as JSON-lines with every 50th line corrupted
       // in place, run the production PERMISSIVE quarantine scan, and
       // hash-compare the clean side + quarantine count against the
       // source table itself — parsing must be lossless on good lines
       // and must divert exactly the broken ones.
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_q229_").toString
-      val docs = t(s, d, "documents").select("doc_id", "text", "lang")
-      docs.select(
-          when(col("doc_id") % 50 === 0,
-            concat(lit("{\"doc_id\":"), col("doc_id"), lit(",#corrupt")))
-            .otherwise(to_json(struct(col("doc_id"), col("text"),
-              col("lang")))).as("value"))
-        .coalesce(1).write.text(s"$tmp/in")
-      val schema = new org.apache.spark.sql.types.StructType()
-        .add("doc_id", "long").add("text", "string").add("lang", "string")
-      val (clean, quarantine) = graft.ingest.Ingest
-        .jsonlWithQuarantine(s, s"$tmp/in", schema)
-      val res = clean
-        .crossJoin(broadcast(
-          quarantine.agg(count(lit(1)).as("n_quarantined"))))
-        .localCheckpoint(true)
-      deleteRecursively(tmp)
-      res
-    }, Some("""SELECT doc_id, text, lang,
+      Replay.withTempRoot("graft_q229_") { tmp =>
+        val docs = t(s, d, "documents").select("doc_id", "text", "lang")
+        docs.select(
+            when(col("doc_id") % 50 === 0,
+              concat(lit("{\"doc_id\":"), col("doc_id"), lit(",#corrupt")))
+              .otherwise(to_json(struct(col("doc_id"), col("text"),
+                col("lang")))).as("value"))
+          .coalesce(1).write.text(s"$tmp/in")
+        val schema = new org.apache.spark.sql.types.StructType()
+          .add("doc_id", "long").add("text", "string").add("lang", "string")
+        val (clean, quarantine) = graft.ingest.Ingest
+          .jsonlWithQuarantine(s, s"$tmp/in", schema)
+        clean
+          .crossJoin(broadcast(
+            quarantine.agg(count(lit(1)).as("n_quarantined"))))
+          .localCheckpoint(true)
+      }, Some("""SELECT doc_id, text, lang,
        |  (SELECT CAST(count(*) AS BIGINT) FROM documents
        |   WHERE doc_id % 50 = 0) AS n_quarantined
        |FROM documents WHERE doc_id % 50 <> 0""".stripMargin)),
 
-    ("q230_stream_quality_filter", (s, d) => {
+    ("q230_stream_quality_filter", (s, d) =>
       // the quality classifier's STREAMING face, batch-equivalently
       // certified (the q192/q207 discipline): a frozen NB model
       // trained on the static corpus filters two staged micro-batches
@@ -3762,42 +3691,26 @@ object SparkEntry {
       // dirs telescoped together must hash-match the one-shot q220
       // scoring of the whole corpus — per-doc scores carry no
       // cross-batch state, so streaming and batch MUST agree exactly.
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_q230_").toString
-      val feedDir = s"$tmp/feed"
-      new java.io.File(feedDir).mkdirs()
-      val docs = t(s, d, "documents")
-      val model = graft.text.QualityClassifier.nbTrain(
-        docs, "text", col("lang") === "en")
-      def stage(df: DataFrame, n: Int): Unit = {
-        val aside = s"$tmp/stage$n"
-        df.coalesce(1).write.mode("overwrite").parquet(aside)
-        val part = new java.io.File(aside).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          java.nio.file.Paths.get(s"$feedDir/b$n.parquet"))
-      }
-      val slim = docs.select("doc_id", "text")
-      stage(slim.filter(col("doc_id") % 2 === 0), 1)
-      val sq = graft.streaming.Streams.scoreFilterSink(
-        s.readStream.schema(s.read.parquet(s"$feedDir/b1.parquet").schema)
-          .parquet(feedDir),
-        model, "doc_id", "text", s"$tmp/out", s"$tmp/ckpt")
-      try {
-        sq.processAllAvailable()
-        stage(slim.filter(col("doc_id") % 2 === 1), 2)
-        sq.processAllAvailable()
-      } finally sq.stop()
-      val res = s.read.parquet(s"$tmp/out/b=*")
-        .select("doc_id", "n_tokens", "score", "keep")
-        .localCheckpoint(true)
-      deleteRecursively(tmp)
-      res
-    }, Some(s"""$nbScoreSql
+      Replay.withTempRoot("graft_q230_") { tmp =>
+        val feed = s"$tmp/feed"
+        val docs = t(s, d, "documents")
+        val model = graft.text.QualityClassifier.nbTrain(
+          docs, "text", col("lang") === "en")
+        val slim = docs.select("doc_id", "text")
+        def half(r: Int) = slim.filter(col("doc_id") % 2 === r).coalesce(1)
+        Replay.stage(half(0), feed, 1)
+        Replay.drive(s) {
+          Streams.scoreFilterSink(Replay.source(s, feed), model, "doc_id",
+            "text", s"$tmp/out", s"$tmp/ckpt")
+        }(() => Replay.stage(half(1), feed, 2))
+        s.read.parquet(s"$tmp/out/b=*")
+          .select("doc_id", "n_tokens", "score", "keep")
+          .localCheckpoint(true)
+      }, Some(s"""$nbScoreSql
        |SELECT doc_id, n_tokens, score, score > 0 AS keep
        |FROM sc""".stripMargin)),
 
-    ("q203_compacted_readback", (s, d) => {
+    ("q203_compacted_readback", (s, d) =>
       // the maintenance family's CORRECTNESS row: fragment a REAL
       // table into 40 part files on disk, run the production
       // Retention.compact (byte-derived count, rename-aside swap),
@@ -3805,21 +3718,18 @@ object SparkEntry {
       // preservation plus the exact before/after file counts ride the
       // same oracle compare as every query. The oracle is the source
       // table itself: compaction must be invisible to readers.
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_q203_").toString
-      val path = s"$tmp/orders"
-      t(s, d, "orders")
-        .select("o_orderkey", "o_orderpriority", "o_totalprice")
-        .repartition(40).write.parquet(path)
-      val (before, after) = graft.maintenance.Retention.compact(
-        s, path, targetBytes = 512L << 20)
-      val res = s.read.parquet(path)
-        .withColumn("files_before", lit(before))
-        .withColumn("files_after", lit(after))
-        .localCheckpoint(true)
-      deleteRecursively(tmp)
-      res
-    }, Some("""SELECT o_orderkey, o_orderpriority, o_totalprice,
+      Replay.withTempRoot("graft_q203_") { tmp =>
+        val path = s"$tmp/orders"
+        t(s, d, "orders")
+          .select("o_orderkey", "o_orderpriority", "o_totalprice")
+          .repartition(40).write.parquet(path)
+        val (before, after) = Retention.compact(
+          s, path, targetBytes = 512L << 20)
+        s.read.parquet(path)
+          .withColumn("files_before", lit(before))
+          .withColumn("files_after", lit(after))
+          .localCheckpoint(true)
+      }, Some("""SELECT o_orderkey, o_orderpriority, o_totalprice,
        |  CAST(40 AS BIGINT) AS files_before,
        |  CAST(1 AS BIGINT) AS files_after
        |FROM orders""".stripMargin)),
@@ -6331,7 +6241,7 @@ object SparkEntry {
         |  WHERE a.l_linenumber <= 2 AND b.l_linenumber <= 2"""
         .stripMargin))),
 
-    ("q192_agg_sink_stream", (s, d) => {
+    ("q192_agg_sink_stream", (s, d) =>
       // the STREAMING face of q188, certified batch-equivalently: an
       // actual aggSink StreamingQuery consumes a staged changefeed in
       // three real micro-batches (files appear between processAllAvailable
@@ -6343,70 +6253,38 @@ object SparkEntry {
       // compare certifies fold(fold(fold(∅,b1),b2),b3) == agg(final)
       // bit-exactly through the real sink (versioned write-then-rename
       // commit path included), not just the operator.
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_q192_").toString
-      val feedDir = s"$tmp/feed"
-      new java.io.File(feedDir).mkdirs()
-      val orders = t(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          col("o_orderpriority").as("g"), col("o_totalprice").as("p"))
-      val nullG = lit(null).cast("string")
-      val nullP = lit(null).cast(orders.schema("p").dataType.sql)
-      def ins(rows: org.apache.spark.sql.DataFrame) = rows.select(
-        lit("insert").as("change_type"), nullG.as("old_grp"),
-        col("g").as("new_grp"), nullP.as("old_v"), col("p").as("new_v"))
-      val b1 = ins(orders.filter(col("k") % 3 === 0))
-      val b2 = ins(orders.filter(col("k") % 3 =!= 0))
-      val b3 = orders.filter(col("k") % 5 === 0).select(
-          lit("delete").as("change_type"), col("g").as("old_grp"),
-          nullG.as("new_grp"), col("p").as("old_v"), nullP.as("new_v"))
-        .unionByName(orders
-          .filter(col("k") % 5 =!= 0 && col("k") % 7 === 0)
-          .select(lit("update").as("change_type"), col("g").as("old_grp"),
-            when(col("k") % 11 === 0, lit("1-URGENT")).otherwise(col("g"))
-              .as("new_grp"),
-            col("p").as("old_v"), (col("p") + 10).as("new_v")))
-      // stage each batch as ONE file dropped into the watched dir (a
-      // finished parquet written aside, then moved in atomically)
-      def stage(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
-        val aside = s"$tmp/stage$n"
-        df.coalesce(1).write.mode("overwrite").parquet(aside)
-        val part = new java.io.File(aside).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          java.nio.file.Paths.get(s"$feedDir/b$n.parquet"))
-      }
-      stage(b1, 1)
-      // partition sizing, the q277 rule: each micro-batch's fold runs
-      // a grouped aggregate and rewrites the versioned snapshot — at
-      // the session's 32 shuffle partitions that is 32 tasks + files
-      // per version for a #groups-sized table. 8 cuts the per-batch
-      // commit cost 4×; results are partition-count-independent and
-      // the restore covers everything from the set on.
-      val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val sq = graft.streaming.Streams.aggSink(
-          s.readStream.schema(s.read.parquet(s"$feedDir/b1.parquet").schema)
-            .parquet(feedDir),
-          "grp", "v", s"$tmp/agg", s"$tmp/ckpt")
-        // stop on EVERY exit path: an orphaned StreamingQuery in the
-        // shared session would pollute every later suite query; the
-        // result is checkpointed off the temp files so the whole root
-        // can be deleted before returning
-        try {
-          sq.processAllAvailable()
-          stage(b2, 2); sq.processAllAvailable()
-          stage(b3, 3); sq.processAllAvailable()
-        } finally sq.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-      val res = graft.streaming.Streams.currentSnapshot(s, s"$tmp/agg")
-        .select(col("grp"),
-          col("sum_value").cast("double").as("sum_value"), col("n_rows"))
-        .localCheckpoint(true)
-      deleteRecursively(tmp)
-      res
-    }, Some("""WITH cur AS (
+      Replay.withTempRoot("graft_q192_") { tmp =>
+        val feed = s"$tmp/feed"
+        val orders = t(s, d, "orders")
+          .select(col("o_orderkey").as("k"),
+            col("o_orderpriority").as("g"), col("o_totalprice").as("p"))
+        val nullG = lit(null).cast("string")
+        val nullP = lit(null).cast(orders.schema("p").dataType.sql)
+        def ins(rows: DataFrame) = rows.select(
+          lit("insert").as("change_type"), nullG.as("old_grp"),
+          col("g").as("new_grp"), nullP.as("old_v"), col("p").as("new_v"))
+        val b1 = ins(orders.filter(col("k") % 3 === 0))
+        val b2 = ins(orders.filter(col("k") % 3 =!= 0))
+        val b3 = orders.filter(col("k") % 5 === 0).select(
+            lit("delete").as("change_type"), col("g").as("old_grp"),
+            nullG.as("new_grp"), col("p").as("old_v"), nullP.as("new_v"))
+          .unionByName(orders
+            .filter(col("k") % 5 =!= 0 && col("k") % 7 === 0)
+            .select(lit("update").as("change_type"), col("g").as("old_grp"),
+              when(col("k") % 11 === 0, lit("1-URGENT")).otherwise(col("g"))
+                .as("new_grp"),
+              col("p").as("old_v"), (col("p") + 10).as("new_v")))
+        Replay.stage(b1.coalesce(1), feed, 1)
+        Replay.drive(s) {
+          Streams.aggSink(Replay.source(s, feed), "grp", "v", s"$tmp/agg",
+            s"$tmp/ckpt")
+        }(() => Replay.stage(b2.coalesce(1), feed, 2),
+          () => Replay.stage(b3.coalesce(1), feed, 3))
+        Streams.currentSnapshot(s, s"$tmp/agg")
+          .select(col("grp"),
+            col("sum_value").cast("double").as("sum_value"), col("n_rows"))
+          .localCheckpoint(true)
+      }, Some("""WITH cur AS (
        |  SELECT CASE WHEN o_orderkey % 7 = 0 AND o_orderkey % 11 = 0
        |      THEN '1-URGENT' ELSE o_orderpriority END AS grp,
        |    CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 10
@@ -6486,7 +6364,7 @@ object SparkEntry {
          |FROM d JOIN bt USING (doc_id) JOIN tt USING (doc_id)"""
         .stripMargin)),
 
-    ("q196_cdc_agg_loop", (s, d) => {
+    ("q196_cdc_agg_loop", (s, d) =>
       // the FULL streaming loop certified by one hash compare:
       // snapshot drops → cdcSink (diff feed extraction, versioned
       // snapshot store) → feed relay → aggSink (incremental
@@ -6496,78 +6374,51 @@ object SparkEntry {
       // from disk must equal the from-scratch GROUP BY over the FINAL
       // snapshot — certifying diff extraction AND fold composition
       // end-to-end through both sinks' versioned commit paths.
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_q196_").toString
-      val snapDir = s"$tmp/snaps"; val relayDir = s"$tmp/relay"
-      new java.io.File(snapDir).mkdirs(); new java.io.File(relayDir).mkdirs()
-      val orders = t(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          col("o_orderpriority").as("g"), col("o_totalprice").as("p"))
-      val s1 = orders.filter(col("k") % 3 === 0)
-      val s2 = orders.filter(col("k") % 3 < 2)
-        .withColumn("p",
-          when(col("k") % 7 === 0, col("p") + 10).otherwise(col("p")))
-      val s3 = s2.filter(col("k") % 5 =!= 0)
-        .withColumn("g",
-          when(col("k") % 11 === 0, lit("1-URGENT")).otherwise(col("g")))
-      def stage(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
-        val aside = s"$tmp/stage$n"
-        df.coalesce(1).write.mode("overwrite").parquet(aside)
-        val part = new java.io.File(aside).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          java.nio.file.Paths.get(s"$snapDir/b$n.parquet"))
-      }
-      // ship each committed feed batch into the relay dir the agg
-      // stream watches (flat files, ordered by the fences below)
-      def relay(batch: Int): Unit =
-        new java.io.File(s"$tmp/feed/batch=$batch").listFiles()
-          .filter(_.getName.endsWith(".parquet")).zipWithIndex
-          .foreach { case (f, i) =>
-            java.nio.file.Files.copy(f.toPath,
-              java.nio.file.Paths.get(s"$relayDir/b${batch}_$i.parquet"))
-          }
-      stage(s1, 1)
-      // partition sizing, the q277 rule (see q192): two chained sinks,
-      // each folding #groups-sized state per micro-batch — 8 shuffle
-      // partitions cut the per-batch task/file count 4×; results are
-      // partition-count-independent; restore covers everything.
-      val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val cdc = graft.streaming.Streams.cdcSink(
-          s.readStream.schema(s.read.parquet(s"$snapDir/b1.parquet").schema)
-            .parquet(snapDir),
-          Seq("k"), s"$tmp/snapstore", s"$tmp/feed", s"$tmp/ckpt_cdc")
-        // both queries stop on EVERY exit path (orphaned streams would
-        // pollute the shared suite session); result checkpointed off
-        // the temp files so the root can be deleted before returning
-        var agg: org.apache.spark.sql.streaming.StreamingQuery = null
-        try {
-          cdc.processAllAvailable()
-          relay(0)
-          agg = graft.streaming.Streams.aggSink(
-            s.readStream
-              .schema(s.read.parquet(s"$tmp/feed/batch=0").schema)
-              .parquet(relayDir),
-            "g", "p", s"$tmp/agg", s"$tmp/ckpt_agg")
-          agg.processAllAvailable()
-          stage(s2, 2); cdc.processAllAvailable()
-          relay(1); agg.processAllAvailable()
-          stage(s3, 3); cdc.processAllAvailable()
-          relay(2); agg.processAllAvailable()
-        } finally {
-          cdc.stop()
-          if (agg != null) agg.stop()
+      Replay.withTempRoot("graft_q196_") { tmp =>
+        val snapDir = s"$tmp/snaps"; val relayDir = s"$tmp/relay"
+        new java.io.File(relayDir).mkdirs()
+        val orders = t(s, d, "orders")
+          .select(col("o_orderkey").as("k"),
+            col("o_orderpriority").as("g"), col("o_totalprice").as("p"))
+        val s1 = orders.filter(col("k") % 3 === 0)
+        val s2 = orders.filter(col("k") % 3 < 2)
+          .withColumn("p",
+            when(col("k") % 7 === 0, col("p") + 10).otherwise(col("p")))
+        val s3 = s2.filter(col("k") % 5 =!= 0)
+          .withColumn("g",
+            when(col("k") % 11 === 0, lit("1-URGENT")).otherwise(col("g")))
+        // ship each committed feed batch into the relay dir the agg
+        // stream watches (flat files, ordered by the fences below)
+        def relay(batch: Int): Unit =
+          new java.io.File(s"$tmp/feed/batch=$batch").listFiles()
+            .filter(_.getName.endsWith(".parquet")).zipWithIndex
+            .foreach { case (f, i) =>
+              java.nio.file.Files.copy(f.toPath,
+                java.nio.file.Paths.get(s"$relayDir/b${batch}_$i.parquet"))
+            }
+        Replay.stage(s1.coalesce(1), snapDir, 1)
+        Replay.withStatePartitions(s) {
+          val cdc = Streams.cdcSink(Replay.source(s, snapDir), Seq("k"),
+            s"$tmp/snapstore", s"$tmp/feed", s"$tmp/ckpt_cdc")
+          // two chained queries, both stopped on every exit path
+          var agg: org.apache.spark.sql.streaming.StreamingQuery = null
+          try {
+            cdc.processAllAvailable()
+            relay(0)
+            agg = Streams.aggSink(Replay.source(s, relayDir), "g", "p",
+              s"$tmp/agg", s"$tmp/ckpt_agg")
+            agg.processAllAvailable()
+            Replay.stage(s2.coalesce(1), snapDir, 2); cdc.processAllAvailable()
+            relay(1); agg.processAllAvailable()
+            Replay.stage(s3.coalesce(1), snapDir, 3); cdc.processAllAvailable()
+            relay(2); agg.processAllAvailable()
+          } finally try cdc.stop() finally if (agg != null) agg.stop()
         }
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-      val res = graft.streaming.Streams.currentSnapshot(s, s"$tmp/agg")
-        .select(col("g"),
-          col("sum_value").cast("double").as("sum_value"), col("n_rows"))
-        .localCheckpoint(true)
-      deleteRecursively(tmp)
-      res
-    }, Some("""WITH cur AS (
+        Streams.currentSnapshot(s, s"$tmp/agg")
+          .select(col("g"),
+            col("sum_value").cast("double").as("sum_value"), col("n_rows"))
+          .localCheckpoint(true)
+      }, Some("""WITH cur AS (
        |  SELECT CASE WHEN o_orderkey % 11 = 0 THEN '1-URGENT'
        |      ELSE o_orderpriority END AS g,
        |    CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 10
@@ -7756,50 +7607,30 @@ object SparkEntry {
        |    AS train_pos
        |FROM k""".stripMargin)),
 
-    ("q259_stream_enrich", (s, d) => {
+    ("q259_stream_enrich", (s, d) =>
       // stream-static dimension enrichment, batch-equivalently
       // certified (the q230 discipline): a real enrichSink
       // StreamingQuery consumes the events table in two staged
       // micro-batches, each left-joining the broadcast customer dim;
       // the telescoped output must hash-match the one-shot batch join
       // — enrichment is stateless, so streaming and batch MUST agree.
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_q259_").toString
-      // finally, not success-path-only: a failed streaming query must
-      // not leak the graft_q259_* feed/out/checkpoint dirs — the
-      // result is localCheckpoint'ed before the delete runs
-      try {
-        val feedDir = s"$tmp/feed"
-        new java.io.File(feedDir).mkdirs()
+      Replay.withTempRoot("graft_q259_") { tmp =>
+        val feed = s"$tmp/feed"
         val ev = t(s, d, "events")
           .select("event_id", "user_id", "event_type")
-        def stage(df: DataFrame, n: Int): Unit = {
-          val aside = s"$tmp/stage$n"
-          df.coalesce(1).write.mode("overwrite").parquet(aside)
-          val part = new java.io.File(aside).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          java.nio.file.Files.move(part.toPath,
-            java.nio.file.Paths.get(s"$feedDir/b$n.parquet"))
-        }
-        stage(ev.filter(col("event_id") % 2 === 0), 1)
+        def half(r: Int) = ev.filter(col("event_id") % 2 === r).coalesce(1)
+        Replay.stage(half(0), feed, 1)
         val dim = t(s, d, "customer")
           .withColumnRenamed("c_custkey", "user_id")
-        val sq = graft.streaming.Streams.enrichSink(
-          s.readStream.schema(s.read.parquet(s"$feedDir/b1.parquet").schema)
-            .parquet(feedDir),
-          dim, "user_id", Seq("c_mktsegment", "c_nationkey"),
-          s"$tmp/out", s"$tmp/ckpt")
-        try {
-          sq.processAllAvailable()
-          stage(ev.filter(col("event_id") % 2 === 1), 2)
-          sq.processAllAvailable()
-        } finally sq.stop()
+        Replay.drive(s) {
+          Streams.enrichSink(Replay.source(s, feed), dim, "user_id",
+            Seq("c_mktsegment", "c_nationkey"), s"$tmp/out", s"$tmp/ckpt")
+        }(() => Replay.stage(half(1), feed, 2))
         s.read.parquet(s"$tmp/out")
           .select("event_id", "user_id", "event_type",
             "c_mktsegment", "c_nationkey")
           .localCheckpoint(true)
-      } finally deleteRecursively(tmp)
-    }, Some("""SELECT e.event_id, e.user_id, e.event_type,
+      }, Some("""SELECT e.event_id, e.user_id, e.event_type,
        |  c.c_mktsegment, c.c_nationkey
        |FROM events e LEFT JOIN customer c ON c.c_custkey = e.user_id"""
       .stripMargin)),
@@ -8253,68 +8084,36 @@ object SparkEntry {
        |  na AS n_a, nb AS n_b
        |FROM terms GROUP BY nv, na, nb""".stripMargin)),
 
-    ("q270_stream_dedup", (s, d) => {
+    ("q270_stream_dedup", (s, d) =>
       // streaming exact key-dedup, batch-equivalently certified (the
       // q259 discipline): an at-least-once feed — two staged
       // micro-batches carrying within-batch replays AND cross-batch
       // replays of batch-1 rows — through dropDuplicatesWithinWatermark;
       // the telescoped output must hash-match the clean events table,
       // proving the keyed state dedups across micro-batch boundaries.
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_q270_").toString
-      try {
-        val feedDir = s"$tmp/feed"
-        new java.io.File(feedDir).mkdirs()
+      Replay.withTempRoot("graft_q270_") { tmp =>
+        val feed = s"$tmp/feed"
         val ev = t(s, d, "events")
           .select("event_id", "ts", "user_id", "event_type")
-        // parallel staging: move EVERY part file into the feed (the
-        // stream discovers them as one micro-batch) — a coalesce(1)
-        // write here was the query's single biggest cost, a
-        // one-thread funnel for a corpus-sized replay feed
-        def stage(df: DataFrame, n: Int): Unit = {
-          val aside = s"$tmp/stage$n"
-          df.write.mode("overwrite").parquet(aside)
-          new java.io.File(aside).listFiles()
-            .filter(_.getName.endsWith(".parquet")).zipWithIndex
-            .foreach { case (part, i) =>
-              java.nio.file.Files.move(part.toPath,
-                java.nio.file.Paths.get(s"$feedDir/b${n}_$i.parquet"))
-            }
-        }
-        // batch 1: even ids, plus replayed copies of every 10th id
-        stage(ev.filter(col("event_id") % 2 === 0)
-          .unionByName(ev.filter(col("event_id") % 10 === 0)), 1)
-        // state-partition sizing, the q277 rule: the dedup state store
-        // commits one delta file per shuffle partition per micro-batch
-        // (stage metrics: 4 stateful 32-task stages at 13-19 s summed
-        // task time vs <0.6 s CPU — pure commit latency). 8 partitions
-        // cuts the commit storm 4×; results are partition-count-
-        // independent and the restore covers everything from the set on.
-        val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
-          val sq = graft.streaming.Streams.dedupSink(
-            s.readStream
-              .schema(s.read.parquet(feedDir).schema)
-              .parquet(feedDir),
-            "ts", Seq("event_id"), delay = "3650 days",
-            s"$tmp/out", s"$tmp/ckpt")
-          try {
-            sq.processAllAvailable()
-            // batch 2: odd ids, replays of odd ids (within-batch dups)
-            // AND replays of id%10==4 — even rows batch 1 already
-            // emitted, the cross-batch state test
-            stage(ev.filter(col("event_id") % 2 === 1)
-              .unionByName(ev.filter(col("event_id") % 10 === 1))
-              .unionByName(ev.filter(col("event_id") % 10 === 4)), 2)
-            sq.processAllAvailable()
-          } finally sq.stop()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
+        def mod(m: Int, r: Int) = ev.filter(col("event_id") % m === r)
+        // staged without coalesce: a coalesce(1) write here was the
+        // query's single biggest cost, a one-thread funnel for a
+        // corpus-sized feed. Batch 1: even ids, plus replayed copies of
+        // every 10th id
+        Replay.stage(mod(2, 0).unionByName(mod(10, 0)), feed, 1)
+        Replay.drive(s) {
+          Streams.dedupSink(Replay.source(s, feed), "ts", Seq("event_id"),
+            delay = "3650 days", s"$tmp/out", s"$tmp/ckpt")
+        }(() =>
+          // batch 2: odd ids, replays of odd ids (within-batch dups)
+          // AND replays of id%10==4 — even rows batch 1 already
+          // emitted, the cross-batch state test
+          Replay.stage(mod(2, 1).unionByName(mod(10, 1))
+            .unionByName(mod(10, 4)), feed, 2))
         s.read.parquet(s"$tmp/out")
           .select("event_id", "ts", "user_id", "event_type")
           .localCheckpoint(true)
-      } finally deleteRecursively(tmp)
-    }, Some("""SELECT event_id, ts, user_id, event_type FROM events""")),
+      }, Some("""SELECT event_id, ts, user_id, event_type FROM events""")),
 
     ("q271_theil_decomposition", (s, d) =>
       // revenue inequality, decomposed: is concentration a NATION
@@ -8544,7 +8343,7 @@ object SparkEntry {
         |FROM adist
         |QUALIFY rnk <= 5""".stripMargin)),
 
-    ("q277_stream_interval_join", (s, d) => {
+    ("q277_stream_interval_join", (s, d) =>
       // the stream-stream attribution join (view -> purchase within
       // 1 h), batch-equivalently certified with the q270 staged-
       // micro-batch discipline: both sides split at 2024-01-16 into
@@ -8559,13 +8358,9 @@ object SparkEntry {
       // sf0.01 (the driver's oracle scale) and 12 at sf0.1; the
       // boundary-crossing left-state carry contributes 2 pairs at
       // sf0.1 — all three scales verified hash-green.
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_q277_").toString
-      try {
+      Replay.withTempRoot("graft_q277_") { tmp =>
         val viewsDir = s"$tmp/views"
         val purchDir = s"$tmp/purch"
-        new java.io.File(viewsDir).mkdirs()
-        new java.io.File(purchDir).mkdirs()
         val ev = t(s, d, "events").select("event_id", "ts", "user_id",
           "event_type")
         // each side is staged twice (batch split) — checkpoint the
@@ -8586,59 +8381,31 @@ object SparkEntry {
         // the q270 corpus-sized-feed case where coalesce(1) was the
         // funnel; 4 keeps writes parallel while the stream reads
         // dozens of files, not hundreds
-        def stage(df: DataFrame, feedDir: String, n: Int): Unit = {
-          val aside = s"$tmp/stage_${new java.io.File(feedDir).getName}_$n"
-          df.coalesce(4).write.mode("overwrite").parquet(aside)
-          new java.io.File(aside).listFiles()
-            .filter(_.getName.endsWith(".parquet")).zipWithIndex
-            .foreach { case (part, i) =>
-              java.nio.file.Files.move(part.toPath,
-                java.nio.file.Paths.get(s"$feedDir/b${n}_$i.parquet"))
-            }
-        }
         val cut = lit("2024-01-16").cast("timestamp")
-        stage(views.filter(col("view_ts") < cut), viewsDir, 1)
-        stage(purch.filter(col("purchase_ts") < cut), purchDir, 1)
-        // a stream-stream join runs FOUR state stores per shuffle
-        // partition, each committing delta files per micro-batch — at
-        // the session's 32 partitions that is ~640 filesystem commits
-        // across this replay's ~5 batches for a few thousand rows of
-        // state. 8 partitions cuts the commit storm 4× (results are
-        // partition-count-independent); Structured Streaming pins the
-        // count in the checkpoint at first batch, and the restore
-        // finally covers EVERYTHING from the set on — a throw during
-        // stream construction or start() must not leak 8 partitions
-        // into the session's later queries
-        val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
-          val joined = graft.streaming.Streams.streamIntervalJoin(
-            s.readStream.schema(s.read.parquet(viewsDir).schema)
-              .parquet(viewsDir),
-            s.readStream.schema(s.read.parquet(purchDir).schema)
-              .parquet(purchDir),
-            "user_id", "view_ts", "purchase_ts",
-            watermark = "1 hour", horizon = "1 hour")
-          val sq = joined.writeStream.format("parquet")
+        Replay.stage(views.filter(col("view_ts") < cut).coalesce(4),
+          viewsDir, 1)
+        Replay.stage(purch.filter(col("purchase_ts") < cut).coalesce(4),
+          purchDir, 1)
+        Replay.drive(s) {
+          Streams.streamIntervalJoin(Replay.source(s, viewsDir),
+              Replay.source(s, purchDir), "user_id", "view_ts",
+              "purchase_ts", watermark = "1 hour", horizon = "1 hour")
+            .writeStream.format("parquet")
             .option("path", s"$tmp/out")
             .option("checkpointLocation", s"$tmp/ckpt")
             .outputMode("append").start()
-          try {
-            sq.processAllAvailable()
-            stage(views.filter(col("view_ts") >= cut), viewsDir, 2)
-            stage(purch.filter(col("purchase_ts") >= cut)
-              .unionByName(purch.filter(col("purchase_ts") <
-                lit("2024-01-02").cast("timestamp"))), purchDir, 2)
-            sq.processAllAvailable()
-          } finally sq.stop()
-        } finally
-          s.conf.set("spark.sql.shuffle.partitions", prevSp)
+        } { () =>
+          Replay.stage(views.filter(col("view_ts") >= cut).coalesce(4),
+            viewsDir, 2)
+          Replay.stage(purch.filter(col("purchase_ts") >= cut)
+            .unionByName(purch.filter(col("purchase_ts") <
+              lit("2024-01-02").cast("timestamp"))).coalesce(4), purchDir, 2)
+        }
         s.read.parquet(s"$tmp/out")
           .select("user_id", "view_id", "purchase_id", "view_ts",
             "purchase_ts")
           .localCheckpoint(true)
-      } finally deleteRecursively(tmp)
-    }, Some("""SELECT v.user_id, v.event_id AS view_id,
+      }, Some("""SELECT v.user_id, v.event_id AS view_id,
        |  p.event_id AS purchase_id, v.ts AS view_ts, p.ts AS purchase_ts
        |FROM events v JOIN events p ON p.user_id = v.user_id
        |WHERE v.event_type = 'view' AND p.event_type = 'purchase'

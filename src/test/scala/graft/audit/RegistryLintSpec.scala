@@ -18,15 +18,41 @@ import graft.{SparkEntry, TestSpark}
   * registered fn constructs (analysis passes) — a registry entry that
   * throws at build time would otherwise first surface in the driver's
   * Verify run.
+  *
+  * The same loop checks that no query leaks into the next one sharing
+  * the session: after each build no StreamingQuery is running,
+  * `spark.sql.shuffle.partitions` has its old value, and no new
+  * `graft_q*` temp root is left under `java.io.tmpdir`.
   */
 class RegistryLintSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
+  private val tmpDir = new java.io.File(System.getProperty("java.io.tmpdir"))
+
+  private def tempRoots: Set[String] =
+    Option(tmpDir.list()).fold(Set.empty[String])(
+      _.filter(_.startsWith("graft_q")).toSet)
 
   test("every registered query emits a flat (driver-comparable) schema") {
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    val leaks = Seq.newBuilder[String]
     val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
+        val rootsBefore = tempRoots
         val schema = fn(spark, sf).schema
+        val running = spark.streams.active
+        if (running.nonEmpty) {
+          leaks += s"$name left ${running.length} StreamingQuery running"
+          running.foreach(_.stop())
+        }
+        val after = spark.conf.get("spark.sql.shuffle.partitions")
+        if (after != partitions) {
+          leaks += s"$name left spark.sql.shuffle.partitions=$after"
+          spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        }
+        val newRoots = tempRoots -- rootsBefore
+        if (newRoots.nonEmpty)
+          leaks += s"$name left ${newRoots.mkString(", ")} in $tmpDir"
         val nested = schema.fields.collect {
           case f if f.dataType.isInstanceOf[ArrayType] ||
             f.dataType.isInstanceOf[StructType] ||
@@ -38,5 +64,8 @@ class RegistryLintSpec extends AnyFunSuite {
     assert(bad.isEmpty,
       s"nested output columns crash the driver's pandas sorter: " +
         bad.mkString("; "))
+    assert(leaks.result().isEmpty,
+      s"queries leak into the shared session: " +
+        leaks.result().mkString("; "))
   }
 }
