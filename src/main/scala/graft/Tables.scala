@@ -1,33 +1,107 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.WeakHashMap
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
 
 /** Testdata access + cross-engine-deterministic aggregate helpers. */
 object Tables {
-  /** Read one testdata table (TESTDATA.md layout).
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+  private val InferNtz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+
+  /** (path, length, modification time) of every file under a table. */
+  private type Fingerprint = Seq[(String, Long, Long)]
+
+  /** Per-session schema catalog: table path -> (fingerprint, schema).
+    * Schemas only, never data. Weak keys: a session's entries go with the
+    * session, and a stopped session's are dropped on the next lookup. */
+  private val catalog =
+    new WeakHashMap[SparkSession, ConcurrentHashMap[String, (Fingerprint, StructType)]]
+
+  /** Read one testdata table (TESTDATA.md layout) with its schema
+    * resolved once per session.
     *
     * Timestamp columns must come out as TIMESTAMP (LTZ) — downstream
     * code uses `unix_micros` and friends, and the DuckDB oracle reads
     * the same µs wall-clock values (sessions run UTC, so LTZ and naive
     * agree). Two parquet layouts exist across testdata generations:
-    *   - TIMESTAMP(NANOS): no native Spark type — read as long (legacy
-    *     nanosAsLong) and convert with integer division (the data has no
-    *     sub-µs component);
+    *   - TIMESTAMP(NANOS): no native Spark type — inferred as long
+    *     (legacy nanosAsLong) and converted with integer division (the
+    *     data has no sub-µs component);
     *   - timestamp[us] with isAdjustedToUTC=false: would infer as
-    *     TIMESTAMP_NTZ — disable `inferTimestampNTZ` so the SCAN types
-    *     it as TIMESTAMP directly (keeps predicate pushdown on the
-    *     column; a post-hoc cast would not).
+    *     TIMESTAMP_NTZ — inference runs with `inferTimestampNTZ` off so
+    *     the SCAN types it as TIMESTAMP directly (keeps predicate
+    *     pushdown on the column; a post-hoc cast would not).
+    *
+    * Both confs apply to schema inference only: they are set around it
+    * and restored after, so no later query in the session runs under
+    * them. Once the schema is given, the scan reads both layouts with
+    * the resolved types whatever the session's confs.
+    *
+    * Inference is a Spark job, so its result is kept per session and
+    * path, beside a fingerprint of the table's files: path, length and
+    * modification time of each. A Spark write names its files afresh, an
+    * in-place rewrite changes a file's length or mtime, and an added or
+    * removed file changes the list; any of these makes the schema be
+    * inferred again, so changed data is never read with a stale schema.
+    * An unchanged table is read with no job before its own scan. A
+    * missing table is never cached, and its read fails with Spark's own
+    * PATH_NOT_FOUND.
     */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (df.schema.fields.exists(f =>
-        f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType))
+    val path = s"$dir/$name.parquet"
+    val df = s.read.schema(schema(s, path)).parquet(path)
+    if (df.schema.fields.exists(f => f.name == "ts" && f.dataType == LongType))
       df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     else df
+  }
+
+  /** The catalog's schema for `path`, inferred when the files changed. */
+  private def schema(s: SparkSession, path: String): StructType = {
+    val entries = catalog.synchronized {
+      catalog.keySet.removeIf(_.sparkContext.isStopped)
+      catalog.computeIfAbsent(s, _ => new ConcurrentHashMap)
+    }
+    fingerprint(s, path) match {
+      case None => infer(s, path)
+      case Some(fp) =>
+        Option(entries.get(path)).collect { case (`fp`, known) => known }
+          .getOrElse {
+            val inferred = infer(s, path)
+            entries.put(path, (fp, inferred))
+            inferred
+          }
+    }
+  }
+
+  /** The table's files, or None when the path does not exist. */
+  private def fingerprint(s: SparkSession, path: String): Option[Fingerprint] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    try {
+      val files = fs.listFiles(p, true)
+      val fp = Seq.newBuilder[(String, Long, Long)]
+      while (files.hasNext) {
+        val f = files.next()
+        fp += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(fp.result().sorted)
+    } catch { case _: FileNotFoundException => None }
+  }
+
+  /** One inference job under the two read confs, which are restored
+    * (or unset) after it whatever it throws. */
+  private def infer(s: SparkSession, path: String): StructType = {
+    val saved = Seq(NanosAsLong, InferNtz).map(k => k -> s.conf.getAll.get(k))
+    s.conf.set(NanosAsLong, "true")
+    s.conf.set(InferNtz, "false")
+    try s.read.parquet(path).schema
+    finally saved.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
   }
 }
 

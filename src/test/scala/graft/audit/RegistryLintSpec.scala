@@ -21,8 +21,9 @@ import graft.{SparkEntry, TestSpark}
   *
   * The same loop checks that no query leaks into the next one sharing
   * the session: after each build no StreamingQuery is running,
-  * `spark.sql.shuffle.partitions` has its old value, and no new
-  * `graft_q*` temp root is left under `java.io.tmpdir`.
+  * `spark.sql.shuffle.partitions` and the two parquet read confs that
+  * table resolution scopes to inference have their old values, and no
+  * new `graft_q*` temp root is left under `java.io.tmpdir`.
   */
 class RegistryLintSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -33,8 +34,19 @@ class RegistryLintSpec extends AnyFunSuite {
     Option(tmpDir.list()).fold(Set.empty[String])(
       _.filter(_.startsWith("graft_q")).toSet)
 
+  private val readConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+  private val watched = "spark.sql.shuffle.partitions" +: readConfs
+
+  private def watchedConfs: Map[String, Option[String]] = {
+    val all = spark.conf.getAll
+    watched.map(k => k -> all.get(k)).toMap
+  }
+
   test("every registered query emits a flat (driver-comparable) schema") {
-    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    // Start without the parquet read confs, so a query that sets them shows.
+    readConfs.foreach(spark.conf.unset)
+    val confs = watchedConfs
     val leaks = Seq.newBuilder[String]
     val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
@@ -45,10 +57,11 @@ class RegistryLintSpec extends AnyFunSuite {
           leaks += s"$name left ${running.length} StreamingQuery running"
           running.foreach(_.stop())
         }
-        val after = spark.conf.get("spark.sql.shuffle.partitions")
-        if (after != partitions) {
-          leaks += s"$name left spark.sql.shuffle.partitions=$after"
-          spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        watchedConfs.foreach { case (k, after) =>
+          if (after != confs(k)) {
+            leaks += s"$name left $k=${after.getOrElse("<unset>")}"
+            confs(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+          }
         }
         val newRoots = tempRoots -- rootsBefore
         if (newRoots.nonEmpty)
