@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Interleaved same-JVM A/B benchmark — the ONLY perf-comparison
   * methodology that works on this box. Single-shot suite snapshots
@@ -15,13 +14,14 @@ import org.apache.spark.sql.functions._
   * absolute seconds are not.
   *
   * Usage: `runMain graft.AbBench <queryA> <queryB> [rounds=5]`
-  * where each name is either a registered [[SparkEntry.queries]] entry
-  * or one of [[AbBench.variants]] — superseded plan shapes preserved
-  * here verbatim (bench-only, never registered) so the change-attributed
-  * claims in COVERAGE.md reproduce with one command:
+  * where each name is a registered [[SparkEntry.queries]] entry.
   *
-  *   runMain graft.AbBench v49_neardup_xxh64 v49_cap_countjoin
-  *   runMain graft.AbBench q124_pq_codes      v124_pq_hof
+  * Superseded plan shapes are not kept here: git history keeps them.
+  * To replay an old claim, check out the commit that still has the
+  * shape and run it there, e.g. (c6a12ee is the last commit with the
+  * `v<NNN>_…` shapes COVERAGE.md cites):
+  *
+  *   git checkout c6a12ee && sbt 'runMain graft.AbBench q145_pagerank v145_unpartitioned'
   *
   * Protocol: one UNTIMED warm run of each side (codegen compilation and
   * parquet footer caches are not what's under test), then `rounds`
@@ -34,487 +34,9 @@ import org.apache.spark.sql.functions._
   */
 object AbBench {
 
-  /** Pre-rewrite bucket cap (NearDup.capBuckets before commit 96faff4):
-    * a full count aggregate over the bucket table plus a broadcast
-    * anti-join of the overfull keys — a second full-table exchange for
-    * the count and a broadcast-job barrier on the critical path, which
-    * the window-count rewrite eliminated by riding the self-join's own
-    * bucket-key exchange.
-    */
-  private def capCountJoin(keyed: DataFrame, keyCols: Seq[String],
-                           maxBucketSize: Int): DataFrame = {
-    val over = keyed.groupBy(keyCols.map(col): _*).count()
-      .filter(col("count") > maxBucketSize)
-      .select(keyCols.map(col): _*)
-    keyed.join(broadcast(over), keyCols, "left_anti")
-  }
-
-  /** q49's pipeline with the pre-rewrite cap, persist placement as it
-    * was then: the UNCAPPED bucket table persisted, cap + self-join on
-    * top (the count aggregate and both join sides each read the cache,
-    * but the cap's exchange is not shared with the join).
-    */
-  private def nearDupPairsCountJoinCap(df: DataFrame, idCol: String,
-                                       textCol: String, threshold: Double,
-                                       k: Int, bands: Int): DataFrame = {
-    val nd = graft.dedup.NearDup
-    val sigs = nd.minhashSignatures(df, idCol, textCol, k, 3)
-    val buckets = nd.lshBuckets(sigs, idCol, bands, k / bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val capped = capCountJoin(buckets, Seq("band_id", "band_hash"), 10000)
-    val a = capped.select(col("band_id"), col("band_hash"), col(idCol).as("id1"))
-    val b = capped.select(col("band_id"), col("band_hash"), col(idCol).as("id2"))
-    val pairs = a.join(b.hint("shuffle_hash"), Seq("band_id", "band_hash"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-    val out = nd.jaccardVerify(pairs, df, idCol, textCol)
-      .filter(col("jaccard") >= threshold)
-      .localCheckpoint(true)
-    buckets.unpersist()
-    out
-  }
-
-  /** Pre-fusion PQ encode (Pq.pqEncode before commit 36fb538): the
-    * m·k-subdistance literal HOF tree — `aggregate(zip_with(slice…))`
-    * per centroid — that the fused native [[graft.functions.PqCodes]]
-    * expression replaced (measured 66× on the 64k-vector corpus).
-    * Same codes, same oracle semantics; only the plan differs.
-    */
-  private def pqEncodeHof(emb: DataFrame, idCol: String, vecCol: String,
-                          codebook: Array[Array[Array[Double]]]): DataFrame = {
-    val m = codebook.length
-    val sub = codebook.head.head.length
-    val vd = graft.sim.Similarity.toDouble(col(vecCol))
-    def subDist(s: Int, cent: Array[Double]) =
-      aggregate(
-        zip_with(slice(vd, s * sub + 1, sub),
-          array(cent.map(lit).toIndexedSeq: _*),
-          (x, c) => (x - c) * (x - c)),
-        lit(0.0), (acc, t) => acc + t)
-    val codes = (0 until m).map { s =>
-      val dists = array(codebook(s).map(c => subDist(s, c)).toIndexedSeq: _*)
-      (array_position(dists, array_min(dists)) - 1).as(s"c$s")
-    }
-    emb.select(col(idCol), posexplode(array(codes: _*)))
-      .select(col(idCol), col("pos").cast("long").as("sub"),
-        col("col").as("code"))
-  }
-
-  /** Superseded baseline shapes, addressable by name next to the live
-    * registry entries. Bench-only: never part of [[SparkEntry.queries]],
-    * never oracled, kept solely so COVERAGE.md's A/B claims replay.
-    */
-  /** q145's PageRank as first committed (6df2104): the edge table
-    * cached on distinct's (src, dst) partitioning, so every iteration's
-    * src-key join re-exchanges the whole |E|-sized edge list. The
-    * repartition-by-src-before-persist rewrite pins the big side once;
-    * only the |V|-sized rank vector moves per iteration.
-    */
-  private def pageRankUnpartitioned(edges: DataFrame, srcCol: String,
-                                    dstCol: String, iters: Int,
-                                    damping: Double): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val outd = e.groupBy("src").agg(count(lit(1)).as("od"))
-    val nn = nodes.agg(count(lit(1)).as("nn"))
-    var ranks = nodes.crossJoin(nn)
-      .select(col("id"), (lit(1.0) / col("nn")).as("r"))
-    var it = 0
-    while (it < iters) {
-      val contrib = e
-        .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
-        .join(outd, Seq("src"))
-        .groupBy(col("dst"))
-        .agg(sum((col("r") / col("od"))
-          .cast(org.apache.spark.sql.types.DecimalType(30, 15)))
-          .cast("double").as("m"))
-      ranks = nodes.crossJoin(nn)
-        .join(contrib, col("id") === col("dst"), "left")
-        .select(col("id"),
-          ((lit(1.0) - lit(damping)) / col("nn")
-            + lit(damping) * coalesce(col("m"), lit(0.0))).as("r"))
-      it += 1
-    }
-    ranks.select(col("id"), round(col("r"), 9).as("rank"))
-  }
-
-  /** q162's LPA loop before the checkpoint-per-round rewrite: rounds
-    * chained LAZILY, the final action re-planning the whole K-round
-    * chain through K windows of AQE stages.
-    */
-  private def lpaLazyChain(edges: DataFrame, iters: Int): DataFrame = {
-    val e0 = edges.select(col("x").as("src"), col("y").as("dst"))
-    val sym = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("community", col("id"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("dst")
-      .orderBy(col("n").desc, col("community").asc)
-    for (_ <- 1 to iters) {
-      labels = sym
-        .join(labels.withColumnRenamed("id", "src"), Seq("src"))
-        .repartition(col("dst"))
-        .groupBy(col("dst"), col("community"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .select(col("dst").as("id"), col("community"))
-    }
-    val out = labels.localCheckpoint(true)
-    sym.unpersist()
-    out
-  }
-
-  /** q170's k-core loop before the checkpoint-per-round rewrite:
-    * rounds chained lazily with persist markers that never materialize
-    * before their parent unpersists — the final action re-derives all
-    * rounds, and the degree union's DOUBLE reference to the surviving
-    * edges fans the re-derivation out exponentially per round.
-    */
-  private def kcoreLazyRounds(edges: DataFrame, k: Int,
-                              rounds: Int): DataFrame = {
-    var surviving = edges
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    for (_ <- 1 to rounds) {
-      val deg = surviving.select(col("a").as("id"))
-        .union(surviving.select(col("b").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("degree"))
-      val keep = deg.filter(col("degree") >= k)
-      val next = surviving
-        .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-        .select("a", "b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      surviving.unpersist()
-      surviving = next
-    }
-    surviving.select(col("a").as("id"))
-      .union(surviving.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("degree"))
-      .localCheckpoint(true)
-  }
-
-  /** q176's normalization before the global-window rewrite: a separate
-    * total aggregate cross-joined back — TWO references to the score
-    * vector per half-round, fanning the lazily-chained rounds out.
-    */
-  private def hitsAggCrossjoin(edges: DataFrame, iters: Int): DataFrame = {
-    val e = edges.select(col("c"), col("p")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def normalized(scores: DataFrame, idName: String): DataFrame = {
-      val tot = scores.agg(graft.Exprs.dsum(col("s")).as("__t"))
-      scores.crossJoin(broadcast(tot))
-        .select(col(idName),
-          round(col("s") * lit(1000000.0) / col("__t"), 6).as("s"))
-    }
-    var hubs = e.select(col("c")).distinct().withColumn("s", lit(1.0))
-    var auths: DataFrame = null
-    for (_ <- 1 to iters) {
-      auths = normalized(e.join(hubs, Seq("c"))
-        .groupBy(col("p")).agg(graft.Exprs.dsum(col("s")).as("s")), "p")
-      hubs = normalized(e.join(auths, Seq("p"))
-        .groupBy(col("c")).agg(graft.Exprs.dsum(col("s")).as("s")), "c")
-    }
-    val out = hubs.select(lit("hub").as("kind"), col("c").as("id"),
-        col("s").as("score"))
-      .unionByName(auths.select(lit("authority").as("kind"),
-        col("p").as("id"), col("s").as("score")))
-      .localCheckpoint(true)
-    e.unpersist()
-    out
-  }
-
-  /** q176's edge build, shared by the HITS variants. */
-  private def hitsEdges(s: SparkSession, d: String): DataFrame =
-    Tables.t(s, d, "orders")
-      .join(Tables.t(s, d, "lineitem"),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-
-  /** Run [[graft.operators.Hits.hitsOn]] with a FORCED strategy at any
-    * depth (the production `hits` picks by `DeepIters`) — the A/B for
-    * the deep-iteration rule: window-totals (lazy chain, single-
-    * partition funnel) vs agg+crossJoin totals with a checkpoint per
-    * half-round.
-    */
-  private def hitsForced(e0: DataFrame, iters: Int, deep: Boolean)
-      : DataFrame = {
-    val e = e0.distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = graft.operators.Hits.hitsOn(e, iters, deep)
-      .localCheckpoint(true)
-    e.unpersist()
-    out
-  }
-
-  /** q174's pre-r11 body: sorted-neighborhood positions from a global
-    * single-partition row_number (superseded by the keyed distributed
-    * rank in Linkage.sortedNeighborhoodPairs).
-    */
-  private def sortedNeighborhoodWindow(left: DataFrame, right: DataFrame,
-                                       lCol: String, rCol: String,
-                                       windowSize: Int, minJw: Double)
-      : DataFrame = {
-    val uni = left.select(col(lCol).as("value"), lit("L").as("src"))
-      .unionByName(right.select(col(rCol).as("value"), lit("R").as("src")))
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("value").asc, col("src").asc)))
-    val offs = uni.select(col("value").as("v1"), col("src").as("s1"),
-        col("__rn"),
-        explode(sequence(lit(1), lit(windowSize - 1))).as("__o"))
-      .select(col("v1"), col("s1"), (col("__rn") + col("__o")).as("__rn2"))
-    offs.join(uni.select(col("value").as("v2"), col("src").as("s2"),
-        col("__rn").as("__rn2")), Seq("__rn2"))
-      .filter(col("s1") =!= col("s2"))
-      .select(
-        when(col("s1") === "L", col("v1")).otherwise(col("v2")).as("query"),
-        when(col("s1") === "L", col("v2")).otherwise(col("v1")).as("matched"))
-      .withColumn("jw",
-        round(graft.functions.JaroWinkler.of(col("query"), col("matched")), 9))
-      .filter(col("jw") >= lit(minJw))
-      .distinct()
-  }
-
-  val variants: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // q231's pair table WITHOUT the deliberate re-exchange on `b`
-    // (comp stays hashed on (a, b) out of its groupBy, so every MM
-    // round's strength join on b re-exchanges |E| instead of |items|):
-    //   AbBench q231_bradley_terry v231_bt_unpartitioned
-    "v231_bt_unpartitioned" -> ((s, d) => {
-      val li = Tables.t(s, d, "lineitem")
-        .select("l_orderkey", "l_partkey", "l_quantity")
-      val a = li.select(col("l_orderkey").as("k"),
-        col("l_partkey").as("wp"), col("l_quantity").as("wq"))
-      val b = li.select(col("l_orderkey").as("k"),
-        col("l_partkey").as("lp"), col("l_quantity").as("lq"))
-      val comps = a.join(b, Seq("k"))
-        .filter(col("wp") =!= col("lp") && col("wq") > col("lq"))
-        .select(col("wp").as("winner"), col("lp").as("loser"))
-      graft.operators.BradleyTerry.fit(comps, "winner", "loser",
-        iters = 3, prePartitionPairs = false)
-    }),
-    // The r10 global-window formulations of the three sites rewired
-    // onto operators/Ranks in r11 — preserved so the rewiring's local
-    // cost/benefit stays one interleaved command away:
-    //   AbBench q155_dsir_selection v155_window_topk
-    //   AbBench q164_surprisal_decile_filter v164_window_decile
-    //   AbBench q174_sorted_neighborhood v174_window_positions
-    "v155_window_topk" -> ((s, d) => {
-      val (scored, tfOpt) = graft.text.Vocab.dsirScoredTable(
-        Tables.t(s, d, "documents"), "doc_id", "text",
-        col("lang") === "en", buckets = 1021, persistInput = true)
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("dsir_score").desc, col("doc_id").asc)
-      val res = scored.withColumn("selected",
-          (row_number().over(w) <= 100).cast("boolean"))
-        .localCheckpoint(true)
-      tfOpt.foreach(_.unpersist())
-      res
-    }),
-    "v164_window_decile" -> ((s, d) => {
-      val per = graft.text.Vocab.unigramSurprisal(
-          Tables.t(s, d, "documents"), "doc_id", "text")
-        .withColumn("mean_surprisal",
-          col("total_surprisal") / col("n_tokens"))
-      val all = org.apache.spark.sql.expressions.Window.partitionBy()
-      val ranked = per.withColumn("__n", count(lit(1)).over(all))
-        .withColumn("decile", lit(1L) +
-          expr("10L * (row_number() over (order by mean_surprisal asc, " +
-            "doc_id asc) - 1) div __n"))
-      ranked.select(col("doc_id"), col("n_tokens"), col("total_surprisal"),
-        col("mean_surprisal"), col("decile"),
-        (col("decile") <= lit(9L)).as("keep"))
-    }),
-    // The single-task shapes the r12 rank adds replace — one command
-    // reproduces each claim:
-    //   AbBench q208_ntile v208_window_ntile
-    //   AbBench q217_grouped_quantiles v217_window_quantiles
-    "v208_window_ntile" -> ((s, d) =>
-      Tables.t(s, d, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_extendedprice")
-        .withColumn("tile", ntile(16).over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("l_extendedprice").asc, col("l_orderkey").asc,
-              col("l_linenumber").asc)).cast("long"))
-        .select("l_orderkey", "l_linenumber", "tile")),
-    //   AbBench q228_auc v228_window_auc
-    "v228_window_auc" -> ((s, d) => {
-      val docs = Tables.t(s, d, "documents")
-      val model = graft.text.QualityClassifier.nbTrain(
-        docs, "text", col("lang") === "en")
-      val scored = graft.text.QualityClassifier
-        .nbScore(docs, "doc_id", "text", model)
-        .join(docs.select(col("doc_id"), (col("lang") === "en").as("y")),
-          Seq("doc_id"))
-      // the banned shape: tie-corrected midranks from a GLOBAL rank
-      // window (one task sorts every row) + a same-score count window
-      val w = org.apache.spark.sql.expressions.Window.orderBy(col("score"))
-      val ws = org.apache.spark.sql.expressions.Window.partitionBy(col("score"))
-      scored
-        .withColumn("tm", lit(2L) * rank().over(w) + count(lit(1)).over(ws) - 1L)
-        .agg(
-          sum(when(col("y"), col("tm")).otherwise(0L)).as("u2"),
-          sum(when(col("y"), 1L).otherwise(0L)).as("p"),
-          sum(when(!col("y"), 1L).otherwise(0L)).as("nn"))
-        .select(col("p").as("n_pos"), col("nn").as("n_neg"),
-          ((col("u2") - col("p") * (col("p") + 1)).cast("double") /
-            (lit(2L) * col("p") * col("nn")).cast("double")).as("auc"))
-    }),
-    "v217_window_quantiles" -> ((s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type"))
-        .orderBy(col("value").asc, col("event_id").asc)
-      val r = Tables.t(s, d, "events")
-        .select(col("event_type"), col("event_id"), col("value"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .withColumn("n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("event_type"))))
-      val probs = s.createDataFrame(Seq(0.5, 0.95, 0.99).map(Tuple1(_)))
-        .toDF("prob")
-        .withColumn("__pd", col("prob").cast("decimal(20,10)"))
-      r.crossJoin(broadcast(probs))
-        .filter(col("rn") === ceil(col("__pd") * col("n")).cast("long"))
-        .select(col("event_type"), col("prob"), col("value"))
-    }),
-    "v174_window_positions" -> ((s, d) => {
-      val words = Tables.t(s, d, "documents")
-        .select(explode(graft.text.TextOps.tokens(col("text"))).as("w"))
-        .distinct()
-      val dirty = words.filter(length(col("w")) >= 3)
-        .select(concat(substring(col("w"), 1, 1), expr("substring(w, 3)"))
-          .as("q")).distinct()
-      sortedNeighborhoodWindow(dirty, words, "q", "w", 4, 0.6)
-    }),
-    // The XXH64 production-hash family, demoted from the registry in
-    // r11 (they were the last rows-only CORRECTNESS entries; every
-    // family has a green portable-hash twin — q136, q142, q183/q184,
-    // q189/q190 — and the XXH64 expressions keep their own
-    // codegen==interpreted + brute-force units). Preserved here
-    // verbatim so the production shapes stay one command away from a
-    // measurement: runMain graft.AbBench v49_neardup_xxh64 q183_...
-    "v48_minhash_xxh64" -> ((s, d) =>
-      graft.dedup.NearDup.minhashSignatures(
-          Tables.t(s, d, "documents"), "doc_id", "text")
-        .select(col("doc_id"),
-          element_at(col("sig"), 1).as("m0"),
-          element_at(col("sig"), 2).as("m1"),
-          element_at(col("sig"), 3).as("m2"),
-          element_at(col("sig"), 4).as("m3"))),
-    "v49_neardup_xxh64" -> ((s, d) => {
-      val docs = Tables.t(s, d, "documents").select("doc_id", "text")
-      val mutated = docs.select((col("doc_id") + 1000000L).as("doc_id"),
-        regexp_replace(col("text"), "^\\S+\\s", "").as("text"))
-      graft.dedup.NearDup.nearDupPairs(docs.unionByName(mutated),
-        "doc_id", "text", threshold = 0.5, k = 64, bands = 16)
-    }),
-    "v50_simhash_xxh64" -> ((s, d) => {
-      val docs = Tables.t(s, d, "documents").select("doc_id", "text")
-      val mutated = docs.select((col("doc_id") + 1000000L).as("doc_id"),
-        regexp_replace(col("text"), "^\\S+\\s", "").as("text"))
-      graft.dedup.NearDup.simhashPairsBlocked(
-        graft.dedup.NearDup.simhash(docs.unionByName(mutated),
-          "doc_id", "text"),
-        "doc_id", maxHamming = 7)
-    }),
-    "v51_ann_lsh_xxh64" -> ((s, d) => {
-      val emb = Tables.t(s, d, "embeddings")
-      graft.sim.Similarity.lshTopK(emb, emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", k = 5, bits = 8, dim = 64, tables = 8)
-    }),
-    "v56_ann_ivf_xxh64" -> ((s, d) => {
-      val emb = Tables.t(s, d, "embeddings")
-      graft.sim.Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", k = 5, nlist = 16, nprobe = 4)
-    }),
-    "v57_hll_distinct" -> ((s, d) =>
-      Tables.t(s, d, "events")
-        .groupBy(to_date(col("ts")).as("event_date"))
-        .agg(approx_count_distinct("user_id").as("approx_users"))),
-    "v176_agg_crossjoin" -> ((s, d) => {
-      val e = hitsEdges(s, d)
-      hitsAggCrossjoin(e, 2)
-    }),
-    "v176_deep8" -> ((s, d) =>
-      hitsForced(hitsEdges(s, d), iters = 8, deep = true)),
-    "v176_window8" -> ((s, d) =>
-      hitsForced(hitsEdges(s, d), iters = 8, deep = false)),
-    // the REGISTERED depth, both strategies forced — the r12 size-vs-
-    // depth A/B (run against a 10x edge list: the window's local win at
-    // sf0.1 is what the deep shape's distributed totals must beat as
-    // |V| grows):  AbBench v176_deep2 v176_window2
-    "v176_deep2" -> ((s, d) =>
-      hitsForced(hitsEdges(s, d), iters = 2, deep = true)),
-    "v176_window2" -> ((s, d) =>
-      hitsForced(hitsEdges(s, d), iters = 2, deep = false)),
-    // q182 before the r12 kept-checkpoint: the surprisal pipeline
-    // re-evaluates at every reference prefixFilterPairs makes to its
-    // input. A/B vs the registered query:  AbBench q182_corpus_build_v2
-    // v182_lazy_kept (run at soak sf1 where the recompute is visible)
-    "v182_lazy_kept" -> ((s, d) => {
-      val docs = Tables.t(s, d, "documents").select("doc_id", "text")
-      val kept = graft.text.CorpusClean.surprisalDecileFilter(
-          docs, "doc_id", "text", dropWorstDeciles = 1)
-        .filter(col("keep"))
-        .select("doc_id", "n_tokens")
-      val surv = docs.join(kept.select("doc_id"), Seq("doc_id"))
-      val pairs = graft.dedup.NearDup.prefixFilterPairs(surv,
-        "doc_id", "text", threshold = 0.9, shingleN = 3)
-        .select(col("id1"), col("id2"))
-      val comps = graft.operators.ConnectedComponents
-        .components(pairs, "id1", "id2")
-      graft.operators.ConnectedComponents.keepBestRepresentatives(
-        kept, "doc_id", comps, "n_tokens")
-    }),
-    "v170_lazy_rounds" -> ((s, d) => {
-      val edges = graft.operators.MarketBasket.associationRules(
-          Tables.t(s, d, "lineitem"), "l_orderkey", "l_partkey", 2)
-        .filter(col("antecedent") < col("consequent"))
-        .select(col("antecedent").as("x"), col("consequent").as("y"))
-      kcoreLazyRounds(edges, 2, 3)
-    }),
-    "v162_lazy_chain" -> ((s, d) => {
-      val edges = graft.operators.MarketBasket.associationRules(
-          Tables.t(s, d, "lineitem"), "l_orderkey", "l_partkey", 2)
-        .filter(col("antecedent") < col("consequent"))
-        .select(col("antecedent").as("x"), col("consequent").as("y"))
-      lpaLazyChain(edges, 3)
-    }),
-    "v145_unpartitioned" -> ((s, d) => {
-      val li = Tables.t(s, d, "lineitem").select("l_orderkey", "l_partkey")
-      val e = li.select(col("l_orderkey").as("k"), col("l_partkey").as("src"))
-        .join(li.select(col("l_orderkey").as("k"), col("l_partkey").as("dst")),
-          Seq("k"))
-        .filter(col("src") =!= col("dst"))
-      pageRankUnpartitioned(e, "src", "dst", 2, 0.85)
-    }),
-    "v49_cap_countjoin" -> ((s, d) => {
-      val docs = Tables.t(s, d, "documents").select("doc_id", "text")
-      val mutated = docs.select((col("doc_id") + 1000000L).as("doc_id"),
-        regexp_replace(col("text"), "^\\S+\\s", "").as("text"))
-      nearDupPairsCountJoinCap(docs.unionByName(mutated), "doc_id", "text",
-        threshold = 0.5, k = 64, bands = 16)
-    }),
-    "v124_pq_hof" -> ((s, d) => {
-      val emb = Tables.t(s, d, "embeddings").select("vec_id", "embedding")
-      val cb = graft.sim.Pq.pqTrain(emb, "vec_id", "embedding", m = 8, k = 16)
-      pqEncodeHof(emb, "vec_id", "embedding", cb)
-    }))
-
   private def resolve(name: String): (SparkSession, String) => DataFrame =
-    SparkEntry.queries.get(name).orElse(variants.get(name)).getOrElse {
-      val known = (SparkEntry.queries.keys ++ variants.keys).toSeq.sorted
-      sys.error(s"unknown query '$name'; known: ${known.mkString(", ")}")
-    }
+    SparkEntry.queries.getOrElse(name, sys.error(
+      s"unknown query '$name'; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
 
   private def runOnce(spark: SparkSession, sfDir: String,
                       fn: (SparkSession, String) => DataFrame): Double = {

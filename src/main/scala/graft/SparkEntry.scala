@@ -5353,8 +5353,9 @@ object SparkEntry {
       // (shingle build, frequency join, jaccard verify). For q165 that
       // input is a cheap parquet scan; HERE it is the whole surprisal
       // pipeline — the lineage rule says checkpoint. Interleaved A/B
-      // at soak sf1 (AbBench q182_corpus_build_v2 v182_lazy_kept,
-      // busy box): checkpoint 3/5, medians 77.2 s vs 86.8 s — a real
+      // at soak sf1 (`git checkout c6a12ee && sbt 'runMain
+      // graft.AbBench q182_corpus_build_v2 v182_lazy_kept'`, busy
+      // box): checkpoint 3/5, medians 77.2 s vs 86.8 s — a real
       // but modest win; the re-derivations mostly hit cached parquet,
       // so only the surprisal aggregates themselves were being repaid.
       val kept = graft.text.CorpusClean.surprisalDecileFilter(
@@ -5795,7 +5796,9 @@ object SparkEntry {
       // z-scored against its own TRAILING 7-day window (current day
       // excluded — an anomaly must not inflate its own baseline).
       // Decimal-exact window moments; sqrt is IEEE-exact; z emitted
-      // unrounded (deterministic operands, the q164 rule).
+      // unrounded (deterministic operands, the q164 rule). A window
+      // with zero variance has no z: try_divide gives NULL there, as
+      // the oracle's division does, where ANSI `/` would throw.
       import org.apache.spark.sql.expressions.Window
       val daily = t(s, d, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
@@ -5809,7 +5812,7 @@ object SparkEntry {
       daily
         .withColumn("trail_n", count(lit(1)).over(w))
         .withColumn("trail_mean", m)
-        .withColumn("z", (col("n") - m) / sqrt(m2 - m * m))
+        .withColumn("z", try_divide(col("n") - m, sqrt(m2 - m * m)))
         .filter(col("trail_n") >= 3)
         .select(col("event_type"), col("day"), col("n"),
           col("trail_mean"), col("z"),
@@ -6218,9 +6221,9 @@ object SparkEntry {
          |FROM x JOIN st USING (dim)""".stripMargin)),
 
     ("q191_pagerank_deep", (s, d) => {
-      // convergence-grade PageRank: 6 power iterations with the edge
-      // table explicitly pre-partitioned on src (the scale shape the
-      // r10 verdict asked CORRECTNESS to gate — until now only the
+      // convergence-grade PageRank: 6 power iterations, deep enough
+      // that the edge table is pre-partitioned on src (the scale shape
+      // the r10 verdict asked CORRECTNESS to gate — until now only the
       // shallow/off path was registered). Graph: part co-purchase
       // restricted to the first two lines of each order, so the edge
       // build stays cheap while the iteration depth dominates — the
@@ -6232,8 +6235,7 @@ object SparkEntry {
         .join(li.select(col("l_orderkey").as("k"),
           col("l_partkey").as("dst")), Seq("k"))
         .filter(col("src") =!= col("dst"))
-      graft.operators.PageRank.pageRank(e, "src", "dst", iters = 6,
-        prePartitionEdges = Some(true))
+      graft.operators.PageRank.pageRank(e, "src", "dst", iters = 6)
     }, Some(pageRankChainSql(6,
       """SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
         |  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
@@ -8326,8 +8328,9 @@ object SparkEntry {
       // the BASE's hash-smallest vectors, codes over base ∪ batch —
       // which is exactly what frozen-codebook determinism guarantees.
       // Like q206, the once-per-rebuild BUILD rides in the timed
-      // window by oracle necessity; the delta-only cost is measured
-      // separately (tools/PqDeltaBench).
+      // window by oracle necessity; the delta-only cost was measured
+      // separately by the dev main `tools/PqDeltaBench` that commit
+      // c6a12ee still has (see COVERAGE.md).
       val emb = t(s, d, "embeddings").select("vec_id", "embedding")
       val base = emb.filter(col("vec_id") % 5 =!= 0)
       val batch = emb.filter(col("vec_id") % 5 === 0)

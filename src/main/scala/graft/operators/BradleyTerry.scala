@@ -37,16 +37,15 @@ import org.apache.spark.sql.types.DecimalType
   * the strength vector is deliberately NOT broadcast (|items| stops
   * fitting the moment the catalog does).
   *
-  * Measured caveat (interleaved A/B, `AbBench q231_bradley_terry
-  * v231_bt_unpartitioned`): at iters = 3 the pre-exchange is a WASH —
-  * sf0.1 medians 9.6 s on / 12.7 s off (3–2), soak sf1 54.7 s on /
-  * 44.2 s off (1–2, loaded box). The saved per-round b-exchange is
-  * partly repaid because a single-key `b` layout can be SKEWED where
-  * the (a, b) groupBy layout is uniform (one popular item concentrates
-  * its pair rows in one partition). Default stays on for
-  * convergence-grade depth, where one exchange per round amortizes;
-  * shallow fits on skewed catalogs may pass `prePartitionPairs =
-  * false` — results are bit-identical either way (spec-pinned).
+  * Measured caveat (interleaved A/B, `git checkout c6a12ee && sbt
+  * 'runMain graft.AbBench q231_bradley_terry v231_bt_unpartitioned'`):
+  * at iters = 3 the pre-exchange is a WASH — sf0.1 medians 9.6 s on /
+  * 12.7 s off (3–2), soak sf1 54.7 s on / 44.2 s off (1–2, loaded
+  * box). The saved per-round b-exchange is partly repaid because a
+  * single-key `b` layout can be SKEWED where the (a, b) groupBy
+  * layout is uniform (one popular item concentrates its pair rows in
+  * one partition). It stays on for convergence-grade depth, where one
+  * exchange per round amortizes.
   *
   * Determinism (what makes a distributed iterative fit oracle-able —
   * the PageRank.scala rules): every per-edge term n_ij/(p_a+p_b) is
@@ -67,15 +66,13 @@ object BradleyTerry {
     * table, RE-EXCHANGED ON `b` so each MM round's strength join on b
     * reads the cache's partitioning (package-visible for the plan pin).
     */
-  private[operators] def pairTable(wins: DataFrame,
-                                   prePartition: Boolean = true): DataFrame = {
-    val comp = wins
+  private[operators] def pairTable(wins: DataFrame): DataFrame =
+    wins
       .select(col("winner").as("a"), col("loser").as("b"), col("w"))
       .union(wins.select(col("loser").as("a"), col("winner").as("b"),
         col("w")))
       .groupBy("a", "b").agg(sum("w").as("n"))
-    if (prePartition) comp.repartition(col("b")) else comp
-  }
+      .repartition(col("b"))
 
   /** Fit strengths from one-row-per-comparison data. Output:
     * (id, strength), Σ strength = 1, rounded to 9 dp. Self-comparisons
@@ -95,8 +92,7 @@ object BradleyTerry {
     * holds two rounds of state, not `iters`.
     */
   def fit(comparisons: DataFrame, winnerCol: String, loserCol: String,
-          iters: Int, checkpointDir: Option[String] = None,
-          prePartitionPairs: Boolean = true): DataFrame = {
+          iters: Int, checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     checkpointDir.foreach(
       comparisons.sparkSession.sparkContext.setCheckpointDir)
@@ -108,7 +104,7 @@ object BradleyTerry {
       .groupBy(col(winnerCol).as("winner"), col(loserCol).as("loser"))
       .agg(count(lit(1)).as("w"))
       .persist(mem) // feeds comp AND wtot; computed once, dropped below
-    val comp = pairTable(wins, prePartitionPairs).persist(mem)
+    val comp = pairTable(wins).persist(mem)
     val wtot = wins.groupBy(col("winner").as("id")).agg(sum("w").as("wi"))
       .persist(mem)
     // every item appears as an `a` (it is a winner or a loser of at

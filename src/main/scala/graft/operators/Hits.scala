@@ -42,7 +42,8 @@ object Hits {
     * forced REGARDLESS of depth. The shallow window funnels all |V|
     * score rows through one task per half-round; the deep shape's cost
     * is a ~constant per-round checkpoint barrier. Interleaved A/B at
-    * the registered depth (AbBench v176_deep2 v176_window2): at |V| ≈
+    * the registered depth (`git checkout c6a12ee && sbt 'runMain
+    * graft.AbBench v176_deep2 v176_window2'`): at |V| ≈
     * 35k (sf0.1) the window wins 4/4; at |V| ≈ 350k (10× soak edge
     * list, 5.4M edges) it is down to 3/5 with medians 14.9 s vs 17.2 s
     * and a 32 s worst round — the window's local win is a shrinking
@@ -84,8 +85,9 @@ object Hits {
     *    is what the lineage rule prescribes once a round references
     *    its input twice (agg + projection), and it also caps the plan
     *    at O(1) per round instead of O(2^halfRounds). A/B at iters=8
-    *    (AbBench v176_deep8 vs v176_window8, quiet box): deep 5/5
-    *    wins, median 19.2 s vs 32.8 s at sf0.1.
+    *    (`git checkout c6a12ee && sbt 'runMain graft.AbBench
+    *    v176_deep8 v176_window8'`, quiet box): deep 5/5 wins, median
+    *    19.2 s vs 32.8 s at sf0.1.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int = 2): DataFrame = {
@@ -106,11 +108,11 @@ object Hits {
   }
 
   /** Iteration body over a pre-deduped, persisted edge list `e(c, p)`
-    * — exposed package-private so AbBench can pin either strategy at
-    * any depth; results are bit-identical between the two (same sums,
+    * — package-private so the spec can pin either strategy at any
+    * depth; results are bit-identical between the two (same sums,
     * same 6 dp grid), only the plan differs.
     */
-  private[graft] def hitsOn(e: DataFrame, iters: Int, deep: Boolean)
+  private[operators] def hitsOn(e: DataFrame, iters: Int, deep: Boolean)
       : DataFrame = {
     def normalized(scores: DataFrame, idName: String): DataFrame =
       if (deep) {

@@ -41,13 +41,14 @@ object LabelPropagation {
 
     // rounds chain LAZILY on purpose: each round references the
     // previous labels exactly ONCE, so lineage depth grows linearly
-    // with no fan-out, and an interleaved A/B (v162_lazy_chain, 4
-    // rounds at sf0.1) showed a checkpoint-per-round rewrite of this
-    // loop LOSES (medians 3.48 s lazy vs 4.28 s checkpointed — the
-    // per-round materialization barrier outweighs the replanning it
-    // saves). Contrast KCore, where the degree union references its
-    // input TWICE per round — exponential fan-out — and the same
-    // rewrite won 6x. The rule is the reference count, not the loop.
+    // with no fan-out, and an interleaved A/B (v162_lazy_chain at
+    // c6a12ee, 4 rounds at sf0.1) showed a checkpoint-per-round
+    // rewrite of this loop LOSES (medians 3.48 s lazy vs 4.28 s
+    // checkpointed — the per-round materialization barrier outweighs
+    // the replanning it saves). Contrast KCore, where the degree
+    // union references its input TWICE per round — exponential
+    // fan-out — and the same rewrite won 6x. The rule is the
+    // reference count, not the loop.
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("community", col("id"))
     val w = Window.partitionBy("dst")

@@ -36,24 +36,33 @@ object PageRank {
     * iterations from the uniform start. Output: (id, rank), rank
     * rounded to 9 dp.
     *
-    * `prePartitionEdges` caches the edge table RE-EXCHANGED ON src so
-    * each iteration's src-key join reads the cache's partitioning and
-    * only the |V|-sized rank vector moves (distinct leaves the table
-    * hashed on (src, dst), which the src join cannot reuse). That
-    * repartition is one extra |E| exchange at build time, amortized
-    * over the iterations it saves — the interleaved A/B
-    * (`runMain graft.AbBench q145_pagerank v145_unpartitioned`) shows
-    * a wash at iters = 2 (medians within 2.5%, 2-3 win split), so the
-    * default follows iteration depth: convergence-grade runs (10-30
-    * rounds) pay the exchange once and save it every round. A
-    * broadcast of ranks is deliberately NOT the answer — |V| stops
-    * fitting the moment the graph does.
+    * At convergence-grade depth (`iters >= 3`) the edge table is
+    * cached RE-EXCHANGED ON src so each iteration's src-key join reads
+    * the cache's partitioning and only the |V|-sized rank vector moves
+    * (distinct leaves the table hashed on (src, dst), which the src
+    * join cannot reuse). That repartition is one extra |E| exchange at
+    * build time, amortized over the iterations it saves — the
+    * interleaved A/B (`git checkout c6a12ee && sbt 'runMain
+    * graft.AbBench q145_pagerank v145_unpartitioned'`) shows a wash at
+    * iters = 2 (medians within 2.5%, 2-3 win split), so shallow runs
+    * skip it and convergence-grade runs (10-30 rounds) pay the
+    * exchange once and save it every round. A broadcast of ranks is
+    * deliberately NOT the answer — |V| stops fitting the moment the
+    * graph does.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, damping: Double = 0.85,
-               prePartitionEdges: Option[Boolean] = None): DataFrame = {
+               iters: Int, damping: Double = 0.85): DataFrame =
+    pageRankOn(edges, srcCol, dstCol, iters, damping, pin = iters >= 3)
+
+  /** [[pageRank]] with the src pre-exchange forced on or off —
+    * package-private so the spec can pin both paths at one depth;
+    * results are bit-identical either way, only the plan differs.
+    */
+  private[operators] def pageRankOn(edges: DataFrame, srcCol: String,
+                                    dstCol: String, iters: Int,
+                                    damping: Double,
+                                    pin: Boolean): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val pin = prePartitionEdges.getOrElse(iters >= 3)
     val dedup = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
     // Persists stay LAZY deliberately. Hypothesis tested in r11: the
@@ -61,11 +70,11 @@ object PageRank {
     // first contribution join) race the cold cache and might each
     // re-run the expensive edge build, so eager `e.count()` +
     // `nodes.count()` should help. A/B at sf0.1 (eager vs
-    // v145_unpartitioned's lazy shape, 5 interleaved rounds) says NO:
-    // lazy wins 4/5, medians 6.54 s vs 7.10 s — the block manager's
-    // per-partition cache locking already makes concurrent cold reads
-    // compute each partition exactly once, so the counts only add two
-    // full cache scans of overhead.
+    // v145_unpartitioned's lazy shape at c6a12ee, 5 interleaved
+    // rounds) says NO: lazy wins 4/5, medians 6.54 s vs 7.10 s — the
+    // block manager's per-partition cache locking already makes
+    // concurrent cold reads compute each partition exactly once, so
+    // the counts only add two full cache scans of overhead.
     val e = (if (pin) dedup.repartition(col("src")) else dedup)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = e.select(col("src").as("id"))

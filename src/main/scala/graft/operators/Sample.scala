@@ -55,7 +55,7 @@ object Sample {
     * independent composition a pipeline expects. Nor does an INPUT
     * shift fix a fixed two-round chain: g(id+s₂) = g(id+s₁) + c mod m
     * up to the one mod-P2 wrap — a composition of affine maps — so
-    * seeded variants of the same function stay one of two constant
+    * seeded copies of the same function stay one of two constant
     * rotations apart (measured: a 200‰∘500‰ chain kept 127‰, and a
     * split of a sample put 0 rows in val). The seed therefore perturbs
     * the FIRST-ROUND MULTIPLIER: buckets from different seeds differ by

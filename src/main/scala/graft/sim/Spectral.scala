@@ -36,17 +36,7 @@ object Spectral {
     * dim²-row table, which is free. dim² output rows.
     */
   def gram(df: DataFrame, vecCol: String): DataFrame = {
-    // Scan-parallelism floor (Par.fan): the dim²/2-way pair explode
-    // below multiplies every row ~2080× (dim 64) — on a single-file
-    // input that whole expansion and the cell partial-aggregate run on
-    // ONE core. Fan the COMPACT vectors first (§2.3: shuffle few
-    // bytes, expand after), keyed by the vector's own leading
-    // component (high-cardinality; the id column is not in scope
-    // here). No-op at scale.
-    val v = graft.operators.Par.fan(
-      df.select(Similarity.toDouble(col(vecCol)).as("__v")),
-      col("__v").getItem(0))
-    val upper = v
+    val upper = fanVectors(df, vecCol)
       .select(posexplode(col("__v")).as(Seq("i", "xi")), col("__v"))
       .select(col("i").cast("long").as("i"),
         posexplode(col("__v")).as(Seq("j", "xj")), col("xi"))
@@ -58,6 +48,19 @@ object Spectral {
     upper.unionByName(upper.filter(col("j") > col("i"))
       .select(col("j").as("i"), col("i").as("j"), col("c")))
   }
+
+  /** The vector column as `__v: array<double>`, under the
+    * scan-parallelism floor (Par.fan): [[gram]]'s dim²/2-way pair
+    * explode multiplies every row ~2080× (dim 64) — on a single-file
+    * input that whole expansion and the cell partial-aggregate run on
+    * ONE core. Fan the COMPACT vectors first (§2.3: shuffle few bytes,
+    * expand after), keyed by the whole vector (the id column is not in
+    * scope here; a single coordinate can be constant and would
+    * collapse the fan to one partition). No-op at scale.
+    */
+  private[sim] def fanVectors(df: DataFrame, vecCol: String): DataFrame =
+    graft.operators.Par.fan(
+      df.select(Similarity.toDouble(col(vecCol)).as("__v")), col("__v"))
 
   /** Dominant eigendirection of a `(i, j, c)` Gram table by `iters`
     * power-iteration steps from the all-ones vector (deterministic —

@@ -44,7 +44,7 @@ object TextOps {
     hitCountToks(tokens(text), words)
 
   /** [[hitCount]] over an already-tokenized column. Prefer the toks
-    * variants when computing several signals for one document: each
+    * forms when computing several signals for one document: each
     * text-based call re-runs the regex split, and with ≥2 references the
     * projected token attribute survives CollapseProject, so the split
     * runs exactly once per row.

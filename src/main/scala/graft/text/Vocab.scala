@@ -756,7 +756,8 @@ object Vocab {
     // documented caller contract); that checkpoint also replaces the
     // old post-window one, so the call count is unchanged.
     // Interleaved A/B vs the superseded window shape
-    // (`AbBench q155_dsir_selection v155_window_topk`): see COVERAGE.
+    // (`git checkout c6a12ee && sbt 'runMain graft.AbBench
+    // q155_dsir_selection v155_window_topk'`): see COVERAGE.
     val scoredM =
       if (persistInput) scored.localCheckpoint(true) else scored
     val res = graft.operators.Ranks
@@ -769,14 +770,13 @@ object Vocab {
   }
 
   /** The per-document `(idCol, n_tokens, dsir_score)` table, selection
-    * left to the caller — package-private so AbBench can pin the
-    * superseded window top-k against [[dsirScore]]'s distributed rank.
-    * Returns the persisted `tf` intermediate (if any) for the caller
-    * to unpersist AFTER materializing its selection.
+    * left to the caller ([[dsirScore]]). Returns the persisted `tf`
+    * intermediate (if any) for the caller to unpersist AFTER
+    * materializing its selection.
     */
-  private[graft] def dsirScoredTable(df: DataFrame, idCol: String,
-                                     textCol: String, isTarget: Column,
-                                     buckets: Int, persistInput: Boolean)
+  private def dsirScoredTable(df: DataFrame, idCol: String,
+                              textCol: String, isTarget: Column,
+                              buckets: Int, persistInput: Boolean)
       : (DataFrame, Option[DataFrame]) = {
     // buckets should be PRIME (default 1021): the bucket hash's last
     // round is multiplicative, and an odd multiplier is a bijection of

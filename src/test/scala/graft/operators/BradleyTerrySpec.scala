@@ -62,18 +62,6 @@ class BradleyTerrySpec extends AnyFunSuite {
     assert(one == many, "DECIMAL accumulation must erase partition order")
   }
 
-  test("pre-partitioned and unpartitioned pair tables are bit-identical") {
-    // the v231 A/B's correctness precondition: the repartition moves
-    // rows, never changes them
-    val comps = (1L to 300L).map(i => (i % 19, (i * 11) % 19))
-      .filter(p => p._1 != p._2).toDF("winner", "loser")
-    val on = BradleyTerry.fit(comps, "winner", "loser", 3)
-      .as[(Long, Double)].collect().toSet
-    val off = BradleyTerry.fit(comps, "winner", "loser", 3,
-      prePartitionPairs = false).as[(Long, Double)].collect().toSet
-    assert(on == off)
-  }
-
   test("plan pins the deliberate pair-table exchange on b") {
     // the scale shape: comp is persisted re-exchanged on `b`, so every
     // round's strength join on b reads the cache's partitioning and

@@ -40,10 +40,9 @@ class PageRankSpec extends AnyFunSuite {
     val edges = (1L to 300L).flatMap { i =>
       Seq((i, i * 7 % 60 + 1), (i * 7 % 60 + 1, i))
     }.toDF("s", "d")
-    val on = PageRank.pageRank(edges, "s", "d", iters = 4,
-      prePartitionEdges = Some(true))
-    val off = PageRank.pageRank(edges, "s", "d", iters = 4,
-      prePartitionEdges = Some(false))
+    val on = PageRank.pageRank(edges, "s", "d", iters = 4)
+    val off = PageRank.pageRankOn(edges, "s", "d", iters = 4,
+      damping = 0.85, pin = false)
     assert(on.as[(Long, Double)].collect().toSet ==
       off.as[(Long, Double)].collect().toSet)
     val onPlan = on.queryExecution.executedPlan.toString

@@ -12,6 +12,18 @@ class SpectralSpec extends AnyFunSuite {
     (1L, Seq(2.0f, 0.0f)), (2L, Seq(1.0f, 0.0f)), (3L, Seq(3.0f, 0.0f))
   ).toDF("vec_id", "embedding")
 
+  test("gram's fan spreads vectors whose first coordinate is constant") {
+    // one input partition, every vector starting with the same value:
+    // a fan keyed on that coordinate would send all rows to one task
+    val same0 = (1 to 40)
+      .map(i => (i.toLong, Seq(1.0f, i.toFloat, -i.toFloat)))
+      .toDF("vec_id", "embedding").coalesce(1)
+    val sizes = Spectral.fanVectors(same0, "embedding").rdd
+      .mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.sum == 40)
+    assert(sizes.count(_ > 0) > 1, sizes.mkString(","))
+  }
+
   test("gram: exact decimal-summed cells") {
     val g = Spectral.gram(axis, "embedding")
       .as[(Long, Long, Double)].collect()
