@@ -459,7 +459,7 @@ object SparkEntry {
   private val stopwords = Seq("the", "a", "of", "and", "in", "to", "is", "it")
 
   /** Oracle fragment: per-language marker-hit scores from `documents`
-    * (mirrors [[TextOps.langScores]]); shared by q43 and q74.
+    * (mirrors [[TextOps.langScoresToks]]); shared by q43 and q74.
     */
   private def langScoresSql: String = {
     val scores = TextOps.LangMarkers.map { case (lang, words) =>
@@ -2274,7 +2274,7 @@ object SparkEntry {
     ("q78_zorder_key", (s, d) =>
       // Morton key over (user, day): the sort dimension that makes
       // parquet min/max stats selective for BOTH user and time-range
-      // predicates (see maintenance/Layout.clusterByZorder)
+      // predicates (see maintenance/Layout)
       t(s, d, "events").select(col("event_id"),
         graft.maintenance.Layout.zorder2(
           col("user_id"), unix_date(to_date(col("ts")))).as("zkey")),
@@ -5132,7 +5132,7 @@ object SparkEntry {
     ("q175_cdf_transform", (s, d) =>
       // empirical-CDF quantile normalization: exact integer ppm from
       // min-ranks (ties share a rank, so the transform is a function
-      // of the value), min-ranks via Ranks.minRank's bucketed two-pass
+      // of the value), min-ranks via Ranks.minRankOfCounts' bucketed two-pass
       // (no single-partition sort). Registered over lineitem QUANTITY
       // — a genuinely bounded-cardinality column (50 distinct values;
       // the r09 registration on near-unique o_totalprice exercised the
@@ -5652,9 +5652,8 @@ object SparkEntry {
        |FROM nw GROUP BY 1""".stripMargin)),
 
     ("q189_simhash_portable", (s, d) =>
-      // portable 60-bit SimHash signatures — the hash-oracled twin of
-      // q50's XXH64 SimHash: per-occurrence ±1 votes over two
-      // universal expansions of the rolling token hash, tie → 0. A
+      // portable 60-bit SimHash signatures: per-occurrence ±1 votes
+      // over two universal expansions of the rolling token hash, tie → 0. A
       // pure native-expression projection on the Spark side; the
       // oracle replays token hash → two expansions → 60 bit votes →
       // sign pack.
@@ -5669,8 +5668,8 @@ object SparkEntry {
     ("q190_simhash_pairs_portable", (s, d) => {
       // END-TO-END portable SimHash near-dup: portable signatures →
       // 4×15-bit pigeonhole blocking (any pair within Hamming 3 agrees
-      // exactly on ≥ 1 block) → capped block self-join → Hamming ≤ 3 —
-      // q50's pipeline with every bit SQL-replayable, one hash compare.
+      // exactly on ≥ 1 block) → capped block self-join → Hamming ≤ 3,
+      // with every bit SQL-replayable, one hash compare.
       val sigs = graft.dedup.NearDup.simhashPortable(
         t(s, d, "documents"), "doc_id", "text")
       graft.dedup.NearDup.simhashPairs(sigs, "doc_id", maxHamming = 3,

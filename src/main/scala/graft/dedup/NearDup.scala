@@ -627,23 +627,11 @@ object NearDup {
     pos.unionByName(neg)
   }
 
-  /** 64-bit SimHash over tokens: per-bit vote of token-hash sign bits,
-    * computed by the native codegen'd [[graft.functions.SimHash64]]
-    * expression — a pure projection, NO shuffle (the earlier explode +
-    * 64-aggregate formulation shuffled every token). Repartitions only
-    * when the input is under-parallel (few-file local inputs).
-    */
-  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    ensureParallel(df, col(idCol))
-      .select(col(idCol),
-        graft.functions.SimHash64.simhash(TextOps.tokens(col(textCol)))
-          .as("simhash"))
-
-  /** Portable 60-bit SimHash signatures — the hash-oracled twin of
-    * [[simhash]] (see [[graft.functions.PortableSimHash]]); plug into
-    * [[simhashPairs]] with `bits = 60` for the end-to-end oracled
-    * pipeline (q189/q190). Same pure-projection plan as the XXH64
-    * path.
+  /** Portable 60-bit SimHash signatures (see
+    * [[graft.functions.PortableSimHash]]): a pure projection, NO
+    * shuffle. Plug into [[simhashPairs]] with `bits = 60` for the
+    * end-to-end oracled pipeline (q189/q190). Repartitions only when
+    * the input is under-parallel (few-file local inputs).
     */
   def simhashPortable(df: DataFrame, idCol: String, textCol: String)
       : DataFrame =
@@ -653,9 +641,13 @@ object NearDup {
           .simhash(TextOps.tokens(col(textCol))).as("simhash"))
 
   /** Near-dup pairs by SimHash Hamming distance ≤ `maxHamming`, using
-    * the pigeonhole block trick: split 64 bits into `blocks` chunks; any
-    * pair within distance `blocks-1` must agree exactly on ≥1 chunk, so
-    * candidates come from an equi-join on (block_id, block_value).
+    * the pigeonhole block trick: split the `bits` signature bits into
+    * `blocks` chunks; any pair within distance `blocks-1` must agree
+    * exactly on ≥1 chunk, so candidates come from an equi-join on
+    * (block_id, block_value). When `blocks` divides `bits`, `maxHamming
+    * < blocks` and no block is over-full, the output EQUALS the
+    * brute-force pair set (unit-tested); blocks over `maxBucketSize`
+    * are dropped first (see [[capBuckets]] for the recall contract).
     */
   def simhashPairs(sigs: DataFrame, idCol: String, maxHamming: Int = 3,
                    blocks: Int = 4, maxBucketSize: Int = 10000,
@@ -687,70 +679,6 @@ object NearDup {
     // a near-linear set, shuffle for distinct(). shuffle_hash hint: see
     // candidatePairs (identical self-join shape)
     val out = a.join(b.hint("shuffle_hash"), Seq("block_id", "block_val"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        expr("bit_count(s1 ^ s2)").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-      .localCheckpoint(true)
-    keyed.unpersist()
-    out
-  }
-
-  /** SimHash near-dup pairs via block-PAIR keys — the scale-safe
-    * blocking. Single-block pigeonhole needs `maxHamming + 1` blocks, so
-    * d=7 forces 8-bit blocks: 256 buckets per block and candidate pairs
-    * growing ~N²/256. Instead split into `maxHamming + 2` chunks: a pair
-    * within distance d dirties ≤ d chunks, leaving ≥ 2 clean — so it
-    * agrees exactly on at least one of the C(B,2) chunk PAIRS. The join
-    * key concatenates two chunks (~14 bits for d=7), squaring the bucket
-    * space; candidates stay near-linear where single-block blocking goes
-    * quadratic. The pigeonhole guarantee is absolute, so with no
-    * overfull buckets the output EQUALS the brute-force pair set at the
-    * same threshold (unit-tested); buckets over `maxBucketSize` are
-    * dropped first (see [[capBuckets]] for the recall contract), making
-    * the candidate count a hard O(maxBucketSize · N) even on a corpus
-    * that is one giant boilerplate blob.
-    */
-  def simhashPairsBlocked(sigs: DataFrame, idCol: String,
-                          maxHamming: Int = 7,
-                          maxBucketSize: Int = 10000): DataFrame = {
-    val blocks = maxHamming + 2
-    val base = 64 / blocks
-    val rem = 64 % blocks
-    val widths = Array.tabulate(blocks)(i => if (i < rem) base + 1 else base)
-    val offsets = widths.scanLeft(0)(_ + _)
-    def chunk(i: Int): Column =
-      shiftright(col("simhash"), offsets(i)).bitwiseAND(lit((1L << widths(i)) - 1))
-    val pairKeys = for {
-      i <- 0 until blocks
-      j <- (i + 1) until blocks
-    } yield struct(
-      lit(i * blocks + j).as("pk"),
-      shiftleft(chunk(i), 32).bitwiseOR(chunk(j)).as("pv"))
-    val keyed0 = sigs
-      .select(col(idCol), col("simhash"),
-        explode(array(pairKeys: _*)).as("key"))
-    // Over-full chunk-pair buckets would go N_b² before the Hamming
-    // filter — capped; see capBuckets for the recall contract.
-    // Persisted ABOVE the cap window: the self-join reads the capped
-    // table twice, and the cache carries the window's key partitioning
-    // so the join adds no exchange. The (small) pair set is eagerly
-    // checkpointed so this cache can be dropped before returning (pair
-    // blocks live until the result is GC'd; lineage is truncated — see
-    // nearDupPairs scaladoc).
-    val keyed = capBuckets(keyed0, Seq("key"), maxBucketSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = keyed.select(col("key"), col(idCol).as("id1"), col("simhash").as("s1"))
-    val b = keyed.select(col("key"), col(idCol).as("id2"), col("simhash").as("s2"))
-    // hamming filter BEFORE the distinct (see simhashPairs): collision
-    // noise is dropped in the codegen'd filter; only the near-linear
-    // true-pair set shuffles for dedup. shuffle_hash hint: the self-join
-    // sides are identical mid-size tables right at the broadcast
-    // threshold, so the strategy otherwise flip-flops between runs
-    // (broadcast vs sort-merge); hash join on the bucket key needs no
-    // sort and its build side is exactly one bucket table partition
-    val out = a.join(b.hint("shuffle_hash"), Seq("key"))
       .filter(col("id1") < col("id2"))
       .select(col("id1"), col("id2"),
         expr("bit_count(s1 ^ s2)").as("hamming"))

@@ -214,18 +214,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         }
       }))
     ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(
-        classOf[SimHash64].getName, null, "graft_simhash",
-        "graft_simhash(tokens) - 64-bit SimHash of a token array.", ""),
-      { exprs: Seq[Expression] =>
-        exprs match {
-          case Seq(arr) => SimHash64(arr)
-          case other => throw new IllegalArgumentException(
-            s"graft_simhash(tokens) — got ${other.size} args")
-        }
-      }))
-    ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(
         classOf[ArrayDot].getName, null, "graft_dot",

@@ -7,16 +7,15 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
-/** Native 60-bit PORTABLE SimHash — the SQL-replayable twin of
-  * [[SimHash64]] (XXH64), same per-occurrence ±1 vote rule, with bit
-  * sources DuckDB reproduces exactly: each token's [[RollingHash]]
-  * fold expands through TWO universal hashes h₁ = (a₁·h + b₁) mod p,
-  * h₂ = (a₂·h + b₂) mod p (the [[PortableMinHash]] constant recipe,
-  * i = 0 and 1); signature bit i < 30 votes with bit i of h₁, bit
-  * i ≥ 30 with bit i−30 of h₂ (both hashes < 2^30, so 60 well-mixed
-  * bits total). Ties (vote sum 0, incl. the empty token array) pin to
-  * 0. One codegen'd pass per row — a pure projection, no shuffle,
-  * like the XXH64 path.
+/** Native 60-bit PORTABLE SimHash — per-occurrence ±1 votes per
+  * signature bit, with bit sources DuckDB reproduces exactly: each
+  * token's [[RollingHash]] fold expands through TWO universal hashes
+  * h₁ = (a₁·h + b₁) mod p, h₂ = (a₂·h + b₂) mod p (the
+  * [[PortableMinHash]] constant recipe, i = 0 and 1); signature bit
+  * i < 30 votes with bit i of h₁, bit i ≥ 30 with bit i−30 of h₂ (both
+  * hashes < 2^30, so 60 well-mixed bits total). Ties (vote sum 0, incl.
+  * the empty token array) pin to 0. One codegen'd pass per row — a pure
+  * projection, no shuffle.
   */
 case class PortableSimHash(child: Expression) extends UnaryExpression {
 

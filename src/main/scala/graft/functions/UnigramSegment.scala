@@ -96,6 +96,11 @@ case class UnigramSegment(child: Expression, vocab: Map[String, Long],
     })
   }
 
+  /** An uncoverable or empty word yields null even from a non-null
+    * child, so codegen must declare a nullable result slot.
+    */
+  override def nullable: Boolean = true
+
   override protected def withNewChildInternal(
       newChild: Expression): UnigramSegment = copy(child = newChild)
 }

@@ -24,12 +24,6 @@ object Ingest {
   def readStagedJson(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.option("multiLine", "true").json(paths: _*)
 
-  /** S1 (in-memory variant): records already fetched on the driver. */
-  def fromRecords(spark: SparkSession, jsonRecords: Seq[String]): DataFrame = {
-    import spark.implicits._
-    spark.read.json(jsonRecords.toDS())
-  }
-
   /** JSON-lines scan with corrupt-record quarantine: PERMISSIVE parse
     * against an explicit schema, malformed lines split off with their
     * raw text instead of failing the batch (real feeds always carry

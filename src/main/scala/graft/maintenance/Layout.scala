@@ -1,13 +1,14 @@
 package graft.maintenance
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Write-layout clustering for data skipping. Parquet min/max footer
   * stats prune files only when rows with nearby key values land in the
   * same files; a Z-order (Morton) key gives one sort dimension that
-  * preserves locality in TWO dimensions at once, so range predicates on
-  * either column skip most files. This is the layout move that turns a
+  * preserves locality in TWO dimensions at once, so a table written
+  * range-partitioned and sorted by it lets range predicates on either
+  * column skip most files. This is the layout move that turns a
   * 100 TB full-scan table into a pruned scan for both `user_id = ?` and
   * time-window queries — entirely with arithmetic built-ins, computed
   * inside whole-stage codegen.
@@ -31,18 +32,4 @@ object Layout {
     */
   def zorder2(a: Column, b: Column): Column =
     spread16(a).bitwiseOR(shiftleft(spread16(b), 1))
-
-  /** Range-partition and locally sort by the Z-key: each output file
-    * covers a compact Z-curve segment, so parquet footer min/max on
-    * BOTH dimensions become selective. Range partitioning samples the
-    * key distribution, so skew in either dimension still yields
-    * balanced files.
-    */
-  def clusterByZorder(df: DataFrame, a: Column, b: Column,
-                      numFiles: Int): DataFrame = {
-    val keyed = df.withColumn("__zkey", zorder2(a, b))
-    keyed.repartitionByRange(numFiles, col("__zkey"))
-      .sortWithinPartitions("__zkey")
-      .drop("__zkey")
-  }
 }

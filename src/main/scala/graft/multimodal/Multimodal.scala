@@ -29,14 +29,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Canonical media-record schema: id + opaque payload + typed meta. */
-  val MediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media", BinaryType, nullable = true),
-    StructField("format", StringType, nullable = true),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true)))
-
   final case class MediaFeatures(media_id: Long, n_bytes: Long,
                                  checksum: Long, feature: Array[Float])
 

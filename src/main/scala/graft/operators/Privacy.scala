@@ -41,23 +41,4 @@ object Privacy {
       .withColumn("k_anonymous", col("n") >= k)
       .withColumn("l_diverse", col("l_distinct") >= l)
   }
-
-  /** The release decision in one row: equivalence classes, classes and
-    * rows below `k`, the minimum class size (the dataset's actual
-    * k-anonymity level), and classes failing `l`-diversity. An EMPTY
-    * report (zero-row input) summarizes as all-zero counts so callers
-    * reading them as primitives don't throw; `k_actual` alone stays
-    * NULL there — an empty dataset has no class size, and 0 would
-    * falsely read as "fails every k".
-    */
-  def riskSummary(report: DataFrame): DataFrame =
-    report.agg(
-      count(lit(1)).as("n_classes"),
-      coalesce(sum(when(!col("k_anonymous"), 1L).otherwise(0L)), lit(0L))
-        .as("classes_at_risk"),
-      coalesce(sum(when(!col("k_anonymous"), col("n")).otherwise(0L)),
-        lit(0L)).as("rows_at_risk"),
-      min(col("n")).as("k_actual"),
-      coalesce(sum(when(!col("l_diverse"), 1L).otherwise(0L)), lit(0L))
-        .as("classes_low_diversity"))
 }

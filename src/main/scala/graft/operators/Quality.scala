@@ -42,8 +42,6 @@ object Quality {
   def formatCheck(c: String, regex: String): Column =
     violations(col(c).isNotNull && !col(c).rlike(regex), s"format_$c")
 
-  val EmailRegex = "^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}$"
-
   /** Run a set of per-row checks in one scan; returns one CheckResult per
     * check. The single collected row is O(#checks), never O(data).
     */

@@ -73,23 +73,12 @@ object Ranks {
       .drop("__b", "__off")
   }
 
-  /** Exact global MIN-rank of each distinct value of `valueCol` (ties
-    * share the rank of their first row): returns the distinct-value
-    * table `(valueCol, out)` for joining back onto the facts — the
-    * shape CDF/quantile-normalization wants. The fact table never
-    * sorts at all: only distinct values (with their multiplicities)
-    * flow through the bucket scheme.
-    */
-  def minRank(df: DataFrame, valueCol: String, ascending: Boolean = true,
-              out: String = "rank", buckets: Int = 64): DataFrame =
-    minRankOfCounts(
-      df.filter(col(valueCol).isNotNull)
-        .groupBy(col(valueCol)).agg(count(lit(1)).as("__c")),
-      valueCol, "__c", ascending, out, buckets)
-
-  /** [[minRank]] over a PRE-AGGREGATED `(valueCol, countCol)` table —
-    * the face for callers that already built (and, if it was expensive,
-    * checkpointed) the distinct-value counts.
+  /** Exact global MIN-rank of each distinct value (ties share the rank
+    * of their first row) from a PRE-AGGREGATED `(valueCol, countCol)`
+    * table of distinct values and their multiplicities: returns
+    * `(valueCol, out)` for joining back onto the facts — the shape
+    * CDF/quantile-normalization wants. The fact table never sorts at
+    * all: only distinct values flow through the bucket scheme.
     */
   def minRankOfCounts(vals: DataFrame, valueCol: String, countCol: String,
                       ascending: Boolean = true, out: String = "rank",

@@ -49,7 +49,7 @@ object TargetEncode {
     * normalization in exact integer parts-per-million: identical
     * values share the MIN rank (so the transform is a function of the
     * value, ties or not), `cdf_ppm = (rank-1)·1e6 div (n-1)`, mapping
-    * min→0 and max→1e6. Min-ranks come from [[Ranks.minRank]]'s
+    * min→0 and max→1e6. Min-ranks come from [[Ranks.minRankOfCounts]]'s
     * bucketed two-pass scheme (exact, no single-partition window even
     * when the column is near-unique — the r09 degenerate case), the
     * row total from a one-row aggregate, and the rank table joins back
@@ -63,8 +63,8 @@ object TargetEncode {
     val nn = df.filter(col(valueCol).isNotNull)
     val nRow = nn.agg(count(lit(1)).as("__n"))
     // Checkpoint the (distinct-value, count) table before ranking:
-    // minRank references it three times (sketch, counts, join — under
-    // broadcast subqueries, outside AQE exchange reuse), and each lazy
+    // minRankOfCounts references it three times (sketch, counts, join —
+    // under broadcast subqueries, outside AQE exchange reuse), and each lazy
     // reference would re-run the fact-table groupBy. The table is
     // distinct-value-sized, so the checkpoint itself is tiny.
     val vals = nn.groupBy(col(valueCol)).agg(count(lit(1)).as("__c"))

@@ -109,31 +109,4 @@ object Upsert {
         :+ lead(col(tsCol), 1).over(wc).as("valid_to"): _*)
       .withColumn("is_current", col("valid_to").isNull)
   }
-
-  /** Incremental SCD2 maintenance: fold a new history batch into an
-    * existing Type-2 dimension. Only keys PRESENT IN THE BATCH are
-    * rebuilt — their versions reopen as history rows (`valid_from` is
-    * the observation ts) and re-chain together with the batch through
-    * [[scd2FromHistory]]; untouched keys pass through by anti-join,
-    * exactly the [[merge]] shape. A batch row repeating the key's
-    * current attribute state opens no version (the change detector
-    * collapses it), so replayed loads are idempotent.
-    *
-    * Contract (unit-proven): `scd2Apply(scd2FromHistory(old), batch)
-    * == scd2FromHistory(old ∪ batch)` — requires `(keyCols, tsCol)` to
-    * uniquely order each key's change rows (tie columns are not
-    * recoverable from the dimension), the usual one-state-per-load-ts
-    * property of incremental ingestion.
-    */
-  def scd2Apply(dim: DataFrame, batch: DataFrame, keyCols: Seq[String],
-                attrCols: Seq[String], tsCol: String): DataFrame = {
-    val touched = batch.select(keyCols.map(col): _*).distinct()
-    val affectedHist = dim.join(touched, keyCols, "left_semi")
-      .select((keyCols ++ attrCols).map(col) :+ col("valid_from").as(tsCol): _*)
-    val rebuilt = scd2FromHistory(
-      affectedHist.unionByName(
-        batch.select((keyCols ++ attrCols).map(col) :+ col(tsCol): _*)),
-      keyCols, attrCols, tsCol)
-    dim.join(touched, keyCols, "left_anti").unionByName(rebuilt)
-  }
 }

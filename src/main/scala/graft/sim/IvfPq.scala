@@ -110,32 +110,6 @@ object IvfPq {
     Pq.ivfAdcRank(state.codes.withColumnRenamed(idCol, "neighbor_id"),
       queries, idCol, vecCol, coarseOf(state), pqOf(state), nprobe, topK)
 
-  /** The drift monitor the frozen-codebook contract prescribes: per-
-    * cell occupancy of the persisted codes plus the skew statistics a
-    * rebuild decision reads — when the corpus distribution walks away
-    * from the build snapshot, cells skew (hot cells slow every probe
-    * that touches them; empty cells waste nprobe budget) and ADC error
-    * grows. One aggregate over the codes table (already 1/m of the
-    * corpus row count after the `sub = 0` slice — never the vectors),
-    * one domain-sized closing roll-up. Output: one row per OBSERVED
-    * cell `(list_id, n_vecs, frac, max_cell_frac, n_empty)` where
-    * `max_cell_frac` is the corpus share of the HOTTEST cell (the
-    * rebuild trigger: compare against ~1/nlist) and `n_empty` counts
-    * the cells of the `nlist`-cell index that hold zero vectors.
-    */
-  def cellStats(state: State, nlist: Int): DataFrame = {
-    require(nlist >= 1, s"nlist must be >= 1, got $nlist")
-    val occ = state.codes.filter(col("sub") === 0)
-      .groupBy(col("list_id")).agg(count(lit(1)).as("n_vecs"))
-    val tot = occ.agg(sum(col("n_vecs")).as("__n"),
-      max(col("n_vecs")).as("__mx"), count(lit(1)).as("__cells"))
-    occ.crossJoin(broadcast(tot))
-      .select(col("list_id"), col("n_vecs"),
-        (col("n_vecs").cast("double") / col("__n")).as("frac"),
-        (col("__mx").cast("double") / col("__n")).as("max_cell_frac"),
-        (lit(nlist) - col("__cells")).cast("long").as("n_empty"))
-  }
-
   /** Long-format table of an `m = 1` coarse codebook. */
   private def coarseTable(spark: SparkSession,
                           cb: Array[Array[Array[Double]]]): DataFrame = {
@@ -159,7 +133,7 @@ object IvfPq {
     * of `nlist · dim` rows (the codebook, never the corpus), keyed by
     * (code, j) so row order is irrelevant.
     */
-  private[graft] def coarseOf(state: State): Array[Array[Array[Double]]] = {
+  private def coarseOf(state: State): Array[Array[Array[Double]]] = {
     val rows = state.coarse.select(col("code"), col("j"), col("cval"))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
     require(rows.nonEmpty, "empty coarse codebook table")
@@ -175,7 +149,7 @@ object IvfPq {
   /** Reassemble the product codebook — a bounded collect of
     * `m · k · (dim/m)` rows, keyed by (sub, code, j).
     */
-  private[graft] def pqOf(state: State): Array[Array[Array[Double]]] = {
+  private def pqOf(state: State): Array[Array[Array[Double]]] = {
     val rows = state.codebook
       .select(col("sub"), col("code"), col("j"), col("cval"))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2),

@@ -10,13 +10,11 @@ import org.apache.spark.sql.functions._
   * a 64-dim float vector becomes 8 bytes, the compression that lets a
   * 100 TB embedding corpus sit in memory for ANN serving.
   *
-  * Codebook: the deterministic-sample scheme this engine uses for IVF
-  * ([[Similarity.ivfBuild]]) — the `k` corpus vectors with the smallest
-  * portable id hash — but on the ENGINE-PORTABLE two-constant hash
-  * ([[graft.operators.Sample.hashMod]]) rather than xxhash64, so
-  * codebook selection, distances, and argmin are all replayable in
-  * plain SQL: the ENCODE step is fully oracle-checked (q124), not
-  * rows-only. Swap in offline k-means without changing the encode or
+  * Codebook: a deterministic sample — the `k` corpus vectors with the
+  * smallest id hash under the ENGINE-PORTABLE two-constant hash
+  * ([[graft.operators.Sample.hashMod]]), so codebook selection,
+  * distances, and argmin are all replayable in plain SQL: the ENCODE
+  * step is fully oracle-checked (q124), not rows-only. Swap in offline k-means without changing the encode or
   * query paths.
   *
   * Determinism contract for the oracle: distances accumulate as a
@@ -343,7 +341,7 @@ object Pq {
     * "subvectors" are exactly coarse centroids), so coarse assignment,
     * probe selection, subdistances, and the final ranking ALL replay
     * in SQL: the whole serving stack is hash-oracled end-to-end
-    * (q129), unlike the xxhash-seeded [[Similarity.ivfTopK]]. Swap in
+    * (q129). Swap in
     * k-means codebooks without changing the plan.
     *
     * Scale shape: corpus side = one narrow projection emitting

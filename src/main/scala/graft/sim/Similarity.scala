@@ -458,90 +458,6 @@ object Similarity {
       (t, b) => struct(t.as("table_id"), b.as("bucket")))
   }
 
-  /** IVF index build: deterministic centroid sample (smallest
-    * xxhash64(id) — swap in offline k-means without changing the query
-    * path) plus the corpus assigned to its max-cosine centroid. Returns
-    * (assigned corpus, literal centroid matrix column). The assigned
-    * corpus is cached: at 100 TB this is the write-once partitioning of
-    * the corpus — build it once, serve every query batch from it (the
-    * cache also means the one-shot path reads the parquet exactly once).
-    * All centroid scoring runs through the native fused
-    * [[graft.functions.CentroidScores]] — one `nlist × dim` codegen loop
-    * per row instead of `nlist` separate dot-against-literal-array
-    * expressions (a 1024-literal tree at the default 16×64).
-    */
-  /** The returned `assigned` frame is persisted and eagerly
-    * materialized (it is the write-once index — built once, served to
-    * every query batch); the caller owns `assigned.unpersist()` when the
-    * index is retired. The intermediate projection is unpersisted here.
-    */
-  def ivfBuild(corpus: DataFrame, idCol: String, vecCol: String,
-               nlist: Int = 16): (DataFrame, Column) = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("cv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val centroids: Seq[Seq[Double]] = c
-      .orderBy(xxhash64(col("neighbor_id")), col("neighbor_id"))
-      .limit(nlist)
-      .collect()
-      .toSeq.map(_.getSeq[Double](1).toSeq)
-    val matrix = typedlit(centroids)
-    val assigned = c
-      .withColumn("sc", graft.functions.CentroidScores.scores(col("cv"), matrix))
-      .withColumn("cluster", expr("array_position(sc, array_max(sc))").cast("int"))
-      .drop("sc")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned.count() // materialize the index from the cached projection
-    c.unpersist()
-    (assigned, matrix)
-  }
-
-  /** IVF query path against a prebuilt index: each query probes its
-    * `nprobe` closest lists and ranks candidates by exact cosine.
-    * Probe selection is a pure projection (sort the small score array,
-    * slice nprobe) — no window, no shuffle on the query side before the
-    * broadcast. Candidates come from an equi-join on the cluster id —
-    * never a cross product.
-    */
-  def ivfQuery(assigned: DataFrame, matrix: Column, queries: DataFrame,
-               idCol: String, vecCol: String, k: Int, nprobe: Int = 4): DataFrame = {
-    val nlist = size(matrix)
-    val q = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"))
-      .withColumn("probe", explode(slice(array_sort(zip_with(
-        graft.functions.CentroidScores.scores(col("qv"), matrix),
-        sequence(lit(0), nlist - 1),
-        (sc, i) => struct((-sc).as("ns"), i.as("pos")))), 1, nprobe)))
-      .select(col("query_id"), col("qv"),
-        (col("probe.pos") + 1).cast("int").as("cluster"))
-
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    assigned.join(broadcast(q), Seq("cluster"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine(col("cv"), col("qv")).as("sim"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id", "rnk")
-  }
-
-  /** IVF-style approximate top-k: an inverted-file index over `nlist`
-    * coarse centroids ([[ivfBuild]]) served by [[ivfQuery]]. One-shot
-    * convenience: the (small, queries×k-row) result is eagerly
-    * checkpointed so the index cache can be dropped before returning
-    * (the result's blocks live until the returned frame is GC'd, and
-    * the truncated lineage cannot recompute after an executor loss).
-    * Reuse the [[ivfBuild]] / [[ivfQuery]] split instead to serve many
-    * query batches from one index (and for cluster fault-tolerance,
-    * where an eager local checkpoint is the wrong tool).
-    */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4): DataFrame = {
-    val (assigned, matrix) = ivfBuild(corpus, idCol, vecCol, nlist)
-    val out = ivfQuery(assigned, matrix, queries, idCol, vecCol, k, nprobe)
-      .localCheckpoint(true)
-    assigned.unpersist()
-    out
-  }
-
   /** Embedding-cosine near-duplicate pairs: multi-table LSH candidates
     * (equi-join on bucket keys — never all-pairs), candidate pairs
     * deduplicated BEFORE the exact-cosine verify so each pair's cosine
@@ -600,7 +516,7 @@ object Similarity {
     * broadcasts). Hot-bucket note: bipartite candidates are bounded
     * by |train ∩ bucket| × |eval ∩ bucket| ≤ |train| · |eval|, the
     * brute bound — the self-join N² hazard does not exist here (same
-    * argument as [[lshTopK]]).
+    * argument as [[lshTopKPortable]]).
     *
     * Recall contract: a pair at cosine 1−ε disagrees on a sign bit
     * with probability ∝ ε per plane, so true contamination (near-
@@ -631,7 +547,11 @@ object Similarity {
   /** Approximate top-k: candidates share an LSH bucket with the query in
     * any of the hash tables, then exact cosine ranks them. The query
     * side is broadcast; the corpus is scanned once and shuffles only the
-    * (table_id, bucket)-matched candidates.
+    * (table_id, bucket)-matched candidates. Hyperplanes are PORTABLE
+    * ([[graft.functions.SrpSignatures.portableBuckets]]): every plane
+    * sign derives from the two-round multiplicative hash of its
+    * coordinate, so bucket choice — and with it the whole candidate
+    * set and final (cosine, id) ranking — replays in plain SQL (q136).
     *
     * Hot-bucket note: unlike the self-join family (see
     * [[cosineNearDupPairs]] / NearDup.capBuckets), a degenerate corpus
@@ -640,35 +560,16 @@ object Similarity {
     * small batch. A mass-duplicated corpus direction inflates one
     * query's candidate list at worst to the brute scan it replaces.
     */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, k: Int, bits: Int = 8, dim: Int = 64,
-              tables: Int = 8): DataFrame =
-    lshTopKImpl(corpus, queries, idCol, vecCol, k, bits, dim, tables, -1L)
-
-  /** [[lshTopK]] with PORTABLE-hash hyperplanes
-    * ([[graft.functions.SrpSignatures.portableBuckets]]): every plane
-    * sign derives from the two-round multiplicative hash of its
-    * coordinate, so bucket choice — and with it the whole candidate
-    * set and final (cosine, id) ranking — replays in plain SQL. This
-    * is the oracle-checkable SRP-LSH (q136); [[lshTopK]]'s JVM-Random
-    * planes stay rows-only (q51). Same plan, same cost.
-    */
   def lshTopKPortable(corpus: DataFrame, queries: DataFrame, idCol: String,
                       vecCol: String, k: Int, bits: Int = 8, dim: Int = 64,
                       tables: Int = 8, seed: Long = 7L): DataFrame = {
     require(seed >= 0L, s"portable seed must be >= 0, got $seed")
-    lshTopKImpl(corpus, queries, idCol, vecCol, k, bits, dim, tables, seed)
-  }
-
-  private def lshTopKImpl(corpus: DataFrame, queries: DataFrame, idCol: String,
-                          vecCol: String, k: Int, bits: Int, dim: Int,
-                          tables: Int, portableSeed: Long): DataFrame = {
     val c = corpus.select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("cv"))
       .select(col("neighbor_id"), col("cv"),
-        explode(lshKeys(col("cv"), bits, dim, tables, portableSeed)).as("key"))
+        explode(lshKeys(col("cv"), bits, dim, tables, seed)).as("key"))
     val q = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"))
       .select(col("query_id"), col("qv"),
-        explode(lshKeys(col("qv"), bits, dim, tables, portableSeed)).as("key"))
+        explode(lshKeys(col("qv"), bits, dim, tables, seed)).as("key"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
     c.join(broadcast(q), Seq("key"))

@@ -7,10 +7,11 @@ import java.sql.Timestamp
 
 /** Structured Streaming faces of the batch operators. The reference is
   * batch-only on a daily cron (SURVEY §2.9); these give the same
-  * semantics continuously: windowed daily KPIs with a watermark,
-  * streaming dedup, and typed per-key session state via
-  * mapGroupsWithState — the three building blocks a continuous
-  * ingestion of the same e-commerce feed would need.
+  * semantics continuously: session windows, watermarked dedup,
+  * stream-static enrichment and stream-stream joins, typed per-key
+  * state via mapGroupsWithState, and foreachBatch sinks (exact
+  * near-dup, CDC, aggregate maintenance, quality scoring) whose
+  * streamed output equals the batch operator's.
   */
 object Streams {
 
@@ -44,23 +45,6 @@ object Streams {
       s"and new data is being dropped.")
   }
 
-  /** Daily-revenue KPIs over an event-time window with late-data bound.
-    * `approx_count_distinct` replaces the batch `countDistinct` (exact
-    * distinct is unsupported in streaming aggregation; HLL is the
-    * at-scale answer anyway).
-    */
-  def windowedDailyKpis(events: DataFrame, tsCol: String, userCol: String,
-                        valueCol: String, watermark: String = "1 day"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), "1 day").as("day"))
-      .agg(
-        count(lit(1)).as("events_count"),
-        sum(col(valueCol).cast(graft.Exprs.Money)).cast("double").as("total_value"),
-        approx_count_distinct(userCol).as("approx_unique_users"))
-      .select(col("day.start").as("event_date"), col("events_count"),
-        col("total_value"), col("approx_unique_users"))
-
   /** Per-user gap-based sessions via the NATIVE `session_window`
     * operator — the built-in complement to the typed
     * mapGroupsWithState face ([[userSessions]]): Catalyst merges
@@ -86,136 +70,26 @@ object Streams {
         col("sw.end").as("session_end"), col("n_events"),
         col("total_value"))
 
-  /** Streaming keep-first dedup on a key within the watermark horizon
-    * (streaming face of D1/D2: duplicates arriving later than the
-    * watermark are the accepted tradeoff).
-    */
-  def dedupStream(events: DataFrame, tsCol: String, keys: Seq[String],
-                  watermark: String = "1 day"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .dropDuplicates(keys :+ tsCol)
-
-  /** Continuous keyed upsert into a parquet table — the streaming face
-    * of the silver-layer merge (reference transform_silver.py:82-122,
-    * batch twin [[graft.operators.Upsert.merge]]). Each micro-batch is
-    * first reduced to one row per key (latest `tsCol` wins, so a batch
-    * carrying several versions of a key is safe), then anti-join-merged
-    * into the live table. foreachBatch is the right tool: the merge
-    * reads the table it replaces, which no streaming sink expresses
-    * declaratively, and checkpointing makes replays idempotent — the
-    * same batch merged twice produces the same table.
-    */
-  def upsertSink(updates: DataFrame, path: String, keys: Seq[String],
-                 tsCol: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val latest = graft.operators.Dedup.keepLatest(batch, keys, tsCol)
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-            graft.operators.Upsert.merge(spark.read.parquet(path), latest, keys)
-          else latest
-        graft.pipeline.Runner.overwriteSwapped(merged, path)
-      }
-      .start()
-
-  /** Continuous near-duplicate detection: the streaming face of
-    * [[graft.dedup.NearDup.nearDupPairsIncremental]] — each micro-batch
-    * of documents dedups against the ACCUMULATED signature index
-    * (tokenize/shingle/minhash run once per document, ever), then its
-    * own signatures join the index for the batches that follow. Under
-    * `root`: `corpus/` (id, text), `signatures/` (the MinHash index),
-    * and `pairs/` (verified id1 < id2 pairs, at least one side in the
-    * emitting batch). Because every batch emits exactly the pairs that
-    * TOUCH it, the union of `pairs/` telescopes to the full-corpus
-    * [[graft.dedup.NearDup.nearDupPairs]] pair set (the per-batch
-    * equality is unit-proven on the incremental operator; the spec
-    * proves the telescoped union too).
-    *
-    * Exactly-once without a transactional sink: each batch writes its
-    * three outputs under `batch=<id>` subdirectories with overwrite —
-    * a checkpoint replay rewrites the same directories and reads of
-    * the index/corpus EXCLUDE the replaying batch's own partition
-    * (a partition-pruned filter, no scan cost), so a replayed batch
-    * produces byte-identical state instead of duplicates. The index
-    * side of the join stays exchange-free exactly as in the batch
-    * operator. Housekeeping at scale: many small `batch=` dirs build
-    * up under daily cadence — run [[compactBatches]] on `pairs/`,
-    * `signatures/` and `corpus/` periodically, outside the stream; the
-    * stream itself never rewrites old partitions.
-    */
-  def nearDupSink(docs: DataFrame, idCol: String, textCol: String,
-                  root: String, checkpoint: String, threshold: Double = 0.8,
-                  k: Int = 64, bands: Int = 16, shingleN: Int = 3,
-                  maxBucketSize: Int = 10000, verifyShingleN: Int = 1)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val nd = graft.dedup.NearDup
-        val b = batch.select(col(idCol), col(textCol))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val (corpusDir, indexDir, pairsDir) =
-          (s"$root/corpus", s"$root/signatures", s"$root/pairs")
-        // Finish any torn maintenance-window compaction before reading
-        // the accumulated index — see recoverCompaction.
-        Seq(corpusDir, indexDir, pairsDir)
-          .foreach(recoverCompaction(spark, _))
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-        val pairs =
-          if (fs.exists(new org.apache.hadoop.fs.Path(indexDir))) {
-            // `batch` is the discovered partition column of the per-batch
-            // dirs; excluding our own id makes a replay see exactly the
-            // state the original run saw (partition-pruned, not scanned)
-            val idx = spark.read.parquet(indexDir)
-              .filter(col("batch") =!= batchId).drop("batch")
-            val corpus = spark.read.parquet(corpusDir)
-              .filter(col("batch") =!= batchId).drop("batch")
-              .select(col(idCol), col(textCol))
-              .unionByName(b)
-            nd.nearDupPairsIncremental(b, idx, corpus, idCol, textCol,
-              threshold, k, bands, shingleN, maxBucketSize, verifyShingleN)
-          } else
-            nd.nearDupPairs(b, idCol, textCol, threshold, k, bands,
-              shingleN, maxBucketSize, verifyShingleN = verifyShingleN)
-        pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-        nd.minhashSignatures(b, idCol, textCol, k, shingleN)
-          .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-        b.write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
-        b.unpersist()
-        ()
-      }
-      .start()
-
-  /** EXACT continuous near-dup: [[nearDupSink]] with deterministic
-    * recall — each micro-batch joins the accumulated corpus through
+  /** EXACT continuous near-dup: each micro-batch joins the accumulated
+    * corpus through
     * [[graft.dedup.NearDup.incrementalPrefixFilterPairs]], so every
     * Jaccard ≥ `threshold` pair is GUARANTEED found (no LSH recall
     * bound), and the union of `pairs/` is provably the full-corpus
     * [[graft.dedup.NearDup.prefixFilterPairs]] pair set: each pair is
     * emitted exactly once, at the batch its LATER member arrived.
     * That telescoping makes the sink hash-oracle-able batch-
-    * equivalently (q207) where the MinHash sink can only be
-    * unit-tested. The trade: no signature index to reuse — each batch
-    * re-aggregates shingle frequencies over base ∪ incoming (the
-    * shared-order requirement of the prefix theorem), one
-    * map-side-combinable pass over the corpus per batch, vs the LSH
-    * sink's tokenize-once index. Daily-append cadence absorbs that;
-    * per-minute micro-batches should take the LSH sink.
+    * equivalently (q207). The cost: each batch re-aggregates shingle
+    * frequencies over base ∪ incoming (the shared-order requirement of
+    * the prefix theorem), one map-side-combinable pass over the corpus
+    * per batch — daily-append cadence absorbs that.
     *
-    * Same exactly-once discipline as [[nearDupSink]]: per-batch
-    * `batch=<id>` partition overwrites, replays excluded from the
-    * base by a partition-pruned filter (a replayed first batch sees
-    * an EMPTY base and degenerates to the within-batch join, exactly
-    * what the original run computed).
+    * Exactly-once without a transactional sink: each batch writes its
+    * `pairs/` and `corpus/` outputs under `batch=<id>` subdirectories
+    * with overwrite, so a checkpoint replay rewrites the same
+    * directories, and the base read EXCLUDES the replaying batch's own
+    * partition (a partition-pruned filter, no scan cost): a replayed
+    * first batch sees an EMPTY base and degenerates to the
+    * within-batch join, exactly what the original run computed.
     */
   def exactNearDupSink(docs: DataFrame, idCol: String, textCol: String,
                        root: String, checkpoint: String,
@@ -231,7 +105,6 @@ object Streams {
         val b = batch.select(col(idCol), col(textCol))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val (corpusDir, pairsDir) = (s"$root/corpus", s"$root/pairs")
-        Seq(corpusDir, pairsDir).foreach(recoverCompaction(spark, _))
         val fs = org.apache.hadoop.fs.FileSystem.get(
           new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
         val pairs =
@@ -248,42 +121,6 @@ object Streams {
         b.write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
         b.unpersist()
         ()
-      }
-      .start()
-
-  /** Continuous SCD Type-2 maintenance: each micro-batch of history
-    * rows folds into the versioned dimension via
-    * [[graft.operators.Upsert.scd2Apply]] — only batch-touched keys
-    * rebuild, untouched versions pass through, and a batch repeating a
-    * key's current state opens no version, so scd2Apply's idempotence
-    * makes checkpoint replays produce the same table (plus the atomic
-    * directory swap underneath). Because apply == full-rebuild on the
-    * union (the unit-proven contract), the streamed dimension
-    * telescopes to `scd2FromHistory` over everything ever ingested.
-    * Requires (keyCols, tsCol) to uniquely order each key's change
-    * rows, scd2Apply's documented incremental-ingestion property.
-    */
-  def scd2Sink(history: DataFrame, path: String, keyCols: Seq[String],
-               attrCols: Seq[String], tsCol: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    history.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-        val next =
-          if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-            graft.operators.Upsert.scd2Apply(spark.read.parquet(path),
-              batch, keyCols, attrCols, tsCol)
-          else
-            graft.operators.Upsert.scd2FromHistory(batch, keyCols,
-              attrCols, tsCol)
-        graft.pipeline.Runner.overwriteSwapped(
-          next.select((keyCols ++ attrCols).map(col)
-            :+ col("valid_from") :+ col("valid_to") :+ col("is_current"): _*),
-          path)
       }
       .start()
 
@@ -459,34 +296,6 @@ object Streams {
     spark.read.parquet(s"$snapshotPath/v=${ids.last}")
   }
 
-  /** Continuous distribution-drift monitoring: every micro-batch is
-    * scored with [[graft.operators.Quality.psiDrift]] against a FROZEN
-    * baseline frame and appends one `(batch_id, psi, n_bins)` row —
-    * the time series a retraining gate or alert reads. The baseline is
-    * deliberately static (drift is measured AGAINST something; a
-    * rolling baseline absorbs the very shift being watched) — refresh
-    * it by restarting the sink with a new baseline path. Exactly-once
-    * by the same `batch=<id>` overwrite idempotence as the other
-    * sinks; one row per batch, so the monitor table stays tiny
-    * forever.
-    */
-  def psiSink(rows: DataFrame, baseline: DataFrame, valueCol: String,
-              root: String, checkpoint: String, bins: Int = 10)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val frozen = baseline
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Quality.psiDrift(frozen, batch, valueCol, bins)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$root/psi/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
   /** Stream-stream event-time interval join — the attribution shape
     * (view → purchase within a horizon) as a continuous query. Both
     * sides carry a watermark and the join predicate bounds the right
@@ -565,237 +374,6 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append())
       .start()
-
-  /** Continuous distinct-count: the streaming face of
-    * [[graft.operators.Sketches.hllRegisters]]. Each micro-batch writes
-    * ONLY its own (bucket, max-rho) register table — m rows max, never
-    * data — under `root/registers/batch=<id>` with overwrite, so a
-    * checkpoint replay rewrites the identical directory instead of
-    * double-counting (the [[nearDupSink]] exactly-once pattern; HLL
-    * registers make it trivial because max() is idempotent under
-    * replay by construction). The accumulated sketch is read back with
-    * [[hllSnapshot]]: union all batch registers, re-max per bucket,
-    * estimate — the merge the batch unit proves equal to the
-    * whole-corpus sketch. Compact old `batch=` dirs periodically with
-    * [[compactBatches]] (re-maxed union), outside the stream.
-    */
-  def hllSink(rows: DataFrame, keyCol: String, root: String,
-              checkpoint: String, bucketBits: Int = 6, salt: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Sketches.hllRegisters(batch, keyCol, bucketBits, salt)
-          .write.mode("overwrite")
-          .parquet(s"$root/registers/batch=$batchId")
-        ()
-      }
-      .start()
-
-  /** Continuous ANN index maintenance — the streaming face of
-    * [[graft.sim.IvfPq.applyDelta]]: every micro-batch of embedding
-    * rows is encoded under the FROZEN codebooks of a built
-    * [[graft.sim.IvfPq.State]] (collected ONCE, before the stream
-    * starts — bounded by the codebook sizes, and freezing is exactly
-    * the lifecycle's correctness contract) and lands as m narrow code
-    * rows per vector under `codesDir/batch=<id>` — the established
-    * exactly-once overwrite layout, so a checkpoint replay rewrites
-    * the identical directory, and [[compactBatches]] (identity reduce;
-    * code rows are a disjoint union) is the housekeeping. The read
-    * face is `State(coarse, codebook, spark.read.parquet(codesDir)
-    * .drop("batch"))` → [[graft.sim.IvfPq.probe]] — run
-    * [[recoverCompaction]] on `codesDir` first when compaction
-    * maintenance targets it: serving continues
-    * mid-stream from whatever has committed. Encoding is a pure
-    * per-row projection, so the sink carries NO streaming state at
-    * all — state lives in the parquet layout.
-    */
-  def annEncodeSink(vectors: DataFrame, idCol: String, vecCol: String,
-                    state: graft.sim.IvfPq.State, codesDir: String,
-                    checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val coarseCb = graft.sim.IvfPq.coarseOf(state)
-    val pqCb = graft.sim.IvfPq.pqOf(state)
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sim.Pq.encodeIvfPq(batch, idCol, vecCol, coarseCb, pqCb)
-          .write.mode("overwrite").parquet(s"$codesDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
-  /** The read face of [[hllSink]]: the distinct-count estimate over
-    * everything the sink has absorbed so far. Finishes any torn
-    * [[compactBatches]] swap first so a snapshot taken right after a
-    * mid-maintenance crash still sees the full register set.
-    */
-  def hllSnapshot(spark: org.apache.spark.sql.SparkSession, root: String,
-                  bucketBits: Int = 6): DataFrame = {
-    recoverCompaction(spark, s"$root/registers")
-    graft.operators.Sketches.hllEstimateFromRegisters(
-      spark.read.parquet(s"$root/registers").drop("batch"), bucketBits)
-  }
-
-  /** Delete that refuses to fail silently: a `false` from Hadoop's
-    * `FileSystem.delete` (no exception, just "didn't happen") would
-    * let [[compactBatches]] rename its staging dir INTO a still-
-    * present target (Hadoop rename-into-existing-directory semantics)
-    * and the compacted rows would vanish behind a dot-prefixed
-    * subpath. Loud beats lossy.
-    */
-  private def checkedDelete(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): Unit =
-    if (fs.exists(p) && !fs.delete(p, true))
-      throw new java.io.IOException(s"compactBatches: delete failed: $p")
-
-  /** Rename that (a) verifies the destination is absent — Hadoop
-    * moves a source INTO an existing destination directory instead of
-    * replacing it, which would hide the data under an invisible
-    * dot-path — and (b) throws on a `false` return instead of
-    * reporting success over a swap that never happened.
-    */
-  private def checkedRename(fs: org.apache.hadoop.fs.FileSystem,
-                            src: org.apache.hadoop.fs.Path,
-                            dst: org.apache.hadoop.fs.Path): Unit = {
-    if (fs.exists(dst))
-      throw new java.io.IOException(
-        s"compactBatches: rename destination already exists: $dst")
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(
-        s"compactBatches: rename failed: $src -> $dst")
-  }
-
-  private def batchIds(fs: org.apache.hadoop.fs.FileSystem,
-                       root: org.apache.hadoop.fs.Path): Seq[Long] =
-    fs.listStatus(root).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .flatMap(n => scala.util.Try(n.drop(6).toLong).toOption)
-      .sorted
-
-  /** Finish (or discard) a torn [[compactBatches]] swap under `dir`.
-    *
-    * A COMMITTED staging dir (`.compact_<t>` with its `_SUCCESS`
-    * marker) is the record of a swap that must finish before any
-    * read: its source partitions may be partially deleted, so
-    * re-reading the surviving sources instead would silently drop the
-    * already-deleted partitions' rows. Recovery deletes every
-    * partition at-or-below the staging target id and renames the
-    * staging dir into place. A staging dir WITHOUT the marker is a
-    * dead partial write (its sources are all still present) and is
-    * discarded. Idempotent, and one directory listing when there is
-    * nothing to do — cheap enough that the reading faces
-    * ([[nearDupSink]]/[[exactNearDupSink]] per micro-batch,
-    * [[hllSnapshot]] per call) run it on entry, so a stream that
-    * restarts after a mid-maintenance crash converges to the full
-    * state instead of reading through the torn window. (Within the
-    * documented contract — compaction runs in a maintenance window,
-    * never concurrently with the stream — this closes the gap; the
-    * pairs a nearDup batch would have MISSED during a torn window are
-    * only at risk if that contract is violated.)
-    */
-  def recoverCompaction(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(root)) return
-    fs.listStatus(root).toSeq
-      .filter(_.getPath.getName.startsWith(".compact_"))
-      .foreach { st =>
-        val tgt = scala.util.Try(
-          st.getPath.getName.drop(".compact_".length).toLong).toOption
-        val committed = fs.exists(
-          new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))
-        (tgt, committed) match {
-          case (Some(t), true) =>
-            batchIds(fs, root).filter(_ <= t).foreach(id => checkedDelete(
-              fs, new org.apache.hadoop.fs.Path(root, s"batch=$id")))
-            checkedRename(fs, st.getPath,
-              new org.apache.hadoop.fs.Path(root, s"batch=$t"))
-          case _ => checkedDelete(fs, st.getPath) // dead partial write
-        }
-      }
-  }
-
-  /** Housekeeping for the `batch=<id>` sink directories ([[hllSink]]'s
-    * registers, [[nearDupSink]]/[[exactNearDupSink]]'s pairs/
-    * signatures/corpus): fold every COMMITTED old partition into one
-    * compacted partition so a year of daily batches is a handful of
-    * files instead of 365 directories of stragglers. Run it OUTSIDE
-    * the stream (a maintenance window or a cron slot — the same
-    * offline cadence as a PrefixIndex rebuild).
-    *
-    * Prune-safety with a replaying stream, by construction:
-    *  - the HIGHEST batch id present is NEVER touched — it is the only
-    *    partition a crash-recovering stream can replay (batch ids are
-    *    monotone; committed batches never re-run), so the replay's
-    *    `batch =!= id` exclusion filter still sees exactly the state
-    *    the original run saw;
-    *  - the compacted rows land under the LARGEST compacted id (all
-    *    < the untouched max), so no future or replayed batch id can
-    *    ever collide with — and wrongly exclude — compacted data;
-    *  - the compacted frame is staged as a dot-prefixed directory
-    *    (invisible to partition discovery) written wholly from the
-    *    still-intact sources — the parquet write IS the
-    *    materialization, nothing mutates until it commits — and
-    *    renamed into place last;
-    *  - the staging write is the COMMIT POINT and recovery is
-    *    automatic ([[recoverCompaction]]): a completed staging dir
-    *    (its `_SUCCESS` marker exists) found on entry has its torn
-    *    swap FINISHED first (delete every partition at-or-below its
-    *    target id, rename it into place) — re-running after ANY crash
-    *    converges to the correct full set, never a lossy re-read of
-    *    the partitions a torn delete pass left behind; a staging dir
-    *    WITHOUT the marker is a dead partial write (its sources are
-    *    all still present) and is discarded. The reading sinks run
-    *    [[recoverCompaction]] on entry too, so a restarting stream
-    *    finishes the swap itself instead of reading the torn state;
-    *  - every swap-path delete/rename CHECKS its Hadoop return value
-    *    and throws on `false` — in particular the rename refuses an
-    *    existing destination, because Hadoop rename moves the source
-    *    INTO a present directory (the compacted rows would survive on
-    *    disk but vanish from partition discovery).
-    *
-    * `reduce` re-aggregates the union where the sink's merge is not
-    * plain concatenation — [[hllSink]] registers pass
-    * `_.groupBy("bucket").agg(max("r").as("r"))` (max is idempotent,
-    * so the estimate is IDENTICAL before and after); the near-dup
-    * sinks' pairs/signatures/corpus are disjoint unions and keep the
-    * default identity. Returns the compacted partition id, or None
-    * when fewer than three partitions exist (nothing worth rewriting).
-    */
-  def compactBatches(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     reduce: DataFrame => DataFrame = identity(_),
-                     targetFiles: Int = 1): Option[Long] = {
-    require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(root)) return None
-    recoverCompaction(spark, dir) // finish any torn previous swap FIRST
-    val ids = batchIds(fs, root)
-    if (ids.size < 3) return None // max is untouched; 1 old dir gains nothing
-    val old = ids.dropRight(1)
-    val target = old.max
-    // The staging parquet write reads wholly from the still-intact
-    // sources, so it IS the materialization barrier — nothing is
-    // deleted until it (and its _SUCCESS commit marker) completes.
-    val staging = new org.apache.hadoop.fs.Path(root, s".compact_$target")
-    reduce(spark.read.parquet(dir)
-        .filter(col("batch").isin(old: _*)).drop("batch"))
-      .coalesce(targetFiles)
-      .write.mode("overwrite").parquet(staging.toString)
-    old.foreach(id => checkedDelete(
-      fs, new org.apache.hadoop.fs.Path(root, s"batch=$id")))
-    checkedRename(fs, staging,
-      new org.apache.hadoop.fs.Path(root, s"batch=$target"))
-    Some(target)
-  }
 
   final case class UserEvent(user_id: Long, ts: Timestamp,
                              value: java.math.BigDecimal)

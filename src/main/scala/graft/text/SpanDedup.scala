@@ -68,26 +68,14 @@ object SpanDedup {
           col("n_tokens")).as("coverage"))
   }
 
-  /** The gate built on the diagnostic: keep docs whose cross-doc span
-    * coverage is at most `maxCoverage` (drop boilerplate-dominated
-    * docs before training).
-    */
-  def dropHighDupSpanDocs(df: DataFrame, idCol: String, textCol: String,
-                          maxCoverage: Double, n: Int = 3): DataFrame =
-    df.join(
-      spanDupCoverage(df, idCol, textCol, n)
-        .filter(col("coverage") <= maxCoverage)
-        .select(idCol),
-      Seq(idCol), "left_semi")
-
   /** The REWRITE built on the diagnostic — Lee et al.'s ExactSubstr
     * dedup at token granularity: duplicated spans are EXCISED from the
-    * text instead of gating whole docs ([[dropHighDupSpanDocs]]) or
-    * dropping whole near-dup docs. One canonical copy survives: for
-    * each cross-doc n-gram the LOWEST doc id owns it; every position of
-    * that gram's windows is removed from every OTHER doc (the owner
-    * keeps its copy — removing all copies is the known Lee et al.
-    * footgun that deletes common idioms from the corpus entirely).
+    * text instead of gating or dropping whole docs. One canonical copy
+    * survives: for each cross-doc n-gram the LOWEST doc id owns it;
+    * every position of that gram's windows is removed from every OTHER
+    * doc (the owner keeps its copy — removing all copies is the known
+    * Lee et al. footgun that deletes common idioms from the corpus
+    * entirely).
     * Output per doc: original token count, kept count, and the
     * rewritten text (kept tokens joined by single spaces — a
     * token-normalized rewrite; tokenization is [[TextOps.tokens]]).

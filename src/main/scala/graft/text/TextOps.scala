@@ -15,12 +15,6 @@ object TextOps {
   /** Whitespace tokenization. */
   def tokens(text: Column): Column = split(text, "\\s+")
 
-  /** BPE-ish sub-token split: words plus standalone punctuation marks,
-    * the usual pre-tokenizer regex family.
-    */
-  def roughTokens(text: Column): Column =
-    filter(split(text, "(?=[^\\w])|(?<=[^\\w])"), t => trim(t) =!= "")
-
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
 
   /** Mean token length, derived from char count minus separators. */
@@ -29,36 +23,19 @@ object TextOps {
     (length(text) - (n - lit(1))).cast("double") / n
   }
 
-  /** Fraction of tokens found in `words` (stopword density — a standard
-    * fluency signal in quality filters).
+  /** Fraction of tokens of an already-tokenized column found in `words`
+    * (stopword density — a standard fluency signal in quality filters).
     */
-  def wordRatio(text: Column, words: Seq[String]): Column =
-    wordRatioToks(tokens(text), words)
-
-  /** [[wordRatio]] over an already-tokenized column. */
   def wordRatioToks(toks: Column, words: Seq[String]): Column =
     hitCountToks(toks, words).cast("double") / size(toks)
 
-  /** Count of tokens found in `words`. */
-  def hitCount(text: Column, words: Seq[String]): Column =
-    hitCountToks(tokens(text), words)
-
-  /** [[hitCount]] over an already-tokenized column. Prefer the toks
-    * forms when computing several signals for one document: each
-    * text-based call re-runs the regex split, and with ≥2 references the
-    * projected token attribute survives CollapseProject, so the split
-    * runs exactly once per row.
+  /** Count of tokens of an already-tokenized column found in `words`.
+    * Callers project the token attribute once and pass it to every
+    * signal: with ≥2 references the attribute survives CollapseProject,
+    * so the regex split runs exactly once per row.
     */
   def hitCountToks(toks: Column, words: Seq[String]): Column =
     size(filter(toks, t => t.isin(words.map(lit): _*))).cast("long")
-
-  /** Count of tokens longer than `n` chars. */
-  def longWordCount(text: Column, n: Int): Column =
-    size(filter(tokens(text), t => length(t) > n)).cast("long")
-
-  /** Punctuation density: punctuation chars / total chars. */
-  def punctRatio(text: Column): Column =
-    length(regexp_replace(text, "[^.,;:!?]", "")).cast("double") / length(text)
 
   /** Language-marker word lists for the n-gram/stopword language-ID
     * heuristic. Deterministic constants; extend per deployment.
@@ -70,12 +47,9 @@ object TextOps {
     "de" -> Seq("der", "die", "das", "und", "ein", "eine", "ist", "nicht"),
     "zh" -> Seq("de", "shi", "bu", "le", "ren", "wo", "zai", "you"))
 
-  /** Per-language marker hit-count columns, aliased `score_<lang>`. */
-  def langScores(text: Column): Seq[Column] =
-    LangMarkers.map { case (lang, words) => hitCount(text, words).as(s"score_$lang") }
-
-  /** [[langScores]] over an already-tokenized column: one split serves
-    * all five language scores instead of one split per language.
+  /** Per-language marker hit-count columns over an already-tokenized
+    * column, aliased `score_<lang>`: one split serves all five language
+    * scores instead of one split per language.
     */
   def langScoresToks(toks: Column): Seq[Column] =
     LangMarkers.map { case (lang, words) =>

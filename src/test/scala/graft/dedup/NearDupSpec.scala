@@ -37,53 +37,38 @@ class NearDupSpec extends AnyFunSuite {
   }
 
   test("simhash: identical docs have hamming 0; near dups small hamming") {
-    val sigs = NearDup.simhash(docs, "doc_id", "text")
+    val sigs = NearDup.simhashPortable(docs, "doc_id", "text")
     val m = sigs.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m(1L) == m(2L))
     assert(java.lang.Long.bitCount(m(1L) ^ m(3L)) <= 16)
-    val pairs = NearDup.simhashPairs(sigs, "doc_id", maxHamming = 16, blocks = 8)
+    val pairs = NearDup.simhashPairs(sigs, "doc_id", maxHamming = 16,
+        blocks = 4, bits = 60)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
   }
 
-  test("simhashPairsBlocked equals brute force and keeps candidates near-linear") {
+  test("simhashPairs equals the brute-force Hamming pair set") {
     // deterministic corpus: 200 random 64-bit hashes plus 40 perturbed
-    // copies within hamming <= 7 of their source
+    // copies within hamming <= 3 of their source
     val rnd = new scala.util.Random(42)
     val baseSigs = (0 until 200).map(i => (i.toLong, rnd.nextLong()))
     val perturbed = (0 until 40).map { i =>
       val (srcId, h) = baseSigs(i * 5)
-      val flips = 1 + rnd.nextInt(7)
+      val flips = 1 + rnd.nextInt(3)
       val bits = rnd.shuffle((0 until 64).toList).take(flips)
       (1000L + srcId, bits.foldLeft(h)((acc, b) => acc ^ (1L << b)))
     }
     val all = baseSigs ++ perturbed
     val sigs = all.toDF("doc_id", "simhash")
 
-    val got = NearDup.simhashPairsBlocked(sigs, "doc_id", maxHamming = 7)
+    val got = NearDup.simhashPairs(sigs, "doc_id", maxHamming = 3, blocks = 4)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     val want = (for {
       (i1, h1) <- all; (i2, h2) <- all
-      if i1 < i2 && java.lang.Long.bitCount(h1 ^ h2) <= 7
+      if i1 < i2 && java.lang.Long.bitCount(h1 ^ h2) <= 3
     } yield (i1, i2)).toSet
     assert(got == want)        // absolute guarantee: no missed pairs
     assert(want.size >= 40)    // the perturbed copies are all found
-
-    // blocking keeps candidates near-linear: with 14-bit pair keys the
-    // 240 random hashes should collide far less than the N^2/256 a
-    // single 8-bit block would produce
-    val blocks = 9
-    val widths = { val b = 64 / blocks; val r = 64 % blocks
-      Array.tabulate(blocks)(i => if (i < r) b + 1 else b) }
-    val offsets = widths.scanLeft(0)(_ + _)
-    def chunk(h: Long, i: Int): Long = (h >>> offsets(i)) & ((1L << widths(i)) - 1)
-    val cand = (for {
-      (i1, h1) <- all; (i2, h2) <- all
-      if i1 < i2
-      if (0 until blocks).combinations(2).exists { case Seq(a, b) =>
-        chunk(h1, a) == chunk(h2, a) && chunk(h1, b) == chunk(h2, b) }
-    } yield 1).size
-    assert(cand <= all.size * 4)  // near-linear, not ~N^2/256 (~112 per block)
   }
 
   test("bucket cap: a 1000-doc identical blob cannot go N^2, real pairs survive") {
@@ -148,15 +133,14 @@ class NearDupSpec extends AnyFunSuite {
       s"over-cap trim is not a broadcast anti-join:\n${plan.take(2000)}")
   }
 
-  test("bucket cap: simhashPairsBlocked drops the identical blob, keeps near pairs") {
+  test("bucket cap: simhashPairs drops the identical blob, keeps near pairs") {
     val rnd = new scala.util.Random(7)
     val blobSig = rnd.nextLong()
     val blob = (0L until 1000L).map(i => (i, blobSig))
     val h = rnd.nextLong()
     val pair = Seq((5000L, h), (5001L, h ^ (1L << 13) ^ (1L << 40))) // hamming 2
     val sigs = (blob ++ pair).toDF("doc_id", "simhash")
-    val got = NearDup.simhashPairsBlocked(sigs, "doc_id", maxHamming = 7,
-        maxBucketSize = 10)
+    val got = NearDup.simhashPairs(sigs, "doc_id", maxBucketSize = 10)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(got == Set((5000L, 5001L)))
   }

@@ -36,10 +36,9 @@ class FunnelSpec extends AnyFunSuite {
   }
 
   test("funnel over a user-bucketed events table: no user-key exchange") {
-    // the scaladoc's 100 TB claim, plan-pinned (the Bucketing.scala
-    // discipline): with events bucketed by user, every per-step
-    // filter→join→min-agg stage rides the scan's bucket partitioning
-    // (alias-aware: the userCol→__u rename preserves it, and
+    // the scaladoc's 100 TB claim, plan-pinned: with events bucketed
+    // by user, every per-step filter→join→min-agg stage rides the
+    // scan's bucket partitioning (alias-aware: the userCol→__u rename preserves it, and
     // hashpartitioning(__u) satisfies the (__u, __t1) clustering as a
     // subset) — the only exchanges left are the step-count rollup
     // (rows = #steps) and the 1-row base broadcast.
@@ -47,8 +46,8 @@ class FunnelSpec extends AnyFunSuite {
       Seq((u, "view", ts(1)), (u, "click", ts(2))) ++
         (if (u % 4 == 0) Seq((u, "purchase", ts(3))) else Nil)
     }.toDF("user_id", "event_type", "ts")
-    graft.maintenance.Bucketing.writeBucketed(events, "bkt_funnel_events",
-      "user_id", buckets = 4)
+    events.write.mode("overwrite").format("parquet").bucketBy(4, "user_id")
+      .saveAsTable("bkt_funnel_events")
     try {
       val out = Funnel.funnel(spark.table("bkt_funnel_events"),
         "user_id", "ts", "event_type", Seq("view", "click", "purchase"))

@@ -43,13 +43,4 @@ class LayoutSpec extends AnyFunSuite {
     }
     assert(runs.length == 4, s"quadrants interleaved: $runs")
   }
-
-  test("clusterByZorder preserves rows and range-partitions by the key") {
-    val df = (1L to 1000L).map(i => (i, i * 7 % 91)).toDF("u", "d")
-    val out = Layout.clusterByZorder(df, col("u"), col("d"), numFiles = 4)
-    assert(out.columns.toSeq == Seq("u", "d"))
-    assert(out.count() == 1000)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning"), plan.take(500))
-  }
 }

@@ -30,13 +30,6 @@ class PrivacySpec extends AnyFunSuite {
     assert(m((2, 1L)) == (2, 1L, 2L, 1L, true, false)) // k ok, no diversity
   }
 
-  test("riskSummary aggregates the release decision") {
-    val s = Privacy.riskSummary(report)
-      .as[(Long, Long, Long, Long, Long)].head()
-    // 3 classes; 1 below k covering 1 row; min class size 1; 2 fail l
-    assert(s == (3L, 1L, 1L, 1L, 2L))
-  }
-
   test("guards reject empty quasi-ids and bad k/l") {
     intercept[IllegalArgumentException] {
       Privacy.kAnonymityReport(rows, Seq.empty, col("segment"))

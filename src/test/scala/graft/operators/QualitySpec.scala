@@ -22,7 +22,8 @@ class QualitySpec extends AnyFunSuite {
       Quality.negativeCheck("age"),
       Quality.rangeCheck("age", 150),
       Quality.domainCheck("gender", Seq("male", "female")),
-      Quality.formatCheck("email", Quality.EmailRegex)))
+      Quality.formatCheck("email",
+        "^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}$")))
     val byName = res.map(r => r.check -> r.violations).toMap
     assert(byName("null_id") == 1)
     assert(byName("null_email") == 1)

@@ -44,8 +44,9 @@ class RanksSpec extends AnyFunSuite {
   test("minRank == global window rank() on a heavily-tied column") {
     // l_quantity: ~50 distinct values over thousands of rows — every
     // bucket boundary lands between tie groups by construction.
-    val got = Ranks.minRank(lineitem, "l_quantity", ascending = true,
-        out = "r", buckets = 8)
+    val counts = lineitem.groupBy("l_quantity").agg(count(lit(1)).as("c"))
+    val got = Ranks.minRankOfCounts(counts, "l_quantity", "c",
+        ascending = true, out = "r", buckets = 8)
       .collect().map(r => (r.get(0).toString, r.getLong(1))).toSet
     val exp = lineitem.withColumn("r",
         rank().over(Window.orderBy(col("l_quantity").asc)).cast("long"))

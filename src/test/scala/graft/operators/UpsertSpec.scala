@@ -105,30 +105,4 @@ class UpsertSpec extends AnyFunSuite {
       (1L, "new", ts("2024-03-01"), None, true),
       (2L, "paid", ts("2024-01-02"), None, true)))
   }
-
-  test("scd2Apply == full rebuild; replayed batch is a no-op") {
-    import java.sql.Timestamp
-    def ts(d: Int) = Timestamp.valueOf(f"2024-01-$d%02d 00:00:00")
-    val old = (1L to 50L).flatMap { k =>
-      Seq((k, "a", ts(1)), (k, if (k % 2 == 0) "b" else "a", ts(5)))
-    }.toDF("k", "status", "ts")
-    val batch = (20L to 60L).map { k =>
-      (k, if (k % 3 == 0) "c" else "a", ts(9))
-    }.toDF("k", "status", "ts")
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .select("k", "status", "valid_from", "valid_to", "is_current")
-      .as[(Long, String, Timestamp, Option[Timestamp], Boolean)]
-      .collect().toSet
-    val dim = Upsert.scd2FromHistory(old, Seq("k"), Seq("status"), "ts")
-    val applied = canon(
-      Upsert.scd2Apply(dim, batch, Seq("k"), Seq("status"), "ts"))
-    val full = canon(Upsert.scd2FromHistory(old.unionByName(batch),
-      Seq("k"), Seq("status"), "ts"))
-    assert(applied == full && applied.nonEmpty)
-    // replay: folding the same batch in again changes nothing
-    val replayed = canon(Upsert.scd2Apply(
-      Upsert.scd2Apply(dim, batch, Seq("k"), Seq("status"), "ts"),
-      batch, Seq("k"), Seq("status"), "ts"))
-    assert(replayed == full)
-  }
 }

@@ -74,57 +74,6 @@ class IvfPqSpec extends AnyFunSuite {
     assert(newIds == (5L to 60L by 5L).toSet)
   }
 
-  test("cellStats: occupancy, hottest-cell share, true empty count") {
-    val st = IvfPq.build(base, "id", "v", nlist = 8, m = 4, k = 8)
-    val got = IvfPq.cellStats(st, nlist = 8)
-      .as[(Long, Long, Double, Double, Long)].collect()
-    val n = base.count()
-    assert(got.map(_._2).sum == n)          // every vector in one cell
-    assert(got.forall(r => r._3 == r._2.toDouble / n))
-    val mx = got.map(_._2).max
-    assert(got.forall(r => r._4 == mx.toDouble / n))
-    assert(got.forall(r => r._5 == 8L - got.length))
-  }
-
-  test("annEncodeSink: streamed codes probe identically; compaction preserves them") {
-    implicit val sqlCtx = spark.sqlContext
-    val st0 = IvfPq.build(base, "id", "v", nlist = 8, m = 4, k = 8)
-    val root = java.nio.file.Files.createTempDirectory("annsink").toString
-    val codesDir = s"$root/codes"
-    // seed the dir with the build's own codes as batch=0-style state?
-    // no — stream EVERYTHING: 3 micro-batches covering base ∪ batch,
-    // so the read-face state equals the applyDelta state exactly
-    val rows = all.as[(Long, Seq[Float])].collect().toSeq
-    val chunks = rows.grouped(20).toSeq
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.Streams.annEncodeSink(
-      input.toDF().toDF("id", "v"), "id", "v", st0,
-      codesDir, s"$root/ckpt")
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    def probeDir(): Set[(Long, Long, Int)] =
-      IvfPq.probe(
-        IvfPq.State(st0.coarse, st0.codebook,
-          spark.read.parquet(codesDir).drop("batch")),
-        queries, "id", "v", nprobe = 3, topK = 4)
-        .as[(Long, Long, Int)].collect().toSet
-    val want = IvfPq.probe(
-        IvfPq.applyDelta(
-          IvfPq.State(st0.coarse, st0.codebook,
-            IvfPq.stageCodes(st0, base, "id", "v")),
-          batch, "id", "v"),
-        queries, "id", "v", nprobe = 3, topK = 4)
-      .as[(Long, Long, Int)].collect().toSet
-    val streamed = probeDir()
-    assert(streamed == want && streamed.nonEmpty)
-    // housekeeping: identity-reduce compaction changes nothing
-    assert(graft.streaming.Streams.compactBatches(spark, codesDir)
-      .nonEmpty)
-    assert(probeDir() == want)
-  }
-
   test("an incomplete state table is rejected loudly") {
     val st0 = IvfPq.build(base, "id", "v", nlist = 8, m = 4, k = 8)
     val broken = IvfPq.State(st0.coarse.filter(col("j") =!= 3),

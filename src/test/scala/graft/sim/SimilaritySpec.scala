@@ -204,14 +204,6 @@ class SimilaritySpec extends AnyFunSuite {
       "small-bucket anchor still sees its cross-label neighbor")
   }
 
-  test("lshTopK finds the identical-direction vector") {
-    val out = Similarity.lshTopK(emb, emb.filter($"vec_id" === 1), "vec_id",
-        "embedding", k = 3, bits = 8, dim = 4)
-      .as[(Long, Long, Int)].collect()
-    assert(out.nonEmpty)
-    assert(out.head._2 == 2L) // same bucket guaranteed: identical signs
-  }
-
   test("native ArrayDot matches a hand computation") {
     val df = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0))).toDF("a", "b")
     val d = df.select(Similarity.dot($"a", $"b")).as[Double].collect().head
@@ -259,7 +251,7 @@ class SimilaritySpec extends AnyFunSuite {
     native.foreach { case (id, bk) => assert(bk.toSeq == expected(id), s"id=$id") }
   }
 
-  test("lshTopKPortable matches lshTopK's contract on the identical-direction vector") {
+  test("lshTopKPortable finds the identical-direction vector") {
     val out = Similarity.lshTopKPortable(emb, emb.filter($"vec_id" === 1), "vec_id",
         "embedding", k = 3, bits = 8, dim = 4, tables = 8, seed = 7L)
       .as[(Long, Long, Int)].collect()
@@ -293,28 +285,13 @@ class SimilaritySpec extends AnyFunSuite {
     assert(pairs.contains((1L, 2L)))                          // real pair kept
   }
 
-  test("ivfTopK finds the identical-direction vector and overlaps brute force") {
-    val out = Similarity.ivfTopK(emb, emb.filter($"vec_id" === 1), "vec_id",
-        "embedding", k = 3, nlist = 2, nprobe = 2)
-      .as[(Long, Long, Int)].collect()
-    assert(out.nonEmpty && out.head._2 == 2L) // same-direction vector ranks first
+  test("lshTopKPortable agrees with brute force on clustered testdata sample") {
     val embeddings = graft.Tables.t(spark, "/root/testdata/sf0.001", "embeddings")
     val queries = embeddings.filter($"vec_id" < 3)
     val brute = Similarity.bruteTopK(embeddings, queries, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val ivf = Similarity.ivfTopK(embeddings, queries, "vec_id", "embedding",
-        k = 5, nlist = 16, nprobe = 6)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    assert(ivf.nonEmpty && (brute intersect ivf).nonEmpty)
-  }
-
-  test("lshTopK agrees with brute force on clustered testdata sample") {
-    val embeddings = graft.Tables.t(spark, "/root/testdata/sf0.001", "embeddings")
-    val queries = embeddings.filter($"vec_id" < 3)
-    val brute = Similarity.bruteTopK(embeddings, queries, "vec_id", "embedding", 5)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.lshTopK(embeddings, queries, "vec_id", "embedding",
-        k = 5, bits = 8, dim = 64, tables = 8)
+    val approx = Similarity.lshTopKPortable(embeddings, queries, "vec_id",
+        "embedding", k = 5, bits = 8, dim = 64, tables = 8)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     // approximate recall: some overlap with exact answers, never empty
     assert(approx.nonEmpty)

@@ -11,74 +11,6 @@ class StreamsSpec extends AnyFunSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  test("windowedDailyKpis aggregates per event-time day with watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, Double)]
-    val kpis = Streams.windowedDailyKpis(
-      input.toDF().toDF("ts", "user_id", "value"), "ts", "user_id", "value")
-    val q = kpis.writeStream.format("memory").queryName("kpis")
-      .outputMode("complete").start()
-    try {
-      input.addData(
-        (ts("2024-01-01 10:00:00"), 1L, 10.0),
-        (ts("2024-01-01 11:00:00"), 1L, 20.0),
-        (ts("2024-01-02 09:00:00"), 2L, 5.0))
-      q.processAllAvailable()
-      val out = spark.table("kpis").orderBy("event_date")
-        .select("events_count", "total_value", "approx_unique_users")
-        .as[(Long, Double, Long)].collect()
-      assert(out.length == 2)
-      assert(out(0) == ((2L, 30.0, 1L)))
-      assert(out(1) == ((1L, 5.0, 1L)))
-    } finally q.stop()
-  }
-
-  test("dedupStream drops in-horizon duplicate keys") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, String)]
-    val deduped = Streams.dedupStream(
-      input.toDF().toDF("ts", "event_id", "payload"), "ts", Seq("event_id"))
-    val q = deduped.writeStream.format("memory").queryName("dedup")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        (ts("2024-01-01 10:00:00"), 1L, "a"),
-        (ts("2024-01-01 10:00:00"), 1L, "a-dup"),
-        (ts("2024-01-01 11:00:00"), 2L, "b"))
-      q.processAllAvailable()
-      assert(spark.table("dedup").count() == 2)
-    } finally q.stop()
-  }
-
-  test("upsertSink merges each micro-batch by key, latest version wins") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("upsink").toString
-    val path = s"$root/silver"
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val q = Streams.upsertSink(
-      input.toDF().toDF("id", "payload", "ts"), path,
-      keys = Seq("id"), tsCol = "ts", checkpoint = s"$root/ckpt")
-    try {
-      // batch 1: two keys, one carrying two versions in the same batch
-      input.addData(
-        (1L, "a-v1", ts("2024-01-01 10:00:00")),
-        (1L, "a-v2", ts("2024-01-01 11:00:00")),
-        (2L, "b-v1", ts("2024-01-01 10:30:00")))
-      q.processAllAvailable()
-      val after1 = spark.read.parquet(path)
-        .select("id", "payload").as[(Long, String)].collect().toSet
-      assert(after1 == Set((1L, "a-v2"), (2L, "b-v1")))
-      // batch 2: update one key, add a third -> merge, not append
-      input.addData(
-        (2L, "b-v2", ts("2024-01-02 09:00:00")),
-        (3L, "c-v1", ts("2024-01-02 09:00:00")))
-      q.processAllAvailable()
-      val after2 = spark.read.parquet(path)
-        .select("id", "payload").as[(Long, String)].collect().toSet
-      assert(after2 == Set((1L, "a-v2"), (2L, "b-v2"), (3L, "c-v1")))
-    } finally q.stop()
-  }
-
   test("userSessions accumulates typed per-key state across batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Streams.UserEvent]
@@ -98,34 +30,6 @@ class StreamsSpec extends AnyFunSuite {
         new java.math.BigDecimal("15.0")) == 0)
       assert(last.lastSeen == ts("2024-01-01 11:00:00"))
     } finally q.stop()
-  }
-
-  test("nearDupSink: streamed batches telescope to the full-corpus pair set") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("ndsink").toString
-    val docs = graft.Tables.t(spark, "/root/testdata/sf0.001", "documents")
-      .select("doc_id", "text").as[(Long, String)].collect()
-    val chunks = docs.groupBy(_._1 % 3).toSeq.sortBy(_._1).map(_._2.toSeq)
-    val input = MemoryStream[(Long, String)]
-    val q = Streams.nearDupSink(input.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", s"$root/state", s"$root/ckpt", threshold = 0.9)
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    val streamed = spark.read.parquet(s"$root/state/pairs")
-      .select("id1", "id2", "jaccard").as[(Long, Long, Double)]
-      .collect().toSet
-    val full = graft.dedup.NearDup.nearDupPairs(
-        docs.toSeq.toDF("doc_id", "text"), "doc_id", "text", threshold = 0.9)
-      .select("id1", "id2", "jaccard").as[(Long, Long, Double)]
-      .collect().toSet
-    assert(streamed == full)
-    assert(streamed.nonEmpty)
-    // each batch emits only pairs touching it -> batch pair sets are
-    // disjoint (no double counting across the stream's lifetime)
-    assert(spark.read.parquet(s"$root/state/pairs")
-      .select("id1", "id2").distinct().count() ==
-      spark.read.parquet(s"$root/state/pairs").count())
   }
 
   test("exactNearDupSink: telescopes to the full exact join, pairs disjoint") {
@@ -156,210 +60,6 @@ class StreamsSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$root/state/pairs")
       .select("id1", "id2").distinct().count() ==
       spark.read.parquet(s"$root/state/pairs").count())
-  }
-
-  test("hllSink: streamed registers merge to the whole-corpus sketch") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("hllsink").toString
-    val keys = (1L to 5000L).toSeq
-    val chunks = keys.grouped(1700).toSeq // uneven batches, overlapping none
-    val input = MemoryStream[Long]
-    val q = Streams.hllSink(input.toDF().toDF("k"), "k",
-      s"$root/state", s"$root/ckpt")
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    val streamed = Streams.hllSnapshot(spark, s"$root/state")
-      .as[(Long, Long, Double)].collect().head
-    val batch = graft.operators.Sketches.hllEstimate(keys.toDF("k"), "k")
-      .as[(Long, Long, Double)].collect().head
-    assert(streamed == batch) // register algebra: merge == whole corpus
-    // per-batch register tables are tiny (<= m rows), never data
-    assert(spark.read.parquet(s"$root/state/registers")
-      .groupBy("batch").count().as[(Long, Long)].collect()
-      .forall(_._2 <= 64))
-  }
-
-  test("compactBatches: hll estimate and pair set identical; max batch untouched") {
-    implicit val sqlCtx = spark.sqlContext
-    // hll sink: 4 batches -> compact -> estimate must be IDENTICAL
-    // (max is idempotent under the re-max reduce)
-    val root = java.nio.file.Files.createTempDirectory("hllcomp").toString
-    val input = MemoryStream[Long]
-    val q = Streams.hllSink(input.toDF().toDF("k"), "k",
-      s"$root/state", s"$root/ckpt")
-    try {
-      (1L to 4000L).grouped(1000).foreach { c =>
-        input.addData(c.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val regs = s"$root/state/registers"
-    val before = Streams.hllSnapshot(spark, s"$root/state")
-      .as[(Long, Long, Double)].collect().head
-    val got = Streams.compactBatches(spark, regs,
-      _.groupBy("bucket")
-        .agg(org.apache.spark.sql.functions.max("r").as("r")))
-    assert(got.contains(2L)) // batches 0,1,2 folded under id 2
-    val dirs = new java.io.File(regs).listFiles().map(_.getName)
-      .filter(_.startsWith("batch=")).toSet
-    assert(dirs == Set("batch=2", "batch=3")) // max (3) untouched
-    val after = Streams.hllSnapshot(spark, s"$root/state")
-      .as[(Long, Long, Double)].collect().head
-    assert(after == before)
-
-    // nearDup pairs: disjoint union -> identity reduce, set identical
-    val root2 = java.nio.file.Files.createTempDirectory("ndcomp").toString
-    val docs = graft.Tables.t(spark, "/root/testdata/sf0.001", "documents")
-      .select("doc_id", "text").as[(Long, String)].collect()
-    val chunks = docs.groupBy(_._1 % 3).toSeq.sortBy(_._1).map(_._2.toSeq)
-    val input2 = MemoryStream[(Long, String)]
-    val q2 = Streams.nearDupSink(input2.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", s"$root2/state", s"$root2/ckpt", threshold = 0.9)
-    try {
-      chunks.foreach { c => input2.addData(c); q2.processAllAvailable() }
-    } finally q2.stop()
-    def pairSet = spark.read.parquet(s"$root2/state/pairs")
-      .select("id1", "id2", "jaccard").as[(Long, Long, Double)]
-      .collect().toSet
-    val pBefore = pairSet
-    assert(Streams.compactBatches(spark, s"$root2/state/pairs")
-      .contains(1L))
-    assert(pairSet == pBefore && pBefore.nonEmpty)
-    // fewer than 3 partitions: no-op (nothing worth rewriting)
-    assert(Streams.compactBatches(spark, s"$root2/state/pairs").isEmpty)
-  }
-
-  test("compactBatches recovers a torn swap; discards uncommitted staging") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("torncomp").toString
-    val input = MemoryStream[Long]
-    val q = Streams.hllSink(input.toDF().toDF("k"), "k",
-      s"$root/state", s"$root/ckpt")
-    try {
-      (1L to 4000L).grouped(1000).foreach { c =>
-        input.addData(c.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val regs = s"$root/state/registers"
-    val before = Streams.hllSnapshot(spark, s"$root/state")
-      .as[(Long, Long, Double)].collect().head
-    // simulate the torn state a crash mid-delete leaves: the staging
-    // dir for target 2 is fully committed (_SUCCESS present), batch=1
-    // already deleted, batch=0 and batch=2 still on disk
-    spark.read.parquet(regs)
-      .filter(org.apache.spark.sql.functions.col("batch")
-        .isin(0L, 1L, 2L)).drop("batch")
-      .groupBy("bucket")
-      .agg(org.apache.spark.sql.functions.max("r").as("r"))
-      .coalesce(1).localCheckpoint(true)
-      .write.parquet(s"$regs/.compact_2")
-    assert(new java.io.File(s"$regs/.compact_2/_SUCCESS").exists())
-    assert(new java.io.File(s"$regs/batch=1").exists())
-    org.apache.hadoop.fs.FileUtil.fullyDelete(
-      new java.io.File(s"$regs/batch=1"))
-    // recovery must finish the swap (NOT lossily re-read the two
-    // surviving source dirs): estimate identical, dirs = {2, 3}
-    Streams.compactBatches(spark, regs,
-      _.groupBy("bucket")
-        .agg(org.apache.spark.sql.functions.max("r").as("r")))
-    val dirs = new java.io.File(regs).listFiles().map(_.getName)
-      .filter(_.startsWith("batch=")).toSet
-    assert(dirs == Set("batch=2", "batch=3"))
-    val after = Streams.hllSnapshot(spark, s"$root/state")
-      .as[(Long, Long, Double)].collect().head
-    assert(after == before)
-    // an UNCOMMITTED staging dir (no _SUCCESS) is a dead partial
-    // write: discarded, sources untouched
-    new java.io.File(s"$regs/.compact_9").mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$regs/.compact_9/part-junk.parquet"),
-      "not parquet")
-    Streams.compactBatches(spark, regs,
-      _.groupBy("bucket")
-        .agg(org.apache.spark.sql.functions.max("r").as("r")))
-    assert(!new java.io.File(s"$regs/.compact_9").exists())
-    assert(Streams.hllSnapshot(spark, s"$root/state")
-      .as[(Long, Long, Double)].collect().head == before)
-  }
-
-  test("compactBatches is prune-safe: a stream resumed AFTER compaction stays exact") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("ndcomp2").toString
-    val docs = graft.Tables.t(spark, "/root/testdata/sf0.001", "documents")
-      .select("doc_id", "text").as[(Long, String)].collect()
-    val chunks = docs.groupBy(_._1 % 4).toSeq.sortBy(_._1).map(_._2.toSeq)
-    val input = MemoryStream[(Long, String)]
-    val q = Streams.nearDupSink(input.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", s"$root/state", s"$root/ckpt", threshold = 0.9)
-    try {
-      // 3 batches, then the maintenance window: compact all three dirs
-      chunks.take(3).foreach { c => input.addData(c); q.processAllAvailable() }
-      for (sub <- Seq("pairs", "signatures", "corpus"))
-        Streams.compactBatches(spark, s"$root/state/$sub")
-      // batch 4 dedups against the COMPACTED index/corpus
-      input.addData(chunks(3)); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.read.parquet(s"$root/state/pairs")
-      .select("id1", "id2", "jaccard").as[(Long, Long, Double)]
-      .collect().toSet
-    val full = graft.dedup.NearDup.nearDupPairs(
-        docs.toSeq.toDF("doc_id", "text"), "doc_id", "text",
-        threshold = 0.9)
-      .select("id1", "id2", "jaccard").as[(Long, Long, Double)]
-      .collect().toSet
-    assert(streamed == full && streamed.nonEmpty)
-  }
-
-  test("scd2Sink: streamed batches telescope to the full-history dimension") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("scd2sink").toString
-    def ts(d: Int) = Timestamp.valueOf(f"2024-01-$d%02d 00:00:00")
-    val hist = (1L to 40L).flatMap { k =>
-      Seq((k, "a", ts(1)), (k, if (k % 2 == 0) "b" else "a", ts(5)),
-        (k, if (k % 3 == 0) "c" else "b", ts(9)))
-    }
-    val chunks = hist.grouped(45).toSeq
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val q = Streams.scd2Sink(input.toDF().toDF("k", "status", "ts"),
-      s"$root/dim", Seq("k"), Seq("status"), "ts", s"$root/ckpt")
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    val streamed = spark.read.parquet(s"$root/dim")
-      .select("k", "status", "valid_from", "valid_to", "is_current")
-      .as[(Long, String, Timestamp, Option[Timestamp], Boolean)]
-      .collect().toSet
-    val full = graft.operators.Upsert.scd2FromHistory(
-        hist.toDF("k", "status", "ts"), Seq("k"), Seq("status"), "ts")
-      .select("k", "status", "valid_from", "valid_to", "is_current")
-      .as[(Long, String, Timestamp, Option[Timestamp], Boolean)]
-      .collect().toSet
-    assert(streamed == full && streamed.nonEmpty)
-  }
-
-  test("psiSink scores each batch against the frozen baseline") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("psisink").toString
-    val baseline = (1 to 5000).map(i => (i % 100).toDouble).toDF("v")
-    val input = MemoryStream[Double]
-    val q = Streams.psiSink(input.toDF().toDF("v"), baseline, "v",
-      s"$root/state", s"$root/ckpt")
-    try {
-      input.addData((1 to 5000).map(i => ((i * 7) % 100).toDouble)) // same dist
-      q.processAllAvailable()
-      input.addData((1 to 5000).map(i => (50 + i % 50).toDouble))   // shifted
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(s"$root/state/psi")
-      .select("batch_id", "psi").as[(Long, Double)].collect().toMap
-    assert(got.size == 2)
-    assert(math.abs(got(0L)) < 0.01, s"stable batch scored ${got(0L)}")
-    assert(got(1L) > 0.25, s"shifted batch scored ${got(1L)}")
-    // batch twin equality: the streamed score IS psiDrift of the batch
-    val batchPsi = graft.operators.Quality.psiDrift(baseline,
-        (1 to 5000).map(i => (50 + i % 50).toDouble).toDF("v"), "v")
-      .select("psi").as[Double].collect().head
-    assert(got(1L) == batchPsi)
   }
 
   test("streamIntervalJoin matches the batch interval join") {

@@ -33,13 +33,6 @@ class SpanDedupSpec extends AnyFunSuite {
     assert(out(5L) == ((8L, 0L, 0.0)))
   }
 
-  test("dropHighDupSpanDocs keeps low-coverage docs only") {
-    val kept = SpanDedup.dropHighDupSpanDocs(docs, "doc_id", "text",
-        maxCoverage = 0.5, n = 3)
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(3L, 4L, 5L)) // docs 1 and 2 sit at 4/7 ≈ 0.571 > 0.5
-  }
-
   test("exciseDupSpans removes shared spans everywhere but the owning doc") {
     val out = SpanDedup.exciseDupSpans(docs, "doc_id", "text", n = 3)
       .as[(Long, Long, Long, String)].collect()

@@ -35,15 +35,11 @@ class TextOpsSpec extends AnyFunSuite {
       Seq("", "x", "y"))
   }
 
-  test("hitCount / wordRatio / longWordCount") {
+  test("hitCountToks / wordRatioToks") {
     val text = "the quick the lazy elephant"
-    assert(one(TextOps.hitCount(col("t"), Seq("the")), text).getLong(0) == 2L)
-    assert(one(TextOps.wordRatio(col("t"), Seq("the")), text).getDouble(0) == 0.4)
-    assert(one(TextOps.longWordCount(col("t"), 5), text).getLong(0) == 1L)
-  }
-
-  test("punctRatio counts punctuation density") {
-    assert(one(TextOps.punctRatio(col("t")), "ab.!").getDouble(0) == 0.5)
+    val toks = TextOps.tokens(col("t"))
+    assert(one(TextOps.hitCountToks(toks, Seq("the")), text).getLong(0) == 2L)
+    assert(one(TextOps.wordRatioToks(toks, Seq("the")), text).getDouble(0) == 0.4)
   }
 
   test("shingles: n-grams of tokens; short docs collapse to one shingle") {
@@ -68,17 +64,13 @@ class TextOpsSpec extends AnyFunSuite {
   test("langId: argmax with deterministic tie order") {
     val df = Seq("the cat and the hat", "le chat et les chats", "zzz qqq")
       .toDF("text")
-    val out = df.select((col("text") +: TextOps.langScores(col("text"))): _*)
+    val out = df
+      .select((col("text") +: TextOps.langScoresToks(TextOps.tokens(col("text")))): _*)
       .withColumn("predicted_lang", TextOps.langIdFromScores)
       .select("predicted_lang").as[String].collect()
     assert(out(0) == "en")
     assert(out(1) == "fr")
     assert(out(2) == "en") // all-zero scores: first lang in priority order
-  }
-
-  test("roughTokens splits off punctuation") {
-    val toks = one(TextOps.roughTokens(col("t")), "hi, there!").getSeq[String](0)
-    assert(toks == Seq("hi", ",", "there", "!"))
   }
 
   test("chunkRows: sliding windows cover every token, no trailing fragment") {

@@ -46,6 +46,32 @@ class UnigramLmSpec extends AnyFunSuite {
     }
   }
 
+  test("codegen compiles over a non-nullable column (no interpreted fallback)") {
+    // spark.range ids are non-nullable, so the word column is too; the
+    // uncoverable "ab3" still yields null, which the generated code can
+    // only store when the expression declares itself nullable
+    val v = Map("a" -> -3L, "b" -> -5L, "ab" -> -4L, "0" -> -1L,
+      "1" -> -1L, "2" -> -1L)
+    val words = spark.range(4)
+      .select(concat(lit("ab"), col("id").cast("string")).as("word"))
+    assert(!words.schema("word").nullable)
+    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val got = words
+        .select(col("word"), UnigramSegment.of(col("word"), v, 4).as("s"))
+        .collect().map(r => r.getString(0) -> Option(r.getSeq[String](1)))
+        .toMap
+      Seq("ab0", "ab1", "ab2", "ab3").foreach { w =>
+        assert(got(w) == seg(w, v), s"word $w")
+      }
+      assert(got("ab3").isEmpty)
+    } finally prev match {
+      case Some(p) => spark.conf.set("spark.sql.codegen.fallback", p)
+      case None => spark.conf.unset("spark.sql.codegen.fallback")
+    }
+  }
+
   test("training: scores sharpen toward pieces the viterbi actually uses") {
     val docs = Seq((1L, "abab abab cd cd cd ab")).toDF("doc_id", "text")
     val out = Vocab.unigramLmTrain(docs, "doc_id", "text",

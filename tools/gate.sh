@@ -11,8 +11,9 @@
 # Mirrors the driver exactly: graft.Verify dumps every registered query
 # plus oracle_sql.json, then tools/check.py replays each oracle in
 # DuckDB and compares through the driver's pandas bridge (column-sorted,
-# row-sorted, dtype-kind-sensitive). Exits non-zero on the first stage
-# that fails. Dev tool only — not part of the library.
+# row-sorted, dtype-kind-sensitive). A Verify run whose log shows a
+# generated-code compile error fails too. Exits non-zero on the first
+# stage that fails. Dev tool only — not part of the library.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -21,6 +22,20 @@ SF01=${SPARK_GRAFT_SF01:-/root/testdata/sf0.1}
 OUT001=${GATE_OUT:-/tmp/gate_sf001}
 OUT01=${GATE_OUT01:-/tmp/gate_sf01}
 
+# Runs graft.Verify with its log teed to <out>.log, then fails when
+# Spark logged a generated-code compile error: Spark then silently
+# reruns that plan interpreted, so the results still pass the oracle.
+verify() {
+  local sf=$1 out=$2; shift 2
+  rm -rf "$out"
+  sbt -batch "runMain graft.Verify $sf $out $*" 2>&1 | tee "$out.log"
+  if grep -q "ERROR CodeGenerator" "$out.log"; then
+    echo "GATE FAILED: generated code did not compile (see $out.log):"
+    grep -m 5 "ERROR CodeGenerator" "$out.log"
+    exit 1
+  fi
+}
+
 echo "== gate 1/4: perfbench input-generator tests =="
 python3 -m unittest discover perfbench/tests
 
@@ -28,14 +43,12 @@ echo "== gate 2/4: sbt test =="
 sbt -batch test
 
 echo "== gate 3/4: full registry at sf0.01 (Verify + DuckDB oracle) =="
-rm -rf "$OUT001"
-sbt -batch "runMain graft.Verify $SF001 $OUT001"
+verify "$SF001" "$OUT001"
 python3 tools/check.py "$OUT001" "$SF001"
 
 if [ "$#" -gt 0 ]; then
   echo "== gate 4/4: sf0.1 for new queries: $* =="
-  rm -rf "$OUT01"
-  sbt -batch "runMain graft.Verify $SF01 $OUT01 $*"
+  verify "$SF01" "$OUT01" "$@"
   python3 tools/check.py "$OUT01" "$SF01" "$@"
 else
   echo "== gate 4/4: skipped (no new-query args; run with query names"
