@@ -9,7 +9,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
 
-/** Testdata access + cross-engine-deterministic aggregate helpers. */
+/** Parquet table access with a per-session schema catalog, for testdata
+  * and lake tables alike, plus cross-engine-deterministic aggregate
+  * helpers. */
 object Tables {
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
   private val InferNtz = "spark.sql.parquet.inferTimestampNTZ.enabled"
@@ -17,7 +19,7 @@ object Tables {
   /** (path, length, modification time) of every file under a table. */
   private type Fingerprint = Seq[(String, Long, Long)]
 
-  /** Per-session schema catalog: table path -> (fingerprint, schema).
+  /** Per-session schema catalog: parquet path -> (fingerprint, schema).
     * Schemas only, never data. Weak keys: a session's entries go with the
     * session, and a stopped session's are dropped on the next lookup. */
   private val catalog =
@@ -54,26 +56,45 @@ object Tables {
     * PATH_NOT_FOUND.
     */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val df = s.read.schema(schema(s, path)).parquet(path)
+    val df = read(s, s"$dir/$name.parquet")
     if (df.schema.fields.exists(f => f.name == "ts" && f.dataType == LongType))
       df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     else df
   }
 
+  /** Read any parquet path with the catalog's schema: inferred on the
+    * path's first read in the session or after its files change, or
+    * the one its writer recorded with [[seed]]. The pipeline's lake
+    * tables are read this way, so reading the table a stage has just
+    * written starts no inference job.
+    */
+  def read(s: SparkSession, path: String): DataFrame =
+    s.read.schema(schema(s, path)).parquet(path)
+
+  /** Record `written`, the schema of a frame just written to `path`, as
+    * the path's schema under its current files. A file source reads
+    * every column as nullable whatever schema it is given, so a read
+    * with it gives the schema an inferred read would. A missing path
+    * records nothing.
+    */
+  private[graft] def seed(s: SparkSession, path: String, written: StructType): Unit =
+    fingerprint(s, path).foreach(fp => entries(s).put(path, (fp, written)))
+
+  private def entries(s: SparkSession) = catalog.synchronized {
+    catalog.keySet.removeIf(_.sparkContext.isStopped)
+    catalog.computeIfAbsent(s, _ => new ConcurrentHashMap)
+  }
+
   /** The catalog's schema for `path`, inferred when the files changed. */
   private def schema(s: SparkSession, path: String): StructType = {
-    val entries = catalog.synchronized {
-      catalog.keySet.removeIf(_.sparkContext.isStopped)
-      catalog.computeIfAbsent(s, _ => new ConcurrentHashMap)
-    }
+    val known = entries(s)
     fingerprint(s, path) match {
       case None => infer(s, path)
       case Some(fp) =>
-        Option(entries.get(path)).collect { case (`fp`, known) => known }
+        Option(known.get(path)).collect { case (`fp`, schema) => schema }
           .getOrElse {
             val inferred = infer(s, path)
-            entries.put(path, (fp, inferred))
+            known.put(path, (fp, inferred))
             inferred
           }
     }

@@ -17,16 +17,33 @@ import graft.Exprs._
   */
 object Gold {
 
+  /** A day-grain mart's aggregates, each with its output column name.
+    * The marts share one grouping (`to_date` of the timestamp), so any
+    * of them can be computed in one aggregate with [[daily]] and sliced
+    * back out by name.
+    */
+  type Aggs = Seq[(String, Column)]
+
+  /** `aggs` per `event_date` = `to_date(tsCol)`, in the order given. */
+  def daily(df: DataFrame, tsCol: String, aggs: Aggs): DataFrame = {
+    val named = aggs.map { case (name, agg) => agg.as(name) }
+    df.groupBy(to_date(col(tsCol)).as("event_date")).agg(named.head, named.tail: _*)
+  }
+
+  /** vw_daily_revenue's (db_setup.py:346-357) and finance_mart's
+    * aggregates: count / sum / avg / distinct users.
+    */
+  def revenueAggs(userCol: String, valueCol: String): Aggs = Seq(
+    "events_count" -> count(lit(1)),
+    "total_value" -> dsum(col(valueCol)),
+    "avg_value" -> davg(col(valueCol)),
+    "unique_users" -> countDistinct(col(userCol)))
+
   /** vw_daily_revenue (db_setup.py:346-357): per-day count / sum / avg /
     * distinct users.
     */
   def dailyRevenue(df: DataFrame, tsCol: String, userCol: String, valueCol: String): DataFrame =
-    df.groupBy(to_date(col(tsCol)).as("event_date"))
-      .agg(
-        count(lit(1)).as("events_count"),
-        dsum(col(valueCol)).as("total_value"),
-        davg(col(valueCol)).as("avg_value"),
-        countDistinct(col(userCol)).as("unique_users"))
+    daily(df, tsCol, revenueAggs(userCol, valueCol))
 
   /** Rolling `days`-day revenue over the daily mart (trend view on top
     * of vw_daily_revenue). The window input is one row per calendar day
@@ -135,17 +152,18 @@ object Gold {
       davg(col(valueCol)).as("avg_order_value"),
       count(lit(1)).as("order_count"))
 
-  /** sales_mart daily rows (publish_gold.py:52-64): cart count and
-    * distinct customers per day, with the (day-constant) product count
-    * cross-joined in — the scalar-subquery shape of the reference.
+  /** sales_mart's per-day aggregates (publish_gold.py:52-64): cart
+    * count and distinct customers.
     */
-  def salesMart(carts: DataFrame, products: DataFrame, tsCol: String,
-                userCol: String): DataFrame =
-    carts.groupBy(to_date(col(tsCol)).as("event_date"))
-      .agg(
-        count(lit(1)).as("total_carts"),
-        countDistinct(col(userCol)).as("customer_count"))
-      .crossJoin(broadcast(products.agg(count(lit(1)).as("product_count"))))
+  def salesAggs(userCol: String): Aggs = Seq(
+    "total_carts" -> count(lit(1)),
+    "customer_count" -> countDistinct(col(userCol)))
+
+  /** sales_mart's (day-constant) product count, cross-joined onto its
+    * day rows — the scalar-subquery shape of the reference.
+    */
+  def withProductCount(days: DataFrame, products: DataFrame): DataFrame =
+    days.crossJoin(broadcast(products.agg(count(lit(1)).as("product_count"))))
 
   /** sales_mart's declared-but-never-populated `top_products
     * VARCHAR(500)` (db_setup.py:271), realized as a per-day top-k over
@@ -175,9 +193,6 @@ object Gold {
           e => e.getField("product_id").cast("string"))).as("top_products"))
   }
 
-  /** operations_mart daily rows (publish_gold.py:75-84):
-    * COALESCE(AVG(discount_percentage), 0) per day.
-    */
   /** RFM (recency / frequency / monetary) customer segmentation — the
     * classic CRM analytic the reference's marts stop short of. Each
     * customer gets 1-5 quintile scores per dimension and a coarse
@@ -238,9 +253,10 @@ object Gold {
           .otherwise("regular").as("segment"))
   }
 
-  def operationsMart(carts: DataFrame, tsCol: String,
-                     discountCol: String): DataFrame =
-    carts.groupBy(to_date(col(tsCol)).as("event_date"))
-      .agg(coalesce(davg(col(discountCol)), lit(0.0)).as("avg_discount_percentage"),
-        count(lit(1)).as("carts_processed"))
+  /** operations_mart's per-day aggregates (publish_gold.py:75-84):
+    * COALESCE(AVG(discount_percentage), 0) and the carts counted.
+    */
+  def operationsAggs(discountCol: String): Aggs = Seq(
+    "avg_discount_percentage" -> coalesce(davg(col(discountCol)), lit(0.0)),
+    "carts_processed" -> count(lit(1)))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Data-quality predicates (reference §2.3 V1-V12: inline validators in
@@ -9,11 +9,12 @@ import org.apache.spark.sql.functions._
   * and the SQL suite database/layers/quality/quality_checks.py:21-78).
   *
   * Spark-first design difference: the reference issues one SQL query per
-  * check per table. Here every per-row predicate for a table is folded
-  * into ONE aggregation pass (`sum(when(...))` columns) — a single scan
-  * regardless of how many checks run, which is the difference between 1×
-  * and N× table reads at 100 TB. Structural checks (schema, emptiness)
-  * never touch data.
+  * check per table. Here the per-row predicates for a table fold into
+  * ONE aggregation pass (`sum(when(...))` columns, [[violations]]) and
+  * the PK suite into one grouped pass per table ([[suite]]) — a single
+  * scan regardless of how many checks run, which is the difference
+  * between 1× and N× table reads at 100 TB. Schema checks never touch
+  * data.
   */
 object Quality {
 
@@ -42,17 +43,6 @@ object Quality {
   def formatCheck(c: String, regex: String): Column =
     violations(col(c).isNotNull && !col(c).rlike(regex), s"format_$c")
 
-  /** Run a set of per-row checks in one scan; returns one CheckResult per
-    * check. The single collected row is O(#checks), never O(data).
-    */
-  def runRowChecks(df: DataFrame, table: String, checks: Seq[Column]): Seq[CheckResult] = {
-    val row: Row = df.agg(checks.head, checks.tail: _*).collect()(0)
-    row.schema.fields.zipWithIndex.map { case (f, i) =>
-      val v = if (row.isNullAt(i)) 0L else row.getLong(i)
-      CheckResult(table, f.name, v, v == 0L)
-    }.toSeq
-  }
-
   /** V3/V10: duplicate-key groups (GROUP BY/HAVING count>1). Returns
     * (key..., dup_count) — one shuffle on the key with partial aggregation.
     */
@@ -60,12 +50,6 @@ object Quality {
     df.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("dup_count"))
       .filter(col("dup_count") > 1)
-
-  /** V3 as a pass/fail check (PK uniqueness). */
-  def uniqueCheck(df: DataFrame, table: String, keys: Seq[String]): CheckResult = {
-    val dups = duplicateKeys(df, keys).count()
-    CheckResult(table, s"unique_${keys.mkString("_")}", dups, dups == 0L)
-  }
 
   /** V4: numeric dtype of a column — static schema check, stronger than
     * the reference's runtime pandas dtype probe
@@ -84,23 +68,49 @@ object Quality {
     CheckResult(table, "required_columns", missing.size.toLong, missing.isEmpty)
   }
 
-  /** V1: non-empty input. `limit(1)` scan, not a full count. */
-  def nonEmpty(df: DataFrame, table: String): CheckResult = {
-    val empty = df.isEmpty
-    CheckResult(table, "non_empty", if (empty) 1L else 0L, !empty)
-  }
-
   /** V11: table-driven check suite (reference quality_checks.py:52-78 —
-    * a PK map per table driving null + duplicate checks). One
-    * aggregation scan per table for the row checks plus one shuffle for
-    * uniqueness — not one query per check like the reference.
+    * a PK map per table driving null + duplicate checks). Per table, in
+    * this order:
+    *   - `non_empty` (V1): 1 for a table with no rows;
+    *   - `required_columns` (V2): the PKs missing from the schema;
+    *   - `null_<pk>` (V9) for each PK: rows whose key is NULL;
+    *   - `unique_<pk>` (V3) for each PK: key values, NULL included,
+    *     that more than one row holds ([[duplicateKeys]]' groups).
+    *
+    * One pass per table, not one query per check like the reference:
+    * a grouping-sets aggregate counts the rows of every value of every
+    * PK in one shuffle, and one global aggregate over those groups
+    * yields all the counts.
     */
   def suite(tables: Map[String, (DataFrame, Seq[String])]): Seq[CheckResult] =
     tables.toSeq.flatMap { case (name, (df, pks)) =>
-      val structural = Seq(nonEmpty(df, name), requiredColumns(df, name, pks))
-      val rowChecks =
-        if (pks.isEmpty) Nil else runRowChecks(df, name, pks.map(nullCheck))
-      structural ++ rowChecks ++ pks.map(pk => uniqueCheck(df, name, Seq(pk)))
+      val (rows, nulls, dups) = keyStats(df, pks)
+      def result(check: String, v: Long) = CheckResult(name, check, v, v == 0L)
+      Seq(result("non_empty", if (rows == 0L) 1L else 0L),
+        requiredColumns(df, name, pks)) ++
+        pks.zip(nulls).map { case (pk, v) => result(s"null_$pk", v) } ++
+        pks.zip(dups).map { case (pk, v) => result(s"unique_$pk", v) }
+    }
+
+  /** (rows, NULL-key rows per PK, duplicated key values per PK) of `df`
+    * from one grouped pass. The groups of PK `i` carry the grouping id
+    * of the set {pks(i)}: a 1 bit for each other PK, the first PK in the
+    * highest bit. Every row lands in one group of each PK, so the rows
+    * are the group sizes summed over any one PK.
+    */
+  private def keyStats(df: DataFrame, pks: Seq[String]): (Long, Seq[Long], Seq[Long]) =
+    if (pks.isEmpty) (df.count(), Nil, Nil)
+    else {
+      val ids = pks.indices.map(i => (1L << pks.size) - 1 - (1L << (pks.size - 1 - i)))
+      val (g, n) = (col("__g"), col("__n"))
+      val stats = sum(when(g === ids.head, n)) +:
+        (pks.zip(ids).map { case (pk, id) => sum(when(g === id && col(pk).isNull, n)) } ++
+          ids.map(id => count(when(g === id && n > 1, 1))))
+      val row = df.groupingSets(pks.map(pk => Seq(col(pk))), pks.map(col): _*)
+        .agg(grouping_id().as("__g"), count(lit(1)).as("__n"))
+        .agg(stats.head, stats.tail: _*).head()
+      val v = stats.indices.map(i => if (row.isNullAt(i)) 0L else row.getLong(i))
+      (v.head, v.slice(1, 1 + pks.size), v.drop(1 + pks.size))
     }
 
   /** Quality gate: throw if any check failed (reference Airflow gate,

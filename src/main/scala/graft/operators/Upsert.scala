@@ -18,6 +18,15 @@ import org.apache.spark.sql.functions._
   * `current` side never shuffles. Union is free (no exchange). The write
   * back is an atomic directory overwrite (or dynamic partition overwrite
   * when the table is date-partitioned — see maintenance.Retention).
+  *
+  * A merge references `updates` twice, in the anti-join and in the
+  * union. Exchange reuse shares its shuffles between the two, but the
+  * operators above the last shuffle run once per reference, and a
+  * join's broadcast decision reads `updates`' size estimate. A caller
+  * whose `updates` is an expensive plan computes it once first:
+  * `pipeline.Runner` checkpoints silver's deduped history and collects
+  * the gold marts' day rows into a local relation, whose exact size
+  * plans the broadcast from the start.
   */
 object Upsert {
 
@@ -57,7 +66,9 @@ object Upsert {
     * Scale: the carried-stamp lookup joins `daily` against a two-column
     * projection of the mart (key, created_at) — day-grain marts are tiny
     * and AQE broadcasts the projection; the anti-join half is the same
-    * single shuffle as [[merge]].
+    * single shuffle as [[merge]]. It anti-joins on `daily`, which has
+    * the stamped rows' keys, so the lookup join runs once, for the
+    * union, and not again inside the anti-join.
     */
   def upsertStamped(mart: DataFrame, daily: DataFrame, now: Column,
                     keys: Seq[String]): DataFrame = {
@@ -67,7 +78,7 @@ object Upsert {
       .withColumn("created_at", coalesce(col("_prev_created_at"), now))
       .withColumn("updated_at", now)
       .drop("_prev_created_at")
-    merge(mart, stamped, keys)
+    mart.join(daily, keys, "left_anti").unionByName(stamped, allowMissingColumns = false)
   }
 
   /** SCD Type-2 dimension build from a change history: collapse

@@ -1,14 +1,17 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 import graft.bronze.Bronze
 import graft.silver.Silver
 import graft.gold.Gold
 import graft.operators.{Quality, Upsert}
 import graft.audit.Audit
+import graft.Tables
 
 /** Full-pipeline orchestration (reference scripts/run_pipeline.py:332-405
   * `run_full_pipeline`: ingestion → silver → quality gate → gold →
@@ -19,6 +22,19 @@ import graft.audit.Audit
   * parquet layers. The quality gate between silver and gold throws —
   * matching the DAG's hard failure (dag :163-179). "now" is injected
   * for determinism (SURVEY §7.4).
+  *
+  * A daily batch is small, so its cost is the number of Spark jobs and
+  * generated-code classes its plans need, not its rows. Each stage
+  * therefore builds as few plans as it can:
+  *   - every table write counts its rows with an `Observation` while it
+  *     writes, instead of re-reading the table to count it;
+  *   - silver and gold tables are read through [[graft.Tables.read]]
+  *     with the schema their writer recorded, so no read infers one;
+  *   - the quality suite makes one aggregate pass per table;
+  *   - an upsert input that its plans reference more than once is
+  *     computed once: silver's deduped history into a local checkpoint,
+  *     released before the stage returns, and the day aggregate the
+  *     three marts slice into a local relation.
   */
 object Runner {
 
@@ -35,14 +51,36 @@ object Runner {
     * rename-aside discipline (never delete-then-rename) means a crash
     * mid-swap leaves either the live table or a recoverable `.old`
     * copy — there is no window in which the only copy is deleted.
+    *
+    * Returns the rows written, counted by an `Observation` during the
+    * write, and records the written schema in [[graft.Tables]]'
+    * catalog under the swapped-in files.
     */
-  private[graft] def overwriteSwapped(df: DataFrame, path: String): Unit = {
+  private[graft] def overwriteSwapped(df: DataFrame, path: String): Long = {
     val tmp = path + ".tmp"
-    df.write.mode("overwrite").parquet(tmp)
+    val obs = org.apache.spark.sql.Observation()
+    df.observe(obs, count(lit(1)).as("n")).write.mode("overwrite").parquet(tmp)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(tmp), df.sparkSession.sparkContext.hadoopConfiguration)
     graft.maintenance.Retention.swapAside(fs,
       new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(path))
+    Tables.seed(df.sparkSession, path, df.schema)
+    obs.get("n").asInstanceOf[Long]
+  }
+
+  /** `body` over `df` computed once into a local checkpoint, whose
+    * blocks are released whatever `body` throws. A checkpoint rather
+    * than `persist`: it keeps the plan's own coalesced partitions, so a
+    * table written from it keeps its file layout, and a plan that reads
+    * it twice starts no second cache-materialising job.
+    */
+  private def materialized[T](df: DataFrame)(body: DataFrame => T): T = {
+    val done = df.localCheckpoint()
+    try body(done)
+    finally done.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = true)
+      case _ =>
+    }
   }
 
   private def exists(spark: SparkSession, path: String): Boolean = {
@@ -72,6 +110,9 @@ object Runner {
 
   /** Stage 2 — silver: transform each bronze entity and upsert by its
     * PK (reference run_pipeline.py:200-267 + transform_silver.py).
+    * The transform dedups all of the bronze history, and the upsert
+    * references it twice (anti-join and union), so it is materialised
+    * once for the write.
     */
   def stageSilver(spark: SparkSession, layout: Layout): Map[String, Long] = {
     val transforms: Map[String, (DataFrame => DataFrame, String)] = Map(
@@ -83,14 +124,14 @@ object Runner {
       val bronzePath = s"${layout.bronze}/${table}_raw"
       if (!exists(spark, bronzePath)) None
       else {
-        val fresh = fn(Bronze.readLayer(spark, bronzePath))
         val silverPath = s"${layout.silver}/$table"
-        val merged =
-          if (exists(spark, silverPath))
-            Upsert.merge(spark.read.parquet(silverPath), fresh, Seq(pk))
-          else fresh
-        overwriteSwapped(merged, silverPath)
-        Some(table -> spark.read.parquet(silverPath).count())
+        materialized(fn(Bronze.readLayer(spark, bronzePath))) { fresh =>
+          val merged =
+            if (exists(spark, silverPath))
+              Upsert.merge(Tables.read(spark, silverPath), fresh, Seq(pk))
+            else fresh
+          Some(table -> overwriteSwapped(merged, silverPath))
+        }
       }
     }
   }
@@ -103,7 +144,7 @@ object Runner {
       "users" -> Seq("email"), "orders" -> Seq("order_id"))
     val present = pkMap.flatMap { case (table, pks) =>
       val p = s"${layout.silver}/$table"
-      if (exists(spark, p)) Some(table -> ((spark.read.parquet(p), pks))) else None
+      if (exists(spark, p)) Some(table -> ((Tables.read(spark, p), pks))) else None
     }
     val results = Quality.suite(present)
     Quality.gate(results)
@@ -114,32 +155,45 @@ object Runner {
     * (publish_gold.py:25-84), each upserted by date with the reference's
     * bookkeeping stamps (db_setup.py:258-262): `created_at` survives
     * re-publish, `updated_at` refreshes on every conflict update.
+    * The three marts group carts by the same day, so one aggregate
+    * computes the aggregates of all three ([[Gold]]'s definitions),
+    * with sales_mart's product count joined on, and each mart selects
+    * its columns from it. The aggregate has one row per calendar day,
+    * so it is collected once and read back as a local relation: its
+    * exact size lets every upsert plan its joins as broadcasts from
+    * the start, where a checkpoint's size estimate planned sort-merge
+    * joins that adaptive execution only converted after shuffling.
     */
   def stageGold(spark: SparkSession, layout: Layout,
                 now: Timestamp): Map[String, Long] = {
     val cartsPath = s"${layout.silver}/carts"
+    val productsPath = s"${layout.silver}/products"
     if (!exists(spark, cartsPath)) Map.empty
     else {
-      val carts = spark.read.parquet(cartsPath)
-      val marts = Map(
-        "finance_mart" ->
-          Gold.dailyRevenue(carts, "last_updated", "user_id", "total_value"),
-        "operations_mart" ->
-          Gold.operationsMart(carts, "last_updated", "discount_percentage")) ++
-        (if (exists(spark, s"${layout.silver}/products"))
-          Map("sales_mart" -> Gold.salesMart(carts,
-            spark.read.parquet(s"${layout.silver}/products"),
-            "last_updated", "user_id"))
-        else Map.empty)
+      val finance = Gold.revenueAggs("user_id", "total_value")
+      val operations = Gold.operationsAggs("discount_percentage")
+      val sales = Gold.salesAggs("user_id")
+      val products =
+        if (exists(spark, productsPath)) Some(Tables.read(spark, productsPath)) else None
+      val days = Gold.daily(Tables.read(spark, cartsPath), "last_updated",
+        finance ++ operations ++ (if (products.isDefined) sales else Nil))
+      val perDay = products.fold(days)(Gold.withProductCount(days, _))
+      // one partition, like the coalesced aggregate it stands for, so a
+      // mart's new day rows still land in one file
+      val local = spark.createDataFrame(perDay.collect().toSeq.asJava, perDay.schema)
+        .coalesce(1)
+      def mart(names: Seq[String]) = local.select(("event_date" +: names).map(col): _*)
+      val marts = Map("finance_mart" -> mart(finance.map(_._1)),
+        "operations_mart" -> mart(operations.map(_._1))) ++
+        products.map(_ => "sales_mart" -> mart(sales.map(_._1) :+ "product_count"))
       marts.map { case (name, daily) =>
         val martPath = s"${layout.gold}/$name"
         val merged =
           if (exists(spark, martPath))
-            Upsert.upsertStamped(spark.read.parquet(martPath), daily, lit(now),
+            Upsert.upsertStamped(Tables.read(spark, martPath), daily, lit(now),
               Seq("event_date"))
           else Upsert.stampNew(daily, lit(now))
-        overwriteSwapped(merged, martPath)
-        name -> spark.read.parquet(martPath).count()
+        name -> overwriteSwapped(merged, martPath)
       }
     }
   }

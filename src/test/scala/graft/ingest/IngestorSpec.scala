@@ -20,7 +20,7 @@ class IngestorSpec extends AnyFunSuite {
     override def validate(df: DataFrame): Seq[Quality.CheckResult] =
       if (failValidation)
         Seq(Quality.CheckResult("fake", "forced", 1, passed = false))
-      else Seq(Quality.nonEmpty(df, "fake"))
+      else Seq(Quality.requiredColumns(df, "fake", Seq("id", "v")))
     override def sanitize(df: DataFrame): DataFrame = {
       sanitized = true
       df.filter($"v" =!= "drop-me")

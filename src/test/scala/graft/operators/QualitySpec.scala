@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -16,26 +17,17 @@ class QualitySpec extends AnyFunSuite {
   ).toDF("id", "email", "gender", "age")
 
   test("one-pass row checks count violations per predicate") {
-    val res = Quality.runRowChecks(users, "users", Seq(
+    val row = users.agg(
       Quality.nullCheck("id"),
       Quality.nullCheck("email"),
       Quality.negativeCheck("age"),
       Quality.rangeCheck("age", 150),
       Quality.domainCheck("gender", Seq("male", "female")),
       Quality.formatCheck("email",
-        "^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}$")))
-    val byName = res.map(r => r.check -> r.violations).toMap
-    assert(byName("null_id") == 1)
-    assert(byName("null_email") == 1)
-    assert(byName("negative_age") == 1)
-    assert(byName("range_age") == 1)
-    assert(byName("domain_gender") == 1)
-    assert(byName("format_email") == 1)
-  }
-
-  test("uniqueCheck flags duplicate PKs") {
-    val r = Quality.uniqueCheck(users, "users", Seq("id"))
-    assert(!r.passed && r.violations == 1)
+        "^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}$")).head()
+    val byName = row.schema.fieldNames.map(c => c -> row.getAs[Long](c)).toMap
+    assert(byName == Map("null_id" -> 1, "null_email" -> 1, "negative_age" -> 1,
+      "range_age" -> 1, "domain_gender" -> 1, "format_email" -> 1))
   }
 
   test("requiredColumns is a pure schema check") {
@@ -53,6 +45,60 @@ class QualitySpec extends AnyFunSuite {
     assert(bad.contains("null_id") && bad.contains("unique_id"))
   }
 
+  /** The suite as one query per check: `isEmpty`, the schema check, one
+    * null-count aggregate and a duplicate-group count per PK. */
+  private def perCheck(name: String, df: DataFrame, pks: Seq[String]): Seq[Quality.CheckResult] = {
+    def result(check: String, v: Long) = Quality.CheckResult(name, check, v, v == 0L)
+    val nulls =
+      if (pks.isEmpty) Nil
+      else {
+        val row = df.agg(Quality.nullCheck(pks.head), pks.tail.map(Quality.nullCheck): _*).head()
+        pks.indices.map(i => result(s"null_${pks(i)}", row.getLong(i)))
+      }
+    Seq(result("non_empty", if (df.isEmpty) 1L else 0L),
+      Quality.requiredColumns(df, name, pks)) ++ nulls ++
+      pks.map(pk => result(s"unique_$pk", Quality.duplicateKeys(df, Seq(pk)).count()))
+  }
+
+  test("suite returns the per-check results: names, order and violation counts") {
+    val cases: Seq[(String, DataFrame, Seq[String])] = Seq(
+      ("clean", Seq((1L, "x"), (2L, "y")).toDF("pk", "v"), Seq("pk")),
+      ("null_keys", Seq((Some(1L), "x"), (None, "y")).toDF("pk", "v"), Seq("pk")),
+      ("dup_keys", Seq((1L, "x"), (1L, "y"), (2L, "z"), (2L, "w"), (3L, "u"))
+        .toDF("pk", "v"), Seq("pk")),
+      ("dup_null_keys", Seq((None: Option[Long], "x"), (None, "y"), (Some(1L), "z"))
+        .toDF("pk", "v"), Seq("pk")),
+      ("empty", Seq.empty[(Long, String)].toDF("pk", "v"), Seq("pk")),
+      ("two_pks", Seq((Some(1L), Some("a")), (Some(1L), None), (None, Some("a")),
+        (Some(2L), None), (Some(3L), Some("b"))).toDF("id", "email"), Seq("id", "email")),
+      ("no_pk", Seq((1L, "x")).toDF("pk", "v"), Nil),
+      ("users", users, Seq("id", "email")))
+    for ((name, df, pks) <- cases) {
+      val got = Quality.suite(Map(name -> ((df, pks))))
+      assert(got == perCheck(name, df, pks), name)
+    }
+    val dups = Quality.suite(Map("t" -> ((cases(2)._2, Seq("pk")))))
+    assert(dups.map(r => r.check -> r.violations) ==
+      Seq("non_empty" -> 0, "required_columns" -> 0, "null_pk" -> 0, "unique_pk" -> 2))
+    val twoPks = Quality.suite(Map("t" -> ((cases(5)._2, Seq("id", "email")))))
+    assert(twoPks.map(r => r.check -> r.violations) ==
+      Seq("non_empty" -> 0, "required_columns" -> 0, "null_id" -> 1, "null_email" -> 2,
+        "unique_id" -> 1, "unique_email" -> 2))
+  }
+
+  test("suite counts a NULL key held by two rows as one duplicated key") {
+    val r = Quality.suite(Map("t" -> ((Seq((None: Option[Long], "x"), (None, "y"))
+      .toDF("pk", "v"), Seq("pk")))))
+    assert(r.map(r => r.check -> r.violations) ==
+      Seq("non_empty" -> 0, "required_columns" -> 0, "null_pk" -> 2, "unique_pk" -> 1))
+  }
+
+  test("suite flags an empty table and nothing else on it") {
+    val r = Quality.suite(Map("users" -> ((users.limit(0), Seq("id")))))
+    assert(r.filterNot(_.passed).map(_.check) == Seq("non_empty"))
+    assert(Quality.suite(Map("users" -> ((users, Nil)))).forall(_.passed))
+  }
+
   test("gate throws iff a check failed") {
     Quality.gate(Seq(Quality.CheckResult("t", "ok", 0, passed = true)))
     val ex = intercept[IllegalStateException] {
@@ -66,11 +112,6 @@ class QualitySpec extends AnyFunSuite {
     val byName = res.map(r => r.check -> r.passed).toMap
     assert(byName("numeric_id") && byName("numeric_age"))
     assert(!byName("numeric_email") && !byName("numeric_nope"))
-  }
-
-  test("nonEmpty") {
-    assert(Quality.nonEmpty(users, "users").passed)
-    assert(!Quality.nonEmpty(users.limit(0), "users").passed)
   }
 
   test("psiDrift: ~0 for identical distributions, large for a shift, floor for empty bins") {

@@ -1,9 +1,16 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
-import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
-import graft.TestSpark
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.Cached
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{DateType, TimestampType}
+import org.scalatest.funsuite.AnyFunSuite
+import graft.{Tables, TestSpark}
 import graft.audit.Audit
 
 class RunnerSpec extends AnyFunSuite {
@@ -26,6 +33,30 @@ class RunnerSpec extends AnyFunSuite {
       .toDF("id", "email", "firstname", "lastname"),
     "orders" -> Seq((1000, 100, 200.0, Some(180.0)))
       .toDF("id", "userId", "total_amount", "final_amount"))
+
+  /** Jobs that `body` starts, counted after the listener bus drains. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    BusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; BusDrain(spark.sparkContext); jobs.get }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Runs `body` and asserts that it leaves no persisted or
+    * checkpointed RDD block and no cached plan behind. */
+  private def leavesNoCache[T](body: => T): T = {
+    val blocks = Cached.rddBlocks(spark)
+    val plans = Cached.plans(spark)
+    try body
+    finally {
+      assert((Cached.rddBlocks(spark) -- blocks).isEmpty)
+      assert(Cached.plans(spark) == plans)
+    }
+  }
 
   test("runFull: bronze -> silver -> quality -> gold -> audit, idempotent upserts") {
     val lay = layout()
@@ -68,6 +99,50 @@ class RunnerSpec extends AnyFunSuite {
 
     val audit = Audit.read(spark, lay.audit).collect()
     assert(audit.length == 3 && audit.forall(_.status == "success"))
+  }
+
+  test("a second-day runFull starts at most 60 jobs and leaves nothing cached") {
+    val lay = layout()
+    leavesNoCache(Runner.runFull(spark, staged("v1"), lay, "test_api", "run1",
+      ts("2024-01-01 12:00:00")))
+    val jobs = jobsOf(leavesNoCache(Runner.runFull(spark, staged("v2"), lay,
+      "test_api", "run2", ts("2024-01-02 12:00:00"))))
+    assert(jobs <= 60, s"$jobs jobs")
+  }
+
+  test("lake tables are read with the schema their writer recorded") {
+    val lay = layout()
+    val readConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.parquet.inferTimestampNTZ.enabled")
+    Runner.runFull(spark, staged("v1"), lay, "test_api", "run1", ts("2024-01-01 12:00:00"))
+    Runner.runFull(spark, staged("v2"), lay, "test_api", "run2", ts("2024-01-02 12:00:00"))
+    val paths = Seq("products", "carts", "users", "orders").map(t => s"${lay.silver}/$t") ++
+      Seq("finance_mart", "sales_mart", "operations_mart").map(m => s"${lay.gold}/$m")
+    for (path <- paths) {
+      assert(jobsOf(Tables.read(spark, path)) == 0, path)
+      assert(Tables.read(spark, path).schema == spark.read.parquet(path).schema, path)
+    }
+    assert(Tables.read(spark, s"${lay.silver}/carts").schema("last_updated").dataType
+      == TimestampType)
+    val fin = Tables.read(spark, s"${lay.gold}/finance_mart").schema
+    assert(fin("event_date").dataType == DateType)
+    assert(fin("created_at").dataType == TimestampType)
+    readConfs.foreach(k => assert(!spark.conf.getAll.contains(k), k))
+
+    // a silver table overwritten behind the catalog's back is re-inferred
+    val products = s"${lay.silver}/products"
+    spark.read.parquet(products).withColumn("extra", lit(1))
+      .write.mode("overwrite").parquet(products + ".new")
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(products), spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(products), true)
+    fs.rename(new org.apache.hadoop.fs.Path(products + ".new"),
+      new org.apache.hadoop.fs.Path(products))
+    val reread = Tables.read(spark, products)
+    assert(reread.columns.last == "extra")
+    assert(reread.schema == spark.read.parquet(products).schema)
+    assert(reread.count() == 2)
+    readConfs.foreach(k => assert(!spark.conf.getAll.contains(k), k))
   }
 
   test("backfillBronze re-ingests day batches idempotently via partition overwrite") {
@@ -138,8 +213,8 @@ class RunnerSpec extends AnyFunSuite {
       (Some(100), None: Option[String], "Ada", "L"))
       .toDF("id", "email", "firstname", "lastname"))
     val ex = intercept[IllegalStateException] {
-      Runner.runFull(spark, withNull, lay, "test_api", "runX",
-        ts("2024-01-01 12:00:00"))
+      leavesNoCache(Runner.runFull(spark, withNull, lay, "test_api", "runX",
+        ts("2024-01-01 12:00:00")))
     }
     assert(ex.getMessage.contains("quality gate failed"))
     assert(!new java.io.File(s"${lay.gold}/finance_mart").exists())
