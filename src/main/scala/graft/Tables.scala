@@ -40,10 +40,11 @@ object Tables {
     *     the SCAN types it as TIMESTAMP directly (keeps predicate
     *     pushdown on the column; a post-hoc cast would not).
     *
-    * Both confs apply to schema inference only: they are set around it
-    * and restored after, so no later query in the session runs under
-    * them. Once the schema is given, the scan reads both layouts with
-    * the resolved types whatever the session's confs.
+    * Both confs apply to schema inference only: it runs on a sibling
+    * session that carries them, so no query of the caller's session,
+    * later or on another thread, runs under them. Once the schema is
+    * given, the scan reads both layouts with the resolved types whatever
+    * the session's confs.
     *
     * Inference is a Spark job, so its result is kept per session and
     * path, beside a fingerprint of the table's files: path, length and
@@ -115,14 +116,16 @@ object Tables {
     } catch { case _: FileNotFoundException => None }
   }
 
-  /** One inference job under the two read confs, which are restored
-    * (or unset) after it whatever it throws. */
+  /** One inference job under the two read confs. It runs on a sibling
+    * session that carries `s`'s settable confs plus the two, so `s`'s
+    * own conf is never written: concurrent reads, and queries planned
+    * on other threads meanwhile, never see the two confs. */
   private def infer(s: SparkSession, path: String): StructType = {
-    val saved = Seq(NanosAsLong, InferNtz).map(k => k -> s.conf.getAll.get(k))
-    s.conf.set(NanosAsLong, "true")
-    s.conf.set(InferNtz, "false")
-    try s.read.parquet(path).schema
-    finally saved.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    val inferring = s.newSession()
+    s.conf.getAll.foreach { case (k, v) => if (s.conf.isModifiable(k)) inferring.conf.set(k, v) }
+    inferring.conf.set(NanosAsLong, "true")
+    inferring.conf.set(InferNtz, "false")
+    inferring.read.parquet(path).schema
   }
 }
 

@@ -33,16 +33,14 @@ object Retention {
 
   /** Idempotent ranged rewrite: overwrite only the partitions present in
     * `replacement` (Spark dynamic partition overwrite — the engine-level
-    * equivalent of the reference's DELETE-then-reinsert batches).
+    * equivalent of the reference's DELETE-then-reinsert batches). The
+    * mode is a write option, not a session conf, so concurrent writers
+    * of one session do not see each other's mode and none is left set.
     */
   def overwritePartitions(replacement: DataFrame, path: String,
-                          partitionCol: String): Unit = {
-    val spark = replacement.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try replacement.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
-    finally prev.foreach(spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-  }
+                          partitionCol: String): Unit =
+    replacement.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol).parquet(path)
 
   /** Rename-aside directory swap: move the freshly-written `tmp` dir
     * into place at `live`, parking the previous live data at

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
+import java.util.concurrent.{Callable, Executors}
 import scala.jdk.CollectionConverters._
 
 import graft.bronze.Bronze
@@ -35,6 +36,21 @@ import graft.Tables
   *     computed once: silver's deduped history into a local checkpoint,
   *     released before the stage returns, and the day aggregate the
   *     three marts slice into a local relation.
+  *
+  * What is left of such a batch is each plan's fixed driver-side cost:
+  * planning, code generation and job dispatch. So each stage submits its
+  * independent per-table work concurrently, one thread per table:
+  * bronze's appends, silver's transform → checkpoint → upsert → swap
+  * bodies, one `Quality.suite` per silver table (the gate then runs once
+  * over all of them), gold's mart upserts after the one day-aggregate
+  * collect, and each backfill batch's partition overwrites. The plans,
+  * paths and outputs are those of a serial run; only the order in which
+  * the driver submits the jobs differs. Results keep the input order. A
+  * stage waits for every table before it rethrows the first failure in
+  * input order, so no table is still being written when `runFull`
+  * audits the failure. The thread count is the number of tables a stage
+  * has (at most four), so there is no size setting, and the threads go
+  * with the call, keeping nothing alive between batches.
   */
 object Runner {
 
@@ -83,6 +99,26 @@ object Runner {
     }
   }
 
+  /** `body` over every item at once, each on its own thread from a pool
+    * made for this call and shut down before it returns. Results come
+    * back in input order. Every body runs to its end before the first
+    * failure, in input order, is rethrown, so no sibling is still
+    * writing into the lake when the caller handles it. The threads are
+    * the items, never more than a stage's four tables.
+    */
+  private def concurrently[A, B](items: Seq[A])(body: A => B): Seq[B] =
+    if (items.size <= 1) items.map(body)
+    else {
+      val pool = Executors.newFixedThreadPool(items.size)
+      try {
+        val runs = items.map(a => pool.submit(new Callable[Either[Throwable, B]] {
+          def call(): Either[Throwable, B] =
+            try Right(body(a)) catch { case e: Throwable => Left(e) }
+        }))
+        runs.map(_.get()).map(_.fold(e => throw e, identity))
+      } finally pool.shutdown()
+    }
+
   private def exists(spark: SparkSession, path: String): Boolean = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
@@ -94,7 +130,7 @@ object Runner {
     */
   def stageBronze(spark: SparkSession, staged: Map[String, DataFrame],
                   layout: Layout, source: String, now: Timestamp): Map[String, Long] =
-    staged.map { case (table, df) =>
+    concurrently(staged.toSeq) { case (table, df) =>
       val stamped = Bronze.withIngestMeta(df, source, table, s"${table}_raw", lit(now))
         // date-partitioned raw layer: retention/backfill become partition
         // drops, and day-grain reads prune at the scan
@@ -106,7 +142,7 @@ object Runner {
         s"${layout.bronze}/${table}_raw", "append",
         partitionCols = Seq("_ingestion_date"))
       table -> obs.get("n").asInstanceOf[Long]
-    }
+    }.toMap
 
   /** Stage 2 — silver: transform each bronze entity and upsert by its
     * PK (reference run_pipeline.py:200-267 + transform_silver.py).
@@ -120,7 +156,7 @@ object Runner {
       "carts" -> (Silver.carts _, "cart_id"),
       "users" -> (Silver.users _, "email"),
       "orders" -> (Silver.orders _, "order_id"))
-    transforms.flatMap { case (table, (fn, pk)) =>
+    concurrently(transforms.toSeq) { case (table, (fn, pk)) =>
       val bronzePath = s"${layout.bronze}/${table}_raw"
       if (!exists(spark, bronzePath)) None
       else {
@@ -133,7 +169,7 @@ object Runner {
           Some(table -> overwriteSwapped(merged, silverPath))
         }
       }
-    }
+    }.flatten.toMap
   }
 
   /** Stage 3 — quality gate over silver PKs (reference
@@ -146,7 +182,7 @@ object Runner {
       val p = s"${layout.silver}/$table"
       if (exists(spark, p)) Some(table -> ((Tables.read(spark, p), pks))) else None
     }
-    val results = Quality.suite(present)
+    val results = concurrently(present.toSeq)(t => Quality.suite(Map(t))).flatten
     Quality.gate(results)
     results
   }
@@ -186,7 +222,7 @@ object Runner {
       val marts = Map("finance_mart" -> mart(finance.map(_._1)),
         "operations_mart" -> mart(operations.map(_._1))) ++
         products.map(_ => "sales_mart" -> mart(sales.map(_._1) :+ "product_count"))
-      marts.map { case (name, daily) =>
+      concurrently(marts.toSeq) { case (name, daily) =>
         val martPath = s"${layout.gold}/$name"
         val merged =
           if (exists(spark, martPath))
@@ -194,7 +230,7 @@ object Runner {
               Seq("event_date"))
           else Upsert.stampNew(daily, lit(now))
         name -> overwriteSwapped(merged, martPath)
-      }
+      }.toMap
     }
   }
 
@@ -227,13 +263,13 @@ object Runner {
         }
         .groupBy(_._1)
         .map { case (table, frames) => table -> frames.map(_._2).reduce(_ unionByName _) }
-      perTable.foreach { case (table, df) =>
+      concurrently(perTable.toSeq) { case (table, df) =>
         val obs = org.apache.spark.sql.Observation(s"backfill_${table}_$bi")
         graft.maintenance.Retention.overwritePartitions(
           df.observe(obs, count(lit(1)).as("n")),
           s"${layout.bronze}/${table}_raw", "_ingestion_date")
-        counts(table) += obs.get("n").asInstanceOf[Long]
-      }
+        table -> obs.get("n").asInstanceOf[Long]
+      }.foreach { case (table, n) => counts(table) += n }
     }
     counts.toMap
   }

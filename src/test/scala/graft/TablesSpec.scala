@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.Callable
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
@@ -12,7 +13,7 @@ import org.apache.spark.graft.BusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{expr, lit}
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Replay.withTempRoot
 
@@ -88,18 +89,26 @@ class TablesSpec extends AnyFunSuite {
     readConfs.foreach(k => assert(!fresh.conf.getAll.contains(k), k))
   }
 
+  private val micros = Seq(0L, 1700000000123456L, 1712345678000001L)
+
+  /** Writes `micros` as an `(id, ts)` parquet file whose `ts` is an
+    * int64 TIMESTAMP of `unit` (NANOS or MICROS) with isAdjustedToUTC
+    * false. */
+  private def writeFixture(path: String, unit: String): Unit = {
+    val schema = MessageTypeParser.parseMessageType(
+      s"message m { required int64 id; required int64 ts (TIMESTAMP($unit,false)); }")
+    val writer = ExampleParquetWriter.builder(new Path(path))
+      .withType(schema).withConf(new Configuration()).build()
+    val groups = new SimpleGroupFactory(schema)
+    val scale = if (unit == "NANOS") 1000L else 1L
+    try micros.zipWithIndex.foreach { case (us, i) =>
+      writer.write(groups.newGroup().append("id", i.toLong).append("ts", us * scale))
+    } finally writer.close()
+  }
+
   test("legacy TIMESTAMP(NANOS) reads as TIMESTAMP with the µs values") {
-    val micros = Seq(0L, 1700000000123456L, 1712345678000001L)
     withTempRoot("graft_tables_") { dir =>
-      val schema = MessageTypeParser.parseMessageType(
-        "message m { required int64 id; required int64 ts (TIMESTAMP(NANOS,false)); }")
-      val writer = ExampleParquetWriter
-        .builder(new Path(s"$dir/legacy.parquet"))
-        .withType(schema).withConf(new Configuration()).build()
-      val groups = new SimpleGroupFactory(schema)
-      try micros.zipWithIndex.foreach { case (us, i) =>
-        writer.write(groups.newGroup().append("id", i.toLong).append("ts", us * 1000))
-      } finally writer.close()
+      writeFixture(s"$dir/legacy.parquet", "NANOS")
       for (vectorized <- Seq("true", "false")) {
         val fresh = spark.newSession()
         fresh.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
@@ -109,6 +118,52 @@ class TablesSpec extends AnyFunSuite {
         val got = df.orderBy("id").select(expr("unix_micros(ts)")).collect().map(_.getLong(0))
         assert(got.toSeq == micros, s"vectorized=$vectorized")
         readConfs.foreach(k => assert(!fresh.conf.getAll.contains(k), k))
+      }
+    }
+  }
+
+  test("concurrent first reads resolve their types and leave the session conf alone") {
+    withTempRoot("graft_tables_") { dir =>
+      // four NANOS and four NTZ tables, each read for the first time
+      val fixtures = (0 until 8).map { i =>
+        val unit = if (i % 2 == 0) "NANOS" else "MICROS"
+        val path = s"$dir/t$i.parquet"
+        writeFixture(path, unit)
+        (path, unit)
+      }
+      val fresh = spark.newSession()
+      val before = fresh.conf.getAll
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val seen = new java.util.concurrent.atomic.AtomicBoolean(false)
+      // a query planned on another thread meanwhile sees the session's
+      // own conf, never the inference confs
+      val watcher = new Thread(() => {
+        start.await()
+        while (!done.get())
+          if (readConfs.exists(fresh.conf.getAll.contains)) seen.set(true)
+          else Thread.onSpinWait()
+      })
+      watcher.start()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(fixtures.size)
+      val types = try {
+        val reads = fixtures.map { case (path, _) =>
+          pool.submit(new Callable[DataType] {
+            def call(): DataType = { start.await(); Tables.read(fresh, path).schema("ts").dataType }
+          })
+        }
+        start.countDown()
+        reads.map(_.get())
+      } finally { pool.shutdown(); done.set(true); watcher.join() }
+      fixtures.map(_._2).zip(types).foreach { case (unit, t) =>
+        assert(t == (if (unit == "NANOS") LongType else TimestampType), unit)
+      }
+      assert(!seen.get())
+      assert(fresh.conf.getAll == before)
+      fixtures.foreach { case (path, _) =>
+        val got = Tables.t(fresh, dir, path.stripPrefix(s"$dir/").stripSuffix(".parquet"))
+          .orderBy("id").select(expr("unix_micros(ts)")).collect().map(_.getLong(0))
+        assert(got.toSeq == micros, path)
       }
     }
   }

@@ -3,7 +3,13 @@ package graft.silver
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec,
+  ShuffleQueryStageExec}
+import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.operators.{Dedup, Quality}
 
 class SilverSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -64,6 +70,78 @@ class SilverSpec extends AnyFunSuite {
     val out = Silver.orders(bronze).orderBy("order_id").collect()
     assert(out(0).getAs[Double]("final_amount") == 90.0)
     assert(out(1).getAs[Double]("final_amount") == 50.0)
+  }
+
+  /** Reference formulation of silver.products: the keep-latest window
+    * on the raw id, then the projection and a distinct planned with its
+    * own exchange. */
+  private def productsReference(bronze: DataFrame): DataFrame =
+    Dedup.keepLatest(bronze, Seq("id"), "_ingestion_timestamp",
+      Seq(xxhash64(struct(bronze.columns.map(col).toIndexedSeq: _*)).desc))
+      .select(
+        col("id").cast("long").as("product_id"),
+        col("title"),
+        col("price").cast("double").as("price"),
+        col("category"),
+        coalesce(col("price") > 0, lit(false)).as("is_available"),
+        col("_ingestion_timestamp").as("last_updated"))
+      .distinct()
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("raw ids that cast to one key: identical rows merge, differing rows stay") {
+    val t1 = ts("2024-01-01 00:00:00")
+    val bronze = Seq(
+      ("1", "Widget", 9.99, "tools", t1),
+      ("01", "Widget", 9.99, "tools", t1),   // same row as id "1" once cast
+      ("001", "Widget", 5.0, "tools", t1),   // same key, different price
+      ("2", "Gadget", 1.0, "toys", t1),
+      ("2", "Gadget", 2.0, "toys", ts("2024-01-02 00:00:00")),
+      ("02", "Gadget", 2.0, "toys", ts("2024-01-02 00:00:00"))
+    ).toDF("id", "title", "price", "category", "_ingestion_timestamp")
+    val out = Silver.products(bronze)
+    assert(sortedRows(out) == sortedRows(productsReference(bronze)))
+    assert(sortedRows(out) == Seq(
+      "[1,Widget,5.0,tools,true,2024-01-01 00:00:00.0]",
+      "[1,Widget,9.99,tools,true,2024-01-01 00:00:00.0]",
+      "[2,Gadget,2.0,toys,true,2024-01-02 00:00:00.0]"))
+    // the quality gate still sees the duplicated key
+    val checks = Quality.suite(Map("products" -> ((out, Seq("product_id")))))
+    assert(checks.find(_.check == "unique_product_id").map(_.violations) == Some(1L))
+  }
+
+  test("property: products equals the reference formulation on colliding raw ids") {
+    val rows = Gen.nonEmptyListOf(for {
+      id <- Gen.oneOf("1", "01", " 1", "2", "02", "3")
+      title <- Gen.oneOf("a", "b")
+      price <- Gen.oneOf(0.0, 1.0)
+      t <- Gen.choose(1L, 3L)
+    } yield (id, title, price, "c", new Timestamp(t * 1000L)))
+    forAll(rows) { rs =>
+      val bronze = rs.toDF("id", "title", "price", "category", "_ingestion_timestamp")
+        .repartition(3)
+      sortedRows(Silver.products(bronze)) == sortedRows(productsReference(bronze))
+    }
+  }
+
+  test("the silver transforms shuffle once") {
+    def stages(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => stages(a.executedPlan)
+      case s: ShuffleQueryStageExec => 1 + stages(s.plan)
+      case q: QueryStageExec => stages(q.plan)
+      case o => o.children.map(stages).sum
+    }
+    val t1 = ts("2024-01-01 00:00:00")
+    val products = Seq((1, "Widget", 9.99, "tools", t1), (2, "Gadget", 0.0, "toys", t1))
+      .toDF("id", "title", "price", "category", "_ingestion_timestamp")
+    val carts = Seq((1, 10, 200.0, 150.0, t1), (2, 11, 0.0, 0.0, t1))
+      .toDF("id", "userId", "total", "discountedTotal", "_ingestion_timestamp")
+    val longIds = products.withColumn("id", col("id").cast("long"))
+    for (out <- Seq(Silver.products(products), Silver.carts(carts), Silver.products(longIds))) {
+      out.collect()
+      assert(stages(out.queryExecution.executedPlan) == 1, out.queryExecution.executedPlan)
+    }
   }
 
   test("property: discount_percentage in [0,100] for 0 <= discounted <= total") {

@@ -3,7 +3,8 @@
 # the next round (or the judge):
 #
 #   tools/gate.sh                # full: benchmark generator tests +
-#                                # sbt test + sf0.01 full registry
+#                                # sbt test + core-count determinism
+#                                # at sf0.001 + sf0.01 full registry
 #   tools/gate.sh q251_foo ...   # incremental: the full gate + sf0.1
 #                                # for just the named queries (the
 #                                # "new this session" set)
@@ -12,15 +13,21 @@
 # plus oracle_sql.json, then tools/check.py replays each oracle in
 # DuckDB and compares through the driver's pandas bridge (column-sorted,
 # row-sorted, dtype-kind-sensitive). A Verify run whose log shows a
-# generated-code compile error fails too. Exits non-zero on the first
-# stage that fails. Dev tool only — not part of the library.
+# generated-code compile error fails too. The determinism stage runs
+# graft.Verify on one core and on four and requires every query's rows,
+# sorted, to be identical, with no tolerance (tools/same_rows.py): a
+# result must not depend on the core count or the partitioning.
+# Exits non-zero on the first stage that fails. Dev tool only — not
+# part of the library.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+SF0001=${SPARK_GRAFT_SF0001:-/root/testdata/sf0.001}
 SF001=${SPARK_GRAFT_SF001:-/root/testdata/sf0.01}
 SF01=${SPARK_GRAFT_SF01:-/root/testdata/sf0.1}
 OUT001=${GATE_OUT:-/tmp/gate_sf001}
 OUT01=${GATE_OUT01:-/tmp/gate_sf01}
+OUTCPU=${GATE_OUT_CPUS:-/tmp/gate_cpus}
 
 # Runs graft.Verify with its log teed to <out>.log, then fails when
 # Spark logged a generated-code compile error: Spark then silently
@@ -36,22 +43,28 @@ verify() {
   fi
 }
 
-echo "== gate 1/4: perfbench input-generator tests =="
+echo "== gate 1/5: perfbench input-generator tests =="
 python3 -m unittest discover perfbench/tests
 
-echo "== gate 2/4: sbt test =="
+echo "== gate 2/5: sbt test =="
 sbt -batch test
 
-echo "== gate 3/4: full registry at sf0.01 (Verify + DuckDB oracle) =="
+echo "== gate 3/5: core-count determinism at sf0.001 (local[1] vs local[4]) =="
+for cpus in 1 4; do
+  SPARK_GRAFT_CPUS=$cpus verify "$SF0001" "$OUTCPU$cpus"
+done
+python3 tools/same_rows.py "${OUTCPU}1" "${OUTCPU}4"
+
+echo "== gate 4/5: full registry at sf0.01 (Verify + DuckDB oracle) =="
 verify "$SF001" "$OUT001"
 python3 tools/check.py "$OUT001" "$SF001"
 
 if [ "$#" -gt 0 ]; then
-  echo "== gate 4/4: sf0.1 for new queries: $* =="
+  echo "== gate 5/5: sf0.1 for new queries: $* =="
   verify "$SF01" "$OUT01" "$@"
   python3 tools/check.py "$OUT01" "$SF01" "$@"
 else
-  echo "== gate 4/4: skipped (no new-query args; run with query names"
+  echo "== gate 5/5: skipped (no new-query args; run with query names"
   echo "   to add the sf0.1 subset check) =="
 fi
 echo "GATE GREEN"
