@@ -4,9 +4,11 @@ import java.io.FileNotFoundException
 import java.util.WeakHashMap
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
 
 /** Parquet table access with a per-session schema catalog, for testdata
@@ -101,10 +103,14 @@ object Tables {
     }
   }
 
-  /** The table's files, or None when the path does not exist. */
+  /** The table's files, or None when the path does not exist. They are
+    * listed under the session's Hadoop conf, the context's plus the
+    * session's settings, as the scan lists them. */
   private def fingerprint(s: SparkSession, path: String): Option[Fingerprint] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val conf = new Configuration(s.sparkContext.hadoopConfiguration)
+    s.conf.getAll.foreach { case (k, v) => conf.set(k, v) }
+    val fs = p.getFileSystem(conf)
     try {
       val files = fs.listFiles(p, true)
       val fp = Seq.newBuilder[(String, Long, Long)]
@@ -117,12 +123,19 @@ object Tables {
   }
 
   /** One inference job under the two read confs. It runs on a sibling
-    * session that carries `s`'s settable confs plus the two, so `s`'s
+    * session that carries every setting of `s` plus the two, so `s`'s
     * own conf is never written: concurrent reads, and queries planned
-    * on other threads meanwhile, never see the two confs. */
+    * on other threads meanwhile, never see the two confs. Settings a
+    * fresh session already has are not set again, and static confs
+    * (shared by every session of the context) cannot be; every other
+    * key is copied, registered or not, so a Hadoop key such as a file
+    * system's reaches the inference as it reaches the scan. */
   private def infer(s: SparkSession, path: String): StructType = {
     val inferring = s.newSession()
-    s.conf.getAll.foreach { case (k, v) => if (s.conf.isModifiable(k)) inferring.conf.set(k, v) }
+    val fresh = inferring.conf.getAll
+    s.conf.getAll.foreach { case (k, v) =>
+      if (!fresh.get(k).contains(v) && !SQLConf.isStaticConfigKey(k)) inferring.conf.set(k, v)
+    }
     inferring.conf.set(NanosAsLong, "true")
     inferring.conf.set(InferNtz, "false")
     inferring.read.parquet(path).schema

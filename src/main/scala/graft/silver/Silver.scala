@@ -1,50 +1,30 @@
 package graft.silver
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{DataType, LongType}
+import graft.operators.Dedup
 
 /** Silver-layer entity transforms (reference:
   * database/layers/silver/transform_silver.py:23-80). Each is a pure
   * DataFrame => DataFrame: dedup keep-latest → cast → derive → project →
   * distinct, exactly the reference's pandas sequence re-expressed as one
-  * window + one projection + one aggregate over a single shuffle.
-  *
-  * The trailing distinct (the reference's `drop_duplicates`) can only
-  * merge rows whose different raw keys cast to the same output key, since
-  * the dedup leaves one row per raw key. It needs no exchange of its own
-  * when the rows are clustered on the output key. A raw key of the output
-  * key's type already is: its cast is dropped, and the exchange of the
-  * dedup window on the raw key serves the distinct too, after each map
-  * task has kept only its newest row per key. Any other raw key (an int
-  * or a string id) is first hash-clustered on its cast, and the window
-  * runs over (cast key, raw key), whose groups are the raw key's.
+  * window + one projection (single shuffle on the dedup key).
   */
 object Silver {
 
-  private val Rn = "__graft_rn"
-
-  /** The newest row per raw `key`, clustered on the key cast to
-    * `keyType`, the output key's type, when that cast changes it. */
-  private def latest(df: DataFrame, key: String, keyType: Option[DataType]): DataFrame = {
-    val castKey = keyType.filter(_ != df.schema(key).dataType).map(t => col(key).cast(t))
+  private def latest(df: DataFrame, key: String): DataFrame =
     // pandas keep='last' tie-breaks by input order, which has no
-    // distributed equivalent; a content-hash tiebreaker over the input
-    // columns makes equal (key, timestamp) rows resolve deterministically
-    // on any cluster (SURVEY §7.4).
-    val w = Window.partitionBy(castKey.toSeq :+ col(key): _*)
-      .orderBy(col("_ingestion_timestamp").desc,
-        xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)).desc)
-    castKey.fold(df)(df.repartition(_))
-      .withColumn(Rn, row_number().over(w)).filter(col(Rn) <= 1).drop(Rn)
-  }
+    // distributed equivalent; a content-hash tiebreaker makes equal
+    // (key, timestamp) rows resolve deterministically on any cluster
+    // (SURVEY §7.4).
+    Dedup.keepLatest(df, Seq(key), "_ingestion_timestamp",
+      Seq(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)).desc))
 
   /** silver.products (transform_silver.py:24-34): dedup by id, cast,
     * availability flag, project.
     */
   def products(bronze: DataFrame): DataFrame =
-    latest(bronze, "id", Some(LongType))
+    latest(bronze, "id")
       .select(
         col("id").cast("long").as("product_id"),
         col("title"),
@@ -58,7 +38,7 @@ object Silver {
     * dedup by id, safe-division discount percentage.
     */
   def carts(bronze: DataFrame): DataFrame =
-    latest(bronze, "id", Some(LongType))
+    latest(bronze, "id")
       .select(
         col("id").cast("long").as("cart_id"),
         col("userId").cast("long").as("user_id"),
@@ -74,7 +54,7 @@ object Silver {
     */
   def users(bronze: DataFrame): DataFrame =
     latest(
-      bronze.withColumn("email", lower(trim(col("email")))), "email", None)
+      bronze.withColumn("email", lower(trim(col("email")))), "email")
       .select(
         col("id").cast("long").as("user_id"),
         col("email"),
@@ -86,7 +66,7 @@ object Silver {
     * casts.
     */
   def orders(bronze: DataFrame): DataFrame =
-    latest(bronze, "id", Some(LongType))
+    latest(bronze, "id")
       .select(
         col("id").cast("long").as("order_id"),
         col("userId").cast("long").as("user_id"),

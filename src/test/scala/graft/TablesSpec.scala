@@ -1,11 +1,12 @@
 package graft
 
+import java.net.URI
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.Callable
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
@@ -168,9 +169,39 @@ class TablesSpec extends AnyFunSuite {
     }
   }
 
+  test("a Hadoop setting made only on the session reaches the inference") {
+    withTempRoot("graft_tables_") { dir =>
+      writeFixture(s"$dir/legacy.parquet", "NANOS")
+      // a scheme that only this session's conf resolves, uncached, so no
+      // file system instance outlives the conf that named it
+      val scheme = "graftlocal"
+      val keys = Seq(s"fs.$scheme.impl" -> classOf[SchemeLocalFs].getName,
+        s"fs.$scheme.impl.disable.cache" -> "true")
+      keys.foreach { case (k, _) => assert(spark.sparkContext.hadoopConfiguration.get(k) == null) }
+      val fresh = spark.newSession()
+      keys.foreach { case (k, v) => fresh.conf.set(k, v) }
+      val df = Tables.t(fresh, s"$scheme://$dir", "legacy")
+      assert(df.schema("ts").dataType == TimestampType)
+      val got = df.orderBy("id").select(expr("unix_micros(ts)")).collect().map(_.getLong(0))
+      assert(got.toSeq == micros)
+    }
+  }
+
   test("a missing table fails with Spark's PATH_NOT_FOUND naming the path") {
     val e = intercept[AnalysisException](Tables.t(spark, sf, "no_such_table"))
     assert(e.getCondition == "PATH_NOT_FOUND")
     assert(e.getMessage.contains(s"$sf/no_such_table.parquet"))
   }
+}
+
+/** The local file system under the scheme `graftlocal`: a path of that
+  * scheme resolves only under a conf whose `fs.graftlocal.impl` names
+  * this class. */
+class SchemeLocalFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("graftlocal:///")
+  // the local statuses look their permissions up through a file: URI
+  private def plain(st: FileStatus): FileStatus = new FileStatus(st.getLen, st.isDirectory,
+    st.getReplication, st.getBlockSize, st.getModificationTime, st.getPath)
+  override def getFileStatus(p: Path): FileStatus = plain(super.getFileStatus(p))
+  override def listStatus(p: Path): Array[FileStatus] = super.listStatus(p).map(plain)
 }
