@@ -655,7 +655,7 @@ object SparkEntry {
       val daily = Gold.dailyRevenue(
         ev.filter(to_date(col("ts")) >= lit("2024-01-10").cast("date")),
         "ts", "user_id", "value")
-      Upsert.upsertByDate(mart, daily, "event_date")
+      Upsert.merge(mart, daily, Seq("event_date"))
     }, Some(s"""WITH mart AS (
        | SELECT $dailyRevenueSelect FROM events WHERE event_type <> 'error' GROUP BY 1),
        |daily AS (

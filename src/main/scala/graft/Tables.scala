@@ -5,7 +5,7 @@ import java.util.WeakHashMap
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -108,9 +108,7 @@ object Tables {
     * session's settings, as the scan lists them. */
   private def fingerprint(s: SparkSession, path: String): Option[Fingerprint] = {
     val p = new Path(path)
-    val conf = new Configuration(s.sparkContext.hadoopConfiguration)
-    s.conf.getAll.foreach { case (k, v) => conf.set(k, v) }
-    val fs = p.getFileSystem(conf)
+    val fs = fileSystem(s, path)
     try {
       val files = fs.listFiles(p, true)
       val fp = Seq.newBuilder[(String, Long, Long)]
@@ -120,6 +118,16 @@ object Tables {
       }
       Some(fp.result().sorted)
     } catch { case _: FileNotFoundException => None }
+  }
+
+  /** The file system of `path` under the session's Hadoop conf: the
+    * context's plus the session's settings, as the scan resolves it. So
+    * a scheme that only the session's settings name resolves for the
+    * lake's own listings, swaps and deletes as it does for its reads. */
+  private[graft] def fileSystem(s: SparkSession, path: String): FileSystem = {
+    val conf = new Configuration(s.sparkContext.hadoopConfiguration)
+    s.conf.getAll.foreach { case (k, v) => conf.set(k, v) }
+    new Path(path).getFileSystem(conf)
   }
 
   /** One inference job under the two read confs. It runs on a sibling

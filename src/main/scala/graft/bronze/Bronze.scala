@@ -2,7 +2,6 @@ package graft.bronze
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Bronze-layer ingestion shaping (reference: the ingestion package).
   *
@@ -11,28 +10,11 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * fakestore_ingestor.py:384-408), stamping lineage metadata columns
   * (base_generator.py:163-164), unioning multi-endpoint record lists
   * (dummyjson_ingestor.py:305-343) and writing with replace/append
-  * semantics (ingestion_util.py:443-509). Spark-first: the JSON read is
-  * `spark.read.json` with native StructType nesting; flattening is a
-  * schema-driven projection (no per-row Python); schema drift is
-  * mergeSchema on read + unionByName on write.
+  * semantics (ingestion_util.py:443-509). Spark-first: nested fields
+  * stay native structs or JSON strings read in place, and schema drift
+  * is mergeSchema on read + unionByName on write.
   */
 object Bronze {
-
-  /** Recursively flatten every StructType column to top-level columns
-    * named `parent<sep>child` (reference pd.json_normalize with
-    * `sep='_'`, randomuser_ingestor.py:226). Pure projection — no
-    * shuffle, stays inside whole-stage codegen.
-    */
-  def flatten(df: DataFrame, sep: String = "_"): DataFrame = {
-    def cols(schema: StructType, prefix: String, path: String): Seq[Column] =
-      schema.fields.toIndexedSeq.flatMap {
-        case StructField(name, st: StructType, _, _) =>
-          cols(st, s"$prefix$name$sep", s"$path`$name`.")
-        case StructField(name, _, _, _) =>
-          Seq(col(s"$path`$name`").as(s"$prefix$name"))
-      }
-    df.select(cols(df.schema, "", ""): _*)
-  }
 
   /** Lineage metadata columns (reference base_generator.py:163-164,
     * dummyjson_ingestor.py:549-552): constant-folded literals, free at

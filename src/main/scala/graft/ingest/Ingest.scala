@@ -1,8 +1,6 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration._
 import scala.util.{Failure, Success, Try}
 
 /** Ingestion-side primitives (reference: ingestion/ingestion_util.py and
@@ -10,19 +8,12 @@ import scala.util.{Failure, Success, Try}
   *
   * The reference fetches REST JSON driver-side (APIClient.fetch,
   * ingestion_util.py:179-255, paginated at :257-318) and lands it via
-  * pandas to_sql. Spark-first: the fetch stays a driver-side pre-step
-  * that stages payloads to files (or an in-memory Dataset), and the
-  * cluster-side work starts at `spark.read.json` — schema-on-read with
-  * native nested structs, parallel across files.
+  * pandas to_sql. Here the paginated fetch is the `graft-rest` source
+  * ([[graft.sources.RestPages]]), whose partitions retry through
+  * [[retryWithBackoff]], and the pipeline itself starts from staged
+  * frames (`pipeline.Runner.stageBronze`).
   */
 object Ingest {
-
-  /** S1: scan staged JSON payloads (one file per fetch/page). Multiline
-    * JSON so a staged array-of-records file is one unit; Spark
-    * parallelizes across files/pages.
-    */
-  def readStagedJson(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.option("multiLine", "true").json(paths: _*)
 
   /** JSON-lines scan with corrupt-record quarantine: PERMISSIVE parse
     * against an explicit schema, malformed lines split off with their
@@ -62,27 +53,6 @@ object Ingest {
     (clean, quarantine)
   }
 
-  /** S2: paginated fetch loop — `fetchPage(offset, limit)` until a short
-    * page (reference fetch_paginated stop condition,
-    * ingestion_util.py:257-318). The page fetcher is any driver-side
-    * function (HTTP client, file reader); results concatenate in order.
-    */
-  def fetchPaginated[A](pageSize: Int, maxPages: Int = 10000)
-                       (fetchPage: (Int, Int) => Seq[A]): Seq[A] = {
-    val out = Seq.newBuilder[A]
-    var offset = 0
-    var more = true
-    var pages = 0
-    while (more && pages < maxPages) {
-      val page = fetchPage(offset, pageSize)
-      out ++= page
-      offset += pageSize
-      pages += 1
-      more = page.size >= pageSize
-    }
-    out.result()
-  }
-
   /** S4: retry with exponential backoff (reference retry_with_backoff,
     * ingestion_util.py:109-145: max_retries=3, delay base*factor^n).
     */
@@ -100,37 +70,5 @@ object Ingest {
       case Success(a) => a
       case Failure(e) => throw e
     }
-  }
-
-  /** S3: parallel multi-source fetch with a required-vs-optional failure
-    * policy (reference FakeStoreIngestor._fetch_parallel,
-    * fakestore_ingestor.py:273-301: required source failure aborts,
-    * optional failures are dropped).
-    */
-  def fetchParallel[A](sources: Seq[(String, Boolean, () => A)],
-                       timeout: Duration = 5.minutes)
-                      (implicit ec: ExecutionContext): Map[String, A] = {
-    val futures = sources.map { case (name, required, op) =>
-      (name, required, Future(Try(op())))
-    }
-    futures.flatMap { case (name, required, f) =>
-      Await.result(f, timeout) match {
-        case Success(a) => Some(name -> a)
-        case Failure(e) if required =>
-          throw new IllegalStateException(s"required source '$name' failed", e)
-        case Failure(_) => None
-      }
-    }.toMap
-  }
-
-  /** S7: sized-batch sink — the reference slices frames into chunks
-    * (DatabaseWriter.write_batch, ingestion_util.py:511-548); the Spark
-    * equivalent is choosing the partition count so each write task
-    * lands ~`rowsPerBatch` rows.
-    */
-  def writeBatched(df: DataFrame, path: String, rowsPerBatch: Long,
-                   totalRows: Long, mode: String = "append"): Unit = {
-    val parts = math.max(1, math.ceil(totalRows.toDouble / rowsPerBatch).toInt)
-    df.repartition(parts).write.mode(mode).parquet(path)
   }
 }

@@ -92,8 +92,7 @@ object Retention {
   def compact(spark: SparkSession, path: String, targetBytes: Long = 128L << 20,
               partitionCol: Option[String] = None): (Long, Long) = {
     require(targetBytes > 0, s"targetBytes must be > 0, got $targetBytes")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = graft.Tables.fileSystem(spark, path)
     val live = new org.apache.hadoop.fs.Path(path)
     require(fs.exists(live), s"compact: no table at $path")
     def dataFiles(): Seq[org.apache.hadoop.fs.FileStatus] = {
@@ -126,8 +125,7 @@ object Retention {
     */
   def dropPartitionsBefore(spark: SparkSession, path: String, partitionCol: String,
                            cutoff: java.time.LocalDate): Seq[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = graft.Tables.fileSystem(spark, path)
     val base = new org.apache.hadoop.fs.Path(path)
     if (!fs.exists(base)) Seq.empty
     else fs.listStatus(base).toSeq

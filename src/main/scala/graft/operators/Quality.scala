@@ -51,17 +51,6 @@ object Quality {
       .agg(count(lit(1)).as("dup_count"))
       .filter(col("dup_count") > 1)
 
-  /** V4: numeric dtype of a column — static schema check, stronger than
-    * the reference's runtime pandas dtype probe
-    * (dummyjson_ingestor.py:160-162; fakestore_ingestor.py:116-123).
-    */
-  def numericCheck(df: DataFrame, table: String, cols: Seq[String]): Seq[CheckResult] =
-    cols.map { c =>
-      val ok = df.schema.find(_.name == c).exists(
-        _.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
-      CheckResult(table, s"numeric_$c", if (ok) 0L else 1L, ok)
-    }
-
   /** V2: required columns present — pure schema check, no job. */
   def requiredColumns(df: DataFrame, table: String, required: Seq[String]): CheckResult = {
     val missing = required.filterNot(df.columns.contains)

@@ -35,21 +35,6 @@ object Upsert {
     current.join(updates, keys, "left_anti")
       .unionByName(updates, allowMissingColumns = false)
 
-  /** Merge where `updates` may carry a schema superset (dynamic schema
-    * evolution, reference dummyjson_ingestor.py:358-405
-    * `ALTER TABLE ADD COLUMN`): missing columns null-fill on either side.
-    */
-  def mergeEvolving(current: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame =
-    current.join(updates, keys, "left_anti")
-      .unionByName(updates, allowMissingColumns = true)
-
-  /** Idempotent daily-grain upsert (gold marts keyed on `date UNIQUE`,
-    * reference db_setup.py:251-263): replace any existing rows for the
-    * dates present in `daily`.
-    */
-  def upsertByDate(mart: DataFrame, daily: DataFrame, dateCol: String = "date"): DataFrame =
-    merge(mart, daily, Seq(dateCol))
-
   /** First publish of a bookkept mart: both audit stamps are `now`
     * (reference db_setup.py:258-262 `created_at/updated_at TIMESTAMP
     * DEFAULT CURRENT_TIMESTAMP`).

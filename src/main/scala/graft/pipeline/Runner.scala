@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -12,6 +12,7 @@ import graft.silver.Silver
 import graft.gold.Gold
 import graft.operators.{Quality, Upsert}
 import graft.audit.Audit
+import graft.maintenance.Retention
 import graft.Tables
 
 /** Full-pipeline orchestration (reference scripts/run_pipeline.py:332-405
@@ -74,15 +75,33 @@ object Runner {
     */
   private[graft] def overwriteSwapped(df: DataFrame, path: String): Long = {
     val tmp = path + ".tmp"
-    val obs = org.apache.spark.sql.Observation()
-    df.observe(obs, count(lit(1)).as("n")).write.mode("overwrite").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tmp), df.sparkSession.sparkContext.hadoopConfiguration)
-    graft.maintenance.Retention.swapAside(fs,
+    val written = counted(df)(_.write.mode("overwrite").parquet(tmp))
+    Retention.swapAside(Tables.fileSystem(df.sparkSession, tmp),
       new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(path))
     Tables.seed(df.sparkSession, path, df.schema)
+    written
+  }
+
+  /** The rows `write` writes of `df`, counted by an `Observation` during
+    * the write: one pass over the input, not a write plus a second
+    * evaluation to count it.
+    */
+  private def counted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("n")))
     obs.get("n").asInstanceOf[Long]
   }
+
+  /** A staged frame as the bronze layer stores it: the lineage columns,
+    * with `ingestedAt` as its ingestion time, and the `ingestionDate`
+    * partition column. The raw layer is partitioned by date, so
+    * retention and backfill become partition drops and overwrites, and
+    * day-grain reads prune at the scan.
+    */
+  private def stamped(df: DataFrame, source: String, table: String,
+                      ingestedAt: Column, ingestionDate: Column): DataFrame =
+    Bronze.withIngestMeta(df, source, table, s"${table}_raw", ingestedAt)
+      .withColumn("_ingestion_date", ingestionDate)
 
   /** `body` over `df` computed once into a local checkpoint, whose
     * blocks are released whatever `body` throws. A checkpoint rather
@@ -119,11 +138,8 @@ object Runner {
       } finally pool.shutdown()
     }
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    fs.exists(new org.apache.hadoop.fs.Path(path))
-  }
+  private def exists(spark: SparkSession, path: String): Boolean =
+    Tables.fileSystem(spark, path).exists(new org.apache.hadoop.fs.Path(path))
 
   /** Stage 1 — bronze: stamp lineage metadata, append to the raw layer
     * (reference run_pipeline.py:135-198 over the three ingestors).
@@ -131,17 +147,10 @@ object Runner {
   def stageBronze(spark: SparkSession, staged: Map[String, DataFrame],
                   layout: Layout, source: String, now: Timestamp): Map[String, Long] =
     concurrently(staged.toSeq) { case (table, df) =>
-      val stamped = Bronze.withIngestMeta(df, source, table, s"${table}_raw", lit(now))
-        // date-partitioned raw layer: retention/backfill become partition
-        // drops, and day-grain reads prune at the scan
-        .withColumn("_ingestion_date", to_date(lit(now)))
-      // Observation collects the row count DURING the write — one pass
-      // over the batch, not a write plus a second full evaluation.
-      val obs = org.apache.spark.sql.Observation(s"bronze_$table")
-      Bronze.writeLayer(stamped.observe(obs, count(lit(1)).as("n")),
-        s"${layout.bronze}/${table}_raw", "append",
-        partitionCols = Seq("_ingestion_date"))
-      table -> obs.get("n").asInstanceOf[Long]
+      table -> counted(stamped(df, source, table, lit(now), to_date(lit(now)))) {
+        Bronze.writeLayer(_, s"${layout.bronze}/${table}_raw", "append",
+          partitionCols = Seq("_ingestion_date"))
+      }
     }.toMap
 
   /** Stage 2 — silver: transform each bronze entity and upsert by its
@@ -252,23 +261,23 @@ object Runner {
     require(batchSizeDays >= 1, s"batchSizeDays must be >= 1, got $batchSizeDays")
     val days = Iterator.iterate(start)(_.plusDays(1)).takeWhile(_.isBefore(end)).toSeq
     val counts = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
-    days.grouped(batchSizeDays).zipWithIndex.foreach { case (batch, bi) =>
+    days.grouped(batchSizeDays).foreach { batch =>
       val perTable = batch
         .flatMap { day =>
-          val dayTs = Timestamp.valueOf(day.atStartOfDay)
+          // the date comes from the day itself, not from the start-of-day
+          // timestamp: that one is in the JVM's time zone, `to_date` reads
+          // it in the session's
+          val dayTs = lit(Timestamp.valueOf(day.atStartOfDay))
           fetch(day).map { case (table, df) =>
-            table -> Bronze.withIngestMeta(df, source, table, s"${table}_raw", lit(dayTs))
-              .withColumn("_ingestion_date", to_date(lit(day.toString)))
+            table -> stamped(df, source, table, dayTs, to_date(lit(day.toString)))
           }
         }
         .groupBy(_._1)
         .map { case (table, frames) => table -> frames.map(_._2).reduce(_ unionByName _) }
       concurrently(perTable.toSeq) { case (table, df) =>
-        val obs = org.apache.spark.sql.Observation(s"backfill_${table}_$bi")
-        graft.maintenance.Retention.overwritePartitions(
-          df.observe(obs, count(lit(1)).as("n")),
-          s"${layout.bronze}/${table}_raw", "_ingestion_date")
-        table -> obs.get("n").asInstanceOf[Long]
+        table -> counted(df) {
+          Retention.overwritePartitions(_, s"${layout.bronze}/${table}_raw", "_ingestion_date")
+        }
       }.foreach { case (table, n) => counts(table) += n }
     }
     counts.toMap
@@ -290,16 +299,11 @@ object Runner {
     val archivePath = s"${layout.bronze}/${table}_archive"
     if (!exists(spark, livePath)) 0L
     else {
-      val slice = Bronze.readLayer(spark, livePath)
-        .filter(col("_ingestion_date") < lit(cutoff.toString).cast("date"))
-        .withColumn("_archived_at", lit(now))
-      val obs = org.apache.spark.sql.Observation(
-        s"archive_${table}_${System.identityHashCode(slice)}")
-      graft.maintenance.Retention.overwritePartitions(
-        slice.observe(obs, count(lit(1)).as("n")), archivePath, "_ingestion_date")
-      val archived = obs.get("n").asInstanceOf[Long]
-      graft.maintenance.Retention.dropPartitionsBefore(
-        spark, livePath, "_ingestion_date", cutoff)
+      val slice = Retention.archiveSlice(Bronze.readLayer(spark, livePath),
+        "_ingestion_date", lit(cutoff.toString).cast("date"), lit(now))
+      val archived =
+        counted(slice)(Retention.overwritePartitions(_, archivePath, "_ingestion_date"))
+      Retention.dropPartitionsBefore(spark, livePath, "_ingestion_date", cutoff)
       archived
     }
   }

@@ -38,9 +38,7 @@ class UrlFetcher extends PageFetcher {
   * sequentially on one machine): here every page range is an
   * InputPartition, so N pages download and parse as N parallel tasks
   * on the executors, with per-partition retry/backoff — the shape a
-  * 1000-executor ingest actually wants. The driver-side loop form
-  * survives as [[graft.ingest.Ingest.fetchPaginated]] for tiny
-  * interactive pulls.
+  * 1000-executor ingest actually wants.
   *
   * ```
   * spark.read.format("graft-rest")

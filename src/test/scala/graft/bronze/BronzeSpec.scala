@@ -8,24 +8,6 @@ class BronzeSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  test("flatten: recursive struct flattening with underscore names") {
-    // FakeStore /users shape: name + address.geolocation two levels deep
-    val df = spark.read.json(Seq(
-      """{"id":1,"email":"j@x.com",
-         "name":{"firstname":"john","lastname":"doe"},
-         "address":{"city":"kilcoole","geolocation":{"lat":"-37.3","long":"81.1"}}}"""
-    ).toDS())
-    val flat = Bronze.flatten(df)
-    val cols = flat.columns.toSet
-    assert(cols.contains("name_firstname"))
-    assert(cols.contains("address_geolocation_lat"))
-    assert(cols.contains("email"))
-    assert(!flat.schema.fields.exists(_.dataType.typeName == "struct"))
-    val r = flat.collect().head
-    assert(r.getAs[String]("name_firstname") == "john")
-    assert(r.getAs[String]("address_geolocation_lat") == "-37.3")
-  }
-
   test("withIngestMeta stamps the four lineage columns") {
     val df = Seq((1, "x")).toDF("id", "v")
     val out = Bronze.withIngestMeta(df, "api", "ep", "tbl",

@@ -1,33 +1,10 @@
 package graft.ingest
 
 import org.scalatest.funsuite.AnyFunSuite
-import scala.concurrent.ExecutionContext.Implicits.global
 import graft.TestSpark
 
 class IngestSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
-
-  test("readStagedJson: nested payloads land as native structs") {
-    val dir = java.nio.file.Files.createTempDirectory("staged")
-    java.nio.file.Files.writeString(dir.resolve("page0.json"),
-      """[{"id":1,"rating":{"rate":3.9,"count":120}},
-         |{"id":2,"rating":{"rate":4.1,"count":8}}]""".stripMargin)
-    val df = Ingest.readStagedJson(spark, Seq(dir.toString + "/page0.json"))
-    assert(df.count() == 2)
-    assert(df.select("rating.rate").collect().map(_.getDouble(0)).sorted
-      .sameElements(Array(3.9, 4.1)))
-  }
-
-  test("fetchPaginated stops on short page and concatenates in order") {
-    val data = (1 to 25).toSeq
-    var calls = 0
-    val out = Ingest.fetchPaginated(pageSize = 10) { (offset, limit) =>
-      calls += 1
-      data.slice(offset, offset + limit)
-    }
-    assert(out == data)
-    assert(calls == 3) // 10 + 10 + 5(short -> stop)
-  }
 
   test("retryWithBackoff retries with exponential delays then succeeds") {
     var attempts = 0
@@ -49,26 +26,6 @@ class IngestSpec extends AnyFunSuite {
       }
     }
     assert(attempts == 3) // initial + 2 retries
-  }
-
-  test("fetchParallel: optional failures dropped, required failures abort") {
-    val ok = Ingest.fetchParallel(Seq(
-      ("a", true, () => 1),
-      ("b", false, () => sys.error("flaky"): Int)))
-    assert(ok == Map("a" -> 1))
-    intercept[IllegalStateException] {
-      Ingest.fetchParallel(Seq(("a", true, () => sys.error("down"): Int)))
-    }
-  }
-
-  test("writeBatched sizes write tasks by rows-per-batch") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("batched").toString + "/t"
-    val df = (1 to 100).toDF("n")
-    Ingest.writeBatched(df, dir, rowsPerBatch = 25, totalRows = 100)
-    val files = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(files == 4)
-    assert(spark.read.parquet(dir).count() == 100)
   }
 
   test("jsonlWithQuarantine: clean/quarantine split, half-valid lines quarantined") {

@@ -107,13 +107,6 @@ class QualitySpec extends AnyFunSuite {
     assert(ex.getMessage.contains("t.bad=3"))
   }
 
-  test("numericCheck is a static schema check") {
-    val res = Quality.numericCheck(users, "users", Seq("id", "age", "email", "nope"))
-    val byName = res.map(r => r.check -> r.passed).toMap
-    assert(byName("numeric_id") && byName("numeric_age"))
-    assert(!byName("numeric_email") && !byName("numeric_nope"))
-  }
-
   test("psiDrift: ~0 for identical distributions, large for a shift, floor for empty bins") {
     val base = (1 to 10000).map(i => (i % 100).toDouble).toDF("v")
     val same = (1 to 10000).map(i => ((i * 7) % 100).toDouble).toDF("v")

@@ -26,9 +26,6 @@ class UpsertSpec extends AnyFunSuite {
     val out = Upsert.merge(current, updates, Seq("id"))
     graft.audit.PlanGuard.assertMaxExchanges(out, 2)
     graft.audit.PlanGuard.assertNoCartesian(out)
-    val evolving = Upsert.mergeEvolving(current,
-      updates.withColumn("extra", lit(1)), Seq("id"))
-    graft.audit.PlanGuard.assertMaxExchanges(evolving, 2)
   }
 
   test("merge is idempotent: f(f(x)) == f(x)") {
@@ -38,18 +35,10 @@ class UpsertSpec extends AnyFunSuite {
       twice.orderBy("id").collect().toSeq)
   }
 
-  test("mergeEvolving null-fills schema drift on either side") {
-    val widened = Seq((5L, "e", 1.0, "extra")).toDF("id", "name", "v", "note")
-    val out = Upsert.mergeEvolving(current, widened, Seq("id"))
-    assert(out.columns.toSet == Set("id", "name", "v", "note"))
-    assert(out.filter($"id" === 1 && $"note".isNull).count() == 1)
-    assert(out.filter($"id" === 5 && $"note" === "extra").count() == 1)
-  }
-
-  test("upsertByDate replaces only the dates present in the delta") {
+  test("merge on a date key replaces only the dates present in the delta") {
     val mart = Seq(("2024-01-01", 10L), ("2024-01-02", 20L)).toDF("date", "kpi")
     val daily = Seq(("2024-01-02", 99L), ("2024-01-03", 30L)).toDF("date", "kpi")
-    val out = Upsert.upsertByDate(mart, daily, "date")
+    val out = Upsert.merge(mart, daily, Seq("date"))
       .orderBy("date").as[(String, Long)].collect()
     assert(out.toSeq == Seq(
       ("2024-01-01", 10L), ("2024-01-02", 99L), ("2024-01-03", 30L)))

@@ -263,6 +263,59 @@ class RunnerSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"${lay.bronze}/orders_raw").count() == 1)
   }
 
+  test("stageBronze and backfillBronze stamp lineage columns and the ingestion date") {
+    val lay = layout()
+    val now = ts("2024-01-05 12:00:00")
+    Runner.stageBronze(spark, staged("v1").filter(_._1 == "products"), lay, "test_api", now)
+    val stamps = spark.read.parquet(s"${lay.bronze}/products_raw")
+      .select("_ingestion_date", "_ingestion_timestamp", "_source_name", "_endpoint",
+        "_table_name")
+      .collect().map(r => (r.getDate(0).toString, r.getTimestamp(1), r.getString(2),
+        r.getString(3), r.getString(4))).toSet
+    assert(stamps == Set(("2024-01-05", now, "test_api", "products", "products_raw")))
+
+    val day1 = java.time.LocalDate.parse("2024-01-01")
+    def fetch(day: java.time.LocalDate): Map[String, DataFrame] = Map(
+      "orders" -> Seq((day.getDayOfMonth * 10, 100, 5.0, Some(5.0)))
+        .toDF("id", "userId", "total_amount", "final_amount"))
+    Runner.backfillBronze(spark, fetch, lay, "test_api", day1, day1.plusDays(3))
+    val days = spark.read.parquet(s"${lay.bronze}/orders_raw")
+      .select("_ingestion_date", "_ingestion_timestamp")
+      .collect().map(r => (r.getDate(0).toString, r.getTimestamp(1))).toSeq
+    assert(days.map(_._1).toSet == Set("2024-01-01", "2024-01-02", "2024-01-03"))
+    days.foreach { case (day, at) =>
+      assert(at == Timestamp.valueOf(java.time.LocalDate.parse(day).atStartOfDay), day)
+    }
+  }
+
+  test("a lake under a scheme only the session resolves runs end to end") {
+    // graft.SchemeLocalFs: the local file system under `graftlocal`,
+    // uncached, named only on this session's conf
+    val scheme = "graftlocal"
+    val fresh = spark.newSession()
+    fresh.conf.set(s"fs.$scheme.impl", classOf[graft.SchemeLocalFs].getName)
+    fresh.conf.set(s"fs.$scheme.impl.disable.cache", "true")
+    val plain = layout()
+    val lay = Runner.Layout(s"$scheme://${plain.bronze}", s"$scheme://${plain.silver}",
+      s"$scheme://${plain.gold}", s"$scheme://${plain.audit}")
+    def inFresh(suffix: String) = staged(suffix).map { case (table, df) =>
+      table -> fresh.createDataFrame(df.collectAsList(), df.schema)
+    }
+    Runner.runFull(fresh, inFresh("v1"), lay, "test_api", "run1", ts("2024-01-01 12:00:00"))
+    val r2 = Runner.runFull(fresh, inFresh("v2"), lay, "test_api", "run2",
+      ts("2024-01-02 12:00:00"))
+    assert(r2.silverCounts == Map("products" -> 2, "carts" -> 2, "users" -> 2, "orders" -> 1))
+    assert(r2.goldCounts("finance_mart") == 2)
+    assert(graft.maintenance.Retention.compact(fresh, s"${lay.silver}/products")._2 == 1L)
+
+    val archived = Runner.stageArchive(fresh, lay, "orders",
+      java.time.LocalDate.parse("2024-01-02"), ts("2024-02-01 00:00:00"))
+    assert(archived == 1)
+    assert(fresh.read.parquet(s"${lay.bronze}/orders_raw").count() == 1)
+    assert(fresh.read.parquet(s"${lay.bronze}/orders_archive").count() == 1)
+    assert(Audit.read(fresh, lay.audit).collect().map(_.status).toSeq == Seq("success", "success"))
+  }
+
   test("quality gate failure aborts before gold and audits the failure") {
     val lay = layout()
     // a null email survives the silver transform (duplicates would
