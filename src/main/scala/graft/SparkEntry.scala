@@ -2328,13 +2328,12 @@ object SparkEntry {
       // materialized. Output = verified pairs touching the batch. The
       // oracle is the BRUTE-FORCE bipartite 3-shingle Jaccard at the
       // same threshold — sound because signatures AND verify use the
-      // SAME measure (distinct 3-gram shingle sets, verifyShingleN =
-      // shingleN = 3): at 16 bands × 4 rows a J ≥ 0.9 pair is missed
-      // with probability (1−0.9⁴)¹⁶ ≈ 4e-8, so LSH recall is exactly 1
-      // and candidate generation + verify must reproduce the exact
-      // brute-force pair set — a STRONGER check than the rows-only q49
-      // (whose xxhash signatures are the only un-replayable part). A
-      // token-level (shingleN = 1) variant is measure-consistent too but
+      // SAME measure (distinct 3-gram shingle sets, shingleN = 3): at
+      // 16 bands × 4 rows a J ≥ 0.9 pair is missed with probability
+      // (1−0.9⁴)¹⁶ ≈ 4e-8, so LSH recall is exactly 1 and candidate
+      // generation + verify must reproduce the exact brute-force pair
+      // set, whichever hash finds the candidates. A token-level
+      // (shingleN = 1) variant is measure-consistent too but
       // DEGENERATE on this corpus at scale: long docs all cover the same
       // small vocabulary, token sets collide en masse, and the "near-dup
       // pair set" itself grows quadratically (~177k pairs at sf0.1);
@@ -2346,7 +2345,7 @@ object SparkEntry {
         docs.filter(!isNew), "doc_id", "text", shingleN = 3)
       graft.dedup.NearDup.nearDupPairsIncremental(
         docs.filter(isNew), indexSigs, docs, "doc_id", "text",
-        threshold = 0.9, shingleN = 3, verifyShingleN = 3)
+        threshold = 0.9, shingleN = 3)
     }, Some("""WITH toks AS (
        |  SELECT doc_id, regexp_split_to_array(text, '\s+') AS t
        |  FROM documents),
@@ -4852,7 +4851,7 @@ object SparkEntry {
     ("q165_prefix_filter_pairs", (s, d) =>
       // EXACT set-similarity join (PPJoin-style prefix filter): every
       // 3-shingle Jaccard >= 0.9 pair, guaranteed — the deterministic
-      // complement to the probabilistic LSH family (q49/q137). Rarest-
+      // complement to the probabilistic LSH family (q137/q184). Rarest-
       // first prefixes keep the join buckets small by construction.
       graft.dedup.NearDup.prefixFilterPairs(t(s, d, "documents"),
         "doc_id", "text", threshold = 0.9, shingleN = 3),
@@ -5440,13 +5439,20 @@ object SparkEntry {
        |WHERE rn = 1""".stripMargin)),
 
     ("q183_minhash_portable", (s, d) =>
-      // portable-hash MinHash signatures, exploded (doc_id, i, minhash)
-      // — the hash-oracled twin of q48's XXH64 signatures (r9 verdict
-      // item 7): rolling token/shingle folds + the universal
-      // (a·s+b) mod p family replay exactly in SQL, so the signature
-      // TABLE is one hash compare, not a rows-only count.
-      graft.dedup.NearDup.minhashSignaturesPortable(
-        t(s, d, "documents"), "doc_id", "text", k = 16, shingleN = 3),
+      // MinHash signatures, exploded to flat (doc_id, i, minhash) rows:
+      // rolling token/shingle folds + the universal (a·s+b) mod p
+      // family replay exactly in SQL, so the signature TABLE is one
+      // hash compare, not a rows-only count. A doc shorter than one
+      // shingle has an empty sig and drops at the filter; a plain
+      // posexplode would have the optimizer infer a size(sig) > 0
+      // filter and push it below the signature projection, computing
+      // each signature twice.
+      graft.dedup.NearDup.minhashSignatures(
+        t(s, d, "documents"), "doc_id", "text", k = 16, shingleN = 3)
+        .select(col("doc_id"), posexplode_outer(col("sig")))
+        .filter(col("pos").isNotNull)
+        .select(col("doc_id"), col("pos").cast("long").as("i"),
+          col("col").as("minhash")),
       Some(s"""WITH tok AS (
        |  SELECT doc_id, generate_subscripts(tk, 1) AS p, unnest(tk) AS t
        |  FROM (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS tk
@@ -5476,13 +5482,11 @@ object SparkEntry {
        |GROUP BY 1, 2""".stripMargin)),
 
     ("q184_near_dup_pairs_portable", (s, d) =>
-      // END-TO-END portable near-dup: portable signatures → band folds
-      // → capped bucket self-join → 3-shingle Jaccard >= 0.5 — q49's
-      // pipeline with every hash SQL-replayable, so signatures, bands,
-      // candidate generation, AND the verified pair set are certified
-      // by one hash compare (q48/q49 stay as the fast XXH64 production
-      // path, now twinned end-to-end instead of rows-only).
-      graft.dedup.NearDup.nearDupPairsPortable(
+      // END-TO-END near-dup: signatures → band folds → capped bucket
+      // self-join → 3-shingle Jaccard >= 0.5, with every hash
+      // SQL-replayable, so signatures, bands, candidate generation, AND
+      // the verified pair set are certified by one hash compare.
+      graft.dedup.NearDup.nearDupPairs(
         t(s, d, "documents"), "doc_id", "text", threshold = 0.5,
         k = 16, bands = 4, shingleN = 3),
       Some(s"""WITH tok AS (

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * fakestore_ingestor.py:384-408), stamping lineage metadata columns
   * (base_generator.py:163-164), unioning multi-endpoint record lists
   * (dummyjson_ingestor.py:305-343) and writing with replace/append
-  * semantics (ingestion_util.py:443-509). Spark-first: nested fields
+  * semantics (ingestion_util.py:443-509; here `Runner.stageBronze`'s
+  * date-partitioned append). Spark-first: nested fields
   * stay native structs or JSON strings read in place, and schema drift
   * is mergeSchema on read + unionByName on write.
   */
@@ -34,16 +35,6 @@ object Bronze {
     */
   def unionEndpoints(frames: Seq[DataFrame]): DataFrame =
     frames.reduce(_.unionByName(_, allowMissingColumns = true))
-
-  /** Bronze sink (reference DatabaseWriter.write, ingestion_util.py:
-    * 443-509): partitioned parquet, replace or append. Date-partitioned
-    * so retention/backfill become partition operations.
-    */
-  def writeLayer(df: DataFrame, path: String, mode: String = "append",
-                 partitionCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(mode)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
-  }
 
   /** Bronze scan with schema drift tolerated across files (reference
     * dynamic schema evolution, dummyjson_ingestor.py:358-405).

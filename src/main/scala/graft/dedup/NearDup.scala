@@ -13,7 +13,7 @@ import graft.text.TextOps
   */
 object NearDup {
 
-  import graft.functions.MinHashSignature
+  import graft.functions.PortableMinHash
 
   /** Repartition only when the input is under-parallel (a small local
     * input reads as one file = one partition = one thread). At scale the
@@ -24,130 +24,53 @@ object NearDup {
   private[graft] def ensureParallel(df: DataFrame, key: Column): DataFrame =
     graft.operators.Par.fan(df, key)
 
-  /** MinHash signatures over token `n`-gram shingles: one row per doc,
-    * `sig` = array of k minima. Single projection pass per row —
-    * nothing shuffles except the parallelism repartition.
+  /** MinHash signatures over token `shingleN`-gram shingles: one row
+    * per doc, `sig` = array of k minima. Single projection pass per row
+    * through the native codegen'd [[graft.functions.PortableMinHash]]
+    * expression over the TOKEN array (shingles combine as rolling token
+    * hashes, never as strings) — nothing shuffles except the
+    * parallelism repartition. Every hash is integer arithmetic that
+    * SQL replays exactly (q183/q184 hash-compare against DuckDB):
+    *   token hash    = the RollingHash codepoint fold (mod 1e9+7)
+    *   shingle hash  = the same ×31 fold over `shingleN` token hashes
+    *   minhash i     = min over shingles of (aᵢ·s + bᵢ) mod 1e9+7
+    * Every intermediate stays < 2^60, so the arithmetic is BIGINT-exact
+    * on both engines. A doc with fewer than `shingleN` tokens has no
+    * shingles: its `sig` is EMPTY, and it gets no bucket in
+    * [[lshBuckets]] (verify drops it too, see [[gramJaccardVerify]]).
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        k: Int = 64, shingleN: Int = 3): DataFrame =
+                        k: Int = 64, shingleN: Int = 3): DataFrame = {
+    require(k >= 1 && shingleN >= 1, s"bad k=$k shingleN=$shingleN")
     // Parallelize first if needed: a small input (one file = one
     // partition) would otherwise compute every signature on a single
-    // thread. The signature itself is the native codegen'd
-    // MinHashSignature expression over the TOKEN array — shingles
-    // combine as rolling token hashes, never as strings; no explode, no
-    // aggregation shuffle (see graft.functions.MinHashSignature).
+    // thread. No filter here: the optimizer pushes a filter below that
+    // repartition, where it runs on the one input partition.
     ensureParallel(df, col(idCol))
       .select(col(idCol),
-        MinHashSignature.signature(TextOps.tokens(col(textCol)), k, shingleN)
+        PortableMinHash.minima(TextOps.tokens(col(textCol)), k, shingleN)
           .as("sig"))
-
-  // ==== portable-hash MinHash — the ORACLED twin of the XXH64 path ====
-  //
-  // minhashSignatures/lshBuckets hash with xxhash64 (fastest on the
-  // JVM, unreplayable in SQL → q48/q49 are rows-only checks). This
-  // family swaps every hash for SQL-replayable integer arithmetic —
-  // the q136/q142 recipe — so signatures, bands, candidates, and the
-  // verified pair set all hash-compare against DuckDB end-to-end:
-  //   token hash    = the RollingHash codepoint fold (mod 1e9+7)
-  //   shingle hash  = the same ×31 fold over `shingleN` token hashes
-  //   minhash i     = min over shingles of (aᵢ·s + bᵢ) mod 1e9+7, the
-  //                   classic universal family with aᵢ, bᵢ derived
-  //                   from i by the two-round multiplicative recipe
-  //   band hash     = the ×31 fold over the band's minima
-  // Every intermediate stays < 2^60, so the arithmetic is BIGINT-exact
-  // on both engines. Plan shape matches the XXH64 path EXACTLY:
-  // signatures are one native codegen'd projection per row
-  // (functions/PortableMinHash — no explode, no shuffle), bands a
-  // projection + posexplode, candidates the same capped bucket
-  // self-join.
-
-  private[graft] final val PortableMod = 1000000007L
-  private[graft] def portableA(i: Int): Long =
-    (i + 1) * 2654435761L % 999999937L + 1
-  private[graft] def portableB(i: Int): Long =
-    (i + 1) * 2246822519L % 999999937L
-
-  /** One WIDE row per doc: `__m0..__m{k-1}` minima. Docs with fewer
-    * than `shingleN` tokens have no shingles and drop out (same
-    * contract as [[gramJaccardVerify]]).
-    */
-  private[graft] def portableMins(df: DataFrame, idCol: String,
-                                  textCol: String, k: Int,
-                                  shingleN: Int): DataFrame = {
-    require(k >= 1 && shingleN >= 1, s"bad k=$k shingleN=$shingleN")
-    // Pure projection through the native PortableMinHash expression
-    // (whole signature per row inside codegen, NO shuffle). The first
-    // formulation built shingles with a transform HOF and folded k
-    // minima through an explode + 16-min groupBy — HOFs are
-    // CodegenFallback, so every token hashed interpreted, and the
-    // explode shuffled token-instance-scale rows: measured 27 s at
-    // sf0.1 where the XXH64 twin runs ~1 s. Same arithmetic, same
-    // oracles (q183/q184 unchanged and still green).
-    ensureParallel(df, col(idCol))
-      .select(col(idCol),
-        graft.functions.PortableMinHash
-          .minima(TextOps.tokens(col(textCol)), k, shingleN).as("__ms"))
-      .filter(size(col("__ms")) > 0)
-      .select(col(idCol) +: (0 until k).map(i =>
-        element_at(col("__ms"), i + 1).as(s"__m$i")): _*)
-  }
-
-  /** Portable MinHash signatures in the EXPLODED `(id, i, minhash)`
-    * shape (flat — the driver's comparator can sort it; the array
-    * shape stays library-internal). Short docs (no shingles → empty
-    * minima array) drop at the posexplode.
-    */
-  def minhashSignaturesPortable(df: DataFrame, idCol: String,
-                                textCol: String, k: Int = 16,
-                                shingleN: Int = 3): DataFrame =
-    ensureParallel(df, col(idCol))
-      .select(col(idCol), posexplode(
-        graft.functions.PortableMinHash
-          .minima(TextOps.tokens(col(textCol)), k, shingleN)))
-      .select(col(idCol), col("pos").cast("long").as("i"),
-        col("col").as("minhash"))
-
-  /** End-to-end portable near-dup pairs: portable signatures → band
-    * fold → capped bucket self-join → measure-consistent shingle
-    * Jaccard ≥ `threshold`. Same pipeline shape (and the same
-    * recall/cap contract) as [[nearDupPairs]]; every stage replays in
-    * SQL, so the whole pair set is one hash compare.
-    */
-  def nearDupPairsPortable(df: DataFrame, idCol: String, textCol: String,
-                           threshold: Double = 0.5, k: Int = 16,
-                           bands: Int = 4, shingleN: Int = 3,
-                           maxBucketSize: Int = 10000): DataFrame = {
-    require(k % bands == 0, s"bands=$bands must divide k=$k")
-    val r = k / bands
-    val mins = portableMins(df, idCol, textCol, k, shingleN)
-    val bandHash = (0 until bands).map(j =>
-      (j * r until (j + 1) * r).foldLeft(lit(0L).cast("bigint")) {
-        (acc, i) => (acc * lit(31L) + col(s"__m$i")) % lit(PortableMod)
-      })
-    val buckets = mins
-      .select(col(idCol), posexplode(array(bandHash: _*)))
-      .select(col(idCol), col("pos").cast("long").as("band_id"),
-        col("col").as("band_hash"))
-    val pairs = candidatePairs(buckets, idCol, maxBucketSize)
-    gramJaccardVerify(pairs, df, idCol, textCol, shingleN)
-      .filter(col("jaccard") >= threshold)
   }
 
   /** LSH banding: split the k-wide signature into `bands` bands of
-    * `rowsPerBand` and emit (band_id, band_hash) bucket keys. Docs
-    * sharing any bucket become candidates via a self-equi-join on the
-    * bucket key — one shuffle, no cross product.
+    * `rowsPerBand` and emit (band_id, band_hash) bucket keys, where
+    * band_hash is the ×31 fold mod 1e9+7 over the band's minima (the
+    * fold the q184 oracle replays) — plain arithmetic over `element_at`,
+    * so it stays in generated code. An empty `sig` (a doc shorter than
+    * one shingle) yields no bucket. Docs sharing any bucket become
+    * candidates via a self-equi-join on the bucket key — one shuffle,
+    * no cross product.
     */
-  def lshBuckets(sigs: DataFrame, idCol: String, bands: Int, rowsPerBand: Int): DataFrame =
-    sigs.select(
-        col(idCol),
-        posexplode(
-          transform(sequence(lit(0), lit(bands - 1)),
-            b => xxhash64(concat_ws(",",
-              transform(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
-                x => x.cast("string")))))))
+  def lshBuckets(sigs: DataFrame, idCol: String, bands: Int, rowsPerBand: Int): DataFrame = {
+    val bandHash = (0 until bands).map(b =>
+      (b * rowsPerBand until (b + 1) * rowsPerBand).foldLeft(lit(0L)) {
+        (acc, i) => (acc * 31L + element_at(col("sig"), i + 1)) % PortableMinHash.Mod
+      })
+    sigs.select(col(idCol),
+        posexplode(when(size(col("sig")) > 0, array(bandHash: _*))))
       .withColumnRenamed("pos", "band_id")
       .withColumnRenamed("col", "band_hash")
+  }
 
   /** Drop every bucket holding more than `maxBucketSize` rows before a
     * candidate self-join. A degenerate bucket (empty strings, license
@@ -173,46 +96,19 @@ object NearDup {
     * the join plans with zero further exchanges. The previous shape
     * (count aggregate + broadcast anti-join) paid a second full-table
     * exchange for the count plus a broadcast-job barrier on the
-    * critical path — measured ~2× on q49 at sf0.1. A degenerate
-    * mega-bucket lands in one window group; WindowExec buffers it via
-    * its spilling row array, so the cost stays linear in the bucket
-    * (disk-bound, not N²) and the filter then drops it.
-    *
-    * `skewSafe = true` trades that measured common-case win for
-    * mega-bucket immunity: the window funnels a degenerate bucket into
-    * ONE task's spilling buffer before dropping it — linear, but a
-    * single-task disk/straggler hit in exactly the pathological case
-    * the cap exists for. The skew-safe shape never concentrates the
-    * bucket anywhere: exact per-key counts from a map-side-combined
-    * aggregate (each input partition contributes one row per key — the
-    * mega-bucket arrives at the agg as P partials, not M rows), the
-    * few over-cap keys broadcast back as a map-side anti-join on the
-    * UNSHUFFLED input, and a repartition on the bucket key restores
-    * the distribution the self-join wants — same exchange count for
-    * the big table, plus the small counts shuffle and a broadcast
-    * barrier. Use it when the corpus is known to carry mass-duplicated
-    * blobs (unfiltered crawl, license boilerplate); the input's
-    * lineage is scanned twice, so persist upstream when it is
-    * expensive ([[nearDupPairs]] does when its `skewSafe` is set).
+    * critical path — measured ~2× on [[nearDupPairs]] at sf0.1. A
+    * degenerate mega-bucket lands in one window group; WindowExec
+    * buffers it via its spilling row array, so the cost stays linear in
+    * the bucket (disk-bound, not N²) and the filter then drops it.
     */
   private[graft] def capBuckets(keyed: DataFrame, keyCols: Seq[String],
-                                maxBucketSize: Int,
-                                skewSafe: Boolean = false): DataFrame = {
+                                maxBucketSize: Int): DataFrame = {
     require(maxBucketSize > 0, s"maxBucketSize must be positive, got $maxBucketSize")
-    if (skewSafe) {
-      val overCap = keyed.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__graft_bucket_n"))
-        .filter(col("__graft_bucket_n") > maxBucketSize)
-        .select(keyCols.map(col): _*)
-      keyed.join(broadcast(overCap), keyCols, "left_anti")
-        .repartition(keyCols.map(col): _*)
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keyCols.map(col): _*)
-      keyed.withColumn("__graft_bucket_n", count(lit(1)).over(w))
-        .filter(col("__graft_bucket_n") <= maxBucketSize)
-        .drop("__graft_bucket_n")
-    }
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keyCols.map(col): _*)
+    keyed.withColumn("__graft_bucket_n", count(lit(1)).over(w))
+      .filter(col("__graft_bucket_n") <= maxBucketSize)
+      .drop("__graft_bucket_n")
   }
 
   /** Candidate (id1 < id2) pairs from a capped, bucket-keyed table via
@@ -220,33 +116,20 @@ object NearDup {
     * bucket-key hash partitioning from [[capBuckets]] (persist it when
     * both sides are expensive to recompute) so the join adds no
     * exchange; only the (near-linear) pair set shuffles for distinct().
+    * shuffle_hash hint: the self-join sides are the same mid-size
+    * bucket table, right at the broadcast threshold, so the unhinted
+    * strategy flip-flops between broadcast and sort-merge run-to-run;
+    * hash join on the bucket key needs no sort and builds from one
+    * partition of the same table it probes.
     */
-  private def bucketSelfJoin(capped: DataFrame, idCol: String,
-                             keyCols: Seq[String]): DataFrame = {
+  private[graft] def bucketSelfJoin(capped: DataFrame, idCol: String,
+                                    keyCols: Seq[String]): DataFrame = {
     val a = capped.select(keyCols.map(col) :+ col(idCol).as("id1"): _*)
     val b = capped.select(keyCols.map(col) :+ col(idCol).as("id2"): _*)
     a.join(b.hint("shuffle_hash"), keyCols)
       .filter(col("id1") < col("id2"))
       .select("id1", "id2").distinct()
   }
-
-  /** Candidate pairs (id1 < id2) from shared LSH buckets. shuffle_hash
-    * hint: the self-join sides are the same mid-size bucket table, right
-    * at the broadcast threshold, so the unhinted strategy flip-flops
-    * between broadcast and sort-merge run-to-run; hash join on the
-    * bucket key needs no sort, builds from one partition of the same
-    * table it probes, and — because [[capBuckets]] already partitioned
-    * the rows on the bucket key — plans with no exchange of its own.
-    * Buckets over `maxBucketSize` are dropped before the join; see
-    * [[capBuckets]] for the recall contract. Persist the bucket table
-    * upstream when its lineage is expensive ([[nearDupPairs]] persists
-    * the capped form).
-    */
-  def candidatePairs(buckets: DataFrame, idCol: String,
-                     maxBucketSize: Int = 10000): DataFrame =
-    bucketSelfJoin(
-      capBuckets(buckets, Seq("band_id", "band_hash"), maxBucketSize),
-      idCol, Seq("band_id", "band_hash"))
 
   /** Exact token-set Jaccard for candidate pairs — the verify step after
     * LSH narrowed the space. Joins the (distinct-token-set) docs to the
@@ -468,51 +351,28 @@ object NearDup {
           size(col("g1"))).as("containment"))
   }
 
-  /** End-to-end MinHash-LSH near-dup pairs above `threshold`. The
-    * CAPPED bucket table is persisted — above [[capBuckets]]'s window,
-    * so the one bucket-key exchange, the cap, and both self-join sides
-    * are computed exactly once (persisting below the window would rerun
-    * the count per side; not persisting would rerun the signatures).
-    * The verified pair set (≪ the corpus) is then EAGERLY checkpointed
-    * so the bucket cache can be dropped before returning. Tradeoffs of
-    * that checkpoint: the call evaluates immediately (not lazily), the
-    * pair blocks stay on executors until the returned frame is GC'd,
-    * and the truncated lineage means an executor loss cannot recompute
-    * them (re-run the call in that case).
+  /** End-to-end MinHash-LSH near-dup pairs above `threshold`:
+    * signatures → band folds → capped bucket self-join → verify. Both
+    * self-join sides read the same capped plan, so they share its one
+    * bucket-key exchange (reused, not recomputed) and nothing is
+    * persisted: the result is an ordinary lazy frame. Persisting the
+    * capped table and checkpointing the pairs instead measured slower
+    * (one cache-building and one checkpoint job more per call).
     *
-    * `skewSafe`: set when the corpus carries mass-duplicated blobs —
-    * the bucket cap then trims over-full buckets BEFORE any exchange
-    * can concentrate one in a single task (see [[capBuckets]] for the
-    * shape and its measured common-case cost). The uncapped bucket
-    * table is persisted in that mode because the cap scans it twice.
-    *
-    * `verifyShingleN`: the n of the exact-Jaccard verify measure
-    * ([[gramJaccardVerify]]). The default 1 (token sets) is kept for
-    * callers whose downstream thresholds were tuned against it; pass
-    * `verifyShingleN = shingleN` for the measure-consistent pipeline
-    * whose LSH recall bound holds end-to-end (see q137).
+    * Verify is the exact Jaccard over distinct `shingleN`-gram sets
+    * ([[gramJaccardVerify]]) — the measure the signatures estimate, so
+    * the LSH recall bound holds end to end (see q137).
     */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double = 0.8, k: Int = 64, bands: Int = 16,
-                   shingleN: Int = 3, maxBucketSize: Int = 10000,
-                   skewSafe: Boolean = false,
-                   verifyShingleN: Int = 1): DataFrame = {
-    val sigs = minhashSignatures(df, idCol, textCol, k, shingleN)
-    val buckets = lshBuckets(sigs, idCol, bands, k / bands)
-    val raw =
-      if (skewSafe)
-        buckets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else buckets
-    val capped = capBuckets(raw, Seq("band_id", "band_hash"), maxBucketSize,
-        skewSafe)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = bucketSelfJoin(capped, idCol, Seq("band_id", "band_hash"))
-    val out = gramJaccardVerify(pairs, df, idCol, textCol, verifyShingleN)
+                   shingleN: Int = 3, maxBucketSize: Int = 10000): DataFrame = {
+    require(k % bands == 0, s"bands=$bands must divide k=$k")
+    val keys = Seq("band_id", "band_hash")
+    val buckets = lshBuckets(minhashSignatures(df, idCol, textCol, k, shingleN),
+      idCol, bands, k / bands)
+    val pairs = bucketSelfJoin(capBuckets(buckets, keys, maxBucketSize), idCol, keys)
+    gramJaccardVerify(pairs, df, idCol, textCol, shingleN)
       .filter(col("jaccard") >= threshold)
-      .localCheckpoint(true)
-    capped.unpersist()
-    if (skewSafe) raw.unpersist()
-    out
   }
 
   /** Incremental (daily-batch) MinHash-LSH near-dup detection against a
@@ -551,20 +411,28 @@ object NearDup {
     * the result equals the full-corpus [[nearDupPairs]] recompute
     * restricted to pairs touching `newBatch` — same signatures, same
     * bands, same verify.
+    *
+    * The batch's capped bucket table is persisted for both candidate
+    * branches, and the verified pair set (≪ the corpus) is EAGERLY
+    * checkpointed so that cache can be dropped before returning.
+    * Tradeoffs of that checkpoint: the call evaluates immediately (not
+    * lazily), the pair blocks stay on executors until the returned
+    * frame is GC'd, and the truncated lineage means an executor loss
+    * cannot recompute them (re-run the call in that case).
     */
   def nearDupPairsIncremental(newBatch: DataFrame, indexSigs: DataFrame,
                               corpus: DataFrame, idCol: String, textCol: String,
                               threshold: Double = 0.8, k: Int = 64,
                               bands: Int = 16, shingleN: Int = 3,
-                              maxBucketSize: Int = 10000,
-                              verifyShingleN: Int = 1): DataFrame = {
+                              maxBucketSize: Int = 10000): DataFrame = {
+    require(k % bands == 0, s"bands=$bands must divide k=$k")
     val newSigs = minhashSignatures(newBatch, idCol, textCol, k, shingleN)
     val newKeys = capBuckets(lshBuckets(newSigs, idCol, bands, k / bands),
         Seq("band_id", "band_hash"), maxBucketSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val idxKeys = lshBuckets(indexSigs, idCol, bands, k / bands)
     val pairs = incrementalCandidates(newKeys, idxKeys, idCol)
-    val out = gramJaccardVerify(pairs, corpus, idCol, textCol, verifyShingleN)
+    val out = gramJaccardVerify(pairs, corpus, idCol, textCol, shingleN)
       .filter(col("jaccard") >= threshold)
       .localCheckpoint(true)
     newKeys.unpersist()
@@ -595,7 +463,7 @@ object NearDup {
 
   /** Labeled contrastive pairs for embedding/similarity training:
     * positives are the measure-consistent verified near-dup pairs
-    * ([[nearDupPairs]] at `verifyShingleN = shingleN`), negatives are
+    * ([[nearDupPairs]] at `shingleN`), negatives are
     * deterministic stride partners `(id + negStride) mod N` — id-hash
     * reproducible on any engine/partitioning, no RNG — canonicalized
     * to id1 < id2, kept only when the partner id exists (left semi),
@@ -611,8 +479,7 @@ object NearDup {
   def contrastivePairs(df: DataFrame, idCol: String, textCol: String,
                        threshold: Double = 0.9, shingleN: Int = 3,
                        negStride: Long = 7919L): DataFrame = {
-    val pos = nearDupPairs(df, idCol, textCol, threshold,
-        shingleN = shingleN, verifyShingleN = shingleN)
+    val pos = nearDupPairs(df, idCol, textCol, threshold, shingleN = shingleN)
       .select(col("id1"), col("id2"), lit(1).as("label"))
     val n = df.agg(count(lit(1)).as("__n"))
     val neg = df.select(col(idCol).as("__a")).crossJoin(n)
@@ -666,7 +533,7 @@ object NearDup {
     // partitioning so the join adds no exchange. The (small) pair set
     // is eagerly checkpointed so this cache can be dropped before
     // returning (pair blocks live until the result is GC'd; lineage is
-    // truncated — see nearDupPairs scaladoc).
+    // truncated — see nearDupPairsIncremental scaladoc).
     val keyed = capBuckets(keyed0, Seq("block_id", "block_val"), maxBucketSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = keyed.select(col("block_id"), col("block_val"),
@@ -677,7 +544,7 @@ object NearDup {
     // overwhelming majority of candidates) die in the codegen'd filter
     // and never reach the dedup exchange — only true near-dup pairs,
     // a near-linear set, shuffle for distinct(). shuffle_hash hint: see
-    // candidatePairs (identical self-join shape)
+    // bucketSelfJoin (identical self-join shape)
     val out = a.join(b.hint("shuffle_hash"), Seq("block_id", "block_val"))
       .filter(col("id1") < col("id2"))
       .select(col("id1"), col("id2"),

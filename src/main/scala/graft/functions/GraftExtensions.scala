@@ -1,159 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** Native Catalyst expression computing a k-wide MinHash signature over
-  * token `shingleN`-gram shingles in ONE pass — with `doGenCode`, so
-  * the whole signature stays inside whole-stage codegen.
-  *
-  * The input is the TOKEN array; shingles never materialize as strings.
-  * Each token is XXH64-hashed once (same hash family as the built-in
-  * `xxhash64`), a rolling window of `shingleN` token hashes combines
-  * via chained `XXH64.hashLong`, and each window hash updates k
-  * permutation minima in a tight loop.
-  *
-  * Why custom: the built-in route is per-row string building for every
-  * shingle (`transform`+`slice`+`concat_ws`, interpreted) followed by k
-  * higher-order `aggregate` folds (also interpreted — HOFs don't
-  * participate in codegen). This is the one hot path in the engine
-  * where built-ins genuinely can't express the computation efficiently
-  * — exactly the case SURVEY §7.3 reserves for a custom Expression.
-  *
-  * Permutations are (a_i*h + b_i) mod P with P prime and h pre-reduced
-  * mod P, so no long overflow (ANSI-safe).
-  */
-case class MinHashSignature(child: Expression, k: Int, shingleN: Int)
-    extends UnaryExpression {
-
-  import MinHashSignature._
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash"
-
-  private lazy val (permA, permB) = permConstants(k)
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val th = new Array[Long](n)
-    var j = 0
-    while (j < n) {
-      th(j) =
-        if (arr.isNullAt(j)) Seed
-        else XXH64.hashUTF8String(arr.getUTF8String(j), Seed)
-      j += 1
-    }
-    val mins = Array.fill(k)(Long.MaxValue)
-    val span = math.min(shingleN, math.max(n, 1))
-    val windows = math.max(n - span + 1, if (n > 0) 1 else 0)
-    var w = 0
-    while (w < windows) {
-      var h = Seed
-      var g = 0
-      while (g < span && w + g < n) { h = XXH64.hashLong(th(w + g), h); g += 1 }
-      val hm = ((h % P) + P) % P
-      var i = 0
-      while (i < k) {
-        val v = (hm * permA(i) + permB(i)) % P
-        if (v < mins(i)) mins(i) = v
-        i += 1
-      }
-      w += 1
-    }
-    new GenericArrayData(mins)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("graftMinhashA", permA, "long[]")
-    val bRef = ctx.addReferenceObj("graftMinhashB", permB, "long[]")
-    val xxh = classOf[XXH64].getName
-    val gad = classOf[GenericArrayData].getName
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val th = ctx.freshName("th")
-      val mins = ctx.freshName("mins")
-      val span = ctx.freshName("span")
-      val windows = ctx.freshName("windows")
-      val w = ctx.freshName("w")
-      val g = ctx.freshName("g")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val hm = ctx.freshName("hm")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $c.numElements();
-         |long[] $th = new long[$n];
-         |for (int $j = 0; $j < $n; $j++) {
-         |  $th[$j] = $c.isNullAt($j)
-         |    ? ${Seed}L
-         |    : $xxh.hashUTF8String($c.getUTF8String($j), ${Seed}L);
-         |}
-         |long[] $mins = new long[$k];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |int $span = Math.min($shingleN, Math.max($n, 1));
-         |int $windows = Math.max($n - $span + 1, $n > 0 ? 1 : 0);
-         |for (int $w = 0; $w < $windows; $w++) {
-         |  long $h = ${Seed}L;
-         |  for (int $g = 0; $g < $span && $w + $g < $n; $g++) {
-         |    $h = $xxh.hashLong($th[$w + $g], $h);
-         |  }
-         |  long $hm = (($h % ${P}L) + ${P}L) % ${P}L;
-         |  for (int $i = 0; $i < $k; $i++) {
-         |    long $v = ($hm * $aRef[$i] + $bRef[$i]) % ${P}L;
-         |    if ($v < $mins[$i]) $mins[$i] = $v;
-         |  }
-         |}
-         |${ev.value} = new $gad($mins);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
-}
-
-object MinHashSignature {
-
-  /** Permutation modulus: prime, small enough that a*h+b stays in a
-    * long. Shared by everything MinHash in this engine.
-    */
-  val P = 1000000007L
-
-  /** XXH64 seed — same default as the built-in `xxhash64`. */
-  val Seed = 42L
-
-  /** Deterministic permutation constants in [1, P) / [0, P). */
-  def permConstants(k: Int): (Array[Long], Array[Long]) = {
-    val a = new Array[Long](k)
-    val b = new Array[Long](k)
-    var i = 0
-    while (i < k) {
-      a(i) = ((0x9E3779B97F4A7C15L * (i + 1)) & Long.MaxValue) % (P - 1) + 1
-      b(i) = ((0xBF58476D1CE4E5B9L * (i + 3)) & Long.MaxValue) % P
-      i += 1
-    }
-    (a, b)
-  }
-
-  /** DataFrame-API entry: k-wide MinHash signature over token n-gram
-    * shingles of a token array. Resolves through the function registry,
-    * so the session must carry [[GraftExtensions]] (all graft entry
-    * points do).
-    */
-  def signature(tokens: Column, k: Int, shingleN: Int = 3): Column =
-    call_function("graft_minhash", tokens, lit(k), lit(shingleN))
-}
-
-/** SparkSessionExtensions entry point — makes `graft_minhash` available
-  * both to SQL and to `call_function`. Wire it with
+/** SparkSessionExtensions entry point — makes the `graft_*` functions
+  * available both to SQL and to `call_function`. Wire it with
   * `SparkSession.builder.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
@@ -165,23 +17,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(
-        classOf[MinHashSignature].getName, null, "graft_minhash",
-        "graft_minhash(tokens, k, shingleN) - k-wide MinHash signature over " +
-          "token n-gram shingles.",
-        ""),
-      { exprs: Seq[Expression] =>
-        exprs match {
-          case Seq(arr, k, n) =>
-            MinHashSignature(arr, intLit(k, "k"), intLit(n, "shingleN"))
-          case Seq(arr, k) => MinHashSignature(arr, intLit(k, "k"), 3)
-          case Seq(arr) => MinHashSignature(arr, 64, 3)
-          case other => throw new IllegalArgumentException(
-            s"graft_minhash(array<string>[, k[, shingleN]]) — got ${other.size} args")
-        }
-      }))
     ext.injectFunction((
       FunctionIdentifier("graft_minhash_portable"),
       new ExpressionInfo(

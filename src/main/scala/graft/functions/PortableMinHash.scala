@@ -7,24 +7,21 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Native one-pass k-wide PORTABLE MinHash signature — the
-  * SQL-replayable twin of [[MinHashSignature]] (XXH64), sharing its
-  * loop structure but with arithmetic DuckDB reproduces exactly:
+/** Native one-pass k-wide PORTABLE MinHash signature — the one
+  * MinHash of the engine ([[graft.dedup.NearDup.minhashSignatures]]),
+  * with arithmetic DuckDB reproduces exactly:
   * token hash = [[RollingHash]]'s codepoint ×31 fold mod 1e9+7,
   * shingle hash = the same ×31 fold over `shingleN` token hashes,
   * minima over the universal family (aᵢ·s + bᵢ) mod 1e9+7 with aᵢ, bᵢ
-  * from the two-round multiplicative recipe (see
-  * `NearDup.portableA/portableB` — constants duplicated here so the
-  * expression is self-contained; a unit pins them equal).
+  * from the two-round multiplicative recipe ([[PortableMinHash.constants]]).
   *
   * Why custom: the first formulation (r10) built shingles with a
   * `transform` HOF and aggregated k minima through an explode +
   * 16-min groupBy — HOFs are CodegenFallback, so every token hashed
-  * interpreted, and the explode shuffled token-instance-scale rows.
-  * Measured 27 s at sf0.1 where the XXH64 twin runs ~1 s. This
-  * expression computes the whole signature per ROW inside whole-stage
-  * codegen — signatures become a pure projection again (no shuffle at
-  * all), same plan shape as the production path.
+  * interpreted, and the explode shuffled token-instance-scale rows
+  * (measured 27 s at sf0.1). This expression computes the whole
+  * signature per ROW inside whole-stage codegen — signatures are a
+  * pure projection (no shuffle at all).
   *
   * Documents with fewer than `shingleN` tokens have no shingles and
   * return an EMPTY array (callers explode/filter them away — the same

@@ -148,8 +148,8 @@ object Runner {
                   layout: Layout, source: String, now: Timestamp): Map[String, Long] =
     concurrently(staged.toSeq) { case (table, df) =>
       table -> counted(stamped(df, source, table, lit(now), to_date(lit(now)))) {
-        Bronze.writeLayer(_, s"${layout.bronze}/${table}_raw", "append",
-          partitionCols = Seq("_ingestion_date"))
+        _.write.mode("append").partitionBy("_ingestion_date")
+          .parquet(s"${layout.bronze}/${table}_raw")
       }
     }.toMap
 
@@ -159,13 +159,8 @@ object Runner {
     * references it twice (anti-join and union), so it is materialised
     * once for the write.
     */
-  def stageSilver(spark: SparkSession, layout: Layout): Map[String, Long] = {
-    val transforms: Map[String, (DataFrame => DataFrame, String)] = Map(
-      "products" -> (Silver.products _, "product_id"),
-      "carts" -> (Silver.carts _, "cart_id"),
-      "users" -> (Silver.users _, "email"),
-      "orders" -> (Silver.orders _, "order_id"))
-    concurrently(transforms.toSeq) { case (table, (fn, pk)) =>
+  def stageSilver(spark: SparkSession, layout: Layout): Map[String, Long] =
+    concurrently(Silver.tables) { case (table, pk, fn) =>
       val bronzePath = s"${layout.bronze}/${table}_raw"
       if (!exists(spark, bronzePath)) None
       else {
@@ -179,19 +174,16 @@ object Runner {
         }
       }
     }.flatten.toMap
-  }
 
   /** Stage 3 — quality gate over silver PKs (reference
     * quality_checks.py:52-78; gate semantics from the DAG).
     */
   def stageQuality(spark: SparkSession, layout: Layout): Seq[Quality.CheckResult] = {
-    val pkMap = Map("products" -> Seq("product_id"), "carts" -> Seq("cart_id"),
-      "users" -> Seq("email"), "orders" -> Seq("order_id"))
-    val present = pkMap.flatMap { case (table, pks) =>
+    val present = Silver.tables.flatMap { case (table, pk, _) =>
       val p = s"${layout.silver}/$table"
-      if (exists(spark, p)) Some(table -> ((Tables.read(spark, p), pks))) else None
+      if (exists(spark, p)) Some(table -> ((Tables.read(spark, p), Seq(pk)))) else None
     }
-    val results = concurrently(present.toSeq)(t => Quality.suite(Map(t))).flatten
+    val results = concurrently(present)(t => Quality.suite(Map(t))).flatten
     Quality.gate(results)
     results
   }

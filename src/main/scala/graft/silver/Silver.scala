@@ -74,4 +74,14 @@ object Silver {
         coalesce(col("final_amount"), col("total_amount")).cast("double").as("final_amount"),
         col("_ingestion_timestamp").as("last_updated"))
       .distinct()
+
+  /** The silver tables as the pipeline writes and checks them, in that
+    * order: name, primary key, and the transform from the table's
+    * bronze history.
+    */
+  val tables: Seq[(String, String, DataFrame => DataFrame)] = Seq(
+    ("products", "product_id", products _),
+    ("carts", "cart_id", carts _),
+    ("users", "email", users _),
+    ("orders", "order_id", orders _))
 }

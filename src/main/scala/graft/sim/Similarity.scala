@@ -483,7 +483,7 @@ object Similarity {
     val keyed = graft.dedup.NearDup.capBuckets(keyed0, Seq("key"), maxBucketSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // shuffle_hash hint: same-table self-join at the broadcast
-    // threshold; see NearDup.candidatePairs for the rationale
+    // threshold; see NearDup.bucketSelfJoin for the rationale
     val cand = keyed.select(col("key"), col("id").as("id1"))
       .join(keyed.select(col("key"), col("id").as("id2")).hint("shuffle_hash"),
         Seq("key"))

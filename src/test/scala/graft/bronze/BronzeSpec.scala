@@ -28,10 +28,10 @@ class BronzeSpec extends AnyFunSuite {
     assert(out.filter($"id" === 1 && $"price".isNull).count() == 1)
   }
 
-  test("writeLayer/readLayer round-trip with schema merge") {
+  test("readLayer merges the schemas of two appends") {
     val dir = java.nio.file.Files.createTempDirectory("bronze").toString
-    Bronze.writeLayer(Seq((1, "a")).toDF("id", "v"), dir)
-    Bronze.writeLayer(Seq((2, "b", 1.5)).toDF("id", "v", "w"), dir)
+    Seq((1, "a")).toDF("id", "v").write.mode("append").parquet(dir)
+    Seq((2, "b", 1.5)).toDF("id", "v", "w").write.mode("append").parquet(dir)
     val back = Bronze.readLayer(spark, dir)
     assert(back.columns.toSet == Set("id", "v", "w")) // merged schema
     assert(back.count() == 2)

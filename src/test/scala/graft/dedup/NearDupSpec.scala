@@ -34,6 +34,12 @@ class NearDupSpec extends AnyFunSuite {
       .filter($"id1" === 1 && $"id2" === 2).select("jaccard")
       .as[Double].collect().head
     assert(j == 1.0)
+    // a doc shorter than one shingle: empty signature, no bucket, no pair
+    val withShort = docs.union(Seq((5L, "too short")).toDF("doc_id", "text"))
+    assert(NearDup.minhashSignatures(withShort, "doc_id", "text")
+      .filter($"doc_id" === 5L).select("sig").as[Seq[Long]].head().isEmpty)
+    assert(NearDup.nearDupPairs(withShort, "doc_id", "text", threshold = 0.5)
+      .select("id1", "id2").as[(Long, Long)].collect().toSet == pairs)
   }
 
   test("simhash: identical docs have hamming 0; near dups small hamming") {
@@ -84,7 +90,9 @@ class NearDupSpec extends AnyFunSuite {
 
     val sigs = NearDup.minhashSignatures(corpus, "doc_id", "text")
     val buckets = NearDup.lshBuckets(sigs, "doc_id", bands = 16, rowsPerBand = 4)
-    val capped = NearDup.candidatePairs(buckets, "doc_id", maxBucketSize = 10)
+    val capped = NearDup.bucketSelfJoin(
+        NearDup.capBuckets(buckets, Seq("band_id", "band_hash"), maxBucketSize = 10),
+        "doc_id", Seq("band_id", "band_hash"))
       .as[(Long, Long)].collect().toSet
     // hard bound: candidates are O(cap * N), nowhere near the ~499500
     // blob pairs an uncapped join would emit
@@ -97,40 +105,6 @@ class NearDupSpec extends AnyFunSuite {
         threshold = 0.5, maxBucketSize = 10)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(verified == Set((5000L, 5001L)))
-  }
-
-  test("skew-safe cap: equals the window cap; no window buffers the blob") {
-    // same degenerate corpus as the window-cap test: the 1000-doc blob
-    // must vanish and the real pair survive, with IDENTICAL output —
-    // but via the pre-exchange trim, so no plan node ever holds the
-    // blob's bucket in one task's buffer
-    val blob = (0L until 1000L).map(i => (i, base * 2))
-    val pairDocs = Seq(
-      (5000L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-      (5001L, "alpha beta gamma delta epsilon zeta eta theta iota lambda"))
-    val corpus = (blob ++ pairDocs).toDF("doc_id", "text")
-    val safe = NearDup.nearDupPairs(corpus, "doc_id", "text",
-        threshold = 0.5, maxBucketSize = 10, skewSafe = true)
-      .select("id1", "id2", "jaccard").as[(Long, Long, Double)].collect().toSet
-    val window = NearDup.nearDupPairs(corpus, "doc_id", "text",
-        threshold = 0.5, maxBucketSize = 10)
-      .select("id1", "id2", "jaccard").as[(Long, Long, Double)].collect().toSet
-    assert(safe == window)
-    assert(safe.map(p => (p._1, p._2)) == Set((5000L, 5001L)))
-
-    // plan shape: the trim is a broadcast left-anti on the unshuffled
-    // input — no Window node anywhere, and the only full-table
-    // exchange below the self-join is the explicit bucket-key
-    // repartition the join then reuses
-    val buckets = NearDup.lshBuckets(
-      NearDup.minhashSignatures(corpus, "doc_id", "text"), "doc_id", 16, 4)
-    val capped = NearDup.capBuckets(buckets,
-      Seq("band_id", "band_hash"), 10, skewSafe = true)
-    capped.collect()
-    val plan = capped.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"skew-safe cap planned a window:\n${plan.take(2000)}")
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"over-cap trim is not a broadcast anti-join:\n${plan.take(2000)}")
   }
 
   test("bucket cap: simhashPairs drops the identical blob, keeps near pairs") {
@@ -182,15 +156,28 @@ class NearDupSpec extends AnyFunSuite {
     val indexSigs = NearDup.minhashSignatures(corpus.filter(!isNew),
       "doc_id", "text", shingleN = 3)
     val inc = NearDup.nearDupPairsIncremental(newBatch, indexSigs, corpus,
-        "doc_id", "text", threshold = 0.9, shingleN = 3, verifyShingleN = 3)
+        "doc_id", "text", threshold = 0.9, shingleN = 3)
       .select("id1", "id2", "jaccard").as[(Long, Long, Double)].collect().toSet
     val newIds = newBatch.select("doc_id").as[Long].collect().toSet
-    val full = NearDup.nearDupPairs(corpus, "doc_id", "text", threshold = 0.9,
-        shingleN = 3, verifyShingleN = 3)
+    val fullAll = NearDup.nearDupPairs(corpus, "doc_id", "text", threshold = 0.9,
+        shingleN = 3)
       .select("id1", "id2", "jaccard").as[(Long, Long, Double)].collect().toSet
-      .filter(p => newIds(p._1) || newIds(p._2))
+    val full = fullAll.filter(p => newIds(p._1) || newIds(p._2))
     assert(inc == full)
     assert(inc.nonEmpty) // the fixture corpus has planted near-dups
+    // recall 1 at J >= 0.9, the premise of the q137/q148 oracles: the
+    // full LSH pair set IS the brute-force 3-shingle pair set
+    val shingles = corpus.as[(Long, String)].collect().toSeq.flatMap {
+      case (id, text) =>
+        val toks = text.split("\\s+", -1).toSeq
+        if (toks.size < 3) None
+        else Some(id -> toks.sliding(3).map(_.mkString(" ")).toSet)
+    }
+    val bruteForce = (for {
+      (i1, g1) <- shingles; (i2, g2) <- shingles if i1 < i2
+      j = (g1 & g2).size.toDouble / (g1 | g2).size if j >= 0.9
+    } yield (i1, i2, j)).toSet
+    assert(fullAll == bruteForce)
   }
 
   test("incrementalPrefixFilterPairs == full exact join restricted to incoming") {
@@ -222,7 +209,7 @@ class NearDupSpec extends AnyFunSuite {
     val pos = got.filter(_._3 == 1).map(p => (p._1, p._2)).toSet
     val neg = got.filter(_._3 == 0).map(p => (p._1, p._2)).toSet
     val want = NearDup.nearDupPairs(corpus, "doc_id", "text", threshold = 0.9,
-        shingleN = 3, verifyShingleN = 3)
+        shingleN = 3)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(pos == want && pos.nonEmpty)
     assert(neg.intersect(pos).isEmpty) // no mislabeled true near-dup
@@ -304,18 +291,18 @@ class NearDupSpec extends AnyFunSuite {
     val corpus = graft.Tables.t(spark, "/root/testdata/sf0.001", "documents")
       .select("doc_id", "text")
     // signatures are pure integer folds — bit-identical on any layout
-    val s1 = NearDup.minhashSignaturesPortable(corpus.repartition(7),
-        "doc_id", "text")
-      .as[(Long, Long, Long)].collect().toSet
-    val s2 = NearDup.minhashSignaturesPortable(corpus.coalesce(1),
-        "doc_id", "text")
-      .as[(Long, Long, Long)].collect().toSet
+    val s1 = NearDup.minhashSignatures(corpus.repartition(7),
+        "doc_id", "text", k = 16)
+      .as[(Long, Seq[Long])].collect().toSet
+    val s2 = NearDup.minhashSignatures(corpus.coalesce(1),
+        "doc_id", "text", k = 16)
+      .as[(Long, Seq[Long])].collect().toSet
     assert(s1 == s2 && s1.nonEmpty)
     // every emitted pair really clears the threshold (soundness is
     // exact — the verify step is the true shingle Jaccard), and the
     // template-heavy fixture corpus must yield pairs (recall smoke)
-    val pairs = NearDup.nearDupPairsPortable(corpus, "doc_id", "text",
-        threshold = 0.5)
+    val pairs = NearDup.nearDupPairs(corpus, "doc_id", "text",
+        threshold = 0.5, k = 16, bands = 4)
       .as[(Long, Long, Double)].collect()
     assert(pairs.nonEmpty)
     assert(pairs.forall(p => p._3 >= 0.5 && p._1 < p._2))

@@ -47,12 +47,33 @@ class PortableMinHashSpec extends AnyFunSuite {
     } finally prev.foreach(spark.conf.set("spark.sql.codegen.wholeStage", _))
   }
 
-  test("constants equal the NearDup recipe the oracles replay") {
-    val (a, b) = PortableMinHash.constants(16)
-    for (i <- 0 until 16) {
-      assert(a(i) == graft.dedup.NearDup.portableA(i))
-      assert(b(i) == graft.dedup.NearDup.portableB(i))
-    }
-    assert(PortableMinHash.Mod == graft.dedup.NearDup.PortableMod)
+  test("identical token sequences agree; permuted ones differ") {
+    val df = Seq(
+      (1L, Seq("w1", "w2", "w3", "w4")),
+      (2L, Seq("w1", "w2", "w3", "w4")),
+      (3L, Seq("w4", "w3", "w2", "w1"))).toDF("id", "toks")
+    val sigs = df.select($"id", PortableMinHash.minima($"toks", 16, 3).as("sig"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(sigs(1L) == sigs(2L))
+    assert(sigs(1L) != sigs(3L))
+  }
+
+  test("SQL surface: graft_minhash_portable usable from spark.sql") {
+    Seq((1L, "the quick brown fox jumps over")).toDF("id", "text")
+      .createOrReplaceTempView("pmh_docs")
+    val out = spark.sql(
+      """SELECT id, graft_minhash_portable(split(text, '\\s+'), 4, 3) AS sig
+        |FROM pmh_docs""".stripMargin)
+      .select("sig").as[Seq[Long]].collect().head
+    assert(out == expected("the quick brown fox jumps over".split(" ").toSeq, 4, 3))
+  }
+
+  test("null semantics: null array -> null") {
+    val df = Seq((1, Seq("a", "b", "c")), (2, null: Seq[String]))
+      .toDF("id", "toks")
+    val out = df.select($"id", PortableMinHash.minima($"toks", 4, 3).as("sig"))
+      .orderBy("id").collect()
+    assert(out(0).getSeq[Long](1) == expected(Seq("a", "b", "c"), 4, 3))
+    assert(out(1).isNullAt(1))
   }
 }
