@@ -2570,8 +2570,8 @@ object SparkEntry {
        |QUALIFY rnk <= 5""".stripMargin)),
 
     ("q136_ann_lsh_topk_portable", (s, d) => {
-      // q51's oracled twin: same SRP-LSH plan (bucket equi-join in any
-      // of 8 tables -> exact cosine rank), but every hyperplane sign
+      // SRP-LSH top-k, hash-oracled: bucket equi-join in any of 8
+      // tables -> exact cosine rank, where every plane sign
       // derives from the portable two-round multiplicative hash of its
       // (table, bit, dim) coordinate, so the planes CTE below re-derives
       // them in SQL and the WHOLE path — signatures, candidate set,
@@ -2579,8 +2579,8 @@ object SparkEntry {
       // is replayed in exact order (prepend 0.0, ascending dim), so the
       // sign of every projection is bit-identical
       val emb = t(s, d, "embeddings")
-      Similarity.lshTopKPortable(emb, emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", k = 5, bits = 8, dim = 64, tables = 8, seed = 7L)
+      Similarity.lshTopK(emb, emb.filter(col("vec_id") < 5),
+        "vec_id", "embedding", k = 5, bits = 8, dim = 64, tables = 8)
     }, Some("""WITH planes AS (
        |  SELECT tt.t, bb.b, jj.j,
        |    CASE WHEN (((tt.t*8 + bb.b)*64 + jj.j) % 100000007)
@@ -3411,8 +3411,7 @@ object SparkEntry {
       graft.sim.Bitext.mineLsh(
         labeled.filter(col("lang") === "en").select("vec_id", "embedding"),
         labeled.filter(col("lang") === "de").select("vec_id", "embedding"),
-        "vec_id", "embedding", k = 4, bits = 8, dim = 64, tables = 8,
-        portableSeed = 7L)
+        "vec_id", "embedding", k = 4, bits = 8, dim = 64, tables = 8)
     }, Some("""WITH planes AS (
        |  SELECT tt.t, bb.b, jj.j,
        |    CASE WHEN (((tt.t*8 + bb.b)*64 + jj.j) % 100000007)
@@ -6582,7 +6581,7 @@ object SparkEntry {
        |QUALIFY rnk <= 5""".stripMargin)),
 
     ("q235_hard_negatives_lsh", (s, d) => {
-      // q234's scale shape: SRP-LSH bucket candidates (portable seed,
+      // q234's scale shape: SRP-LSH bucket candidates (portable planes,
       // q136's replayable-plane discipline), exact cosine rank over
       // different-label candidates only. Corpus-side buckets are
       // CAPPED (the q54 contract — mirrored in the oracle's `capped`
@@ -6590,11 +6589,10 @@ object SparkEntry {
       // here are corpus-proportional (every 17th vector), so AQE sizes
       // that join instead of a fixed driver-side broadcast.
       val emb = t(s, d, "embeddings")
-      Similarity.hardNegativesLshPortable(emb,
+      Similarity.hardNegativesLsh(emb,
         emb.filter(col("vec_id") % 17 === 0),
         "vec_id", "embedding", "label", k = 5,
-        bits = 8, dim = 64, tables = 8, seed = 7L,
-        maxBucketSize = 10000)
+        bits = 8, dim = 64, tables = 8, maxBucketSize = 10000)
     }, Some("""WITH planes AS (
        |  SELECT tt.t, bb.b, jj.j,
        |    CASE WHEN (((tt.t*8 + bb.b)*64 + jj.j) % 100000007)
@@ -7093,8 +7091,8 @@ object SparkEntry {
       // so it demonstrates nothing.)
       val emb = t(s, d, "embeddings").select("vec_id", "embedding")
       val labeled = emb.withColumn("__b", element_at(
-          graft.functions.SrpSignatures.portableBuckets(
-            Similarity.toDouble(col("embedding")), 3, 64, 1, 7L), 1))
+          graft.functions.SrpSignatures.buckets(
+            Similarity.toDouble(col("embedding")), 3, 64, 1), 1))
         .withColumn("label", when(col("vec_id") % 13 === 0,
           (col("__b") + 1) % 8).otherwise(col("__b")))
         .drop("__b")
@@ -7150,8 +7148,8 @@ object SparkEntry {
       // on this fixture.
       val emb = t(s, d, "embeddings").select("vec_id", "embedding")
       val labeled = emb.withColumn("__b", element_at(
-          graft.functions.SrpSignatures.portableBuckets(
-            Similarity.toDouble(col("embedding")), 3, 64, 1, 7L), 1))
+          graft.functions.SrpSignatures.buckets(
+            Similarity.toDouble(col("embedding")), 3, 64, 1), 1))
         .withColumn("label", when(col("vec_id") % 13 === 0,
           (col("__b") + 1) % 8).otherwise(col("__b")))
         .drop("__b")
@@ -7162,7 +7160,7 @@ object SparkEntry {
       Similarity.knnLabelNoiseLsh(labeled,
         labeled.filter(col("vec_id") % 7 === 0),
         "vec_id", "embedding", "label", k = 10, suspectPpm = 900000L,
-        bits = 4, dim = 64, tables = 8, seed = 7L, maxBucketSize = 10000)
+        bits = 4, dim = 64, tables = 8, maxBucketSize = 10000)
     }, Some("""WITH planes8 AS (
        |  SELECT tt.t, bb.b, jj.j,
        |    CASE WHEN (((tt.t*4 + bb.b)*64 + jj.j) % 100000007)
@@ -7483,8 +7481,7 @@ object SparkEntry {
         t(s, d, "embeddings").select("vec_id", "embedding")
           .filter(col("vec_id") % 7 === 3),
         "vec_id", "embedding", k = 5, thrPct = 50,
-        bits = 4, dim = 64, tables = 8, seed = 7L,
-        maxBucketSize = 10000),
+        bits = 4, dim = 64, tables = 8, maxBucketSize = 10000),
     Some(s"""WITH planes8 AS (
        |  SELECT tt.t, bb.b, jj.j,
        |    CASE WHEN (((tt.t*4 + bb.b)*64 + jj.j) % 100000007)

@@ -412,13 +412,9 @@ object NearDup {
     * restricted to pairs touching `newBatch` — same signatures, same
     * bands, same verify.
     *
-    * The batch's capped bucket table is persisted for both candidate
-    * branches, and the verified pair set (≪ the corpus) is EAGERLY
-    * checkpointed so that cache can be dropped before returning.
-    * Tradeoffs of that checkpoint: the call evaluates immediately (not
-    * lazily), the pair blocks stay on executors until the returned
-    * frame is GC'd, and the truncated lineage means an executor loss
-    * cannot recompute them (re-run the call in that case).
+    * Nothing is persisted: the result is an ordinary lazy frame, and
+    * both candidate branches read the same capped batch plan, whose
+    * bucket-key exchange they share (the [[nearDupPairs]] shape).
     */
   def nearDupPairsIncremental(newBatch: DataFrame, indexSigs: DataFrame,
                               corpus: DataFrame, idCol: String, textCol: String,
@@ -428,15 +424,11 @@ object NearDup {
     require(k % bands == 0, s"bands=$bands must divide k=$k")
     val newSigs = minhashSignatures(newBatch, idCol, textCol, k, shingleN)
     val newKeys = capBuckets(lshBuckets(newSigs, idCol, bands, k / bands),
-        Seq("band_id", "band_hash"), maxBucketSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Seq("band_id", "band_hash"), maxBucketSize)
     val idxKeys = lshBuckets(indexSigs, idCol, bands, k / bands)
     val pairs = incrementalCandidates(newKeys, idxKeys, idCol)
-    val out = gramJaccardVerify(pairs, corpus, idCol, textCol, shingleN)
+    gramJaccardVerify(pairs, corpus, idCol, textCol, shingleN)
       .filter(col("jaccard") >= threshold)
-      .localCheckpoint(true)
-    newKeys.unpersist()
-    out
   }
 
   /** Candidate pairs of [[nearDupPairsIncremental]]: the batch's capped

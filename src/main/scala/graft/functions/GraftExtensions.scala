@@ -186,24 +186,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_srp_buckets"),
       new ExpressionInfo(
         classOf[SrpSignatures].getName, null, "graft_srp_buckets",
-        "graft_srp_buckets(vec, bits, dim, tables[, seed]) - multi-table " +
-          "SRP-LSH buckets; seed >= 0 selects portable-hash planes.",
+        "graft_srp_buckets(vec, bits, dim, tables) - multi-table " +
+          "SRP-LSH buckets over portable-hash planes.",
         ""),
       { exprs: Seq[Expression] =>
-        def longLit(e: Expression, what: String): Long = e match {
-          case Literal(v: Long, _) => v
-          case Literal(v: Int, _) => v.toLong
-          case other => throw new IllegalArgumentException(
-            s"$what must be an integer literal, got $other")
-        }
         exprs match {
           case Seq(vec, b, d, t) =>
             SrpSignatures(vec, intLit(b, "bits"), intLit(d, "dim"), intLit(t, "tables"))
-          case Seq(vec, b, d, t, s) =>
-            SrpSignatures(vec, intLit(b, "bits"), intLit(d, "dim"),
-              intLit(t, "tables"), longLit(s, "seed"))
           case other => throw new IllegalArgumentException(
-            s"graft_srp_buckets(vec, bits, dim, tables[, seed]) — got ${other.size} args")
+            s"graft_srp_buckets(vec, bits, dim, tables) — got ${other.size} args")
         }
       }))
   }

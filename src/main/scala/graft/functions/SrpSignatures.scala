@@ -6,58 +6,38 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import graft.operators.Sample
 
 /** Native Catalyst expression computing ALL multi-table
   * signed-random-projection LSH bucket signatures of an embedding in one
-  * pass: for each of `tables` hash tables and each of `bits` hyperplanes
-  * (entries ±1, fixed seed), accumulate the signed sum over the vector's
-  * dimensions and pack the sign bits — `tables × bits × dim` fused
-  * multiply-adds inside whole-stage codegen.
-  *
-  * Why custom: the built-in formulation is `tables × bits` separate
-  * interpreted `zip_with`+`aggregate` folds, each walking the whole
-  * vector — measured as the dominant cost of the ANN queries. Same
-  * output as [[graft.sim.Similarity.srpSignature]] with seed `1000+t`.
+  * pass: for each of `tables` hash tables and each of `bits` planes
+  * (entries ±1), accumulate the signed sum over the vector's dimensions
+  * and pack the sign bits — `tables × bits × dim` fused multiply-adds
+  * inside whole-stage codegen, instead of `tables × bits` interpreted
+  * `zip_with` + `aggregate` folds each walking the whole vector.
   *
   * Output: array<long> of length `tables`; element t is the bucket of
-  * hash table t.
+  * hash table t (bit b set when projection b is `>= 0`).
   *
-  * Sign derivation: `portableSeed < 0` (default) keeps the original
-  * JVM-Random planes. `portableSeed >= 0` derives each sign from the
-  * ENGINE-PORTABLE two-round multiplicative hash
-  * ([[graft.operators.Sample.hashMod2]] arithmetic) of the plane
-  * coordinate `(t·bits + b)·dim + d` — plain integer arithmetic any SQL
-  * engine replays, which is what lets an SRP-LSH top-k be
-  * oracle-checked end-to-end (q136) instead of rows-only (q51's
-  * JVM-Random planes cannot be re-derived in SQL).
+  * Planes are engine-portable: the sign of plane coordinate
+  * `(t·bits + b)·dim + d` is [[graft.operators.Sample.planeSign]] at
+  * [[SrpSignatures.Seed]] — plain integer arithmetic any SQL engine
+  * replays, and the projection is the ascending-dim left fold, so an
+  * oracle re-derives every bucket and the SRP-LSH queries (q136, q223,
+  * q235, q248, q256) are hash-checked end to end.
   */
-case class SrpSignatures(child: Expression, bits: Int, dim: Int, tables: Int,
-                         portableSeed: Long = -1L)
+case class SrpSignatures(child: Expression, bits: Int, dim: Int, tables: Int)
     extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_srp_buckets"
 
-  // signs(t)(b*dim + d) ∈ {-1, +1}: JVM-Random (identical to
-  // Similarity.hyperplanes) or the portable hash of the coordinate
-  private lazy val signs: Array[Array[Byte]] =
-    if (portableSeed >= 0L) {
-      Array.tabulate(tables) { t =>
-        Array.tabulate(bits * dim) { bd =>
-          val k = t.toLong * bits * dim + bd
-          // Sample.hashMod2(k, 1000000, portableSeed), driver-side:
-          // every intermediate < 2^63 (see hashMod2's bound note)
-          val h = (k % graft.operators.Sample.Prime) *
-            (graft.operators.Sample.Mult + portableSeed) %
-            graft.operators.Sample.Prime2 *
-            graft.operators.Sample.Mult2 % 1000000L
-          if (h < 500000L) 1.toByte else (-1).toByte
-        }
-      }
-    } else Array.tabulate(tables) { t =>
-      val rnd = new scala.util.Random(1000L + t)
-      Array.fill(bits * dim)(if (rnd.nextBoolean()) 1.toByte else (-1).toByte)
+  // signs(t)(b*dim + d) ∈ {-1, +1}: the portable hash of the coordinate
+  private lazy val signs: Array[Array[Byte]] = Array.tabulate(tables) { t =>
+    Array.tabulate(bits * dim) { bd =>
+      Sample.planeSign(t.toLong * bits * dim + bd, SrpSignatures.Seed).toByte
     }
+  }
 
   override protected def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
@@ -121,17 +101,12 @@ case class SrpSignatures(child: Expression, bits: Int, dim: Int, tables: Int,
 }
 
 object SrpSignatures {
+  /** The plane seed every oracle replays (`Mult + 7 = 2654435768`). */
+  private[graft] val Seed = 7L
+
   /** DataFrame-API entry (vector must be array<double>). Resolves via
     * the registry; the session must carry [[GraftExtensions]].
     */
   def buckets(vec: Column, bits: Int, dim: Int, tables: Int): Column =
     call_function("graft_srp_buckets", vec, lit(bits), lit(dim), lit(tables))
-
-  /** Portable-hash planes variant — seed >= 0; see the class doc. */
-  def portableBuckets(vec: Column, bits: Int, dim: Int, tables: Int,
-                      seed: Long): Column = {
-    require(seed >= 0L, s"portable seed must be >= 0, got $seed")
-    call_function("graft_srp_buckets", vec, lit(bits), lit(dim), lit(tables),
-      lit(seed))
-  }
 }

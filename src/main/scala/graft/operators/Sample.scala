@@ -71,6 +71,22 @@ object Sample {
     pmod(((id % Prime) * (Mult + seed) % Prime2) * Mult2, lit(m))
   }
 
+  /** Driver-side ±1 plane entry of coordinate `k`: `+1` when
+    * `hashMod2(k, 1000000, seed) < 500000`, else `-1` — the one sign
+    * hash behind the portable projection planes
+    * ([[graft.functions.SrpSignatures]],
+    * [[graft.sim.Similarity.randomProject]]), so an oracle re-derives
+    * every plane in SQL. Same seed bound as
+    * [[hashMod2]]: past 6e10, `(k % Prime) * (Mult + seed)` overflows a
+    * Long, turns h negative and biases every plane to +1.
+    */
+  private[graft] def planeSign(k: Long, seed: Long): Int = {
+    require(seed >= 0 && seed <= 60000000000L,
+      s"seed must be in [0, 6e10] to stay overflow-safe, got $seed")
+    val h = (k % Prime) * (Mult + seed) % Prime2 * Mult2 % 1000000L
+    if (h < 500000L) 1 else -1
+  }
+
   /** Per-row permille bucket in [0, 1000) from the seeded two-round
     * hash — the shared sampler bucket.
     */

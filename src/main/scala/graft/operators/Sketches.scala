@@ -83,10 +83,10 @@ object Sketches {
       .groupBy(key).agg(count(lit(1)).as("n"))
       .filter(col("n") >= minCount)
     if (ownsPersist) {
-      // Materialize off the cache, then free it (the
-      // nearDupPairsIncremental pattern: eager result, truncated
-      // lineage, blocks live until GC). Only runs when WE created the
-      // cache — a caller-owned cache is left for the caller to manage.
+      // Materialize off the cache, then free it (eager result,
+      // truncated lineage, blocks live until GC). Only runs when WE
+      // created the cache — a caller-owned cache is left for the
+      // caller to manage.
       val ckpt = out.localCheckpoint(true)
       in.unpersist()
       ckpt

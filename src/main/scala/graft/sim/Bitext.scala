@@ -26,12 +26,12 @@ import org.apache.spark.sql.functions._
   * |src|×|tgt| candidate product is the quadratic object, correct at
   * eval/probe scale and the recall yardstick. [[mineLsh]] is the
   * corpus-scale path: candidates confined to multi-table SRP-LSH
-  * bucket collisions (`Similarity.lshKeys` — the q136/q199
-  * machinery), so the pair table is Σ per-bucket products, never the
-  * full bipartite product; neighborhood means are then taken over
-  * the surviving candidates (standard practice — the margin
-  * denominator only needs the NEAR neighborhood, which is exactly
-  * what LSH retains). Both paths keep every window partitioned by an
+  * bucket collisions (`Similarity.lshKeyed` — the q136/q223
+  * machinery, portable planes), so the pair table is Σ per-bucket
+  * products, never the full bipartite product; neighborhood means are
+  * then taken over the surviving candidates (standard practice — the
+  * margin denominator only needs the NEAR neighborhood, which is
+  * exactly what LSH retains). Both paths keep every window partitioned by an
   * endpoint id — nothing global, nothing single-task.
   */
 object Bitext {
@@ -59,18 +59,12 @@ object Bitext {
     * collision at all drop out (no candidates ⇒ no match claim).
     */
   def mineLsh(src: DataFrame, tgt: DataFrame, idCol: String, vecCol: String,
-              k: Int, bits: Int, dim: Int, tables: Int,
-              portableSeed: Long = -1L): DataFrame = {
-    def keyed(df: DataFrame, as: String, vecAs: String) = {
-      val v = df.select(col(idCol).as(as),
-        Similarity.toDouble(col(vecCol)).as(vecAs))
-      v.select(col(as), col(vecAs),
-        explode(Similarity.lshKeys(col(vecAs), bits, dim, tables,
-          portableSeed)).as("__key"))
-    }
-    val cand = keyed(src, "src_id", "__sv")
-      .join(keyed(tgt, "tgt_id", "__tv").select("tgt_id", "__tv", "__key"),
-        Seq("__key"))
+              k: Int, bits: Int, dim: Int, tables: Int): DataFrame = {
+    val s = Similarity.lshKeyed(src, Seq(col(idCol).as("src_id")), vecCol,
+      "__sv", bits, dim, tables, keyAs = "__key")
+    val t = Similarity.lshKeyed(tgt, Seq(col(idCol).as("tgt_id")), vecCol,
+      "__tv", bits, dim, tables, keyAs = "__key")
+    val cand = s.join(t.select("tgt_id", "__tv", "__key"), Seq("__key"))
       .select("src_id", "tgt_id", "__sv", "__tv")
       .dropDuplicates("src_id", "tgt_id")
     marginTop1(cand.select(col("src_id"), col("tgt_id"),

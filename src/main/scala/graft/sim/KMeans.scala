@@ -32,25 +32,12 @@ import org.apache.spark.sql.types.DecimalType
   * tiebreaks, and every recentered coordinate replay in plain SQL:
   * the whole TRAINED assignment is hash-oracled (q250), not
   * rows-only. An empty cluster keeps its previous centroid (both
-  * sides of the oracle). `initCandidates > 1` switches to an
-  * oversample-then-reduce seeding (the k-means‖ idea with a
-  * deterministic reduction): collect `initCandidates·k` hash-smallest
-  * vectors — still a k-bounded collect — and pick k by greedy
-  * farthest-first (max-min cosine distance, first candidate = the
-  * hash-smallest, ties to the lower candidate rank), which cannot
-  * seed all k centroids inside one dense region the way a plain hash
-  * sample can on skewed corpora. The default (1) is the oracled
-  * registry behavior, bit-for-bit.
+  * sides of the oracle).
   *
-  * Convergence: `tolerance` stops iterating once no centroid's
-  * recenter step moves it by more than `tolerance` (L2); the returned
-  * assignment is the one under the centroids BEFORE that final
-  * sub-tolerance move. At the default 0.0 this fires only on EXACT
-  * fixpoints, where the next assignment is identical anyway — so
-  * early-stop == full-iters bit-for-bit (unit-pinned) and the
-  * registered oracle is unaffected; convergence-grade runs pass
-  * `iters` as a cap and a real tolerance instead of hard-coding
-  * rounds.
+  * Convergence: iterating stops early at an EXACT fixpoint (a
+  * recenter step that moves no centroid), where the next assignment
+  * is identical anyway — so early-stop == full-iters bit-for-bit
+  * (unit-pinned) and the registered oracle is unaffected.
   *
   * Degenerate inputs fail loudly, never silently (the CentroidScores
   * score divides by the centroid norm — a zero-norm centroid would
@@ -67,71 +54,28 @@ object KMeans {
   private def l2(v: Seq[Double]): Double =
     math.sqrt(v.map(x => x * x).sum)
 
-  /** Greedy farthest-first reduction of `cand` (in hash rank order) to
-    * k seeds: start from the hash-smallest, then repeatedly take the
-    * candidate whose minimum cosine distance to the chosen set is
-    * largest (ties to the lower rank). Driver-side over ≤ c·k rows.
-    */
-  private[sim] def farthestFirst(cand: IndexedSeq[Seq[Double]],
-                                 k: Int): Seq[Seq[Double]] = {
-    val norms = cand.map(l2)
-    def cosDist(i: Int, j: Int): Double = {
-      val dot = cand(i).lazyZip(cand(j)).map(_ * _).sum
-      1.0 - dot / (norms(i) * norms(j))
-    }
-    val chosen = scala.collection.mutable.ArrayBuffer(0)
-    val minDist = Array.tabulate(cand.size)(i => cosDist(i, 0))
-    while (chosen.size < k) {
-      var best = -1
-      var bestD = Double.NegativeInfinity
-      var i = 0
-      while (i < cand.size) {
-        if (!chosen.contains(i) && minDist(i) > bestD) {
-          best = i; bestD = minDist(i)
-        }
-        i += 1
-      }
-      chosen += best
-      var j = 0
-      while (j < cand.size) {
-        val d = cosDist(j, best)
-        if (d < minDist(j)) minDist(j) = d
-        j += 1
-      }
-    }
-    chosen.map(cand(_)).toSeq
-  }
-
   def fit(emb: DataFrame, idCol: String, vecCol: String, k: Int = 8,
-          iters: Int = 2, seed: Long = 7L, tolerance: Double = 0.0,
-          initCandidates: Int = 1): DataFrame = {
+          iters: Int = 2, seed: Long = 7L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(tolerance >= 0, s"tolerance must be >= 0, got $tolerance")
-    require(initCandidates >= 1,
-      s"initCandidates must be >= 1, got $initCandidates")
     val acc = DecimalType(30, 15)
     val v = emb
       .select(col(idCol), Similarity.toDouble(col(vecCol)).as("__v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // deterministic init: the c·k portable-hash-smallest vectors, in
-    // hash order (c = 1: cluster id = rank, the oracled default;
-    // c > 1: greedy farthest-first reduction) — c·k rows collected,
-    // never the corpus
-    val cand = v
+    // deterministic init: the k portable-hash-smallest vectors, in
+    // hash order (cluster id = rank) — k rows collected, never the
+    // corpus
+    var cents: Seq[Seq[Double]] = v
       .orderBy(graft.operators.Sample.hashMod2(col(idCol), 1000000000L,
         seed), col(idCol))
-      .limit(k * initCandidates)
+      .limit(k)
       .select("__v")
-      .collect().map(_.getSeq[Double](0).toSeq).toIndexedSeq
-    require(cand.nonEmpty, "kMeans needs a non-empty corpus")
-    require(cand.forall(l2(_) > 0),
+      .collect().map(_.getSeq[Double](0).toSeq).toSeq
+    require(cents.nonEmpty, "kMeans needs a non-empty corpus")
+    require(cents.forall(l2(_) > 0),
       "kMeans init drew a zero vector — the spherical score divides " +
         "by centroid norms; drop zero embeddings upstream or reseed")
-    var cents: Seq[Seq[Double]] =
-      if (initCandidates == 1 || cand.size <= k) cand.take(k).toSeq
-      else farthestFirst(cand, k)
     val dim = cents.head.size
 
     def assign(): DataFrame = {
@@ -169,7 +113,7 @@ object KMeans {
       val shift = cents.lazyZip(next).map { (a, b) =>
         l2(a.lazyZip(b).map(_ - _).toSeq)
       }.max
-      if (shift <= tolerance) converged = true
+      if (shift == 0.0) converged = true
       else {
         cents = next.map(_.toSeq).toSeq
         assigned = assign()

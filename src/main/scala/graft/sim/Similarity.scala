@@ -12,9 +12,7 @@ import org.apache.spark.sql.functions._
   *    but O(N·Q); use it for small query batches or as ground truth.
   *  - signed-random-projection LSH: corpus and queries hash to bucket
   *    signatures; candidates come from an equi-join on the bucket key,
-  *    so at 100 TB the all-pairs product never forms. Probing also
-  *    flips each signature bit (Hamming-1 multi-probe) to recover
-  *    near-boundary neighbors.
+  *    so at 100 TB the all-pairs product never forms.
   *
   * All arithmetic is codegen'd higher-order functions (`zip_with` +
   * `aggregate`) over doubles — no UDF, deterministic fold order.
@@ -60,7 +58,7 @@ object Similarity {
     * training batch, never the whole corpus, so the full cross product
     * stays off the table — cosine-ranked per anchor with the
     * [[bruteTopK]] determinism discipline (id tiebreak). The scale path
-    * is [[hardNegativesLshPortable]].
+    * is [[hardNegativesLsh]].
     */
   def hardNegatives(corpus: DataFrame, anchors: DataFrame, idCol: String,
                     vecCol: String, labelCol: String, k: Int): DataFrame = {
@@ -82,8 +80,8 @@ object Similarity {
   /** [[hardNegatives]]' scale shape: candidates from SRP-LSH bucket
     * equi-joins (any of `tables` tables; never a cross product), then
     * the exact cosine rank over candidates with a different label.
-    * Portable-seed signatures so the whole path — buckets, candidate
-    * set, ranking — replays in SQL (the q136 discipline). Hard
+    * Portable planes, so the whole path — buckets, candidate set,
+    * ranking — replays in SQL (the q136 discipline). Hard
     * negatives are exactly the high-cosine region LSH buckets are
     * dense in, so candidate recall concentrates where the miner needs
     * it; misses only soften the negatives, never corrupt a label
@@ -106,22 +104,16 @@ object Similarity {
     * Candidates are therefore ≤ maxBucketSize · anchor-bucket rows per
     * bucket — linear in the anchor count, at any corpus size.
     */
-  def hardNegativesLshPortable(corpus: DataFrame, anchors: DataFrame,
-                               idCol: String, vecCol: String,
-                               labelCol: String, k: Int, bits: Int = 8,
-                               dim: Int = 64, tables: Int = 8,
-                               seed: Long = 7L,
-                               maxBucketSize: Int = 10000): DataFrame = {
-    require(seed >= 0L, s"portable seed must be >= 0, got $seed")
-    val c0 = corpus.select(col(idCol).as("neighbor_id"),
-        col(labelCol).as("nl"), toDouble(col(vecCol)).as("cv"))
-      .select(col("neighbor_id"), col("nl"), col("cv"),
-        explode(lshKeys(col("cv"), bits, dim, tables, seed)).as("key"))
+  def hardNegativesLsh(corpus: DataFrame, anchors: DataFrame,
+                       idCol: String, vecCol: String, labelCol: String,
+                       k: Int, bits: Int = 8, dim: Int = 64,
+                       tables: Int = 8,
+                       maxBucketSize: Int = 10000): DataFrame = {
+    val c0 = lshKeyed(corpus, Seq(col(idCol).as("neighbor_id"),
+      col(labelCol).as("nl")), vecCol, "cv", bits, dim, tables)
     val c = graft.dedup.NearDup.capBuckets(c0, Seq("key"), maxBucketSize)
-    val q = anchors.select(col(idCol).as("query_id"),
-        col(labelCol).as("ql"), toDouble(col(vecCol)).as("qv"))
-      .select(col("query_id"), col("ql"), col("qv"),
-        explode(lshKeys(col("qv"), bits, dim, tables, seed)).as("key"))
+    val q = lshKeyed(anchors, Seq(col(idCol).as("query_id"),
+      col(labelCol).as("ql")), vecCol, "qv", bits, dim, tables)
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
     c.join(q, Seq("key"))
@@ -171,8 +163,8 @@ object Similarity {
   /** [[knnLabelNoise]]'s scale shape — the corpus-wide audit, where
     * anchors ∝ N and the brute corpus × anchors product is off the
     * table: neighbor candidates come from capped SRP-LSH bucket
-    * equi-joins (the [[hardNegativesLshPortable]] machinery — portable
-    * seed so the whole path replays in SQL, corpus buckets capped via
+    * equi-joins (the [[hardNegativesLsh]] machinery — portable planes
+    * so the whole path replays in SQL, corpus buckets capped via
     * [[graft.dedup.NearDup.capBuckets]], NO broadcast hint so AQE
     * sizes the anchor side), then the k nearest CANDIDATES (any label)
     * are ranked by exact cosine and the disagreement share computed
@@ -189,18 +181,12 @@ object Similarity {
                        idCol: String, vecCol: String, labelCol: String,
                        k: Int, suspectPpm: Long = 500000L,
                        bits: Int = 8, dim: Int = 64, tables: Int = 8,
-                       seed: Long = 7L,
                        maxBucketSize: Int = 10000): DataFrame = {
-    require(seed >= 0L, s"portable seed must be >= 0, got $seed")
-    val c0 = corpus.select(col(idCol).as("neighbor_id"),
-        col(labelCol).as("__nl"), toDouble(col(vecCol)).as("cv"))
-      .select(col("neighbor_id"), col("__nl"), col("cv"),
-        explode(lshKeys(col("cv"), bits, dim, tables, seed)).as("key"))
+    val c0 = lshKeyed(corpus, Seq(col(idCol).as("neighbor_id"),
+      col(labelCol).as("__nl")), vecCol, "cv", bits, dim, tables)
     val c = graft.dedup.NearDup.capBuckets(c0, Seq("key"), maxBucketSize)
-    val q = anchors.select(col(idCol).as("query_id"),
-        col(labelCol).as("__ql"), toDouble(col(vecCol)).as("qv"))
-      .select(col("query_id"), col("__ql"), col("qv"),
-        explode(lshKeys(col("qv"), bits, dim, tables, seed)).as("key"))
+    val q = lshKeyed(anchors, Seq(col(idCol).as("query_id"),
+      col(labelCol).as("__ql")), vecCol, "qv", bits, dim, tables)
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
     c.join(q, Seq("key"))
@@ -263,7 +249,7 @@ object Similarity {
 
   /** [[knnOutliers]]' corpus-wide scale shape (anchors ∝ N): neighbor
     * candidates from capped SRP-LSH bucket equi-joins — the
-    * [[knnLabelNoiseLsh]] machinery (portable seed, corpus buckets
+    * [[knnLabelNoiseLsh]] machinery (portable planes, corpus buckets
     * capped, no broadcast hint) — with the score over the k nearest
     * CANDIDATES. The LSH recall loss is the POINT here, not a caveat:
     * a vector that collides with nothing across all `tables` hash
@@ -290,23 +276,17 @@ object Similarity {
   def knnOutliersLsh(corpus: DataFrame, anchors: DataFrame, idCol: String,
                      vecCol: String, k: Int, thrPct: Int = 50,
                      bits: Int = 8, dim: Int = 64, tables: Int = 8,
-                     seed: Long = 7L, maxBucketSize: Int = 10000)
-      : DataFrame = {
-    require(seed >= 0L, s"portable seed must be >= 0, got $seed")
-    val c0 = corpus.select(col(idCol).as("neighbor_id"),
-        toDouble(col(vecCol)).as("cv"))
-      .select(col("neighbor_id"), col("cv"),
-        explode(lshKeys(col("cv"), bits, dim, tables, seed)).as("key"))
+                     maxBucketSize: Int = 10000): DataFrame = {
+    val c0 = lshKeyed(corpus, Seq(col(idCol).as("neighbor_id")), vecCol,
+      "cv", bits, dim, tables)
     // capBuckets semantics, with the over-cap key set kept visible so
     // capped-away anchors can be told apart from truly isolated ones
     val over = c0.groupBy("key").agg(count(lit(1)).as("__n"))
       .filter(col("__n") > maxBucketSize).select("key")
       .localCheckpoint(true)
     val c = c0.join(over, Seq("key"), "left_anti")
-    val q = anchors.select(col(idCol).as("query_id"),
-        toDouble(col(vecCol)).as("qv"))
-      .select(col("query_id"), col("qv"),
-        explode(lshKeys(col("qv"), bits, dim, tables, seed)).as("key"))
+    val q = lshKeyed(anchors, Seq(col(idCol).as("query_id")), vecCol, "qv",
+      bits, dim, tables)
     val cappedAnchors = q.join(over, Seq("key"), "left_semi")
       .select(col("query_id")).distinct()
       .withColumn("capped", lit(true))
@@ -371,41 +351,19 @@ object Similarity {
           .as("mean_pairwise_dot"))
   }
 
-  /** Deterministic signed-random-projection hyperplanes: `bits` vectors
-    * of ±1 over `dim` dimensions, derived from a fixed-seed generator
-    * (seeded per hash table so tables are independent).
-    */
-  private def hyperplanes(bits: Int, dim: Int, seed: Long): Array[Array[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    Array.fill(bits, dim)(if (rnd.nextBoolean()) 1.0 else -1.0)
-  }
-
-  /** LSH bucket signature: sign bits of the projections packed into one
-    * long. A pure projection — computed in one scan, no shuffle.
-    */
-  def srpSignature(vec: Column, bits: Int, dim: Int, seed: Long = 42L): Column = {
-    val planes = hyperplanes(bits, dim, seed)
-    (0 until bits).map { b =>
-      val proj = aggregate(
-        zip_with(vec, array(planes(b).map(lit).toIndexedSeq: _*), (x, w) => x * w),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj >= 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
   /** Johnson–Lindenstrauss random projection to `outDims` dimensions
     * with engine-portable ±1 planes (Achlioptas 2003's database-
     * friendly construction: entries ±1 scaled by 1/√outDims preserve
     * pairwise distances in expectation like Gaussian planes, at
     * integer-hash cost) — the dimensionality-reduction step before
     * clustering / coarse ANN when 64-d embeddings are still too wide
-    * to shuffle at corpus scale. Plane sign (j, d) comes from the same
-    * portable two-round hash as [[graft.functions.SrpSignatures]]'
-    * portable mode (coordinate `j·dim + d` through
-    * [[graft.operators.Sample.hashMod2]] arithmetic), so an oracle
-    * re-derives every plane in SQL. The projection itself runs through
-    * the native fused [[graft.functions.CentroidScores]] matrix-dot
-    * expression — one `outDims × dim` codegen loop per row, a pure
+    * to shuffle at corpus scale. Plane sign (j, d) is
+    * [[graft.operators.Sample.planeSign]] of coordinate `j·dim + d` at
+    * `seed` (the sign hash of [[graft.functions.SrpSignatures]]'
+    * planes), so an oracle re-derives every plane in SQL. The
+    * projection itself runs through the native fused
+    * [[graft.functions.CentroidScores]] matrix-dot expression — one
+    * `outDims × dim` codegen loop per row, a pure
     * projection with no shuffle at any scale. Output: array<double>,
     * element j = dot(vec, plane_j) / √dim — the left-to-right signed
     * sum divided by the plane norm (every ±1 plane has norm exactly
@@ -417,87 +375,64 @@ object Similarity {
   def randomProject(vec: Column, outDims: Int, dim: Int,
                     seed: Long): Column = {
     require(outDims >= 1 && dim >= 1, s"bad dims: $outDims x $dim")
-    // same bound hashMod2 enforces: the driver-side replica below does
-    // (k % Prime) * (Mult + seed) in Long, so seed beyond 6e10 would
-    // silently overflow to negative h and bias every plane to +1 —
-    // diverging from the documented SQL-replayable construction
-    require(seed >= 0L && seed <= 60000000000L,
-      s"portable seed must be in [0, 6e10] to stay overflow-safe, got $seed")
-    import graft.operators.Sample
     val planes: Seq[Seq[Double]] = Seq.tabulate(outDims) { j =>
       Seq.tabulate(dim) { d =>
-        val k = j.toLong * dim + d
-        val h = (k % Sample.Prime) * (Sample.Mult + seed) %
-          Sample.Prime2 * Sample.Mult2 % 1000000L
-        if (h < 500000L) 1.0 else -1.0
+        graft.operators.Sample.planeSign(j.toLong * dim + d, seed).toDouble
       }
     }
     graft.functions.CentroidScores.scores(toDouble(vec),
       org.apache.spark.sql.functions.typedlit(planes))
   }
 
-  /** (table_id, bucket) keys for multi-table SRP LSH: `tables`
-    * independent sign-hash tables of `bits` bits each. Standard LSH
-    * recall amplification — a near neighbor only needs to collide in
-    * ONE table. Emits `tables` rows per vector (the index-size/recall
-    * tradeoff; candidates still come from equi-joins, never a cross
-    * product). All signatures come from the native codegen'd
-    * [[graft.functions.SrpSignatures]] expression — one fused pass over
-    * the vector instead of tables×bits interpreted folds.
+  /** `df`'s `cols` and its vector as array<double> `vecAs`, exploded
+    * to one row per (table_id, bucket) key `keyAs` of multi-table SRP
+    * LSH: `tables` independent sign-hash tables of `bits` bits each.
+    * Standard LSH recall amplification — a near neighbor only needs to
+    * collide in ONE table. Emits `tables` rows per vector (the
+    * index-size/recall tradeoff; candidates still come from
+    * equi-joins, never a cross product). All signatures come from the
+    * native codegen'd [[graft.functions.SrpSignatures]] expression — one
+    * fused pass over the vector instead of tables×bits interpreted
+    * folds. The one keying step of every SRP-LSH operator here and of
+    * [[Bitext.mineLsh]].
     */
-  private[sim] def lshKeys(vec: Column, bits: Int, dim: Int, tables: Int,
-                           portableSeed: Long = -1L): Column = {
-    val buckets =
-      if (portableSeed >= 0L)
-        graft.functions.SrpSignatures.portableBuckets(vec, bits, dim, tables,
-          portableSeed)
-      else graft.functions.SrpSignatures.buckets(vec, bits, dim, tables)
+  private[sim] def lshKeyed(df: DataFrame, cols: Seq[Column], vecCol: String,
+                            vecAs: String, bits: Int, dim: Int, tables: Int,
+                            keyAs: String = "key"): DataFrame = {
+    val v = df.select(cols :+ toDouble(col(vecCol)).as(vecAs): _*)
+    val buckets = graft.functions.SrpSignatures.buckets(col(vecAs), bits,
+      dim, tables)
     // zip table index with its bucket value
-    zip_with(
-      sequence(lit(0), lit(tables - 1)), buckets,
+    val keys = zip_with(sequence(lit(0), lit(tables - 1)), buckets,
       (t, b) => struct(t.as("table_id"), b.as("bucket")))
+    v.select(v.columns.map(col) :+ explode(keys).as(keyAs): _*)
   }
 
   /** Embedding-cosine near-duplicate pairs: multi-table LSH candidates
-    * (equi-join on bucket keys — never all-pairs), candidate pairs
+    * (capped bucket self-join — never all-pairs), candidate pairs
     * deduplicated BEFORE the exact-cosine verify so each pair's cosine
-    * is computed once, then thresholded. The verified pair set (≪ the
-    * corpus) is eagerly checkpointed so the keyed-bucket cache can be
-    * dropped before returning; the pair blocks live until the returned
-    * frame is GC'd, and the truncated lineage cannot recompute after an
-    * executor loss (re-run the call in that case).
+    * is computed once, then thresholded. Both self-join sides read the
+    * same capped plan, so they share its one bucket-key exchange and
+    * nothing is persisted: the result is an ordinary lazy frame.
     */
   def cosineNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
                          threshold: Double, bits: Int = 8, dim: Int = 64,
                          tables: Int = 8, maxBucketSize: Int = 10000): DataFrame = {
-    val keyed0 = emb
-      .select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
-      .select(col("id"),
-        explode(lshKeys(col("v"), bits, dim, tables)).as("key"))
+    val keyed0 = lshKeyed(emb, Seq(col(idCol).as("id")), vecCol, "v", bits,
+        dim, tables)
+      .select("id", "key")
     // A degenerate SRP bucket (e.g. a mass-duplicated embedding, or the
-    // all-zero vector every hyperplane scores 0 on) would self-join
+    // all-zero vector every plane scores 0 on) would self-join
     // N_b² rows before the cosine verify — capped like the text-LSH
-    // path; see NearDup.capBuckets for the recall contract. Persisted
-    // ABOVE the cap window so the self-join reads a cache that already
-    // carries the key partitioning — no further exchange.
+    // path; see NearDup.capBuckets for the recall contract
     val keyed = graft.dedup.NearDup.capBuckets(keyed0, Seq("key"), maxBucketSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // shuffle_hash hint: same-table self-join at the broadcast
-    // threshold; see NearDup.bucketSelfJoin for the rationale
-    val cand = keyed.select(col("key"), col("id").as("id1"))
-      .join(keyed.select(col("key"), col("id").as("id2")).hint("shuffle_hash"),
-        Seq("key"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
+    val cand = graft.dedup.NearDup.bucketSelfJoin(keyed, "id", Seq("key"))
     val vecs = emb.select(col(idCol).as("vid"), toDouble(col(vecCol)).as("vv"))
-    val out = cand
+    cand
       .join(vecs.select(col("vid").as("id1"), col("vv").as("v1")), Seq("id1"))
       .join(vecs.select(col("vid").as("id2"), col("vv").as("v2")), Seq("id2"))
       .select(col("id1"), col("id2"), cosine(col("v1"), col("v2")).as("cosine"))
       .filter(col("cosine") >= threshold)
-      .localCheckpoint(true)
-    keyed.unpersist()
-    out
   }
 
   /** SEMANTIC decontamination — the embedding-space sibling of
@@ -516,7 +451,7 @@ object Similarity {
     * broadcasts). Hot-bucket note: bipartite candidates are bounded
     * by |train ∩ bucket| × |eval ∩ bucket| ≤ |train| · |eval|, the
     * brute bound — the self-join N² hazard does not exist here (same
-    * argument as [[lshTopKPortable]]).
+    * argument as [[lshTopK]]).
     *
     * Recall contract: a pair at cosine 1−ε disagrees on a sign bit
     * with probability ∝ ε per plane, so true contamination (near-
@@ -529,12 +464,9 @@ object Similarity {
                             idCol: String, vecCol: String,
                             threshold: Double, bits: Int = 8,
                             dim: Int = 64, tables: Int = 8): DataFrame = {
-    val t = train.select(col(idCol).as("__tid"), toDouble(col(vecCol)).as("tv"))
-      .select(col("__tid"), col("tv"),
-        explode(lshKeys(col("tv"), bits, dim, tables, -1L)).as("key"))
-    val e = evalSet.select(toDouble(col(vecCol)).as("ev"))
-      .select(col("ev"),
-        explode(lshKeys(col("ev"), bits, dim, tables, -1L)).as("key"))
+    val t = lshKeyed(train, Seq(col(idCol).as("__tid")), vecCol, "tv", bits,
+      dim, tables)
+    val e = lshKeyed(evalSet, Nil, vecCol, "ev", bits, dim, tables)
     val flagged = t.join(broadcast(e), Seq("key"))
       .filter(cosine(col("tv"), col("ev")) >= lit(threshold))
       .select(col("__tid").as(idCol)).distinct()
@@ -547,8 +479,8 @@ object Similarity {
   /** Approximate top-k: candidates share an LSH bucket with the query in
     * any of the hash tables, then exact cosine ranks them. The query
     * side is broadcast; the corpus is scanned once and shuffles only the
-    * (table_id, bucket)-matched candidates. Hyperplanes are PORTABLE
-    * ([[graft.functions.SrpSignatures.portableBuckets]]): every plane
+    * (table_id, bucket)-matched candidates. Planes are PORTABLE
+    * ([[graft.functions.SrpSignatures]]): every plane
     * sign derives from the two-round multiplicative hash of its
     * coordinate, so bucket choice — and with it the whole candidate
     * set and final (cosine, id) ranking — replays in plain SQL (q136).
@@ -560,16 +492,13 @@ object Similarity {
     * small batch. A mass-duplicated corpus direction inflates one
     * query's candidate list at worst to the brute scan it replaces.
     */
-  def lshTopKPortable(corpus: DataFrame, queries: DataFrame, idCol: String,
-                      vecCol: String, k: Int, bits: Int = 8, dim: Int = 64,
-                      tables: Int = 8, seed: Long = 7L): DataFrame = {
-    require(seed >= 0L, s"portable seed must be >= 0, got $seed")
-    val c = corpus.select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("cv"))
-      .select(col("neighbor_id"), col("cv"),
-        explode(lshKeys(col("cv"), bits, dim, tables, seed)).as("key"))
-    val q = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"))
-      .select(col("query_id"), col("qv"),
-        explode(lshKeys(col("qv"), bits, dim, tables, seed)).as("key"))
+  def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
+              vecCol: String, k: Int, bits: Int = 8, dim: Int = 64,
+              tables: Int = 8): DataFrame = {
+    val c = lshKeyed(corpus, Seq(col(idCol).as("neighbor_id")), vecCol, "cv",
+      bits, dim, tables)
+    val q = lshKeyed(queries, Seq(col(idCol).as("query_id")), vecCol, "qv",
+      bits, dim, tables)
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
     c.join(broadcast(q), Seq("key"))

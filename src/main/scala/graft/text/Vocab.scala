@@ -510,8 +510,7 @@ object Vocab {
     * is closed-form IEEE arithmetic in the SQL twin's operand order,
     * rounded at 9 dp. The bigram table is persisted across its four
     * readers and the (vocabulary-sized, not corpus-sized) result is
-    * eagerly checkpointed so the cache can drop — nearDupPairsIncremental's
-    * materialization contract.
+    * eagerly checkpointed so the cache can drop before returning.
     */
   def knBigramLm(df: DataFrame, idCol: String, textCol: String,
                  discount: Double = 0.75): DataFrame = {

@@ -89,18 +89,12 @@ class KMeansSpec extends AnyFunSuite {
   test("early-stop == full-iters on a converged fixture") {
     // two tight blobs: after one recenter the centroids are the blob
     // means and every later recenter reproduces them exactly, so a
-    // tolerance-stopped run must equal the hard-capped run bit for bit
+    // fixpoint-stopped run must equal the hard-capped run bit for bit
     val capped = KMeans.fit(pts, "vec_id", "embedding", k = 2, iters = 3)
       .as[(Long, Long)].collect().sorted.toSeq
-    val tol = KMeans.fit(pts, "vec_id", "embedding", k = 2, iters = 50,
-        tolerance = 0.0)
+    val stopped = KMeans.fit(pts, "vec_id", "embedding", k = 2, iters = 50)
       .as[(Long, Long)].collect().sorted.toSeq
-    assert(tol == capped)
-    // a loose tolerance also converges to the same 2-blob answer
-    val loose = KMeans.fit(pts, "vec_id", "embedding", k = 2, iters = 50,
-        tolerance = 1e-6)
-      .as[(Long, Long)].collect().sorted.toSeq
-    assert(loose == capped)
+    assert(stopped == capped)
   }
 
   test("zero vector among init seeds fails loudly") {
@@ -111,28 +105,5 @@ class KMeansSpec extends AnyFunSuite {
       KMeans.fit(withZero, "vec_id", "embedding", k = 3, iters = 2)
     }
     assert(e.getMessage.contains("zero vector"))
-  }
-
-  test("oversampled farthest-first init spreads seeds across directions") {
-    // candidates: 3 near-identical x-vectors ranked first, one
-    // y-vector last — plain hash init with k=2 could seed both inside
-    // the x blob; farthest-first must pick one from each direction
-    val cand = IndexedSeq(
-      Seq(1.0, 0.0), Seq(0.99, 0.01), Seq(0.98, 0.02), Seq(0.0, 1.0))
-    val seeds = KMeans.farthestFirst(cand, 2)
-    assert(seeds.head == Seq(1.0, 0.0)) // always starts hash-smallest
-    assert(seeds(1) == Seq(0.0, 1.0))   // max-min cosine distance
-    // initCandidates = 1 stays the oracled default path exactly
-    val c1 = KMeans.fit(pts, "vec_id", "embedding", k = 2, iters = 2)
-      .as[(Long, Long)].collect().sorted.toSeq
-    val c1b = KMeans.fit(pts, "vec_id", "embedding", k = 2, iters = 2,
-        initCandidates = 1)
-      .as[(Long, Long)].collect().sorted.toSeq
-    assert(c1 == c1b)
-    // the oversampled path still produces a full, valid clustering
-    val c4 = KMeans.fit(pts, "vec_id", "embedding", k = 2, iters = 2,
-        initCandidates = 4)
-      .as[(Long, Long)].collect().toMap
-    assert(c4.size == 8 && c4.values.toSet.subsetOf(Set(0L, 1L)))
   }
 }

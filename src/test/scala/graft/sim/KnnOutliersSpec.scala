@@ -49,7 +49,7 @@ class KnnOutliersSpec extends AnyFunSuite {
   test("knnOutliersLsh agrees with brute on the planted fixture and " +
       "surfaces zero-candidate anchors as outliers") {
     val lsh = Similarity.knnOutliersLsh(emb, emb, "vec_id", "embedding",
-        k = 3, thrPct = 50, bits = 2, dim = 4, tables = 4, seed = 7L)
+        k = 3, thrPct = 50, bits = 2, dim = 4, tables = 4)
       .select("query_id", "outlier", "n_nn")
       .as[(Long, Boolean, Long)].collect().map(r => r._1 -> r).toMap
     assert(lsh.size == 5, "every anchor emits a row, candidates or not")

@@ -104,9 +104,9 @@ class SimilaritySpec extends AnyFunSuite {
     // LSH variant obeys the same contract on its candidate set: vector
     // 2 shares every bucket with anchor 1 (identical direction) yet is
     // filtered by label; 4 is the nearest cross-label candidate.
-    val lsh = Similarity.hardNegativesLshPortable(labeled,
+    val lsh = Similarity.hardNegativesLsh(labeled,
       labeled.filter($"vec_id" === 1), "vec_id", "embedding", "label",
-      k = 2, bits = 8, dim = 4, tables = 4, seed = 7L)
+      k = 2, bits = 8, dim = 4, tables = 4)
       .orderBy("rnk").as[(Long, Long, Int)].collect()
     assert(!lsh.map(_._2).contains(2L))
     assert(lsh.forall(r => Set(3L, 4L)(r._2)))
@@ -114,7 +114,7 @@ class SimilaritySpec extends AnyFunSuite {
       "when found, the diagonal vector outranks the orthogonal one")
   }
 
-  test("hardNegativesLshPortable: bucket cap drops a mass-duplicated blob") {
+  test("hardNegativesLsh: bucket cap drops a mass-duplicated blob") {
     // 500 same-direction corpus vectors (a duplicated embedding blob,
     // label 9) share every SRP bucket in every table — uncapped, the
     // candidate set would be anchors×500 per table. With the cap they
@@ -129,10 +129,10 @@ class SimilaritySpec extends AnyFunSuite {
     val blob = (0L until 500L).map(i =>
       (i + 100L, Array(0.0f, 0.0f, 1.0f, 0.0f), 9))
       .toDF("vec_id", "embedding", "label")
-    val out = Similarity.hardNegativesLshPortable(
+    val out = Similarity.hardNegativesLsh(
       labeled.unionByName(blob), labeled.filter($"vec_id" === 1),
       "vec_id", "embedding", "label", k = 400,
-      bits = 8, dim = 4, tables = 4, seed = 7L, maxBucketSize = 20)
+      bits = 8, dim = 4, tables = 4, maxBucketSize = 20)
       .as[(Long, Long, Int)].collect()
     assert(!out.exists(_._2 >= 100L), "capped blob never reaches ranking")
     assert(out.forall(r => Set(3L, 4L)(r._2)),
@@ -154,8 +154,8 @@ class SimilaritySpec extends AnyFunSuite {
     val emb = graft.Tables.t(spark, "/root/testdata/sf0.001", "embeddings")
       .select("vec_id", "embedding")
     val labeled = emb.withColumn("__b", element_at(
-        graft.functions.SrpSignatures.portableBuckets(
-          Similarity.toDouble(col("embedding")), 3, 64, 1, 7L), 1))
+        graft.functions.SrpSignatures.buckets(
+          Similarity.toDouble(col("embedding")), 3, 64, 1), 1))
       .withColumn("label", when(col("vec_id") % 13 === 0,
         (col("__b") + 1) % 8).otherwise(col("__b")))
       .drop("__b")
@@ -166,7 +166,7 @@ class SimilaritySpec extends AnyFunSuite {
       "vec_id", "embedding", "label", k = 10, suspectPpm = 900000L))
     val lsh = suspects(Similarity.knnLabelNoiseLsh(labeled, anchors,
       "vec_id", "embedding", "label", k = 10, suspectPpm = 900000L,
-      bits = 4, dim = 64, tables = 8, seed = 7L))
+      bits = 4, dim = 64, tables = 8))
     val planted = anchors.filter(col("vec_id") % 13 === 0)
       .select("vec_id").as[Long].collect().toSet
     assert(planted.nonEmpty && (planted & brute).nonEmpty,
@@ -196,7 +196,7 @@ class SimilaritySpec extends AnyFunSuite {
     val out = Similarity.knnLabelNoiseLsh(corpus,
       corpus.filter($"vec_id".isin(1L, 100L)),
       "vec_id", "embedding", "label", k = 3, suspectPpm = 500000L,
-      bits = 8, dim = 4, tables = 4, seed = 7L, maxBucketSize = 20)
+      bits = 8, dim = 4, tables = 4, maxBucketSize = 20)
       .as[(Long, Int, Long, Long, Long, Boolean)].collect()
     val byId = out.map(r => r._1 -> r).toMap
     assert(!byId.contains(100L), "blob anchor's buckets are capped away")
@@ -210,24 +210,12 @@ class SimilaritySpec extends AnyFunSuite {
     assert(d == 1.0 * 4 + 2 * 5 + 3 * 6)
   }
 
-  test("native SrpSignatures buckets equal the per-table srpSignature formulation") {
-    val df = graft.Tables.t(spark, "/root/testdata/sf0.001", "embeddings")
-      .limit(20).select($"vec_id", Similarity.toDouble($"embedding").as("v"))
-    val native = df.select($"vec_id",
-        graft.functions.SrpSignatures.buckets($"v", 8, 64, 3).as("bk"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val reference = df.select(($"vec_id" +: (0 until 3).map(t =>
-          Similarity.srpSignature($"v", 8, 64, seed = 1000L + t).as(s"s$t"))): _*)
-      .collect().map(r => r.getLong(0) -> Seq(r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    assert(native == reference)
-  }
-
   test("portable SrpSignatures buckets equal a driver-side replay of the hash + fold") {
     val (bits, dim, tables, seed) = (8, 64, 3, 7L)
     val df = graft.Tables.t(spark, "/root/testdata/sf0.001", "embeddings")
       .limit(20).select($"vec_id", Similarity.toDouble($"embedding").as("v"))
     val native = df.select($"vec_id",
-        graft.functions.SrpSignatures.portableBuckets($"v", bits, dim, tables, seed).as("bk"))
+        graft.functions.SrpSignatures.buckets($"v", bits, dim, tables).as("bk"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     // independent reimplementation: portable sign per coordinate, then
     // the same ascending-dim left fold
@@ -249,11 +237,38 @@ class SimilaritySpec extends AnyFunSuite {
     }
     assert(native.keySet == expected.keySet)
     native.foreach { case (id, bk) => assert(bk.toSeq == expected(id), s"id=$id") }
+    // the interpreted path (nullSafeEval through eval on an InternalRow)
+    // agrees with the same replay
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val expr = graft.functions.SrpSignatures(
+      BoundReference(0, ArrayType(DoubleType, containsNull = false), nullable = true),
+      bits, dim, tables)
+    vecs.foreach { case (id, v) =>
+      val out = expr.eval(InternalRow(new GenericArrayData(v.toArray)))
+        .asInstanceOf[ArrayData].toLongArray().toSeq
+      assert(out == expected(id), s"eval id=$id")
+    }
+    assert(expr.eval(InternalRow(null)) == null, "null vector -> null")
   }
 
-  test("lshTopKPortable finds the identical-direction vector") {
-    val out = Similarity.lshTopKPortable(emb, emb.filter($"vec_id" === 1), "vec_id",
-        "embedding", k = 3, bits = 8, dim = 4, tables = 8, seed = 7L)
+  test("graft_srp_buckets rejects a fifth (seed) argument") {
+    // one plane family: the SQL function takes no seed, so a stray
+    // fifth argument fails instead of choosing other planes
+    val e = intercept[Exception] {
+      spark.sql("SELECT graft_srp_buckets(array(1.0D, 2.0D), 2, 2, 1, 7L)")
+        .collect()
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("got 5 args")), s"got $e")
+  }
+
+  test("lshTopK finds the identical-direction vector") {
+    val out = Similarity.lshTopK(emb, emb.filter($"vec_id" === 1), "vec_id",
+        "embedding", k = 3, bits = 8, dim = 4, tables = 8)
       .as[(Long, Long, Int)].collect()
     assert(out.nonEmpty)
     assert(out.head._2 == 2L) // identical direction => identical signs in every table
@@ -285,12 +300,12 @@ class SimilaritySpec extends AnyFunSuite {
     assert(pairs.contains((1L, 2L)))                          // real pair kept
   }
 
-  test("lshTopKPortable agrees with brute force on clustered testdata sample") {
+  test("lshTopK agrees with brute force on clustered testdata sample") {
     val embeddings = graft.Tables.t(spark, "/root/testdata/sf0.001", "embeddings")
     val queries = embeddings.filter($"vec_id" < 3)
     val brute = Similarity.bruteTopK(embeddings, queries, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.lshTopKPortable(embeddings, queries, "vec_id",
+    val approx = Similarity.lshTopK(embeddings, queries, "vec_id",
         "embedding", k = 5, bits = 8, dim = 64, tables = 8)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     // approximate recall: some overlap with exact answers, never empty

@@ -57,9 +57,11 @@ python3 tools/same_rows.py "${OUTCPU}1" "${OUTCPU}4"
 
 echo "== gate 4/5: full registry at sf0.01 (Verify + DuckDB oracle) =="
 verify "$SF001" "$OUT001"
-# the registry's oracle SQL fingerprint: compare it with the parent
-# commit's gate output to show a change left every oracle untouched
+# the registry's oracle SQL fingerprint and the library's code-line
+# count: compare both with the parent commit's gate output to show a
+# change left every oracle untouched and what it did to the line count
 md5sum "$OUT001/oracle_sql.json"
+python3 tools/loc.py
 python3 tools/check.py "$OUT001" "$SF001"
 
 if [ "$#" -gt 0 ]; then
