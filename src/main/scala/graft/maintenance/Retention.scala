@@ -1,14 +1,27 @@
 package graft.maintenance
 
+import java.io.IOException
+import java.time.LocalDate
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopStreams
+import org.apache.parquet.io.{InputFile, SeekableInputStream}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StringType
 
 /** Maintenance operators (reference: scripts/cleanup.py:88-237 archive /
   * purge, scripts/backfill.py:155-246 ranged backfill). The reference
   * expresses these as SQL DELETEs; on immutable columnar storage they
-  * are partition-level filter/rewrite operations. With date-partitioned
-  * layout all three prune at the scan — at 100 TB a 7-day purge touches
-  * 7 directories, not the table.
+  * are row filters (`retain`, `archiveSlice`, `backfillWindow`) or, over
+  * a date-partitioned table, partition-level operations: a backfill
+  * overwrites its days' directories, a purge deletes them and an archive
+  * renames them into the archive table. At 100 TB a 7-day purge or
+  * archive touches 7 directories, not the table.
   */
 object Retention {
 
@@ -118,25 +131,90 @@ object Retention {
     }
   }
 
-  /** Metadata-level partition drop: delete every `partitionCol=<date>`
-    * directory strictly before `cutoff`. This is the 100 TB half of an
-    * archive move — the kept data is never rewritten; a 7-day purge
-    * touches 7 directories. Returns the dropped partition values.
+  /** Metadata-level retention purge: delete every `partitionCol=<date>`
+    * directory strictly before `cutoff`. The kept data is never
+    * rewritten; a 7-day purge touches 7 directories. Returns the dropped
+    * partition values.
     */
   def dropPartitionsBefore(spark: SparkSession, path: String, partitionCol: String,
-                           cutoff: java.time.LocalDate): Seq[String] = {
+                           cutoff: LocalDate): Seq[String] = {
     val fs = graft.Tables.fileSystem(spark, path)
-    val base = new org.apache.hadoop.fs.Path(path)
+    datePartitionsBefore(fs, new Path(path), partitionCol, cutoff).map { case (value, dir) =>
+      fs.delete(dir, true)
+      value
+    }
+  }
+
+  /** Archive move (cleanup.py:88-135 `DELETE .. RETURNING` into the
+    * archive) as a metadata operation: every `partitionCol=<date>`
+    * directory of `path` strictly before `cutoff` is renamed to
+    * `<archivePath>/partitionCol=<date>/_archived_at=<archivedAt>`. No
+    * row is read or rewritten, so the move starts no Spark job. Bronze's
+    * files keep their own columns; `_archived_at` is a partition column,
+    * its directory value written as Spark's partitioned writer writes a
+    * timestamp (cast to string in the session time zone, then escaped).
+    * A read in that time zone gets `archivedAt` back: inferred as a
+    * timestamp when it has at most one fractional digit (Spark's
+    * partition inference pattern), and by the schema's type otherwise.
+    *
+    * An archive partition of the same date is deleted first, so
+    * re-archiving a day that a backfill re-ingested replaces it. Each
+    * day then moves with one rename, so a row is always in exactly one
+    * of the live table and the archive: a crash between two days leaves
+    * the days not yet moved live, and a re-run moves them. Returns the
+    * archived rows, summed from the moved files' parquet footers on the
+    * driver.
+    */
+  def archivePartitionsBefore(spark: SparkSession, path: String, archivePath: String,
+                              partitionCol: String, cutoff: LocalDate,
+                              archivedAt: java.sql.Timestamp): Long = {
+    val fs = graft.Tables.fileSystem(spark, path)
+    val zone = spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key)
+    val stamp = ExternalCatalogUtils.getPartitionPathString("_archived_at",
+      Cast(Literal(archivedAt), StringType, Some(zone)).eval().toString)
+    datePartitionsBefore(fs, new Path(path), partitionCol, cutoff).map { case (_, live) =>
+      val day = new Path(archivePath, live.getName)
+      val moved = new Path(day, stamp)
+      fs.delete(day, true)
+      fs.mkdirs(day)
+      if (!fs.rename(live, moved)) throw new IOException(s"archive: cannot move $live to $moved")
+      parquetRows(fs, moved)
+    }.sum
+  }
+
+  /** The `partitionCol=<date>` directories directly under `base` whose
+    * date is strictly before `cutoff`, with their date values. Other
+    * directories and plain files are ignored; a missing `base` has none.
+    */
+  private def datePartitionsBefore(fs: FileSystem, base: Path, partitionCol: String,
+                                   cutoff: LocalDate): Seq[(String, Path)] =
     if (!fs.exists(base)) Seq.empty
     else fs.listStatus(base).toSeq
       .filter(_.isDirectory)
       .map(_.getPath)
       .filter(_.getName.startsWith(s"$partitionCol="))
-      .flatMap { p =>
-        val value = p.getName.stripPrefix(s"$partitionCol=")
-        scala.util.Try(java.time.LocalDate.parse(value)).toOption
+      .flatMap { dir =>
+        val value = dir.getName.stripPrefix(s"$partitionCol=")
+        scala.util.Try(LocalDate.parse(value)).toOption
           .filter(_.isBefore(cutoff))
-          .map { _ => fs.delete(p, true); value }
+          .map(_ => value -> dir)
       }
+
+  /** Rows in the parquet files under `dir`, from their footers, each
+    * opened through `fs`. */
+  private def parquetRows(fs: FileSystem, dir: Path): Long = {
+    val files = fs.listFiles(dir, true)
+    var rows = 0L
+    while (files.hasNext) {
+      val f = files.next()
+      if (f.getPath.getName.endsWith(".parquet")) {
+        val reader = ParquetFileReader.open(new InputFile {
+          def getLength: Long = f.getLen
+          def newStream(): SeekableInputStream = HadoopStreams.wrap(fs.open(f.getPath))
+        })
+        try rows += reader.getRecordCount finally reader.close()
+      }
+    }
+    rows
   }
 }

@@ -277,28 +277,17 @@ object Runner {
 
   /** Archive stage (reference scripts/cleanup.py:88-135
     * `archive_old_data`: DELETE..RETURNING into `{table}_archive`): move
-    * bronze partitions older than `cutoff` into the archive table. The
-    * move is two partition-level steps — (1) overwrite the same day
-    * partitions in the archive with the slice (stamped `_archived_at`),
-    * (2) drop the live partition directories — so the kept data is never
-    * rewritten and a crash between the steps re-runs cleanly: step 1 is
-    * a dynamic partition overwrite (idempotent), step 2 only deletes
-    * what step 1 already copied. Returns the archived row count.
+    * every bronze day partition older than `cutoff` into the archive
+    * table with [[graft.maintenance.Retention.archivePartitionsBefore]],
+    * one directory rename per day, stamped `_archived_at = now` as a
+    * partition. No row is read or rewritten and no Spark job starts; a
+    * day already in the archive is replaced, and a re-run after a crash
+    * moves the days still live. Returns the archived row count.
     */
   def stageArchive(spark: SparkSession, layout: Layout, table: String,
-                   cutoff: java.time.LocalDate, now: Timestamp): Long = {
-    val livePath = s"${layout.bronze}/${table}_raw"
-    val archivePath = s"${layout.bronze}/${table}_archive"
-    if (!exists(spark, livePath)) 0L
-    else {
-      val slice = Retention.archiveSlice(Bronze.readLayer(spark, livePath),
-        "_ingestion_date", lit(cutoff.toString).cast("date"), lit(now))
-      val archived =
-        counted(slice)(Retention.overwritePartitions(_, archivePath, "_ingestion_date"))
-      Retention.dropPartitionsBefore(spark, livePath, "_ingestion_date", cutoff)
-      archived
-    }
-  }
+                   cutoff: java.time.LocalDate, now: Timestamp): Long =
+    Retention.archivePartitionsBefore(spark, s"${layout.bronze}/${table}_raw",
+      s"${layout.bronze}/${table}_archive", "_ingestion_date", cutoff, now)
 
   /** Full pipeline: ingestion → silver → quality → gold → audit. */
   def runFull(spark: SparkSession, staged: Map[String, DataFrame],

@@ -136,6 +136,21 @@ class RetentionSpec extends AnyFunSuite {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(tmp)))
   }
 
+  test("dropPartitionsBefore drops only date partitions strictly before the cutoff") {
+    val dir = java.nio.file.Files.createTempDirectory("drop").toString + "/table"
+    val partitions = Seq("d=2024-01-01", "d=2024-01-04", "d=2024-01-05", "d=2024-01-09",
+      "d=not-a-date", "e=2024-01-01")
+    partitions.foreach(p => new java.io.File(s"$dir/$p").mkdirs())
+    Seq("d=2024-01-02", "_SUCCESS").foreach(f => new java.io.File(s"$dir/$f").createNewFile())
+    val dropped = Retention.dropPartitionsBefore(spark, dir, "d",
+      java.time.LocalDate.parse("2024-01-05"))
+    assert(dropped.sorted == Seq("2024-01-01", "2024-01-04"))
+    assert(new java.io.File(dir).list().toSet == Set("d=2024-01-05", "d=2024-01-09",
+      "d=not-a-date", "e=2024-01-01", "d=2024-01-02", "_SUCCESS"))
+    assert(Retention.dropPartitionsBefore(spark, s"$dir.missing", "d",
+      java.time.LocalDate.parse("2024-01-05")).isEmpty)
+  }
+
   test("overwritePartitions rewrites only touched partitions, idempotently") {
     val dir = java.nio.file.Files.createTempDirectory("retention").toString + "/table"
     val full = Seq(("2024-01-01", 1L), ("2024-01-02", 2L), ("2024-01-03", 3L))

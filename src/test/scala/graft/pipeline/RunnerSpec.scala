@@ -1,14 +1,17 @@
 package graft.pipeline
 
+import java.net.URI
 import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.hadoop.fs.Path
 
 import org.apache.spark.graft.BusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graft.Cached
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.{DateType, TimestampType}
+import org.apache.spark.sql.types.{DateType, StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{Tables, TestSpark}
 import graft.audit.Audit
@@ -235,25 +238,32 @@ class RunnerSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"${lay.bronze}/products_raw").count() == 6)
   }
 
+  /** One `orders` row a day, id `10 × day of month`, its amounts `amount`. */
+  private def ordersOn(amount: Double)(day: java.time.LocalDate): Map[String, DataFrame] = Map(
+    "orders" -> Seq((day.getDayOfMonth * 10, 100, amount, Some(amount)))
+      .toDF("id", "userId", "total_amount", "final_amount"))
+
+  private val day1 = java.time.LocalDate.parse("2024-01-01")
+
   test("stageArchive moves old partitions to the archive table, idempotently") {
     val lay = layout()
-    val day1 = java.time.LocalDate.parse("2024-01-01")
-    def fetch(day: java.time.LocalDate): Map[String, DataFrame] = Map(
-      "orders" -> Seq((day.getDayOfMonth * 10, 100, 5.0, Some(5.0)))
-        .toDF("id", "userId", "total_amount", "final_amount"))
-    Runner.backfillBronze(spark, fetch, lay, "test_api", day1, day1.plusDays(3))
+    Runner.backfillBronze(spark, ordersOn(5.0), lay, "test_api", day1, day1.plusDays(3))
+    val bronzeColumns = spark.read.parquet(s"${lay.bronze}/orders_raw").columns.toSet
 
     val cutoff = java.time.LocalDate.parse("2024-01-03")
-    val archived = Runner.stageArchive(spark, lay, "orders", cutoff,
-      ts("2024-02-01 00:00:00"))
+    var archived = -1L
+    assert(jobsOf {
+      archived = Runner.stageArchive(spark, lay, "orders", cutoff, ts("2024-02-01 00:00:00"))
+    } == 0)
     assert(archived == 2) // days 1 and 2 moved
     val live = spark.read.parquet(s"${lay.bronze}/orders_raw")
     assert(live.count() == 1)
     assert(live.select("_ingestion_date").as[java.sql.Date].collect()
       .forall(_.toString == "2024-01-03"))
     val arch = spark.read.parquet(s"${lay.bronze}/orders_archive")
-    assert(arch.count() == 2)
-    assert(arch.columns.contains("_archived_at"))
+    assert(arch.count() == archived)
+    assert(arch.columns.toSet == bronzeColumns + "_archived_at")
+    assert(arch.schema("_archived_at").dataType == TimestampType)
 
     // re-run: nothing left to move, archive unchanged
     val again = Runner.stageArchive(spark, lay, "orders", cutoff,
@@ -261,6 +271,70 @@ class RunnerSpec extends AnyFunSuite {
     assert(again == 0)
     assert(spark.read.parquet(s"${lay.bronze}/orders_archive").count() == 2)
     assert(spark.read.parquet(s"${lay.bronze}/orders_raw").count() == 1)
+  }
+
+  test("stageArchive stamps _archived_at as Spark's partitioned writer writes now") {
+    val lay = layout()
+    Runner.backfillBronze(spark, ordersOn(5.0), lay, "test_api", day1, day1.plusDays(2))
+    val zoned = spark.newSession()
+    zoned.conf.set("spark.sql.session.timeZone", "Asia/Kathmandu")
+    val now = ts("2024-02-01 10:15:30.123456")
+    assert(Runner.stageArchive(zoned, lay, "orders", day1.plusDays(1), now) == 1)
+    val archive = s"${lay.bronze}/orders_archive"
+    // Spark infers a partition timestamp with at most one fractional
+    // digit (`yyyy-MM-dd HH:mm:ss[.S]`), so this one is read as a string
+    // unless the schema names its type, as for any table Spark partitions
+    // by such a timestamp
+    val inferred = zoned.read.parquet(archive).schema
+    val typed = StructType(inferred.map(f =>
+      if (f.name == "_archived_at") f.copy(dataType = TimestampType) else f))
+    assert(zoned.read.schema(typed).parquet(archive).select("_archived_at").as[Timestamp]
+      .collect().toSeq == Seq(now))
+
+    val written = java.nio.file.Files.createTempDirectory("stamp").toString + "/t"
+    zoned.range(1).withColumn("_archived_at", lit(now))
+      .write.partitionBy("_archived_at").parquet(written)
+    def dirs(p: String) = new java.io.File(p).list().filter(_.startsWith("_archived_at=")).toSeq
+    assert(dirs(s"$archive/_ingestion_date=2024-01-01") == dirs(written))
+  }
+
+  test("re-archiving a day a backfill re-ingested replaces its archive partition") {
+    val lay = layout()
+    val cutoff = day1.plusDays(2)
+    Runner.backfillBronze(spark, ordersOn(5.0), lay, "test_api", day1, day1.plusDays(3))
+    assert(Runner.stageArchive(spark, lay, "orders", cutoff, ts("2024-02-01 00:00:00")) == 2)
+    Runner.backfillBronze(spark, ordersOn(7.0), lay, "test_api", day1, day1.plusDays(1))
+    assert(Runner.stageArchive(spark, lay, "orders", cutoff, ts("2024-02-02 00:00:00")) == 1)
+    val arch = spark.read.parquet(s"${lay.bronze}/orders_archive")
+      .select("id", "total_amount", "_archived_at").as[(Int, Double, Timestamp)]
+      .collect().sortBy(_._1).toSeq
+    assert(arch == Seq((10, 7.0, ts("2024-02-02 00:00:00")),
+      (20, 5.0, ts("2024-02-01 00:00:00"))))
+    assert(spark.read.parquet(s"${lay.bronze}/orders_raw").select("id").as[Int]
+      .collect().toSeq == Seq(30))
+  }
+
+  test("an archive that fails between two day moves leaves every row once; a re-run ends it") {
+    val plain = layout()
+    Runner.backfillBronze(spark, ordersOn(5.0), plain, "test_api", day1, day1.plusDays(3))
+    val scheme = "graftfault"
+    val faulty = spark.newSession()
+    faulty.conf.set(s"fs.$scheme.impl", classOf[RenameFaultFs].getName)
+    faulty.conf.set(s"fs.$scheme.impl.disable.cache", "true")
+    val lay = plain.copy(bronze = s"$scheme://${plain.bronze}")
+    def ids(table: String) = spark.read.parquet(s"${plain.bronze}/orders_$table")
+      .select("id").as[Int].collect().toSeq.sorted
+    val cutoff = day1.plusDays(2)
+    RenameFaultFs.renames.set(0)
+    RenameFaultFs.failOn = 2
+    try {
+      intercept[java.io.IOException](
+        Runner.stageArchive(faulty, lay, "orders", cutoff, ts("2024-02-01 00:00:00")))
+    } finally RenameFaultFs.failOn = 0
+    assert(ids("archive").size == 1)
+    assert((ids("raw") ++ ids("archive")).sorted == Seq(10, 20, 30))
+    assert(Runner.stageArchive(faulty, lay, "orders", cutoff, ts("2024-02-01 00:00:00")) == 1)
+    assert(ids("raw") == Seq(30) && ids("archive") == Seq(10, 20))
   }
 
   test("stageBronze and backfillBronze stamp lineage columns and the ingestion date") {
@@ -274,11 +348,7 @@ class RunnerSpec extends AnyFunSuite {
         r.getString(3), r.getString(4))).toSet
     assert(stamps == Set(("2024-01-05", now, "test_api", "products", "products_raw")))
 
-    val day1 = java.time.LocalDate.parse("2024-01-01")
-    def fetch(day: java.time.LocalDate): Map[String, DataFrame] = Map(
-      "orders" -> Seq((day.getDayOfMonth * 10, 100, 5.0, Some(5.0)))
-        .toDF("id", "userId", "total_amount", "final_amount"))
-    Runner.backfillBronze(spark, fetch, lay, "test_api", day1, day1.plusDays(3))
+    Runner.backfillBronze(spark, ordersOn(5.0), lay, "test_api", day1, day1.plusDays(3))
     val days = spark.read.parquet(s"${lay.bronze}/orders_raw")
       .select("_ingestion_date", "_ingestion_timestamp")
       .collect().map(r => (r.getDate(0).toString, r.getTimestamp(1))).toSeq
@@ -332,4 +402,19 @@ class RunnerSpec extends AnyFunSuite {
     val audit = Audit.read(spark, lay.audit).collect()
     assert(audit.length == 1 && audit.head.status == "failed")
   }
+}
+
+/** [[graft.SchemeLocalFs]] under the scheme `graftfault`, whose rename
+  * number `failOn`, counted over every instance, throws. */
+class RenameFaultFs extends graft.SchemeLocalFs {
+  override def getUri: URI = URI.create("graftfault:///")
+  override def rename(src: Path, dst: Path): Boolean =
+    if (RenameFaultFs.renames.incrementAndGet() == RenameFaultFs.failOn)
+      throw new java.io.IOException(s"injected failure renaming $src")
+    else super.rename(src, dst)
+}
+
+object RenameFaultFs {
+  val renames = new AtomicInteger
+  @volatile var failOn = 0
 }
