@@ -24,6 +24,22 @@ object NearDup {
   private[graft] def ensureParallel(df: DataFrame, key: Column): DataFrame =
     graft.operators.Par.fan(df, key)
 
+  /** `(idCol, toks)` for the docs with at least `n` tokens, split once,
+    * above the [[ensureParallel]] fan. A plain select-then-filter lets
+    * the optimizer rewrite the filter to `size(split(text)) >= n` and
+    * push it below the fan's exchange, where the split runs a second
+    * time, on the one input partition. A filter over a generator's
+    * output stays above the generator, so the tokens come out of a
+    * one-element `explode_outer` (q183's `posexplode_outer` keeps its
+    * filter above the signatures the same way).
+    */
+  private[dedup] def tokensAtLeast(df: DataFrame, idCol: String,
+                                   textCol: String, n: Int): DataFrame =
+    ensureParallel(df, col(idCol))
+      .select(col(idCol),
+        explode_outer(array(TextOps.tokens(col(textCol)))).as("toks"))
+      .filter(size(col("toks")) >= n)
+
   /** MinHash signatures over token `shingleN`-gram shingles: one row
     * per doc, `sig` = array of k minima. Single projection pass per row
     * through the native codegen'd [[graft.functions.PortableMinHash]]
@@ -162,9 +178,7 @@ object NearDup {
                         textCol: String, n: Int): DataFrame =
     if (n == 1) jaccardVerify(pairs, df, idCol, textCol)
     else gramJaccardVerifyOnGrams(pairs,
-      ensureParallel(df, col(idCol))
-        .select(col(idCol), TextOps.tokens(col(textCol)).as("toks"))
-        .filter(size(col("toks")) >= n)
+      tokensAtLeast(df, idCol, textCol, n)
         .select(col(idCol), array_distinct(TextOps.ngrams(col("toks"), n)).as("g")),
       idCol)
 
@@ -217,9 +231,7 @@ object NearDup {
     // the input text — is persisted for the call's duration and feeds
     // all three; the PPJoin literature's materialized prefix index,
     // applied one level down. Unpersisted before return.
-    val toks = ensureParallel(df, col(idCol))
-      .select(col(idCol), TextOps.tokens(col(textCol)).as("toks"))
-      .filter(size(col("toks")) >= shingleN)
+    val toks = tokensAtLeast(df, idCol, textCol, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sh = toks.select(col(idCol),
       explode(array_distinct(TextOps.ngrams(col("toks"), shingleN)))
@@ -284,9 +296,7 @@ object NearDup {
     // tokenize once per side (the prefixFilterPairs materialization,
     // same rationale): frequency pass, prefix build and verify all
     // read the cached compact (id, toks) tables
-    def toksOf(df: DataFrame) = ensureParallel(df, col(idCol))
-      .select(col(idCol), TextOps.tokens(col(textCol)).as("toks"))
-      .filter(size(col("toks")) >= shingleN)
+    def toksOf(df: DataFrame) = tokensAtLeast(df, idCol, textCol, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val toksBase = toksOf(base)
     val toksInc = toksOf(incoming)
@@ -339,9 +349,7 @@ object NearDup {
     */
   def containmentVerify(pairs: DataFrame, df: DataFrame, idCol: String,
                         textCol: String, n: Int = 3): DataFrame = {
-    val grams = ensureParallel(df, col(idCol))
-      .select(col(idCol), TextOps.tokens(col(textCol)).as("toks"))
-      .filter(size(col("toks")) >= n)
+    val grams = tokensAtLeast(df, idCol, textCol, n)
       .select(col(idCol), array_distinct(TextOps.ngrams(col("toks"), n)).as("g"))
     pairs
       .join(grams.select(col(idCol).as("id1"), col("g").as("g1")), Seq("id1"))

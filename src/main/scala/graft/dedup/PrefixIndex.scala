@@ -76,9 +76,7 @@ object PrefixIndex {
     */
   private def shingled(df: DataFrame, idCol: String, textCol: String,
                        shingleN: Int): DataFrame =
-    NearDup.ensureParallel(df, col(idCol))
-      .select(col(idCol), TextOps.tokens(col(textCol)).as("toks"))
-      .filter(size(col("toks")) >= shingleN)
+    NearDup.tokensAtLeast(df, idCol, textCol, shingleN)
       .select(col(idCol),
         explode(array_distinct(TextOps.ngrams(col("toks"), shingleN)))
           .as("g"))

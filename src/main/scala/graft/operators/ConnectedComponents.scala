@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Connected components over a near-duplicate pair list — the step that
@@ -11,15 +12,22 @@ import org.apache.spark.sql.functions._
   *
   * Algorithm: alternating large-star / small-star (Kiveris et al.,
   * "Connected Components in MapReduce and Beyond", SoCC'14) — the
-  * published shuffle-native CC algorithm. Each round is a bounded
-  * aggregate-and-join on the node key; the edge set converges to stars
+  * published shuffle-native CC algorithm. Each round is two bounded
+  * passes keyed by node; the edge set converges to stars
   * (node → component minimum) in O(log²) rounds regardless of component
   * diameter, unlike naive label propagation whose round count is the
   * diameter (a 1M-doc chain would need 1M rounds; this needs ~20).
   *
-  * Scale shape per round: one groupBy(u) + one join on u — same key, so
-  * the exchange is shared — over the CURRENT edge set, which only
-  * shrinks toward one edge per node. No all-pairs step anywhere.
+  * Scale shape per round: each star is ONE pass over an edge set
+  * exchanged once, on `u`, and the neighbourhood minimum is a window
+  * over that partitioning (not an aggregate joined back to the
+  * edges). largeStar's output is exchanged on its own `u`, which
+  * clusters its `distinct` on (u, v) and smallStar's window alike;
+  * smallStar's duplicates are left to the next round's exchange. So a
+  * round is two exchanges plus the checkpoint's result stage: under
+  * AQE every exchange runs as its own job, three jobs per round. The
+  * edge set only shrinks toward one edge per node. No all-pairs step
+  * anywhere.
   * A checkpoint cuts the growing lineage each round: `localCheckpoint`
   * by default (fastest — executor-local blocks), or a DURABLE
   * `checkpoint()` into `checkpointDir` for real clusters, where
@@ -58,27 +66,20 @@ object ConnectedComponents {
     val chk: DataFrame => DataFrame =
       if (checkpointDir.isDefined) _.checkpoint(true) else _.localCheckpoint(true)
     // canonical undirected edges, self-loops dropped. The convergence
-    // signature piggybacks on the checkpoint job via observe(), so each
-    // round costs exactly ONE job (largeStar flows lazily into
-    // smallStar, lineage depth 2, materialized by the checkpoint) —
-    // not a checkpoint job plus a signature scan.
+    // signature piggybacks on the checkpoint job via observe(), so it
+    // costs no scan of its own.
     var (e, sig) = checkpointWithSignature(edges
       .select(greatest(col(srcCol), col(dstCol)).as("u"),
               least(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct(), chk)
 
-    // ONE alternation round (largeStar then smallStar) per materialized
-    // job. Each star references its input twice (the neighborhood-min
-    // aggregate joins back to the edges), so stacking rounds without a
-    // materialization between them re-evaluates the inner round once
-    // per reference — measured 2.5x SLOWER than materializing every
-    // round, not faster. Lineage depth 2 is the sweet spot.
+    // ONE alternation round (largeStar then smallStar) per checkpoint.
     // AQE is load-bearing for this loop: its reducer coalescing shrinks
     // every exchange of the rapidly-shrinking edge set to a handful of
     // tasks (measured 5x slower with AQE disabled — static
-    // shuffle-partition-count reducers across ~4 exchanges × ~6 rounds
-    // of tiny data). Don't "optimize" it off here.
+    // shuffle-partition-count reducers over tiny data). Don't
+    // "optimize" it off here.
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -93,7 +94,8 @@ object ConnectedComponents {
     }
     require(converged, s"connected components did not converge in $maxIter rounds")
 
-    // converged edge set is a star forest oriented child(u) -> root(v)
+    // converged edge set is a star forest oriented child(u) -> root(v),
+    // possibly with repeated edges (see smallStar)
     e.select(col("u").as("id"), col("v").as("component"))
       .union(e.select(col("v").as("id"), col("v").as("component")))
       .distinct()
@@ -126,7 +128,6 @@ object ConnectedComponents {
   def keepBestRepresentatives(df: DataFrame, idCol: String,
                               comps: DataFrame,
                               scoreCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val labeled = df
       .join(comps.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("__comp", coalesce(col("component"), col(idCol)))
@@ -137,36 +138,40 @@ object ConnectedComponents {
       .drop("__rn", "__comp", "component")
   }
 
-  /** large-star: every neighbor v > u links to min(N(u) ∪ {u}). */
-  private def largeStar(e: DataFrame): DataFrame = {
-    val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-    val m = sym.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
-    sym.join(m, Seq("u"))
+  /** large-star: every neighbor v > u links to min(N(u) ∪ {u}). The
+    * symmetric edge set is exchanged once, on u, and the neighbourhood
+    * minimum is a window over that partitioning, which ignores
+    * repeated edges. The output is exchanged on its new u, which
+    * clusters the `distinct` and the following smallStar's window
+    * with no exchange of their own.
+    */
+  private def largeStar(e: DataFrame): DataFrame =
+    e.union(e.select(col("v").as("u"), col("u").as("v")))
+      .withColumn("m", least(min(col("v")).over(Window.partitionBy("u")), col("u")))
       .filter(col("v") > col("u"))
       .select(col("v").as("u"), col("m").as("v"))
+      .repartition(col("u"))
       .distinct()
-  }
 
   /** small-star: every smaller neighbor (and u itself) links to the
-    * minimum of u's smaller neighborhood. Input/output edges are
-    * oriented u > v, which largeStar's output already guarantees.
+    * minimum m of u's smaller neighborhood. Edges are oriented u > v,
+    * and the input arrives distinct and partitioned on u (largeStar's
+    * output), so the window needs no exchange. Each input row emits
+    * one edge: (v, m), or (u, m) from the one row whose v is m.
+    *
+    * The output is NOT made distinct: an edge reached from two u's
+    * comes out twice. Nothing downstream needs a set. The next
+    * largeStar's minimum ignores repeats and its `distinct` drops
+    * them, and so does the final `distinct` in [[components]]. The
+    * convergence signature then compares multisets, and two equal
+    * multisets have equal supports, so a repeated signature still
+    * means a fixed point.
     */
-  private def smallStar(e: DataFrame): DataFrame = {
-    val m = e.groupBy("u").agg(min(col("v")).as("m"))
-    val joined = e.join(m, Seq("u"))
-    joined.filter(col("v") =!= col("m"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .union(joined.select(col("u"), col("m").as("v")))
-      .distinct()
-  }
+  private def smallStar(e: DataFrame): DataFrame =
+    e.withColumn("m", min(col("v")).over(Window.partitionBy("u")))
+      .select(when(col("v") === col("m"), col("u")).otherwise(col("v")).as("u"),
+              col("m").as("v"))
 
-  /** Eagerly checkpoint an edge set and return it with an
-    * order-insensitive fingerprint — (count, additive hash) — collected
-    * DURING the checkpoint job via `observe`, so the convergence check
-    * costs no extra scan. The hash accumulates in DECIMAL(38,0): a
-    * BIGINT sum of full-range xxhash64 values would overflow, and
-    * Spark's ANSI mode makes that a runtime error, not a wraparound.
-    */
   /** Reclaim a superseded round's checkpoint storage: durable files
     * are deleted from the checkpoint dir, local-checkpoint blocks are
     * unpersisted from executors. Without this a long loop accumulates
@@ -185,6 +190,14 @@ object ConnectedComponents {
     }
 
   private val obsId = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Eagerly checkpoint an edge set and return it with an
+    * order-insensitive fingerprint — (count, additive hash) — collected
+    * DURING the checkpoint job via `observe`, so the convergence check
+    * costs no extra scan. The hash accumulates in DECIMAL(38,0): a
+    * BIGINT sum of full-range xxhash64 values would overflow, and
+    * Spark's ANSI mode makes that a runtime error, not a wraparound.
+    */
   private def checkpointWithSignature(e: DataFrame, chk: DataFrame => DataFrame)
       : (DataFrame, (Long, String)) = {
     val obs = org.apache.spark.sql.Observation(s"cc_sig_${obsId.incrementAndGet()}")

@@ -1,5 +1,8 @@
 package graft.operators
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -33,6 +36,56 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val got = run(chain)
     assert(got.values.toSet == Set(1L))
     assert(got.keySet == (1L to 40L).toSet)
+  }
+
+  /** Jobs run by `body`, and how many of them were checkpoint jobs:
+    * a job whose last stage computes a locally checkpointed RDD (the
+    * only kind persisted at a storage level here). [[components]]
+    * checkpoints once for the initial edge set and once per round.
+    */
+  private def jobsAndCheckpoints(body: => Unit): (Int, Int) = {
+    val (jobs, chk) = (new AtomicInteger, new AtomicInteger)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        if (e.stageInfos.maxBy(_.stageId).rddInfos.head.storageLevel.isValid)
+          chk.incrementAndGet()
+      }
+    }
+    BusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; BusDrain(spark.sparkContext); (jobs.get, chk.get) }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a round runs at most three jobs: one per exchange and the checkpoint") {
+    val chain = (1L until 40L).map(i => (i, i + 1)).toDF("a", "b")
+    val (jobs, checkpoints) = jobsAndCheckpoints {
+      ConnectedComponents.components(chain, "a", "b")
+    }
+    val rounds = checkpoints - 1
+    // the alternation's own round count for this chain: it depends on
+    // the algorithm, not on how a star is planned
+    assert(rounds == 7)
+    // the initial build is one exchange (its distinct) and a checkpoint;
+    // a star that joins a groupBy back to its edges runs 10-11 jobs a round
+    assert(jobs <= 3 * rounds + 2, s"$jobs jobs for $rounds rounds")
+  }
+
+  test("a reversed chain, a binary tree and a clique with a hub match union-find") {
+    val reversed = (1L until 500L).map(i => (i + 1, i)).reverse
+    val tree = (2L to 63L).map(i => (i, i / 2))
+    val clique = for (a <- 1L to 8L; b <- 1L to 8L if a != b) yield (a, b)
+    // every clique node and 20 leaves hang off hub 100: the stars emit
+    // the same (v, m) edge from many u's
+    val hub = clique ++ (1L to 8L).map(i => (100L, i)) ++
+      (101L to 120L).map(i => (i, 100L))
+    for (g <- Seq(reversed, tree, hub)) assert(run(g) == unionFind(g))
+  }
+
+  test("a star forest comes back unchanged") {
+    val stars = (2L to 10L).map(i => (i, 1L)) ++ (21L to 30L).map(i => (i, 20L))
+    assert(run(stars) == (stars ++ Seq((1L, 1L), (20L, 20L))).toMap)
   }
 
   test("disjoint components, a cycle, and duplicate/reversed edges") {

@@ -5,9 +5,9 @@
 #   tools/gate.sh                # full: benchmark generator tests +
 #                                # sbt test + core-count determinism
 #                                # at sf0.001 + sf0.01 full registry
-#   tools/gate.sh q251_foo ...   # incremental: the full gate + sf0.1
-#                                # for just the named queries (the
-#                                # "new this session" set)
+#   tools/gate.sh q251_foo ...   # the full gate + the DuckDB oracle
+#                                # for just the named queries at
+#                                # sf0.001 and sf0.1 (the touched set)
 #
 # Mirrors the driver exactly: graft.Verify dumps every registered query
 # plus oracle_sql.json, then tools/check.py replays each oracle in
@@ -16,7 +16,9 @@
 # generated-code compile error fails too. The determinism stage runs
 # graft.Verify on one core and on four and requires every query's rows,
 # sorted, to be identical, with no tolerance (tools/same_rows.py): a
-# result must not depend on the core count or the partitioning.
+# result must not depend on the core count or the partitioning. Named
+# queries are also checked against the oracle on the local[4] sf0.001
+# dump, so with stages 4 and 5 they pass it at all three scales.
 # Exits non-zero on the first stage that fails. Dev tool only — not
 # part of the library.
 set -euo pipefail
@@ -49,11 +51,14 @@ python3 -m unittest discover perfbench/tests
 echo "== gate 2/5: sbt test =="
 sbt -batch test
 
-echo "== gate 3/5: core-count determinism at sf0.001 (local[1] vs local[4]) =="
+echo "== gate 3/5: core-count determinism at sf0.001 (local[1] vs local[4]); oracle for named queries =="
 for cpus in 1 4; do
   SPARK_GRAFT_CPUS=$cpus verify "$SF0001" "$OUTCPU$cpus"
 done
 python3 tools/same_rows.py "${OUTCPU}1" "${OUTCPU}4"
+if [ "$#" -gt 0 ]; then
+  python3 tools/check.py "${OUTCPU}4" "$SF0001" "$@"
+fi
 
 echo "== gate 4/5: full registry at sf0.01 (Verify + DuckDB oracle) =="
 verify "$SF001" "$OUT001"
@@ -65,11 +70,11 @@ python3 tools/loc.py
 python3 tools/check.py "$OUT001" "$SF001"
 
 if [ "$#" -gt 0 ]; then
-  echo "== gate 5/5: sf0.1 for new queries: $* =="
+  echo "== gate 5/5: sf0.1 for named queries: $* =="
   verify "$SF01" "$OUT01" "$@"
   python3 tools/check.py "$OUT01" "$SF01" "$@"
 else
-  echo "== gate 5/5: skipped (no new-query args; run with query names"
+  echo "== gate 5/5: skipped (no named queries; run with query names"
   echo "   to add the sf0.1 subset check) =="
 fi
 echo "GATE GREEN"
